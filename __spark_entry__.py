@@ -1822,7 +1822,7 @@ def rect_case_sql() -> str:
 
 
 def _rect_planar_dist_sql(lat0, lon0, lat1, lon1) -> str:
-    """SQL mirroring geom.planar_distance_from_boundary AST-for-AST on
+    """SQL mirroring oracle.planar_distance_from_boundary AST-for-AST on
     one rectangle piece: per segment t = clip(((p-a)·d)/len2), foot =
     a + t*d, d² = |p-foot|²; sqrt(min d²). Every constant is the exact
     double the engine computes (len2 included), and every operation

@@ -10,6 +10,13 @@ import pytest
 from tzengine import index, probe
 from tzengine.bigworld import big_world
 from tzengine.oracle import OracleMap
+from tzengine.oracle import distance_from_boundary as oracle_distance
+from tzengine.oracle import planar_distance_from_boundary as oracle_planar_distance
+
+
+def zone_names(idx, rank_lists):
+    """knn_zones_batch's list<rank> array as per-row zone-name lists."""
+    return [[idx.zone_ids[r] for r in row] for row in rank_lists.to_pylist()]
 
 
 @pytest.fixture(scope="module")
@@ -88,6 +95,7 @@ def test_knn_pruned_matches_dense_and_is_sublinear(idx):
     lats = rng.uniform(-60, 60, 64)
     lons = rng.uniform(-60, 60, 64)
     got, n_eval = probe.knn_zones_batch(idx, lats, lons, k=3, return_stats=True)
+    got = zone_names(idx, got)
 
     # dense reference (the round-1 semantics), computed inline
     from tzengine import geom
@@ -96,7 +104,7 @@ def test_knn_pruned_matches_dense_and_is_sublinear(idx):
     for rank in range(idx.n_pieces):
         rings = idx.piece_rings(rank)
         inside = geom.contains_inclusive(pts, rings)
-        d = geom.distance_from_boundary(pts, rings)
+        d = oracle_distance(pts, rings)
         dists[:, rank] = np.where(inside, 0.0, d)
     ranks = np.arange(idx.n_pieces)
     expect = []
@@ -147,7 +155,7 @@ def test_knn_bound_matrix_is_group_sized_not_piece_sized(idx, monkeypatch):
     lons = rng.uniform(-60, 60, 48)
     gsize = 8  # fine groups so expansion pruning is observable
     got = probe.knn_zones_batch(idx, lats, lons, k=3, group_size=gsize)
-    assert all(len(g) == 3 for g in got)
+    assert all(len(g) == 3 for g in got.to_pylist())
 
     n_groups = -(-idx.n_pieces // gsize)
     assert idx.n_pieces > gsize  # the test is non-vacuous
@@ -282,6 +290,56 @@ def huge():
     return pieces, idx_h
 
 
+@pytest.fixture(scope="module")
+def big454():
+    pieces = big_world()
+    return pieces, index.compile_index(pieces, -90, -180, 90, 180, "big454")
+
+
+@pytest.mark.parametrize("metric", ["geodesic", "geodesic_freeze", "planar_deg"])
+@pytest.mark.parametrize("world", ["big454", "huge"])
+def test_q5_kernel_matches_oracle_map(request, world, metric):
+    """The flat Q5 kernel (probe_ranks + one foot call) equals the
+    reference's per-piece path bit-for-bit on seeded samples: the first
+    containing zone, the last one (the ocean filler under a tile), random
+    zones (mostly misses) and NULL zones, at random points and exact
+    vertices; strict mode raises on the misses only."""
+    pieces, idx = request.getfixturevalue(world)
+    oracle = OracleMap(pieces, -90, -180, 90, 180)
+    rng = np.random.default_rng(31)
+    n = 240
+    vsel = rng.integers(0, len(idx.verts), 40)
+    lats = np.concatenate([rng.uniform(-63, 63, n), idx.verts[vsel, 1]])
+    lons = np.concatenate([rng.uniform(-63, 63, n), idx.verts[vsel, 0]])
+    offs, ranks, _ = probe.probe_ranks(idx, lats, lons, mode="pipeline")
+    zones = []
+    for i in range(len(lats)):
+        rs = ranks[offs[i]:offs[i + 1]]
+        pick = {0: rs[:1], 1: rs[-1:], 2: [rng.integers(0, idx.n_pieces)]}
+        r = pick.get(i % 4, [])
+        zones.append(idx.zone_ids[r[0]] if len(r) else None)
+    want = np.array([
+        oracle.get_distance_from_boundary(z, la, lo, metric)
+        for z, la, lo in zip(zones, lats, lons)
+    ])
+    got = probe.distance_from_boundary_batch(
+        idx, zones, lats, lons, mode="pipeline", metric=metric
+    )
+    assert np.array_equal(got, want, equal_nan=True)
+    miss = np.isnan(want) & np.not_equal(zones, None)
+    assert miss.any() and (~np.isnan(want)).sum() > n // 2
+    with pytest.raises(ValueError, match="inside the time zone"):
+        probe.distance_from_boundary_batch(
+            idx, zones, lats, lons, mode="strict", metric=metric
+        )
+    keep = ~miss
+    strict = probe.distance_from_boundary_batch(
+        idx, [z for z, k in zip(zones, keep) if k], lats[keep], lons[keep],
+        mode="strict", metric=metric,
+    )
+    assert np.array_equal(strict, want[keep], equal_nan=True)
+
+
 def test_hugeworld_shape_and_broadcast_bound(huge):
     pieces, idx_h = huge
     n_verts = sum(len(r) for p in pieces for r in p.rings)
@@ -373,14 +431,16 @@ def test_knn_planar_metric_matches_dense_planar_sweep(idx):
     rng = np.random.default_rng(17)
     lats = rng.uniform(-60, 60, 48)
     lons = rng.uniform(-60, 60, 48)
-    got = probe.knn_zones_batch(idx, lats, lons, k=3, metric="planar_deg")
+    got = zone_names(
+        idx, probe.knn_zones_batch(idx, lats, lons, k=3, metric="planar_deg")
+    )
 
     pts = np.stack([lons, lats], axis=1)
     dists = np.zeros((len(lats), idx.n_pieces))
     for rank in range(idx.n_pieces):
         rings = idx.piece_rings(rank)
         inside = geom.contains_inclusive(pts, rings)
-        d = geom.planar_distance_from_boundary(pts, rings)
+        d = oracle_planar_distance(pts, rings)
         dists[:, rank] = np.where(inside, 0.0, d)
     ranks = np.arange(idx.n_pieces)
     expect = []

@@ -389,3 +389,113 @@ def test_split_probe_udf_pruning_and_collapse(spark, world):
     assert len(nodes) == 1 and "_probe_first" in nodes[0] and "_probe_all" in nodes[0]
     p_tzids = plan(out.select("tzids"))
     assert "_probe_all" in p_tzids and "_probe_first" not in p_tzids
+
+
+def _collect_within(df, seconds):
+    """collect() that cancels the Spark jobs, failing the test, when they
+    run longer than ``seconds`` (a hung Python worker would otherwise
+    stall the suite)."""
+    import threading
+
+    sc = df.sparkSession.sparkContext
+    timer = threading.Timer(seconds, sc.cancelAllJobs)
+    timer.start()
+    try:
+        return df.collect()
+    finally:
+        timer.cancel()
+
+
+def test_distance_and_knn_null_and_infinite_rows(engine, spark):
+    inf = float("inf")
+    df = spark.createDataFrame(
+        [(0, 4.5, 4.5), (1, None, 1.0), (2, 1.0, None), (3, inf, 2.0),
+         (4, 4.5, -inf), (5, float("nan"), 3.0)],
+        "i int, lat double, lon double",
+    )
+    out = engine.knn_zones(
+        engine.distance_from_boundary(engine.assign_timezones(df)), k=3
+    )
+    rows = sorted(_collect_within(out, 120), key=lambda r: r.i)
+    assert rows[0].nearest_tzids == ["Zone/Small", "Zone/Big", "Zone/Filler"]
+    assert rows[0].boundary_dist_m > 0
+    for r in rows[1:]:
+        assert r.tzid is None and r.boundary_dist_m is None, r
+        assert r.nearest_tzids == [], r
+
+
+def test_distance_zone_codes_null_and_unknown(engine, spark):
+    df = spark.createDataFrame(
+        [(0, "Zone/Small", 4.5, 4.5), (1, None, 4.5, 4.5),
+         (2, "Zone/Nowhere", 4.5, 4.5), (3, "O'Brien", 4.5, 4.5),
+         (4, "Zone/Multi", 4.5, 4.5)],
+        "i int, zone string, lat double, lon double",
+    )
+    got = {
+        r.i: r.d for r in engine.distance_from_boundary(
+            df, zone_col="zone", out_col="d", metric="planar_deg"
+        ).collect()
+    }
+    assert got[0] == pytest.approx(0.5)
+    assert got[1] is None and got[2] is None and got[3] is None
+    assert got[4] is None  # Multi's pieces do not contain the point
+    # strict: a NULL zone is no error, an unknown or wrong zone is
+    strict = engine.distance_from_boundary(
+        df.filter("i < 2"), zone_col="zone", mode="strict"
+    ).collect()
+    assert len(strict) == 2
+    for bad in (2, 4):
+        with pytest.raises(Exception, match="inside the time zone"):
+            engine.distance_from_boundary(
+                df.filter(f"i = {bad}"), zone_col="zone", mode="strict"
+            ).collect()
+
+
+def _arrow_eval_nodes(df):
+    """(evalType, UDF return types) of each ArrowEvalPython node in the
+    physical plan."""
+    stack, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name == "ArrowEvalPythonExec":
+            udfs = node.udfs()
+            nodes.append((
+                node.evalType(),
+                [udfs.apply(i).dataType().simpleString()
+                 for i in range(udfs.size())],
+            ))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+@pytest.mark.parametrize("include_all", [False, True])
+def test_assign_distance_knn_plan_two_arrow_nodes_no_strings(
+    engine, spark, include_all
+):
+    """assign -> distance_from_boundary -> knn_zones crosses into Python
+    twice: kNN takes only lat/lon, so it joins the probe's node; Q5 reads
+    the JVM-mapped tzid, so it needs a second one. Every UDF is an
+    arrow_udf and none returns a string."""
+    from pyspark.util import PythonEvalType
+
+    df = spark.createDataFrame([(4.5, 4.5)], "lat double, lon double")
+    out = engine.knn_zones(
+        engine.distance_from_boundary(
+            engine.assign_timezones(df, include_all=include_all)
+        ),
+        k=3,
+    )
+    nodes = _arrow_eval_nodes(out)
+    assert len(nodes) == 2, nodes
+    for eval_type, types in nodes:
+        assert eval_type == PythonEvalType.SQL_SCALAR_ARROW_UDF, nodes
+        assert not any("string" in t for t in types), nodes
+    assert sorted(len(t) for _, t in nodes) == [1, 3 if include_all else 2]
+    assert out.schema["nearest_tzids"].dataType.simpleString() == "array<string>"
+    assert out.schema["nearest_tzids"].dataType.containsNull
+    assert out.schema["boundary_dist_m"].dataType.simpleString() == "double"

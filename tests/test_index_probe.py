@@ -5,12 +5,15 @@ Structural ports of TimeZoneMapTest.java over the synthetic world
 clip invariant, out-of-region guard, degenerate stripe region.
 """
 
+import contextlib
+import signal
+
 import numpy as np
 import pytest
 
 from tzengine import geom, index, probe
 from tzengine.oracle import OracleMap
-from tzengine.zones import synthetic_world
+from tzengine.zones import ZonePiece, synthetic_world
 
 WORLD = synthetic_world()
 EVERYWHERE = index.compile_index(WORLD, -90, -180, 90, 180, world_version="synth1")
@@ -155,13 +158,113 @@ def test_distance_errors_and_hole():
     assert np.isnan(d[0])
 
 
+def knn_names(idx, lats, lons, k, **kw):
+    """knn_zones_batch with its rank lists mapped to zone names."""
+    got = probe.knn_zones_batch(idx, np.asarray(lats), np.asarray(lons), k, **kw)
+    return [[idx.zone_ids[r] for r in row] for row in got.to_pylist()]
+
+
 def test_knn_ordering():
-    res = probe.knn_zones_batch(EVERYWHERE, np.array([4.5]), np.array([4.5]), k=3)[0]
+    res = knn_names(EVERYWHERE, [4.5], [4.5], k=3)[0]
     assert res == ["Zone/Small", "Zone/Big", "Zone/Filler"]
     # outside every non-filler zone: nearest should be the closest boundary
-    res = probe.knn_zones_batch(EVERYWHERE, np.array([4.5]), np.array([6.5]), k=3)[0]
+    res = knn_names(EVERYWHERE, [4.5], [6.5], k=3)[0]
     assert res[0] == "Zone/Filler"  # contains the point (distance 0)
     assert res[1] == "Zone/Big"  # 0.5 deg away beats Small at 1.5 deg
+
+
+@contextlib.contextmanager
+def deadline(seconds):
+    """Fail with TimeoutError, instead of hanging the suite, when the
+    body runs longer than ``seconds`` (the kernels loop in Python, so
+    the alarm lands between numpy calls)."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+@pytest.mark.parametrize("metric", ["geodesic", "planar_deg"])
+def test_knn_non_finite_points_finish_with_empty_lists(metric):
+    # a NULL coordinate reaches the UDF as NaN: it used to never finish
+    lats = np.array([4.5, np.nan, 4.5, np.inf, -np.inf, 4.5, np.nan])
+    lons = np.array([4.5, 1.0, np.nan, 4.5, 4.5, np.inf, np.nan])
+    with deadline(30):
+        got = knn_names(EVERYWHERE, lats, lons, k=3, metric=metric)
+        only_bad = knn_names(EVERYWHERE, lats[1:], lons[1:], k=3, metric=metric)
+    assert got[0] == ["Zone/Small", "Zone/Big", "Zone/Filler"]
+    assert got[1:] == [[]] * 6
+    assert only_bad == [[]] * 6
+
+
+def test_nearest_feet_rejects_non_finite_points():
+    # a NaN pair would poison the bucket-prune bound and return a wrong
+    # d2min silently
+    for lon, lat in ((np.nan, 1.0), (1.0, np.inf)):
+        with pytest.raises(ValueError, match="finite"):
+            probe._nearest_feet_flat(
+                EVERYWHERE, np.array([lon]), np.array([lat]), np.array([0])
+            )
+
+
+def test_every_compiled_piece_has_a_segment():
+    idx = EVERYWHERE
+    assert np.all(np.diff(idx.seg_offsets) > 0)
+    dot = ZonePiece("Zone/Dot", 0, 99, [np.array([[5.0, 5.0]])])
+    with pytest.raises(ValueError, match="no boundary segment"):
+        index.compile_index(
+            list(WORLD) + [dot], -90, -180, 90, 180, world_version="synth1"
+        )
+
+
+@pytest.mark.parametrize("metric", ["geodesic", "geodesic_freeze", "planar_deg"])
+def test_q5_kernel_matches_per_piece_oracle_with_holes(metric):
+    """Every zone against every point of a grid over the synthetic world
+    — holes, enclaves, the two-piece Zone/Multi, boundary and corner
+    points — bit-for-bit against the per-piece oracle, by name and by
+    the integer zone codes the engine ships."""
+    g = np.array([0.0, 1.0, 1.4, 1.8, 2.5, 4.5, 6.5, 9.0, 10.0])
+    lat_g, lon_g = np.meshgrid(g, g)
+    zone_names = list(dict.fromkeys(EVERYWHERE.zone_ids)) + ["Zone/Nowhere", None]
+    zones = [z for z in zone_names for _ in range(lat_g.size)]
+    lats = np.tile(lat_g.ravel(), len(zone_names))
+    lons = np.tile(lon_g.ravel(), len(zone_names))
+    want = np.array([
+        ORACLE.get_distance_from_boundary(z, la, lo, metric)
+        for z, la, lo in zip(zones, lats, lons)
+    ])
+    got = probe.distance_from_boundary_batch(
+        EVERYWHERE, zones, lats, lons, mode="pipeline", metric=metric
+    )
+    assert np.array_equal(got, want, equal_nan=True)
+    assert np.isnan(want).any() and (want == 0).any() and (want > 0).any()
+    codes = probe.zone_ranks(EVERYWHERE, zones)
+    assert codes[-1] == probe.NO_ZONE
+    assert codes[-lat_g.size - 1] == probe.UNKNOWN_ZONE
+    by_code = probe.distance_from_boundary_batch(
+        EVERYWHERE, codes.astype(np.int16), lats, lons, mode="pipeline",
+        metric=metric,
+    )
+    assert np.array_equal(by_code, want, equal_nan=True)
+    # strict: any named-zone miss raises (an unknown zone too); hits
+    # and NULL zones do not
+    with pytest.raises(ValueError, match="inside the time zone"):
+        probe.distance_from_boundary_batch(
+            EVERYWHERE, zones, lats, lons, mode="strict", metric=metric
+        )
+    keep = ~np.isnan(want) | (codes == probe.NO_ZONE)
+    strict = probe.distance_from_boundary_batch(
+        EVERYWHERE, codes[keep], lats[keep], lons[keep], mode="strict",
+        metric=metric,
+    )
+    assert np.array_equal(strict, want[keep], equal_nan=True)
 
 
 def test_version_gate():

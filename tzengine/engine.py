@@ -4,15 +4,17 @@ The reference's `TimeZoneMap` surface (forEverywhere / forRegion /
 getOverlappingTimeZone(s) / getDistanceFromBoundary / mapVersion /
 timeZones / initializedRegion, TimeZoneMap.kt + TimeZone.kt) re-expressed
 as DataFrame transforms: the compiled covering index is a Spark broadcast
-variable and every query op is a vectorized pandas UDF over Arrow batches
-— no per-row Python (input_hint), no shuffle on the probe side (the whole
-lookup is a broadcast spatial join).
+variable and every query op is a vectorized Arrow UDF (``arrow_udf``, or
+``mapInArrow`` for the opt-in assign impl) — no per-row Python
+(input_hint), no shuffle on the probe side (the whole lookup is a
+broadcast spatial join). Only numbers cross the Python boundary: lat/lon
+in, int16/int32 piece ranks or float64 distances out; zone names are
+mapped to and from ranks JVM-side through one rank->name literal array.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,16 +80,6 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
     return z ^ (z >> np.uint64(31))
 
 
-ASSIGN_SCHEMA = T.StructType(
-    [
-        T.StructField("tzid", T.StringType()),
-        T.StructField("tzids", T.ArrayType(T.StringType())),
-        T.StructField("cell_id", T.LongType()),
-        T.StructField("zone_shard", T.IntegerType()),
-    ]
-)
-
-
 class TzEngine:
     """Immutable after construction (like the reference map object —
     share freely across queries)."""
@@ -99,6 +91,21 @@ class TzEngine:
         self.spark = spark
         self.idx = idx
         self._bc = spark.sparkContext.broadcast(idx)
+        # the rank -> zone-name array every op maps through JVM-side:
+        # element_at(lit, rank + 1), and Q5's array_position(lit, name)
+        # - 1. ONE parsed expression: F.array(*[F.lit(z) ...]) costs a
+        # py4j round trip PER ZONE (~0.5 s for the 454-piece world)
+        self._zone_lit = F.expr(
+            "array("
+            + ", ".join("'" + z.replace("'", "''") + "'" for z in idx.zone_ids)
+            + ")"
+        )
+        # shipped rank type: int16 whenever the piece count fits (half
+        # the Arrow-boundary bytes of int32)
+        self._rank_t = (
+            T.ShortType() if probemod.rank_dtype(idx) == np.int16
+            else T.IntegerType()
+        )
 
     # -- construction (reference I0-I13) ------------------------------------
 
@@ -457,18 +464,8 @@ class TzEngine:
             impl = self._pick_probe_impl(df, lat_col, lon_col)
         if impl not in ("pandas", "arrow"):
             raise ValueError(f"unknown impl: {impl!r}")
-        import pyarrow as pa
-
         bc = self._bc
-
-        # rank transport dtype: int16 whenever the piece count fits
-        # (guide §2.3 — narrower types, half the Arrow-boundary bytes);
-        # both impls share it so results stay bit-identical
-        rank_t = (
-            T.ShortType()
-            if probemod.rank_dtype(self.idx) == np.int16
-            else T.IntegerType()
-        )
+        rank_t = self._rank_t  # shared by both impls: identical results
 
         if impl == "arrow":
             res = self._probe_arrow_mapped(
@@ -575,20 +572,11 @@ class TzEngine:
             first_c = F.col("__tz")
             first_is_sentinel = True  # Q1 kernel ships -1 for no-match
 
-        # JVM-side rank -> zone-name mapping (element_at over a literal
-        # array; the zone list is broadcast-small by construction) and
-        # deterministic shard assignment (xxhash64 of the cell id).
-        # Invalid rows (out-of-region / NaN, pipeline mode) carry sentinel
-        # values from Python and are nulled here.
-        # One parsed array literal (round 6): F.array(*[F.lit(z) ...]) is
-        # one py4j round trip PER ZONE — ~0.5 s of driver plan-building
-        # for the 454-piece world on every assign_timezones call.
-        zone_lit = F.expr(
-            "array("
-            + ", ".join("'" + z.replace("'", "''") + "'"
-                        for z in self.idx.zone_ids)
-            + ")"
-        )
+        # JVM-side rank -> zone-name mapping and deterministic shard
+        # assignment (xxhash64 of the cell id). Invalid rows (out-of-
+        # region / NaN, pipeline mode) carry sentinel values from Python
+        # and are nulled here.
+        zone_lit = self._zone_lit
         maybe_tzids = (
             [
                 F.when(
@@ -744,32 +732,37 @@ class TzEngine:
         """Q5: distance to the nearest boundary coordinate of the named
         zone's containing piece (TimeZone.kt:41-47); clip edges count as
         boundary. ``metric="geodesic"`` = WGS84 meters (reference
-        parity) — since round 5 the fixed-iteration Vincenty the SQL
-        oracle mirrors ("geodesic_fixed" is an alias; "geodesic_freeze"
-        opts into the adaptive variant, ~5e-10 m away); ``"planar_deg"``
-        = planar degrees (cheap pre-filter). Outside point → error
-        (strict) / null (pipeline)."""
-        if metric not in (
-            "geodesic", "geodesic_fixed", "geodesic_freeze", "planar_deg"
-        ):
+        parity) — the fixed-iteration Vincenty the SQL oracle mirrors
+        ("geodesic_fixed" is an alias; "geodesic_freeze" opts into the
+        adaptive variant, ~5e-10 m away); ``"planar_deg"`` = planar
+        degrees (cheap pre-filter). A point outside its zone → error
+        (strict) / null (pipeline); a NULL zone → null. The zone enters
+        the ``arrow_udf`` as a rank code (probe.zone_ranks), not a string.
+        """
+        if metric not in probemod.METRICS:
             # fail fast driver-side, not as a wrapped executor exception
             raise ValueError(f"unknown metric: {metric!r}")
         bc = self._bc
 
-        @F.pandas_udf(T.DoubleType())
-        def _dist(zone: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-            idx = bc.value
+        @F.arrow_udf(T.DoubleType())
+        def _dist(zone: pa.Array, lat: pa.Array, lon: pa.Array) -> pa.Array:
             d = probemod.distance_from_boundary_batch(
-                idx,
-                zone.tolist(),
-                lat.to_numpy(dtype=np.float64),
-                lon.to_numpy(dtype=np.float64),
+                bc.value,
+                zone.to_numpy(zero_copy_only=False),
+                lat.to_numpy(zero_copy_only=False),
+                lon.to_numpy(zero_copy_only=False),
                 mode=mode,
                 metric=metric,
             )
-            return pd.Series(d)
+            return pa.array(d, mask=np.isnan(d))  # NaN -> NULL
 
-        return df.withColumn(out_col, _dist(F.col(zone_col), F.col(lat_col), F.col(lon_col)))
+        zone_rank = F.coalesce(
+            F.array_position(self._zone_lit, F.col(zone_col)) - 1,
+            F.lit(probemod.NO_ZONE),
+        ).cast(self._rank_t)
+        return df.withColumn(
+            out_col, _dist(zone_rank, F.col(lat_col), F.col(lon_col))
+        )
 
     def knn_zones(
         self,
@@ -783,32 +776,36 @@ class TzEngine:
         """kNN fallback (north_star): zones ordered by boundary distance;
         contained zones are distance 0 and keep the area-rank order, so the
         head agrees with getOverlappingTimeZones for covered points.
-        ``metric``: "geodesic" (WGS84 meters, reference parity — since
-        round 5 the fixed-iteration Vincenty the SQL oracle mirrors;
-        "geodesic_fixed" is an alias), "geodesic_freeze" (opt-in
-        adaptive variant), or "planar_deg" (planar degrees — bit-exact
-        SQL-oracle-able ordering)."""
-        if metric not in (
-            "geodesic", "geodesic_fixed", "geodesic_freeze", "planar_deg"
-        ):
+        ``metric``: "geodesic" (WGS84 meters, reference parity — the
+        fixed-iteration Vincenty the SQL oracle mirrors; "geodesic_fixed"
+        is an alias), "geodesic_freeze" (opt-in adaptive variant), or
+        "planar_deg" (planar degrees — bit-exact SQL-oracle-able
+        ordering). A NULL, NaN or infinite coordinate yields []. The
+        ``arrow_udf`` returns piece ranks, mapped to names JVM-side; on
+        lat/lon only, it shares the assign probe's ArrowEvalPython node.
+        """
+        if metric not in probemod.METRICS:
             # fail fast driver-side: a typo would otherwise surface as a
             # wrapped executor PythonException on the first batch
             raise ValueError(f"unknown metric: {metric!r}")
         bc = self._bc
 
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def _knn(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            idx = bc.value
-            res = probemod.knn_zones_batch(
-                idx,
-                lat.to_numpy(dtype=np.float64),
-                lon.to_numpy(dtype=np.float64),
+        @F.arrow_udf(T.ArrayType(self._rank_t))
+        def _knn(lat: pa.Array, lon: pa.Array) -> pa.Array:
+            return probemod.knn_zones_batch(
+                bc.value,
+                lat.to_numpy(zero_copy_only=False),
+                lon.to_numpy(zero_copy_only=False),
                 k,
                 metric=metric,
             )
-            return pd.Series(res)
 
-        return df.withColumn(out_col, _knn(F.col(lat_col), F.col(lon_col)))
+        names = F.transform(
+            _knn(F.col(lat_col), F.col(lon_col)),
+            lambda r: F.element_at(self._zone_lit, r + 1),
+        )
+        # array<string> with nullable elements, the type it always had
+        return df.withColumn(out_col, names.cast("array<string>"))
 
     # -- durable artifact ------------------------------------------------------
 

@@ -453,32 +453,8 @@ def clip_rings_to_box_split(
 
 
 # ---------------------------------------------------------------------------
-# Nearest boundary coordinate (planar) + geodesic distance (WGS84).
+# Geodesic distance (WGS84).
 # ---------------------------------------------------------------------------
-
-
-def nearest_boundary_point(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
-    """For each point, the planar-nearest coordinate on any ring segment
-    (degrees), matching esri `GeometryEngine.getNearestCoordinate`
-    (TimeZone.kt:46 — note: nearest is planar; only the final distance is
-    geodesic). Returns (N,2) (lon,lat)."""
-    pts = np.atleast_2d(np.asarray(pts, dtype=np.float64))
-    seg_a, seg_b = _segments(rings)
-    px = pts[:, 0][:, None]
-    py = pts[:, 1][:, None]
-    ax, ay = seg_a[:, 0][None, :], seg_a[:, 1][None, :]
-    bx, by = seg_b[:, 0][None, :], seg_b[:, 1][None, :]
-    dx, dy = bx - ax, by - ay
-    seg_len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((px - ax) * dx + (py - ay) * dy) / seg_len2
-    t = np.where(seg_len2 > 0, np.clip(t, 0.0, 1.0), 0.0)
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = (px - cx) ** 2 + (py - cy) ** 2
-    best = np.argmin(d2, axis=1)
-    rows = np.arange(len(pts))
-    return np.stack([cx[rows, best], cy[rows, best]], axis=1)
 
 
 def geodesic_distance_wgs84(
@@ -603,44 +579,6 @@ def geodesic_distance_wgs84(
     )
     dist = b * A * (sigma - delta_sigma)
     return np.where(same, 0.0, dist)
-
-
-def distance_from_boundary(
-    pts: np.ndarray, rings: list[np.ndarray], freeze: bool = False
-) -> np.ndarray:
-    """Distance (meters) from each point to the planar-nearest boundary
-    coordinate, geodesic on WGS84 — TimeZone.kt:41-47 semantics. Does NOT
-    enforce the inside-guard; callers check `contains_inclusive` first
-    (TimeZone.kt:43). ``freeze`` → geodesic_distance_wgs84 (default
-    False = fixed-iteration, the SQL-oracled variant)."""
-    pts = np.atleast_2d(np.asarray(pts, dtype=np.float64))
-    nearest = nearest_boundary_point(pts, rings)
-    return geodesic_distance_wgs84(
-        pts[:, 1], pts[:, 0], nearest[:, 1], nearest[:, 0], freeze=freeze
-    )
-
-
-def planar_distance_from_boundary(
-    pts: np.ndarray, rings: list[np.ndarray]
-) -> np.ndarray:
-    """Planar distance in DEGREES to the nearest boundary segment — the
-    cheap pre-filter metric (no geodesic); same nearest-point math as
-    `nearest_boundary_point`, returning sqrt(min d²)."""
-    pts = np.atleast_2d(np.asarray(pts, dtype=np.float64))
-    seg_a, seg_b = _segments(rings)
-    px = pts[:, 0][:, None]
-    py = pts[:, 1][:, None]
-    ax, ay = seg_a[:, 0][None, :], seg_a[:, 1][None, :]
-    bx, by = seg_b[:, 0][None, :], seg_b[:, 1][None, :]
-    dx, dy = bx - ax, by - ay
-    seg_len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((px - ax) * dx + (py - ay) * dy) / seg_len2
-    t = np.where(seg_len2 > 0, np.clip(t, 0.0, 1.0), 0.0)
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = (px - cx) ** 2 + (py - cy) ** 2
-    return np.sqrt(d2.min(axis=1))
 
 
 def segment_box_mask(

@@ -71,7 +71,7 @@ class CompiledIndex:
     # upcasts gathered slices to float64 before any arithmetic so the
     # predicates are bit-identical. Clip-generated vertices that are not
     # f32-exact keep float64 storage (correctness over bandwidth).
-    seg_offsets: np.ndarray  # int64 (P+1,)
+    seg_offsets: np.ndarray  # int64 (P+1,), every span non-empty
     seg_a: np.ndarray  # float32|float64 (S, 2)
     seg_b: np.ndarray  # float32|float64 (S, 2)
     # global cell-entry arrays (E entries across all levels):
@@ -486,6 +486,14 @@ def assemble_index(
     )
 
     seg_counts = np.array([len(d["seg_a"]) for d in datas], dtype=np.int64)
+    # the distance kernels (probe._nearest_feet_flat) need a segment in
+    # every piece; such a piece could contain no point anyway
+    if P and not seg_counts.all():
+        bad = int(np.argmin(seg_counts))
+        raise ValueError(
+            f"zone piece {zone_ids[bad]!r} (rank {bad}) has no boundary "
+            "segment: every piece needs a ring of at least two vertices"
+        )
     seg_offsets = np.zeros(P + 1, dtype=np.int64)
     np.cumsum(seg_counts, out=seg_offsets[1:])
     seg_a = np.vstack([d["seg_a"] for d in datas]) if P else np.zeros((0, 2))

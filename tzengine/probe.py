@@ -1,6 +1,6 @@
 """Vectorized probe kernels over a CompiledIndex (pure numpy).
 
-These are the batch kernels the Spark pandas UDFs call (engine.py); they
+These are the batch kernels the engine's Arrow UDFs call (engine.py); they
 are Spark-free so the same code is unit-testable and runs inside Arrow
 batches on executors. Semantics = reference point query (TimeZoneMap.kt:
 56-85): init-region guard (Q3), boundary-inclusive containment (Q4),
@@ -380,9 +380,9 @@ def probe_arrow(
     happens JVM-side (element_at over a literal array), so strings never
     cross the Python boundary at all.
 
-    Sentinels instead of Arrow nulls (first_rank=-1, ranks=[]): Spark's
-    pandas serializer can't convert pd.NA inside struct fields, so invalid
-    rows are nulled JVM-side via the ``valid`` flag."""
+    Sentinels instead of Arrow nulls (first_rank=-1, ranks=[]): the
+    engine nulls invalid rows JVM-side from the region test it already
+    evaluates there, so no null bitmap needs to cross the boundary."""
     import pyarrow as pa
 
     offsets, ranks, valid = probe_ranks(idx, lats, lons, mode=mode)
@@ -404,73 +404,97 @@ def probe_arrow(
     return valid, pa.array(first), None
 
 
+GEODESIC_METRICS = ("geodesic", "geodesic_fixed", "geodesic_freeze")
+METRICS = GEODESIC_METRICS + ("planar_deg",)
+
+# Q5 zone codes below 0; a code >= 0 is a piece rank of the zone
+UNKNOWN_ZONE = -1  # a name the index lacks: strict mode raises
+NO_ZONE = -2  # NULL zone: NaN, never an error
+
+
+def zone_ranks(idx: CompiledIndex, zone_names) -> np.ndarray:
+    """Zone names -> each zone's first piece rank (array_position over
+    the rank->name array, minus 1) in one vectorized lookup."""
+    import pandas as pd
+
+    first = pd.Series(np.arange(idx.n_pieces), index=idx.zone_ids)
+    first = first.groupby(level=0).min()
+    out = first.reindex(zone_names).fillna(UNKNOWN_ZONE).to_numpy(np.int64)
+    out[pd.isna(np.asarray(zone_names, dtype=object))] = NO_ZONE
+    return out
+
+
+def _pos_in_run(keys: np.ndarray) -> np.ndarray:
+    """Position of each element within its run of equal sorted keys."""
+    if not len(keys):
+        return np.zeros(0, dtype=np.int64)
+    new = np.r_[True, keys[1:] != keys[:-1]]
+    return np.arange(len(keys)) - np.nonzero(new)[0][np.cumsum(new) - 1]
+
+
+def _zone_head(idx: CompiledIndex) -> np.ndarray:
+    """Per piece rank, its zone's first rank: the zone as an integer.
+    Cached on the index."""
+    head = getattr(idx, "_zone_head", None)
+    if head is None:
+        head = zone_ranks(idx, idx.zone_ids)
+        object.__setattr__(idx, "_zone_head", head)
+    return head
+
+
 def distance_from_boundary_batch(
     idx: CompiledIndex,
-    zone_ids: list,
+    zones,
     lats: np.ndarray,
     lons: np.ndarray,
     mode: str = "strict",
     metric: str = "geodesic",
 ) -> np.ndarray:
-    """Q5 (TimeZone.kt:41-47): for each (zone_id, point), distance to the
-    planar-nearest coordinate on the boundary of the piece of ``zone_id``
-    that contains the point (clip edges count). ``metric="geodesic"`` is
-    the reference semantics (WGS84 meters) — since round 5 it IS the
-    fixed-iteration Vincenty the SQL oracle mirrors ("geodesic_fixed"
-    stays as an alias; "geodesic_freeze" opts back into the adaptive
-    per-row-freeze variant, ~5e-10 m away). ``"planar_deg"`` returns the
-    planar degree distance — the cheap pre-filter metric, and (being
-    pure arithmetic) the one a SQL oracle can reproduce bit-for-bit.
-    Outside points: ValueError in strict mode (reference message), NaN in
-    pipeline mode."""
+    """Q5 (TimeZone.kt:41-47): for each (zone, point), distance to the
+    planar-nearest coordinate on the boundary of the zone's first
+    (smallest-area) piece that contains the point (clip edges count).
+    ``zones``: integer codes (a piece rank of the zone, UNKNOWN_ZONE or
+    NO_ZONE — the engine ships these) or names (None = no zone).
+
+    ``metric="geodesic"`` is the reference semantics (WGS84 meters, the
+    fixed-iteration Vincenty the SQL oracle mirrors; "geodesic_fixed" is
+    an alias, "geodesic_freeze" the adaptive per-row-freeze variant,
+    ~5e-10 m away); ``"planar_deg"`` is the planar degree distance.
+    Containment comes from ``probe_ranks``, distances from
+    ``_foot_distances`` (shared with kNN); both are bit-identical to the
+    per-piece ``oracle`` path; no piece contains a point outside the
+    initialized region. Rows whose zone does not contain the point:
+    ValueError in strict mode (reference message), NaN in pipeline
+    mode."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric: {metric!r}")
     lats = np.asarray(lats, dtype=np.float64)
     lons = np.asarray(lons, dtype=np.float64)
     n = len(lats)
+    want = np.asarray(zones)
+    want = (
+        want.astype(np.int64) if want.dtype.kind in "iu"
+        else zone_ranks(idx, zones)
+    )
+    head = _zone_head(idx)
+    named = want >= 0
+    want[named] = head[want[named]]
+
+    offsets, ranks, _valid = probe_ranks(idx, lats, lons, mode="pipeline")
+    pair_pt = np.repeat(np.arange(n), np.diff(offsets))
+    # each point's ranks are ascending, so its first matching pair is the
+    # zone's first containing piece
+    match = np.nonzero(head[ranks] == want[pair_pt])[0]
+    first = match[_pos_in_run(pair_pt[match]) == 0]
+    hit = pair_pt[first]
+
     out = np.full(n, np.nan)
-
-    # piece ranks per zone id, rank-ascending (first containing piece is
-    # "the" TimeZone object the reference user would hold)
-    zone_to_ranks: dict[str, list[int]] = {}
-    for rank, zid in enumerate(idx.zone_ids):
-        zone_to_ranks.setdefault(zid, []).append(rank)
-
-    # vectorized per (zone, piece): all of a zone's pending points are
-    # tested/measured against each piece at once, rank order preserved
-    zarr = np.asarray(zone_ids, dtype=object)
-    resolved = np.zeros(n, dtype=bool)
-    for zid in dict.fromkeys(z for z in zone_ids if z is not None):
-        sel = np.nonzero((zarr == zid) & ~resolved)[0]
-        if not len(sel):
-            continue
-        for rank in zone_to_ranks.get(zid, []):
-            if not len(sel):
-                break
-            pts = np.stack([lons[sel], lats[sel]], axis=1)
-            rings = idx.piece_rings(rank)
-            inside = geom.contains_inclusive(pts, rings)
-            hit = sel[inside]
-            if len(hit):
-                hp = np.stack([lons[hit], lats[hit]], axis=1)
-                if metric == "planar_deg":
-                    out[hit] = geom.planar_distance_from_boundary(hp, rings)
-                elif metric in ("geodesic", "geodesic_fixed"):
-                    # fixed-iteration Vincenty (no convergence freeze) is
-                    # the DEFAULT since round 5 (VERDICT r4 #3): the
-                    # variant the recursive-CTE SQL oracle mirrors
-                    # (~5e-10 m) — see geodesic_distance_wgs84
-                    out[hit] = geom.distance_from_boundary(hp, rings)
-                elif metric == "geodesic_freeze":
-                    out[hit] = geom.distance_from_boundary(
-                        hp, rings, freeze=True
-                    )
-                else:
-                    raise ValueError(f"unknown metric: {metric!r}")
-                resolved[hit] = True
-            sel = sel[~inside]
-    if mode == "strict" and not np.all(resolved | np.equal(zarr, None)):
-        unresolved = ~resolved
-        if np.any(unresolved):
-            raise ValueError("Location must be inside the time zone")
+    if len(hit):
+        out[hit], _ = _foot_distances(
+            idx, lats[hit], lons[hit], ranks[first], metric
+        )
+    if mode == "strict" and len(hit) < np.count_nonzero(want != NO_ZONE):
+        raise ValueError("Location must be inside the time zone")
     return out
 
 
@@ -574,11 +598,11 @@ def _nearest_feet_flat(
     """Planar-nearest boundary coordinate of piece ``pair_rank[i]`` for
     point ``(pair_lon[i], pair_lat[i])``, vectorized over ALL pairs via
     the index's flat segment CSR (round 6: replaces one
-    geom.nearest_boundary_point call per piece — 1277 calls of ~90 rows
+    oracle.nearest_boundary_point call per piece — 1277 calls of ~90 rows
     each on the kNN bench, whose per-call overhead was ~20% of the
     kernel wall).
 
-    Bit-identical per pair to geom.nearest_boundary_point: the same
+    Bit-identical per pair to oracle.nearest_boundary_point: the same
     segments in the same order (compile stored geom._segments output;
     float32 storage is lossless by construction and upcast before any
     arithmetic), the same foot AST, and the same FIRST-minimum tie-break
@@ -593,8 +617,11 @@ def _nearest_feet_flat(
 
     Returns (fx, fy, d2min) each (n_pairs,) float64 — d2min is the
     squared planar degree distance (sqrt of it == the planar metric).
-    Requires every piece to have at least one segment (callers fall back
-    to the per-piece path otherwise)."""
+    Every piece has at least one segment (``index.assemble_index``
+    guarantees it). Non-finite coordinates raise ValueError: a NaN pair
+    would otherwise poison the prune bound and yield a wrong d2min."""
+    if not (np.isfinite(pair_lon).all() and np.isfinite(pair_lat).all()):
+        raise ValueError("nearest-foot search needs finite coordinates")
     n_pairs = len(pair_rank)
     fx = np.empty(n_pairs)
     fy = np.empty(n_pairs)
@@ -686,6 +713,36 @@ def _nearest_feet_flat(
     return fx, fy, d2m
 
 
+def _foot_distances(
+    idx: CompiledIndex,
+    lats: np.ndarray,
+    lons: np.ndarray,
+    ranks: np.ndarray,
+    metric: str,
+    cap=np.inf,
+) -> tuple[np.ndarray, int]:
+    """The one boundary-distance kernel of Q5 and kNN: distance from
+    point i to the planar-nearest boundary coordinate of piece
+    ``ranks[i]`` (TimeZone.kt:46 — the foot is planar whatever the
+    metric): sqrt(d2min) for ``planar_deg``, else ONE batched Vincenty
+    call (its 50-iteration trig loop has a large fixed cost per call).
+
+    ``cap`` (geodesic, kNN's prescreen): a pair whose guaranteed lower
+    bound R_GEO_LB * haversine angle exceeds ``cap[i]`` is not evaluated
+    and stays +inf. Returns (dist, exact evaluations run)."""
+    fx, fy, d2 = _nearest_feet_flat(idx, lons, lats, ranks)
+    if metric == "planar_deg":
+        return np.sqrt(d2), len(d2)
+    need = geom.R_GEO_LB * geom._haversine_angle(lats, lons, fy, fx) <= cap
+    dist = np.full(len(d2), np.inf)
+    if need.any():
+        dist[need] = geom.geodesic_distance_wgs84(
+            lats[need], lons[need], fy[need], fx[need],
+            freeze=metric == "geodesic_freeze",
+        )
+    return dist, int(need.sum())
+
+
 KNN_GROUP_SIZE = 64  # legacy fixed size; None in knn_zones_batch = adaptive
 
 
@@ -753,34 +810,27 @@ def knn_zones_batch(
     area rank, so for covered points the head of the list agrees with
     getOverlappingTimeZones. Dedupes zone ids (nearest piece wins).
 
-    Scale path (two-level candidate stream): pieces are blocked into
-    Morton-ordered groups of KNN_GROUP_SIZE with union bboxes; the only
-    dense matrix is (n_points x n_groups) — n_pieces/64 columns, NOT the
-    former O(n x P) bound matrix. Each point streams candidate pieces in
-    guaranteed-nondecreasing geodesic-lower-bound order from a heap:
-    groups expand lazily (per-piece bounds computed only when the
-    group's union bound undercuts the heap top), and a point stops as
-    soon as the next candidate's bound exceeds its k-th zone distance —
-    every remaining piece can then neither enter nor reorder the top-k.
-    Peak memory is O(n x n_groups + expanded candidates); exact piece
-    evaluations stay sub-linear in P (both asserted in tests).
+    Returns a pa.ListArray<int16|int32> (``rank_dtype``): per point, the
+    nearest piece rank of each of its k nearest zones, nearest first —
+    ``idx.zone_ids[rank]`` names the zone (the engine maps ranks to names
+    JVM-side, so no string crosses the Arrow boundary). A point with a
+    NaN or infinite coordinate gets an empty list.
 
-    ``return_stats=True`` additionally returns the number of EXACT
-    distance evaluations performed (pruning evidence for tests/bench;
-    pairs skipped by the round-5 haversine prescreen never run the
-    distance kernel and are not counted).
-
-    VERDICT r3 #6 — the round loop is fully VECTORIZED: no per-point
-    heaps or dicts. State is flat numpy arrays — a global candidate pool
-    (point, rank, bound), per-point group pointers, and accumulated
-    (point, rank, dist) evaluations from which the k-th zone distance is
-    recomputed with one lexsort per round. Pieces may be evaluated out
-    of bound order (harmless: evaluation is exact); pruning discards any
-    pool entry whose bound exceeds kth (kth only shrinks, so the discard
-    is permanent-safe), and a point finishes when both its pool minimum
-    and its next unexpanded group bound exceed kth. The only Python
-    loop left in the hot path iterates over the UNIQUE PIECES evaluated
-    per round (the per-piece ring gather is inherent).
+    Two-level candidate stream: pieces are blocked into Morton-ordered
+    groups with union bboxes, so the only dense matrix is (n_points x
+    n_groups). State is flat numpy arrays — a candidate pool (point,
+    rank, bound), per-point group pointers, and per-(point, zone) best
+    distances from which each point's k-th zone distance (kth) is
+    recomputed every round. Groups expand lazily, pruning drops any pool
+    entry whose bound exceeds kth (kth only shrinks, so the drop is
+    permanent-safe), and a point finishes when its pool minimum and its
+    next group bound both exceed kth — no remaining piece can enter or
+    reorder its top-k. Peak memory is O(n x n_groups + expanded
+    candidates) and exact evaluations stay sub-linear in P (both
+    asserted in tests). Containment comes from one ``probe_ranks`` call,
+    distances from one ``_foot_distances`` call per round — the kernel
+    Q5 uses. ``return_stats=True`` also returns the number of EXACT
+    distance evaluations (prescreened pairs are not counted).
 
     ``metric``: "geodesic" (WGS84 meters, reference parity — DEFAULT,
     the fixed-iteration Vincenty the recursive-CTE SQL oracle mirrors;
@@ -789,42 +839,34 @@ def knn_zones_batch(
     "planar_deg" (planar degrees; the same kernel the bit-exact
     distance_boundary_planar oracle mirrors, which makes the kNN ORDER
     value-verifiable by a SQL oracle)."""
-    if metric in ("geodesic", "geodesic_fixed", "geodesic_freeze"):
-        # geodesic metrics share the bounds and take the BATCHED eval
-        # path below (no per-piece dist_fn): "geodesic" IS the fixed-
-        # iteration Vincenty, the SQL-oracle-tight DEFAULT (VERDICT r4
-        # #3); "geodesic_freeze" opts into the adaptive variant — see
-        # geodesic_distance_wgs84
-        bound_outer = geom.bbox_geodesic_lower_bound
-        bound_pair = geom.bbox_geodesic_lower_bound_pairwise
-        dist_fn = None  # geodesic evals run batched, not per piece
-    elif metric == "planar_deg":
-        bound_outer = geom.bbox_planar_lower_bound
-        bound_pair = geom.bbox_planar_lower_bound_pairwise
-        dist_fn = geom.planar_distance_from_boundary
-    else:
+    if metric not in METRICS:
         raise ValueError(f"unknown metric: {metric!r}")
-    # geodesic metrics take the BATCHED eval path (round 5, VERDICT r4
-    # #6): per piece only the planar foot is computed; all of a round's
-    # Vincenty evaluations run as ONE call (the 50-iteration trig loop
-    # has a large fixed numpy overhead per call — r4 ran it once per
-    # piece), and a haversine prescreen (R_GEO_LB * central angle is a
-    # guaranteed geodesic lower bound, same constant the bbox bound
-    # uses) skips the exact eval for pairs that can no longer enter the
-    # top-k (permanent-safe: kth only shrinks).
-    geo_batched = metric in ("geodesic", "geodesic_fixed", "geodesic_freeze")
-    geo_freeze = metric == "geodesic_freeze"
+    geodesic = metric in GEODESIC_METRICS
+    bound_outer = (
+        geom.bbox_geodesic_lower_bound if geodesic
+        else geom.bbox_planar_lower_bound
+    )
+    bound_pair = (
+        geom.bbox_geodesic_lower_bound_pairwise if geodesic
+        else geom.bbox_planar_lower_bound_pairwise
+    )
     lats = np.asarray(lats, dtype=np.float64)
     lons = np.asarray(lons, dtype=np.float64)
-    pts = np.stack([lons, lats], axis=1)
     n = len(lats)
+    # a non-finite point is done before it starts: its bounds would be
+    # NaN, and every comparison with kth false, so it would never finish.
+    # It gets an empty list; zeros keep the bound arithmetic quiet.
+    done = ~(np.isfinite(lats) & np.isfinite(lons))
+    if done.any():
+        lats = np.where(done, 0.0, lats)
+        lons = np.where(done, 0.0, lons)
 
     if group_size is None:
         group_size = _knn_adaptive_group_size(idx.n_pieces)
     gb, members = _knn_piece_groups(idx, group_size)
     n_groups = len(members)
-    if n_groups == 0 or n == 0:
-        out = [[] for _ in range(n)]
+    if n_groups == 0 or done.all():
+        out = _knn_rank_lists(idx, n, k, None)
         return (out, 0) if return_stats else out
 
     lb_g = bound_outer(lats, lons, gb)  # (n, P/64)
@@ -838,9 +880,9 @@ def knn_zones_batch(
     member_offs = np.zeros(n_groups + 1, dtype=np.int64)
     np.cumsum(member_lens, out=member_offs[1:])
 
-    # zone ids factorized to ints so per-(point, zone) reductions are
-    # pure array ops
-    zone_names, zone_of_rank = np.unique(np.asarray(idx.zone_ids), return_inverse=True)
+    # zone ids as ints (each zone's first rank) so per-(point, zone)
+    # reductions are pure array ops
+    zone_of_rank = _zone_head(idx)
 
     if eval_chunk is None:
         # candidates evaluated per point per round: large enough to find
@@ -857,7 +899,6 @@ def knn_zones_batch(
     pool_bound = np.empty(0, dtype=np.float64)
     gptr = np.zeros(n, dtype=np.int64)
     kth = np.full(n, np.inf)
-    done = np.zeros(n, dtype=bool)
     n_eval = 0
 
     # containment for ALL (point, piece) pairs up front via the compiled
@@ -882,7 +923,7 @@ def knn_zones_batch(
         res[ok] = contain_keys[pos[ok]] == keys[ok]
         return res
 
-    A = None  # deduped per-(pt, zone) bests as (pt, dist, rank, zone)
+    A = None  # deduped per-(pt, zone) bests as (pt, dist, rank)
 
     while True:
         # live pool entries = bound <= kth (dead ones can never enter or
@@ -953,7 +994,7 @@ def knn_zones_batch(
                 ),
                 0.0,
             )
-            if geo_batched:
+            if geodesic:
                 lat_lb = geom.R_GEO_LB * np.radians(dlat)
             else:
                 lat_lb = dlat
@@ -1001,12 +1042,7 @@ def knn_zones_batch(
                 (pool_pt[live_idx].astype(np.int64) << np.int64(32)) | qb
             )
             srt = live_idx[o]
-            pt_s = pool_pt[srt]
-            new_seg = np.r_[True, pt_s[1:] != pt_s[:-1]]
-            seg_id = np.cumsum(new_seg) - 1
-            seg_start = np.nonzero(new_seg)[0]
-            pos = np.arange(len(srt)) - seg_start[seg_id]
-            take = srt[pos < eval_chunk]
+            take = srt[_pos_in_run(pool_pt[srt]) < eval_chunk]
 
         # pool upkeep below drops taken entries and permanently-dead
         # bounds (keep computed AFTER the exact-kth update)
@@ -1016,79 +1052,25 @@ def knn_zones_batch(
             t_rank = pool_rank[take]
             ro = np.argsort(t_rank, kind="stable")
             t_pt, t_rank = t_pt[ro], t_rank[ro]
-            dists = np.empty(len(t_pt), dtype=np.float64)
             # containment came from the probe index in one shot; the
-            # planar-nearest foot for every NOT-contained pair runs as
-            # ONE flat CSR-vectorized call per round (round 6 — the
-            # former per-unique-piece loop paid ~100 µs of call overhead
-            # per piece; results bit-identical, see _nearest_feet_flat).
-            # The foot is metric-independent — the geodesic is measured
-            # to the PLANAR-nearest boundary coordinate, Q5 semantics.
+            # distance for every NOT-contained pair runs as ONE flat
+            # CSR-vectorized foot call per round, prescreened against
+            # the point's current k-th zone distance: a pair whose
+            # guaranteed lower bound already exceeds it keeps +inf — its
+            # true distance is strictly larger than any final kth (kth
+            # only shrinks), so it can neither enter the top-k nor
+            # wrongly evict a zone. n_eval counts EXACT evaluations only.
             inside_all = contained(t_pt, t_rank)
             outside = np.nonzero(~inside_all)[0]
-            flat_ok = len(outside) == 0 or bool(
-                np.all(
-                    idx.seg_offsets[t_rank[outside] + 1]
-                    > idx.seg_offsets[t_rank[outside]]
+            dists = np.zeros(len(t_pt))
+            n_eval += len(t_pt) - len(outside)
+            if len(outside):
+                o_pt = t_pt[outside]
+                dists[outside], n_exact = _foot_distances(
+                    idx, lats[o_pt], lons[o_pt], t_rank[outside], metric,
+                    cap=kth[o_pt],
                 )
-            )
-            if geo_batched:
-                dists.fill(np.inf)
-                dists[inside_all] = 0.0
-                if len(outside):
-                    plat = lats[t_pt[outside]]
-                    plon = lons[t_pt[outside]]
-                    if flat_ok:
-                        flon, flat, _d2 = _nearest_feet_flat(
-                            idx, plon, plat, t_rank[outside]
-                        )
-                    else:  # defensive: a piece with no segments
-                        feet = np.full((len(outside), 2), np.nan)
-                        for j, oi in enumerate(outside):
-                            feet[j] = geom.nearest_boundary_point(
-                                pts[t_pt[oi]][None, :],
-                                idx.piece_rings(int(t_rank[oi])),
-                            )
-                        flon, flat = feet[:, 0], feet[:, 1]
-                    # prescreen: a pair whose guaranteed lower bound
-                    # already exceeds the point's current k-th zone
-                    # distance keeps +inf — its true distance is
-                    # strictly larger than any final kth (kth only
-                    # shrinks), so it can neither enter the top-k nor
-                    # wrongly evict a zone
-                    lb = geom.R_GEO_LB * geom._haversine_angle(
-                        plat, plon, flat, flon
-                    )
-                    need = lb <= kth[t_pt[outside]]
-                    if need.any():
-                        sel = outside[need]
-                        dists[sel] = geom.geodesic_distance_wgs84(
-                            plat[need], plon[need], flat[need], flon[need],
-                            freeze=geo_freeze,
-                        )
-                    # n_eval counts EXACT distance evaluations only —
-                    # prescreen-skipped pairs never ran the kernel
-                    n_eval += len(t_pt) - (len(outside) - int(need.sum()))
-                else:
-                    n_eval += len(t_pt)
-            else:
-                dists.fill(0.0)
-                if len(outside):
-                    if flat_ok:
-                        _fx, _fy, d2min = _nearest_feet_flat(
-                            idx,
-                            lons[t_pt[outside]],
-                            lats[t_pt[outside]],
-                            t_rank[outside],
-                        )
-                        dists[outside] = np.sqrt(d2min)
-                    else:
-                        for oi in outside:
-                            dists[oi] = dist_fn(
-                                pts[t_pt[oi]][None, :],
-                                idx.piece_rings(int(t_rank[oi])),
-                            )[0]
-                n_eval += len(t_pt)
+                n_eval += n_exact
 
             # per-(point, zone) bests + k-th zone distance, INCREMENTAL
             # (round 5): only the rows of points TOUCHED this round are
@@ -1103,22 +1085,21 @@ def knn_zones_batch(
                 touched = np.zeros(n, dtype=bool)
                 touched[t_pt] = True
                 tm = touched[A[0]]
-                u_hold = (A[0][~tm], A[1][~tm], A[2][~tm], A[3][~tm])
+                u_hold = (A[0][~tm], A[1][~tm], A[2][~tm])
                 m_pt = np.concatenate([A[0][tm], t_pt])
                 m_dist = np.concatenate([A[1][tm], dists])
                 m_rank = np.concatenate([A[2][tm], t_rank])
             m_zone = zone_of_rank[m_rank]
-            # composite (pt, zone) primary key; n_zones bounds the zone
-            # term so the packing is collision-free. Per-key best =
+            # composite (pt, zone) primary key; zone ids are ranks < P,
+            # so the packing is collision-free. Per-key best =
             # (min dist, then min rank): one int64 introsort on the key
             # plus two segment reductions (round 6) — exactly the first
             # row the former (rank, dist, key) lexsort would surface,
             # without its three stable passes.
-            n_zones = len(zone_names)
-            m_key = m_pt * n_zones + m_zone
+            m_key = m_pt * idx.n_pieces + m_zone
             o1 = np.argsort(m_key)
             k1 = m_key[o1]
-            p1, z1, d1, r1 = m_pt[o1], m_zone[o1], m_dist[o1], m_rank[o1]
+            p1, d1, r1 = m_pt[o1], m_dist[o1], m_rank[o1]
             new_seg1 = np.r_[True, k1[1:] != k1[:-1]]
             starts1 = np.nonzero(new_seg1)[0]
             seg_id1 = np.cumsum(new_seg1) - 1
@@ -1128,24 +1109,19 @@ def knn_zones_batch(
                 is_min, r1.astype(np.int64), np.iinfo(np.int64).max
             )
             br = np.minimum.reduceat(r_masked, starts1).astype(r1.dtype)
-            bp, bz = p1[starts1], z1[starts1]
+            bp = p1[starts1]
             # kth update — only touched points can have a new k-th
             o2 = np.lexsort((bd, bp))
             p2, d2 = bp[o2], bd[o2]
-            new_seg2 = np.r_[True, p2[1:] != p2[:-1]]
-            seg_id2 = np.cumsum(new_seg2) - 1
-            seg_start2 = np.nonzero(new_seg2)[0]
-            pos2 = np.arange(len(p2)) - seg_start2[seg_id2]
-            at_k = pos2 == (k - 1)
+            at_k = _pos_in_run(p2) == (k - 1)
             kth[p2[at_k]] = d2[at_k]
             if u_hold is None:
-                A = (bp, bd, br, bz)  # (pt, dist, rank, zone) bests
+                A = (bp, bd, br)
             else:
                 A = (
                     np.concatenate([u_hold[0], bp]),
                     np.concatenate([u_hold[1], bd]),
                     np.concatenate([u_hold[2], br]),
-                    np.concatenate([u_hold[3], bz]),
                 )
         keep = pool_bound <= kth[pool_pt]
         if len(take):
@@ -1154,14 +1130,21 @@ def knn_zones_batch(
             pool_pt[keep], pool_rank[keep], pool_bound[keep]
         )
 
-    out: list[list[str]] = [[] for _ in range(n)]
-    if A is not None:
-        bp, bd, br, bz = A
-        o3 = np.lexsort((br, bd, bp))  # (point, dist, rank); ranks unique
-        for i, d, z in zip(bp[o3], bd[o3], bz[o3]):
-            row = out[i]
-            if len(row) < k:
-                row.append(str(zone_names[z]))
-    if return_stats:
-        return out, n_eval
-    return out
+    out = _knn_rank_lists(idx, n, k, A)
+    return (out, n_eval) if return_stats else out
+
+
+def _knn_rank_lists(idx: CompiledIndex, n: int, k: int, bests):
+    """The first k of each point's (dist, rank)-ordered per-zone bests
+    ``(pt, dist, rank)`` as one pa.ListArray of ranks."""
+    import pyarrow as pa
+
+    bp, bd, br = bests if bests is not None else (np.zeros(0, np.int64),) * 3
+    o = np.lexsort((br, bd, bp))  # ranks unique per point
+    p, r = bp[o], br[o]
+    in_k = _pos_in_run(p) < k
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(p[in_k], minlength=n), out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(r[in_k].astype(rank_dtype(idx)))
+    )
