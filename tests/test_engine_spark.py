@@ -424,7 +424,7 @@ def test_distance_and_knn_null_and_infinite_rows(engine, spark):
         assert r.nearest_tzids == [], r
 
 
-def test_distance_zone_codes_null_and_unknown(engine, spark):
+def test_distance_zone_codes_null_and_unknown(engine, spark, world):
     df = spark.createDataFrame(
         [(0, "Zone/Small", 4.5, 4.5), (1, None, 4.5, 4.5),
          (2, "Zone/Nowhere", 4.5, 4.5), (3, "O'Brien", 4.5, 4.5),
@@ -439,6 +439,21 @@ def test_distance_zone_codes_null_and_unknown(engine, spark):
     assert got[0] == pytest.approx(0.5)
     assert got[1] is None and got[2] is None and got[3] is None
     assert got[4] is None  # Multi's pieces do not contain the point
+    # (4.5, 4.5) lies in Small, Big and Filler: the requested zone is
+    # picked, not the tzid, bit-for-bit the per-piece oracle's value
+    oracle = OracleMap(world, -90, -180, 90, 180)
+    for metric in ("planar_deg", "geodesic"):
+        for zone in ("Zone/Big", "Zone/Filler"):
+            picked = engine.distance_from_boundary(
+                df.filter("i = 0").withColumn("zone", F.lit(zone)),
+                zone_col="zone", out_col="d", metric=metric,
+            ).collect()[0].d
+            assert picked == oracle.get_distance_from_boundary(
+                zone, 4.5, 4.5, metric
+            ), (zone, metric)
+            assert picked != oracle.get_distance_from_boundary(
+                "Zone/Small", 4.5, 4.5, metric
+            )
     # strict: a NULL zone is no error, an unknown or wrong zone is
     strict = engine.distance_from_boundary(
         df.filter("i < 2"), zone_col="zone", mode="strict"
@@ -474,13 +489,13 @@ def _arrow_eval_nodes(df):
 
 
 @pytest.mark.parametrize("include_all", [False, True])
-def test_assign_distance_knn_plan_two_arrow_nodes_no_strings(
+def test_assign_distance_knn_plan_one_arrow_node_no_strings(
     engine, spark, include_all
 ):
     """assign -> distance_from_boundary -> knn_zones crosses into Python
-    twice: kNN takes only lat/lon, so it joins the probe's node; Q5 reads
-    the JVM-mapped tzid, so it needs a second one. Every UDF is an
-    arrow_udf and none returns a string."""
+    once: Q5 and kNN take only lat/lon, so both join the probe's node
+    (Q5's zone is picked JVM-side). Every UDF is an arrow_udf and none
+    returns a string."""
     from pyspark.util import PythonEvalType
 
     df = spark.createDataFrame([(4.5, 4.5)], "lat double, lon double")
@@ -491,11 +506,11 @@ def test_assign_distance_knn_plan_two_arrow_nodes_no_strings(
         k=3,
     )
     nodes = _arrow_eval_nodes(out)
-    assert len(nodes) == 2, nodes
-    for eval_type, types in nodes:
-        assert eval_type == PythonEvalType.SQL_SCALAR_ARROW_UDF, nodes
-        assert not any("string" in t for t in types), nodes
-    assert sorted(len(t) for _, t in nodes) == [1, 3 if include_all else 2]
+    assert len(nodes) == 1, nodes
+    eval_type, types = nodes[0]
+    assert eval_type == PythonEvalType.SQL_SCALAR_ARROW_UDF, nodes
+    assert not any("string" in t for t in types), nodes
+    assert len(types) == (4 if include_all else 3), nodes
     assert out.schema["nearest_tzids"].dataType.simpleString() == "array<string>"
     assert out.schema["nearest_tzids"].dataType.containsNull
     assert out.schema["boundary_dist_m"].dataType.simpleString() == "double"

@@ -505,3 +505,99 @@ def test_geodesic_metric_aliases_and_default():
     with pytest.raises(ValueError, match="unknown metric"):
         probe.distance_from_boundary_batch(
             idx, zids, lats, lons, mode="pipeline", metric="vincenty")
+
+
+def _vincenty_reference(lat1, lon1, lat2, lon2, freeze=False):
+    """The plain Vincenty loop, every row through all 50 iterations (the
+    per-row freeze keeps a converged row's lambda) — what
+    geom.geodesic_distance_wgs84 must reproduce bit for bit."""
+    a, b, f = geom.WGS84_A, geom.WGS84_B, geom.WGS84_F
+    lat1, lon1, lat2, lon2 = (
+        np.asarray(x, dtype=np.float64) for x in (lat1, lon1, lat2, lon2)
+    )
+    U1 = np.arctan((1 - f) * np.tan(np.radians(lat1)))
+    U2 = np.arctan((1 - f) * np.tan(np.radians(lat2)))
+    L = np.radians(lon2 - lon1)
+    sinU1, cosU1, sinU2, cosU2 = np.sin(U1), np.cos(U1), np.sin(U2), np.cos(U2)
+    lam = L.copy()
+    done = np.zeros(L.shape, dtype=bool)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for _ in range(50):
+            sin_lam, cos_lam = np.sin(lam), np.cos(lam)
+            sin_sigma = np.sqrt(
+                (cosU2 * sin_lam) ** 2
+                + (cosU1 * sinU2 - sinU1 * cosU2 * cos_lam) ** 2
+            )
+            cos_sigma = sinU1 * sinU2 + cosU1 * cosU2 * cos_lam
+            sigma = np.arctan2(sin_sigma, cos_sigma)
+            sin_alpha = np.where(
+                sin_sigma != 0, cosU1 * cosU2 * sin_lam / sin_sigma, 0.0
+            )
+            csa = 1.0 - sin_alpha**2
+            c2m = np.where(
+                csa != 0,
+                cos_sigma - 2.0 * sinU1 * sinU2 / np.where(csa == 0, 1.0, csa),
+                0.0,
+            )
+            C = f / 16.0 * csa * (4.0 + f * (4.0 - 3.0 * csa))
+            lam_new = L + (1.0 - C) * f * sin_alpha * (
+                sigma + C * sin_sigma
+                * (c2m + C * cos_sigma * (-1.0 + 2.0 * c2m**2))
+            )
+            if freeze:
+                newly = np.abs(lam_new - lam) < 1e-13
+                lam_new = np.where(done, lam, lam_new)
+                done |= newly
+            lam = lam_new
+    u_sq = csa * (a**2 - b**2) / b**2
+    A = 1.0 + u_sq / 16384.0 * (
+        4096.0 + u_sq * (-768.0 + u_sq * (320.0 - 175.0 * u_sq))
+    )
+    B = u_sq / 1024.0 * (256.0 + u_sq * (-128.0 + u_sq * (74.0 - 47.0 * u_sq)))
+    delta_sigma = B * sin_sigma * (
+        c2m + B / 4.0 * (
+            cos_sigma * (-1.0 + 2.0 * c2m**2)
+            - B / 6.0 * c2m * (-3.0 + 4.0 * sin_sigma**2)
+            * (-3.0 + 4.0 * c2m**2)
+        )
+    )
+    same = (lat1 == lat2) & (lon1 == lon2)
+    return np.where(same, 0.0, b * A * (sigma - delta_sigma))
+
+
+@pytest.mark.parametrize("freeze", [False, True])
+def test_vincenty_fixed_point_exit_bit_identical(freeze):
+    """Rows leave the loop at their float64 fixed point; every value must
+    stay bitwise the 50-iteration loop's, in any batch shape."""
+    rng = np.random.default_rng(45)
+    n = 3000
+    lat1 = rng.uniform(-89, 89, n)
+    lon1 = rng.uniform(-180, 180, n)
+    lat2 = np.clip(lat1 + rng.normal(0, 3.0, n), -90, 90)
+    lon2 = lon1 + rng.normal(0, 3.0, n)
+    lat2[:300] = rng.uniform(-90, 90, 300)  # far pairs
+    lon2[:300] = rng.uniform(-180, 180, 300)
+    lat2[300:320] = -lat1[300:320]  # antipodal
+    lon2[300:320] = lon1[300:320] + 180.0
+    lat1[320], lon1[320], lat2[320], lon2[320] = 0.0, 0.0, 0.0, 180.0
+    lat2[330:340], lon2[330:340] = lat1[330:340], lon1[330:340]  # coincident
+    lat1[340:345] = np.nan
+    lon2[345:350] = np.nan
+
+    def bits(x):
+        return np.asarray(x, dtype=np.float64).view(np.int64)
+
+    want = _vincenty_reference(lat1, lon1, lat2, lon2, freeze)
+    assert np.isnan(want).any() and (want == 0).any()
+
+    def got(sel):
+        return geom.geodesic_distance_wgs84(
+            lat1[sel], lon1[sel], lat2[sel], lon2[sel], freeze=freeze
+        )
+
+    assert np.array_equal(bits(got(slice(None))), bits(want))
+    perm = rng.permutation(n)
+    assert np.array_equal(bits(got(perm)), bits(want[perm]))
+    assert np.array_equal(bits(got(slice(7, 1999))), bits(want[7:1999]))
+    for i in list(range(295, 350)) + [0, n - 1]:
+        assert np.array_equal(bits(got(slice(i, i + 1))), bits(want[i:i + 1]))

@@ -507,3 +507,65 @@ def test_nearest_feet_bucket_prune_parity():
         probe.FOOT_PRUNE_MIN_SEGS = old
     for a, b in zip(pruned, full):
         assert np.array_equal(a, b)
+
+
+def test_arrow_f64_offset_nulls_and_empty():
+    import pyarrow as pa
+
+    arr = pa.array([1.0, None, 3.0, 4.0, None, 6.0, 7.0, 8.0, 9.0, None])
+    got = probe.arrow_f64(arr.slice(3, 6))  # offset 3 crosses a bitmap byte
+    assert np.array_equal(
+        got, [4.0, np.nan, 6.0, 7.0, 8.0, 9.0], equal_nan=True
+    )
+    assert np.array_equal(
+        probe.arrow_f64(arr), [1, np.nan, 3, 4, np.nan, 6, 7, 8, 9, np.nan],
+        equal_nan=True,
+    )
+    no_nulls = pa.array([2.5, 3.5, 4.5]).slice(1)
+    assert np.array_equal(probe.arrow_f64(no_nulls), [3.5, 4.5])
+    assert probe.arrow_f64(pa.array([], pa.float64())).shape == (0,)
+    assert probe.arrow_f64(arr.slice(10)).shape == (0,)
+    assert np.array_equal(probe.arrow_f64(pa.array([1, None, 3], pa.int32())),
+                          [1.0, np.nan, 3.0], equal_nan=True)
+
+
+def test_udf_kernels_do_not_import_pandas():
+    """The engine's UDF bodies (Arrow in, kernels, Arrow out) run in
+    every Python worker; importing pandas there costs ~40 MB each."""
+    import subprocess
+    import sys
+
+    code = """
+import sys
+import numpy as np
+import pyarrow as pa
+from tzengine import index, probe
+from tzengine.zones import synthetic_world
+
+idx = index.compile_index(synthetic_world(), -90, -180, 90, 180, "synth1")
+vals = np.array([9.0, 1.8, 4.5, 4.5, 9.5, 0.0, 200.0, 4.5])
+valid = np.packbits(np.array([1, 1, 1, 0, 1, 1, 1, 1], bool), bitorder="little")
+arr = pa.Array.from_buffers(
+    pa.float64(), 8, [pa.py_buffer(valid), pa.py_buffer(vals)]
+).slice(1)
+lats = probe.arrow_f64(arr)
+lons = probe.arrow_f64(arr.slice(0))
+assert np.isnan(lats[2]) and lats[0] == 1.8
+for with_all in (False, True):
+    probe.probe_arrow(idx, lats, lons, mode="pipeline", with_all=with_all)
+off, heads, dist = probe.containing_distances(idx, lats, lons, "geodesic")
+pa.StructArray.from_arrays(
+    [probe.arrow_list(off, heads.astype(np.int16)), probe.arrow_list(off, dist)],
+    names=["h", "d"],
+)
+probe.knn_zones_batch(idx, lats, lons, 3)
+assert "pandas" not in sys.modules, "pandas was imported"
+"""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]

@@ -10,6 +10,11 @@ variable and every query op is a vectorized Arrow UDF (``arrow_udf``, or
 broadcast spatial join). Only numbers cross the Python boundary: lat/lon
 in, int16/int32 piece ranks or float64 distances out; zone names are
 mapped to and from ranks JVM-side through one rank->name literal array.
+Every scalar UDF (assign, distance_from_boundary, knn_zones) takes only
+lat/lon, so a chain of them runs as ONE ArrowEvalPython node — one
+Python worker per task, lat/lon shipped once. The UDF bodies read and
+write Arrow buffers directly (probe.arrow_f64 / arrow_list), so the
+workers never import pandas.
 """
 
 from __future__ import annotations
@@ -80,6 +85,13 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
     return z ^ (z >> np.uint64(31))
 
 
+def _lat_lon_args(lat_col: str, lon_col: str):
+    """The (lat, lon) arguments of every probe UDF, as doubles: the
+    UDFs read the Arrow buffers as float64, and identical argument
+    expressions let Spark ship each column once to the shared node."""
+    return F.col(lat_col).cast("double"), F.col(lon_col).cast("double")
+
+
 class TzEngine:
     """Immutable after construction (like the reference map object —
     share freely across queries)."""
@@ -92,9 +104,10 @@ class TzEngine:
         self.idx = idx
         self._bc = spark.sparkContext.broadcast(idx)
         # the rank -> zone-name array every op maps through JVM-side:
-        # element_at(lit, rank + 1), and Q5's array_position(lit, name)
-        # - 1. ONE parsed expression: F.array(*[F.lit(z) ...]) costs a
-        # py4j round trip PER ZONE (~0.5 s for the 454-piece world)
+        # element_at(lit, rank + 1), and Q5's zone head
+        # array_position(lit, name) - 1. ONE parsed expression:
+        # F.array(*[F.lit(z) ...]) costs a py4j round trip PER ZONE
+        # (~0.5 s for the 454-piece world)
         self._zone_lit = F.expr(
             "array("
             + ", ".join("'" + z.replace("'", "''") + "'" for z in idx.zone_ids)
@@ -513,15 +526,9 @@ class TzEngine:
             # is the oracled pip_assign_first_only path.
             @F.arrow_udf(rank_t)
             def _probe_first(lat: pa.Array, lon: pa.Array) -> pa.Array:
-                idx = bc.value
-                lats = lat.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )
-                lons = lon.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )
                 _valid, first_arr, _ = probemod.probe_arrow(
-                    idx, lats, lons, mode=mode, with_all=False
+                    bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon),
+                    mode=mode, with_all=False,
                 )
                 return first_arr
 
@@ -534,30 +541,21 @@ class TzEngine:
                         f"input column {reserved!r} collides with the "
                         "probe's reserved temp column name"
                     )
-            res = df.withColumn(
-                "__tz", _probe_first(F.col(lat_col), F.col(lon_col))
-            )
+            lat_lon = _lat_lon_args(lat_col, lon_col)
+            res = df.withColumn("__tz", _probe_first(*lat_lon))
             drop_cols = ["__tz"]
             ranks_c = None
             if include_all:
 
                 @F.arrow_udf(T.ArrayType(rank_t))
                 def _probe_all(lat: pa.Array, lon: pa.Array) -> pa.Array:
-                    idx = bc.value
-                    lats = lat.to_numpy(zero_copy_only=False).astype(
-                        np.float64, copy=False
-                    )
-                    lons = lon.to_numpy(zero_copy_only=False).astype(
-                        np.float64, copy=False
-                    )
                     _valid, _first, list_arr = probemod.probe_arrow(
-                        idx, lats, lons, mode=mode, with_all=True
+                        bc.value, probemod.arrow_f64(lat),
+                        probemod.arrow_f64(lon), mode=mode, with_all=True,
                     )
                     return list_arr
 
-                res = res.withColumn(
-                    "__tz_all", _probe_all(F.col(lat_col), F.col(lon_col))
-                )
+                res = res.withColumn("__tz_all", _probe_all(*lat_lon))
                 ranks_c = F.col("__tz_all")
                 drop_cols.append("__tz_all")
             mn_lat, mn_lon, mx_lat, mx_lon = self.idx.init_region
@@ -736,33 +734,52 @@ class TzEngine:
         ("geodesic_fixed" is an alias; "geodesic_freeze" opts into the
         adaptive variant, ~5e-10 m away); ``"planar_deg"`` = planar
         degrees (cheap pre-filter). A point outside its zone → error
-        (strict) / null (pipeline); a NULL zone → null. The zone enters
-        the ``arrow_udf`` as a rank code (probe.zone_ranks), not a string.
-        """
+        (strict) / null (pipeline); a NULL zone → null.
+
+        The ``arrow_udf`` takes only lat/lon (so it shares the assign
+        probe's ArrowEvalPython node) and returns every containing
+        zone's head rank and distance (probe.containing_distances); the
+        requested zone is picked JVM-side by its position in the
+        rank->name array."""
         if metric not in probemod.METRICS:
             # fail fast driver-side, not as a wrapped executor exception
             raise ValueError(f"unknown metric: {metric!r}")
+        if mode not in ("strict", "pipeline"):
+            raise ValueError(f"unknown mode: {mode}")
         bc = self._bc
+        rank_t = self._rank_t
 
-        @F.arrow_udf(T.DoubleType())
-        def _dist(zone: pa.Array, lat: pa.Array, lon: pa.Array) -> pa.Array:
-            d = probemod.distance_from_boundary_batch(
-                bc.value,
-                zone.to_numpy(zero_copy_only=False),
-                lat.to_numpy(zero_copy_only=False),
-                lon.to_numpy(zero_copy_only=False),
-                mode=mode,
-                metric=metric,
-            )
-            return pa.array(d, mask=np.isnan(d))  # NaN -> NULL
-
-        zone_rank = F.coalesce(
-            F.array_position(self._zone_lit, F.col(zone_col)) - 1,
-            F.lit(probemod.NO_ZONE),
-        ).cast(self._rank_t)
-        return df.withColumn(
-            out_col, _dist(zone_rank, F.col(lat_col), F.col(lon_col))
+        @F.arrow_udf(
+            T.StructType([
+                T.StructField("h", T.ArrayType(rank_t)),
+                T.StructField("d", T.ArrayType(T.DoubleType())),
+            ])
         )
+        def _dist(lat: pa.Array, lon: pa.Array) -> pa.Array:
+            idx = bc.value
+            offsets, heads, dist = probemod.containing_distances(
+                idx, probemod.arrow_f64(lat), probemod.arrow_f64(lon), metric
+            )
+            return pa.StructArray.from_arrays(
+                [
+                    probemod.arrow_list(
+                        offsets, heads.astype(probemod.rank_dtype(idx))
+                    ),
+                    probemod.arrow_list(offsets, dist),
+                ],
+                names=["h", "d"],
+            )
+
+        s = _dist(*_lat_lon_args(lat_col, lon_col))
+        zone = F.col(zone_col)
+        head = (F.array_position(self._zone_lit, zone) - 1).cast(rank_t)
+        d = F.get(s.getField("d"), F.array_position(s.getField("h"), head) - 1)
+        if mode == "strict":
+            d = F.when(
+                zone.isNotNull() & d.isNull(),
+                F.raise_error(F.lit("Location must be inside the time zone")),
+            ).otherwise(d)
+        return df.withColumn(out_col, d)
 
     def knn_zones(
         self,
@@ -781,8 +798,9 @@ class TzEngine:
         is an alias), "geodesic_freeze" (opt-in adaptive variant), or
         "planar_deg" (planar degrees — bit-exact SQL-oracle-able
         ordering). A NULL, NaN or infinite coordinate yields []. The
-        ``arrow_udf`` returns piece ranks, mapped to names JVM-side; on
-        lat/lon only, it shares the assign probe's ArrowEvalPython node.
+        ``arrow_udf`` takes only lat/lon and returns piece ranks, mapped
+        to names JVM-side; assign, Q5 and kNN share one ArrowEvalPython
+        node.
         """
         if metric not in probemod.METRICS:
             # fail fast driver-side: a typo would otherwise surface as a
@@ -793,15 +811,12 @@ class TzEngine:
         @F.arrow_udf(T.ArrayType(self._rank_t))
         def _knn(lat: pa.Array, lon: pa.Array) -> pa.Array:
             return probemod.knn_zones_batch(
-                bc.value,
-                lat.to_numpy(zero_copy_only=False),
-                lon.to_numpy(zero_copy_only=False),
-                k,
+                bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon), k,
                 metric=metric,
             )
 
         names = F.transform(
-            _knn(F.col(lat_col), F.col(lon_col)),
+            _knn(*_lat_lon_args(lat_col, lon_col)),
             lambda r: F.element_at(self._zone_lit, r + 1),
         )
         # array<string> with nullable elements, the type it always had

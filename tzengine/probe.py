@@ -383,16 +383,10 @@ def probe_arrow(
     Sentinels instead of Arrow nulls (first_rank=-1, ranks=[]): the
     engine nulls invalid rows JVM-side from the region test it already
     evaluates there, so no null bitmap needs to cross the boundary."""
-    import pyarrow as pa
-
     offsets, ranks, valid = probe_ranks(idx, lats, lons, mode=mode)
     rdt = rank_dtype(idx)
     if with_all:
-        list_arr = pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32)),
-            pa.array(ranks.astype(rdt)),
-        )
-        return valid, None, list_arr
+        return valid, None, arrow_list(offsets, ranks.astype(rdt))
     n = len(valid)
     counts = np.diff(offsets)
     has_match = (counts > 0) & valid
@@ -401,7 +395,52 @@ def probe_arrow(
     else:
         first = np.zeros(n, dtype=ranks.dtype)
     first = np.where(has_match, first, -1).astype(rdt)
-    return valid, pa.array(first), None
+    return valid, arrow_array(first), None
+
+
+# Arrow <-> numpy without pandas: pa.array(ndarray) and Array.to_numpy()
+# both import pandas (~40 MB and ~0.3 s per Python worker), so the UDF
+# bodies read and write the Arrow buffers directly.
+
+
+def arrow_f64(arr) -> np.ndarray:
+    """A pa.Array of doubles as float64 numpy, NULL -> NaN, read from its
+    buffers (a zero-copy read-only view when there are no NULLs)."""
+    import pyarrow as pa
+
+    if arr.type != pa.float64():
+        arr = arr.cast(pa.float64())
+    n = len(arr)
+    if n == 0:
+        return np.empty(0)
+    validity, data = arr.buffers()
+    vals = np.frombuffer(data, np.float64, count=n, offset=arr.offset * 8)
+    if arr.null_count:
+        bits = np.unpackbits(
+            np.frombuffer(validity, np.uint8), count=arr.offset + n,
+            bitorder="little",
+        )[arr.offset:]
+        vals = np.where(bits.view(bool), vals, np.nan)
+    return vals
+
+
+def arrow_array(values: np.ndarray):
+    """A numeric 1-d ndarray as a pa.Array over the same bytes."""
+    import pyarrow as pa
+
+    v = np.ascontiguousarray(values)
+    return pa.Array.from_buffers(
+        pa.from_numpy_dtype(v.dtype), len(v), [None, pa.py_buffer(v)]
+    )
+
+
+def arrow_list(offsets: np.ndarray, values: np.ndarray):
+    """CSR ``offsets`` (n+1) over ``values`` as a pa.ListArray."""
+    import pyarrow as pa
+
+    return pa.ListArray.from_arrays(
+        arrow_array(offsets.astype(np.int32)), arrow_array(values)
+    )
 
 
 GEODESIC_METRICS = ("geodesic", "geodesic_fixed", "geodesic_freeze")
@@ -414,13 +453,19 @@ NO_ZONE = -2  # NULL zone: NaN, never an error
 
 def zone_ranks(idx: CompiledIndex, zone_names) -> np.ndarray:
     """Zone names -> each zone's first piece rank (array_position over
-    the rank->name array, minus 1) in one vectorized lookup."""
-    import pandas as pd
-
-    first = pd.Series(np.arange(idx.n_pieces), index=idx.zone_ids)
-    first = first.groupby(level=0).min()
-    out = first.reindex(zone_names).fillna(UNKNOWN_ZONE).to_numpy(np.int64)
-    out[pd.isna(np.asarray(zone_names, dtype=object))] = NO_ZONE
+    the rank->name array, minus 1) in one vectorized lookup; UNKNOWN_ZONE
+    for a name the index lacks, NO_ZONE for None/NaN."""
+    uniq, first = np.unique(np.asarray(idx.zone_ids, dtype=str),
+                            return_index=True)
+    q = np.asarray(zone_names, dtype=object).reshape(-1)
+    null = np.equal(q, None) | (q != q)  # None, or NaN
+    qs = np.where(null, "", q).astype(str)
+    out = np.full(len(q), UNKNOWN_ZONE, dtype=np.int64)
+    if len(uniq):
+        pos = np.minimum(np.searchsorted(uniq, qs), len(uniq) - 1)
+        found = uniq[pos] == qs
+        out[found] = first[pos[found]]
+    out[null] = NO_ZONE
     return out
 
 
@@ -437,9 +482,47 @@ def _zone_head(idx: CompiledIndex) -> np.ndarray:
     Cached on the index."""
     head = getattr(idx, "_zone_head", None)
     if head is None:
-        head = zone_ranks(idx, idx.zone_ids)
+        _, first, inv = np.unique(
+            np.asarray(idx.zone_ids, dtype=str), return_index=True,
+            return_inverse=True,
+        )
+        head = first[inv].astype(np.int64)
         object.__setattr__(idx, "_zone_head", head)
     return head
+
+
+def containing_distances(
+    idx: CompiledIndex,
+    lats: np.ndarray,
+    lons: np.ndarray,
+    metric: str = "geodesic",
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Q5 for every zone that contains each point (TimeZone.kt:41-47):
+    distance to the planar-nearest boundary coordinate of the zone's
+    first (smallest-area) containing piece; clip edges count.
+
+    Returns (offsets, heads, dist): offsets int64 (N+1,) — CSR per point;
+    heads int64 — each containing zone as its first piece rank (zone-head
+    ascending); dist float64. Containment comes from ``probe_ranks`` (a
+    point outside the initialized region, NaN or infinite, is in no
+    zone), distances from ONE ``_foot_distances`` call (shared with
+    kNN); both bit-identical to the per-piece ``oracle`` path."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric: {metric!r}")
+    lats = np.asarray(lats, dtype=np.float64)
+    lons = np.asarray(lons, dtype=np.float64)
+    n = len(lats)
+    offsets, ranks, _valid = probe_ranks(idx, lats, lons, mode="pipeline")
+    pair_pt = np.repeat(np.arange(n, dtype=np.int64), np.diff(offsets))
+    heads = _zone_head(idx)[ranks]
+    # each point's ranks are ascending, so the first pair of each (point,
+    # zone) key is the zone's first containing piece
+    _, first = np.unique(pair_pt * idx.n_pieces + heads, return_index=True)
+    pt = pair_pt[first]
+    dist, _ = _foot_distances(idx, lats[pt], lons[pt], ranks[first], metric)
+    out_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(pt, minlength=n), out=out_off[1:])
+    return out_off, heads[first], dist
 
 
 def distance_from_boundary_batch(
@@ -450,50 +533,35 @@ def distance_from_boundary_batch(
     mode: str = "strict",
     metric: str = "geodesic",
 ) -> np.ndarray:
-    """Q5 (TimeZone.kt:41-47): for each (zone, point), distance to the
-    planar-nearest coordinate on the boundary of the zone's first
-    (smallest-area) piece that contains the point (clip edges count).
-    ``zones``: integer codes (a piece rank of the zone, UNKNOWN_ZONE or
-    NO_ZONE — the engine ships these) or names (None = no zone).
+    """Q5 for one requested zone per point: the selection of that zone's
+    distance from ``containing_distances``. ``zones``: integer codes (a
+    piece rank of the zone, UNKNOWN_ZONE or NO_ZONE) or names (None = no
+    zone).
 
     ``metric="geodesic"`` is the reference semantics (WGS84 meters, the
     fixed-iteration Vincenty the SQL oracle mirrors; "geodesic_fixed" is
     an alias, "geodesic_freeze" the adaptive per-row-freeze variant,
     ~5e-10 m away); ``"planar_deg"`` is the planar degree distance.
-    Containment comes from ``probe_ranks``, distances from
-    ``_foot_distances`` (shared with kNN); both are bit-identical to the
-    per-piece ``oracle`` path; no piece contains a point outside the
-    initialized region. Rows whose zone does not contain the point:
-    ValueError in strict mode (reference message), NaN in pipeline
-    mode."""
+    Rows whose zone does not contain the point: ValueError in strict
+    mode (reference message), NaN in pipeline mode."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric: {metric!r}")
     lats = np.asarray(lats, dtype=np.float64)
-    lons = np.asarray(lons, dtype=np.float64)
     n = len(lats)
     want = np.asarray(zones)
     want = (
         want.astype(np.int64) if want.dtype.kind in "iu"
         else zone_ranks(idx, zones)
     )
-    head = _zone_head(idx)
     named = want >= 0
-    want[named] = head[want[named]]
+    want[named] = _zone_head(idx)[want[named]]
 
-    offsets, ranks, _valid = probe_ranks(idx, lats, lons, mode="pipeline")
+    offsets, heads, dist = containing_distances(idx, lats, lons, metric)
     pair_pt = np.repeat(np.arange(n), np.diff(offsets))
-    # each point's ranks are ascending, so its first matching pair is the
-    # zone's first containing piece
-    match = np.nonzero(head[ranks] == want[pair_pt])[0]
-    first = match[_pos_in_run(pair_pt[match]) == 0]
-    hit = pair_pt[first]
-
+    hit = heads == want[pair_pt]  # at most one pair per point
     out = np.full(n, np.nan)
-    if len(hit):
-        out[hit], _ = _foot_distances(
-            idx, lats[hit], lons[hit], ranks[first], metric
-        )
-    if mode == "strict" and len(hit) < np.count_nonzero(want != NO_ZONE):
+    out[pair_pt[hit]] = dist[hit]
+    if mode == "strict" and hit.sum() < np.count_nonzero(want != NO_ZONE):
         raise ValueError("Location must be inside the time zone")
     return out
 
@@ -725,7 +793,7 @@ def _foot_distances(
     point i to the planar-nearest boundary coordinate of piece
     ``ranks[i]`` (TimeZone.kt:46 — the foot is planar whatever the
     metric): sqrt(d2min) for ``planar_deg``, else ONE batched Vincenty
-    call (its 50-iteration trig loop has a large fixed cost per call).
+    call (its trig loop has a large fixed cost per call).
 
     ``cap`` (geodesic, kNN's prescreen): a pair whose guaranteed lower
     bound R_GEO_LB * haversine angle exceeds ``cap[i]`` is not evaluated
@@ -1137,14 +1205,10 @@ def knn_zones_batch(
 def _knn_rank_lists(idx: CompiledIndex, n: int, k: int, bests):
     """The first k of each point's (dist, rank)-ordered per-zone bests
     ``(pt, dist, rank)`` as one pa.ListArray of ranks."""
-    import pyarrow as pa
-
     bp, bd, br = bests if bests is not None else (np.zeros(0, np.int64),) * 3
     o = np.lexsort((br, bd, bp))  # ranks unique per point
     p, r = bp[o], br[o]
     in_k = _pos_in_run(p) < k
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(np.bincount(p[in_k], minlength=n), out=offsets[1:])
-    return pa.ListArray.from_arrays(
-        pa.array(offsets), pa.array(r[in_k].astype(rank_dtype(idx)))
-    )
+    return arrow_list(offsets, r[in_k].astype(rank_dtype(idx)))
