@@ -210,78 +210,25 @@ def assign_job(
     pts = probe_points(spark, sf_dir, replicate).repartition(cores).cache()
     n_rows = pts.count()  # materialize outside the timed region
 
-    # SPARK_GRAFT_PROBE_IMPL forces an impl for A/B runs; the default
-    # "auto" resolves to mapInArrow on this (lat,lon)-only input —
-    # ~2.4x faster than the pandas_udf probe at 8 cores (VERDICT r4 #4;
-    # results bit-identical, see test_assign_arrow_impl_parity)
-    impl = os.environ.get("SPARK_GRAFT_PROBE_IMPL", "auto")
-    out = eng.assign_timezones(pts, mode="strict", impl=impl)
+    out = eng.assign_timezones(pts, mode="strict")
 
     def run():
         return out.groupBy("tzid").count().collect()
 
     run()  # warm-up: plan compile + JIT + python worker pool spin-up
     best = min(timed(run)[0] for _ in range(n_timed))
-    resolved = impl
-    if resolved == "auto":
-        from tzengine.engine import TzEngine as _T
-
-        resolved = _T._pick_probe_impl(pts, "lat", "lon")
-    floor = (
-        floor_job(spark, pts, cores, n_timed=n_timed, impl=resolved)
-        if with_floor
-        else None
-    )
+    floor = floor_job(spark, pts, cores, n_timed=n_timed) if with_floor else None
     pts.unpersist()
     return best, n_rows, floor
 
 
-def floor_job(
-    spark, pts, cores, n_timed: int = 5, impl: str = "pandas"
-) -> float:
+def floor_job(spark, pts, cores, n_timed: int = 5) -> float:
     """Platform floor (VERDICT r3 #9): a TRIVIAL UDF with the probe's
     exact input/output schema — two doubles in, (bool, int32,
     list<int32>) out, ZERO compute — over the same cached points. The
     wall is Spark's own Arrow/Python serialization cost; assign_geo /
-    floor_sec quantifies how close the engine sits to that floor.
-    ``impl`` matches the floor's transport to the probe being benched
-    (round 5: the assign default is mapInArrow on this input, so the
-    floor is a zero-compute mapInArrow batch passthrough)."""
+    floor_sec quantifies how close the engine sits to that floor."""
     from pyspark.sql import types as T
-
-    if impl == "arrow":
-        out_schema = T.StructType(
-            list(pts.schema.fields)
-            + [
-                T.StructField("valid", T.BooleanType()),
-                T.StructField("first_rank", T.IntegerType()),
-                T.StructField("ranks", T.ArrayType(T.IntegerType())),
-            ]
-        )
-
-        def _floor_batches(batches):
-            for batch in batches:
-                n = len(batch)
-                arrays = list(batch.columns) + [
-                    pa.array(np.ones(n, dtype=bool)),
-                    pa.array(np.zeros(n, dtype="int32")),
-                    pa.ListArray.from_arrays(
-                        pa.array(np.arange(n + 1, dtype="int32")),
-                        pa.array(np.zeros(n, dtype="int32")),
-                    ),
-                ]
-                names = list(batch.schema.names) + [
-                    "valid", "first_rank", "ranks",
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-        out = pts.mapInArrow(_floor_batches, out_schema)
-
-        def run():
-            return out.groupBy(F.col("first_rank")).count().collect()
-
-        run()  # warm-up
-        return min(timed(run)[0] for _ in range(n_timed))
 
     schema = T.StructType(
         [

@@ -42,7 +42,9 @@ def main() -> None:
             "the probe is a narrow map. `ArrowEvalPython` receives ONLY "
             "`lat, lon` (the image `bytes` column never crosses into "
             "Python); zone names are attached by the JVM `Project` via "
-            "element_at on a literal array.",
+            "element_at on a literal array. Both probe UDFs are called "
+            "inline in that one `Project` (no temp columns), and both "
+            "ride one `ArrowEvalPython` node.",
             formatted(assigned),
         )
     )
@@ -59,26 +61,6 @@ def main() -> None:
             "per-element transform — the all-matches array is neither "
             "built nor serialized.",
             formatted(q1),
-        )
-    )
-
-    # 1c. explicit mapInArrow probe (the opt-in alternative impl)
-    narrow = df.select("lat", "lon")
-    arrow_plan = eng.assign_timezones(narrow, impl="arrow")
-    sections.append(
-        (
-            "mapInArrow probe (explicit impl=\"arrow\")",
-            "Since round 6 `impl=\"auto\"` ALWAYS resolves to the scalar "
-            "arrow_udf plan above (the Spark 4.1 native Arrow UDF removed "
-            "the pandas wrapping that made mapInArrow win on narrow "
-            "inputs; interleaved A/B: scalar 0.54-0.74 s vs mapInArrow "
-            "1.08-1.17 s at 6M rows even with zero passthrough columns). "
-            "The mapInArrow impl stays available explicitly and for "
-            "inputs carrying the reserved `__tz` name: `MapInArrow` "
-            "instead of `ArrowEvalPython`, every input column "
-            "round-tripping through Python. Still no Exchange; results "
-            "bit-identical.",
-            formatted(arrow_plan),
         )
     )
 

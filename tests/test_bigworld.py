@@ -13,6 +13,8 @@ from tzengine.oracle import OracleMap
 from tzengine.oracle import distance_from_boundary as oracle_distance
 from tzengine.oracle import planar_distance_from_boundary as oracle_planar_distance
 
+from probe_helpers import ranks_to_tzids
+
 
 def zone_names(idx, rank_lists):
     """knn_zones_batch's list<rank> array as per-row zone-name lists."""
@@ -47,7 +49,7 @@ def test_oracle_agreement_at_scale(world, idx):
     lats = rng.uniform(-63, 63, 1500)
     lons = rng.uniform(-63, 63, 1500)
     offs, ranks, valid = probe.probe_ranks(idx, lats, lons, mode="strict")
-    _, tzids = probe.ranks_to_tzids(idx, offs, ranks, valid)
+    _, tzids = ranks_to_tzids(idx, offs, ranks, valid)
     mism = sum(
         1
         for i in range(len(lats))
@@ -63,7 +65,7 @@ def test_full_coverage_and_ocean_last(idx, world):
     lats = rng.uniform(-63, 63, 500)
     lons = rng.uniform(-63, 63, 500)
     offs, ranks, valid = probe.probe_ranks(idx, lats, lons, mode="strict")
-    _, tzids = probe.ranks_to_tzids(idx, offs, ranks, valid)
+    _, tzids = ranks_to_tzids(idx, offs, ranks, valid)
     for t in tzids:
         assert t, "ocean filler guarantees full coverage"
         assert t[-1] == "Zone/Ocean", "largest area always sorts last"
@@ -394,7 +396,7 @@ def test_hugeworld_oracle_map_spot_check(huge):
     offs, ranks, valid = probe.probe_ranks(
         idx_h, np.array(lats), np.array(lons), mode="strict"
     )
-    _, tzids = probe.ranks_to_tzids(idx_h, offs, ranks, valid)
+    _, tzids = ranks_to_tzids(idx_h, offs, ranks, valid)
     for i, (la, lo) in enumerate(zip(lats, lons)):
         assert tzids[i] == oracle.get_overlapping_time_zones(la, lo)
 

@@ -1,4 +1,4 @@
-"""Cell-scheme invariants: round-trips, ancestry, determinism, bounds."""
+"""Cell-scheme invariants: round-trips, nesting, determinism, bounds."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
@@ -35,21 +35,38 @@ def test_edge_clamping():
     assert b[1, 0] == -180.0 and b[1, 1] == -90.0
 
 
+def _morton(cell):
+    return np.asarray(cell, dtype=np.uint64) & ((np.uint64(1) << np.uint64(58)) - np.uint64(1))
+
+
+def _contains(outer, inner):
+    return (
+        outer[0] <= inner[0] and inner[2] <= outer[2]
+        and outer[1] <= inner[1] and inner[3] <= outer[3]
+    )
+
+
 def test_parent_child_relationship():
-    c = cells.cell_of([12.34], [56.78], 12)[0]
-    kids = cells.cell_children(c)
-    assert len(set(kids.tolist())) == 4
-    for k in kids:
-        assert cells.cell_parent(np.array([k]))[0] == c
-    # the point lands in exactly one child
-    inside = cells.cell_of([12.34], [56.78], 13)[0]
-    assert inside in set(kids.tolist())
+    # one level down, a point's cell is one of the four quarters of its
+    # parent: the id drops the two low Morton bits, the bounds nest exactly
+    lon, lat = [12.34], [56.78]
+    c = cells.cell_of(lon, lat, 12)[0]
+    inside = cells.cell_of(lon, lat, 13)[0]
+    assert _morton(inside) >> np.uint64(2) == _morton(c)
+    outer, inner = cells.cell_bounds([c, inside])
+    assert _contains(outer, inner)
+    assert inner[2] - inner[0] == (outer[2] - outer[0]) / 2
+    assert inner[3] - inner[1] == (outer[3] - outer[1]) / 2
 
 
 def test_ancestor_at():
-    c = cells.cell_of([12.34], [56.78], 20)
-    a = cells.cell_ancestor_at(c, 5)
-    assert a[0] == cells.cell_of([12.34], [56.78], 5)[0]
+    # at any depth the coarse cell's id is a Morton prefix of the fine one's
+    lon, lat = [12.34], [56.78]
+    fine = cells.cell_of(lon, lat, 20)[0]
+    coarse = cells.cell_of(lon, lat, 5)[0]
+    assert _morton(fine) >> np.uint64(2 * (20 - 5)) == _morton(coarse)
+    outer, inner = cells.cell_bounds([coarse, fine])
+    assert _contains(outer, inner)
 
 
 def test_covering_bbox():

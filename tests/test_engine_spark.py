@@ -47,68 +47,56 @@ def test_assign_matches_oracle(engine, world, points_df):
     assert mism == 0  # exact zone-match rate = 100% (BASELINE.json metric)
 
 
-def test_assign_arrow_impl_parity(engine, points_df):
-    """impl="arrow" (mapInArrow, VERDICT r4 #4) must be row-for-row
-    identical to the default pandas_udf impl — including passthrough of
-    extra input columns, Q1-only mode, and pipeline-mode invalid rows."""
-    a = engine.assign_timezones(points_df, mode="strict").orderBy(
-        "image_id").collect()
-    b = engine.assign_timezones(
-        points_df, mode="strict", impl="arrow").orderBy("image_id").collect()
-    assert a == b
-    # Q1-only path
-    a1 = engine.assign_timezones(
-        points_df, include_all=False).orderBy("image_id").collect()
-    b1 = engine.assign_timezones(
-        points_df, include_all=False, impl="arrow"
-    ).orderBy("image_id").collect()
-    assert a1 == b1
-    # no shuffle in the arrow plan either
-    plan = (
-        engine.assign_timezones(points_df, impl="arrow")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown impl"):
-        engine.assign_timezones(points_df, impl="rdd")
-    with _pytest.raises(ValueError, match="reserved"):
-        engine.assign_timezones(
-            points_df.withColumn("__tz_valid", points_df.lat), impl="arrow"
-        )
-
-
-def test_assign_auto_impl_selection(engine, points_df, spark):
-    """The "auto" rule (round 6): the scalar arrow_udf impl wins at every
-    passthrough width (it is column-count-independent; measured 2x over
-    mapInArrow even with zero extra columns), so auto always resolves to
-    it — EXCEPT an input already carrying the scalar impl's reserved
-    '__tz' temp column, which keeps resolving to mapInArrow so a
-    previously-valid input never starts raising."""
-    from tzengine.engine import TzEngine
-
-    pick = TzEngine._pick_probe_impl
-    narrow = points_df.select("lat", "lon")
-    assert pick(narrow, "lat", "lon") == "pandas"
-    one_long = narrow.withColumn("k", narrow.lat.cast("long"))
-    assert pick(one_long, "lat", "lon") == "pandas"
-    assert pick(points_df, "lat", "lon") == "pandas"  # string column
-    tz_col = narrow.withColumn("__tz", narrow.lat * 2)
-    assert pick(tz_col, "lat", "lon") == "arrow"
-    # auto output == forced outputs on a narrow input
-    a = engine.assign_timezones(narrow).orderBy("lat", "lon").collect()
-    b = engine.assign_timezones(
-        narrow, impl="arrow").orderBy("lat", "lon").collect()
-    assert a == b
-
-
 def test_assign_plan_is_shuffle_free(engine, points_df):
     # the probe is a broadcast join: no Exchange in the physical plan
     out = engine.assign_timezones(points_df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan or "Python" in plan
+
+
+def test_assign_odd_column_names_and_infinite_region(engine, world, spark):
+    """The probe UDFs are inline (no temp columns), and every SQL string
+    quotes names and bounds: an input carrying the old temp names, with
+    a backtick and a dot in the lat/lon names, assigns exactly like the
+    plain input; Q5 and kNN take the same names; and a region bound of
+    -inf (accepted by validate_region) builds a valid SQL literal."""
+    nan = float("nan")
+    rows = [(4.5, 4.5), (0.5, 0.5), (1.8, 1.4), (11.0, 5.0), (nan, 1.0),
+            (None, 1.0)]
+    plain = spark.createDataFrame(rows, "lat double, lon double")
+    odd = plain.select(
+        F.col("lat").alias("la`t"), F.col("lon").alias("lo.n"),
+        F.lit(1).alias("__tz"), F.lit(2).alias("__tz_all"),
+        F.lit(3).alias("__tz_valid"),
+    )
+    names = dict(lat_col="la`t", lon_col="lo.n")
+    cols = ["tzid", "tzids", "cell_id", "zone_shard", "in_region"]
+
+    def picked(df, *c):
+        return [tuple(r[k] for k in c) for r in df.collect()]
+
+    want = picked(engine.assign_timezones(plain), *cols)
+    got = engine.assign_timezones(odd, **names)
+    assert picked(got, *cols) == want
+    assert picked(got, "__tz", "__tz_all", "__tz_valid") == [(1, 2, 3)] * 6
+    assert picked(
+        engine.assign_timezones(odd, include_all=False, **names), "tzid"
+    ) == [w[:1] for w in want]
+
+    def q5(df, **kw):
+        return engine.distance_from_boundary(engine.assign_timezones(df, **kw), **kw)
+
+    assert picked(q5(odd, **names), "boundary_dist_m") == picked(
+        q5(plain), "boundary_dist_m")
+    assert picked(engine.knn_zones(odd, k=2, **names), "nearest_tzids") == picked(
+        engine.knn_zones(plain, k=2), "nearest_tzids")
+
+    inf_region = TzEngine.for_region(
+        spark, world, float("-inf"), -180.0, 90.0, 180.0,
+        world_version="synth1",
+    )
+    assert picked(inf_region.assign_timezones(plain), *cols) == want
 
 
 def test_deterministic_across_runs(engine, points_df):
@@ -499,6 +487,14 @@ def test_assign_distance_knn_plan_one_arrow_node_no_strings(
     from pyspark.util import PythonEvalType
 
     df = spark.createDataFrame([(4.5, 4.5)], "lat double, lon double")
+    # assign alone: one node, one UDF per consumed rank column, and the
+    # tzid expression's repeated probe call is evaluated once
+    assigned = engine.assign_timezones(df, include_all=include_all)
+    nodes = _arrow_eval_nodes(assigned)
+    assert len(nodes) == 1, nodes
+    assert len(nodes[0][1]) == (2 if include_all else 1), nodes
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan
     out = engine.knn_zones(
         engine.distance_from_boundary(
             engine.assign_timezones(df, include_all=include_all)

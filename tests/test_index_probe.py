@@ -15,6 +15,8 @@ from tzengine import geom, index, probe
 from tzengine.oracle import OracleMap
 from tzengine.zones import ZonePiece, synthetic_world
 
+from probe_helpers import ranks_to_tzids
+
 WORLD = synthetic_world()
 EVERYWHERE = index.compile_index(WORLD, -90, -180, 90, 180, world_version="synth1")
 ORACLE = OracleMap(WORLD, -90, -180, 90, 180)
@@ -24,7 +26,7 @@ def engine_lookup(idx, lat, lon, mode="strict"):
     offsets, ranks, valid = probe.probe_ranks(
         idx, np.array([lat]), np.array([lon]), mode=mode
     )
-    tzid, tzids = probe.ranks_to_tzids(idx, offsets, ranks, valid)
+    tzid, tzids = ranks_to_tzids(idx, offsets, ranks, valid)
     return tzid[0], tzids[0]
 
 
@@ -82,7 +84,7 @@ def test_random_sweep_vs_oracle():
     lats = rng.uniform(-0.5, 10.5, 3000)
     lons = rng.uniform(-0.5, 10.5, 3000)
     offsets, ranks, valid = probe.probe_ranks(EVERYWHERE, lats, lons, mode="strict")
-    _, tzids = probe.ranks_to_tzids(EVERYWHERE, offsets, ranks, valid)
+    _, tzids = ranks_to_tzids(EVERYWHERE, offsets, ranks, valid)
     for i in range(len(lats)):
         assert tzids[i] == ORACLE.get_overlapping_time_zones(lats[i], lons[i]), (
             lats[i],
@@ -423,7 +425,7 @@ def test_searchsorted_fallback_level_correctness():
         np.array([-170.5, 170.5, 170.375]),      # boundary/interior lons
     ])
     offs, ranks, valid = probe.probe_ranks(idx, lats, lons, mode="strict")
-    _, tzids = probe.ranks_to_tzids(idx, offs, ranks, valid)
+    _, tzids = ranks_to_tzids(idx, offs, ranks, valid)
     for i in range(len(lats)):
         exp = oracle.get_overlapping_time_zones(lats[i], lons[i])
         assert (tzids[i] or []) == exp, (lats[i], lons[i], tzids[i], exp)

@@ -217,8 +217,7 @@ def test_streaming_dedup_quiet_key_state_reclaimed(spark, tmp_path):
 
 
 def test_streaming_assign_arrow_impl(spark, tmp_path):
-    """The auto-resolved probe impl (round 6: the scalar arrow_udf path
-    at every width) must also work inside Structured Streaming
+    """The arrow_udf probe must also work inside Structured Streaming
     micro-batches — a streaming (lat, lon) source assigns the same
     zones the batch path does."""
     from pyspark.sql import functions as F
@@ -231,7 +230,6 @@ def test_streaming_assign_arrow_impl(spark, tmp_path):
     rows = [((i % 1987) / 200.0, (i * 7 % 1993) / 200.0) for i in range(500)]
     spark.createDataFrame(rows, "lat double, lon double").write.parquet(src)
     stream = spark.readStream.schema("lat double, lon double").parquet(src)
-    assert TzEngine._pick_probe_impl(stream, "lat", "lon") == "pandas"
     out = eng.assign_timezones(stream, mode="pipeline")
     q = (
         out.writeStream.format("memory")

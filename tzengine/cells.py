@@ -92,27 +92,6 @@ def cell_res(cell: np.ndarray) -> np.ndarray:
     return (np.asarray(cell, dtype=np.uint64) >> np.uint64(58)).astype(np.int64)
 
 
-def cell_parent(cell: np.ndarray) -> np.ndarray:
-    """Parent cell one resolution up (res 0 cells are their own parent)."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    res = cell >> np.uint64(58)
-    morton = cell & ((np.uint64(1) << np.uint64(58)) - np.uint64(1))
-    pres = np.maximum(res, np.uint64(1)) - np.uint64(1)
-    return (pres << np.uint64(58)) | (morton >> np.uint64(2))
-
-
-def cell_children(cell: int) -> np.ndarray:
-    """The four child cells at the next resolution (scalar helper for the
-    covering compiler's BFS)."""
-    cell = np.uint64(cell)
-    res = int(cell >> np.uint64(58))
-    if res >= MAX_RES:
-        raise ValueError("cannot subdivide beyond MAX_RES")
-    morton = cell & ((np.uint64(1) << np.uint64(58)) - np.uint64(1))
-    base = (np.uint64(res + 1) << np.uint64(58)) | (morton << np.uint64(2))
-    return base + np.arange(4, dtype=np.uint64)
-
-
 def cell_bounds(cell) -> np.ndarray:
     """(N,4) array of (lon_min, lat_min, lon_max, lat_max) per cell."""
     cell = np.atleast_1d(np.asarray(cell, dtype=np.uint64))
@@ -144,12 +123,3 @@ def cells_covering_bbox(
     return (np.uint64(res) << np.uint64(58)) | morton_encode(
         ixs.ravel(), iys.ravel()
     )
-
-
-def cell_ancestor_at(cell: np.ndarray, res: int) -> np.ndarray:
-    """Vectorized ancestor of each cell at a coarser resolution ``res``."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    cres = cell >> np.uint64(58)
-    morton = cell & ((np.uint64(1) << np.uint64(58)) - np.uint64(1))
-    shift = (cres - np.uint64(res)) * np.uint64(2)
-    return (np.uint64(res) << np.uint64(58)) | (morton >> shift)

@@ -4,9 +4,8 @@ The reference's `TimeZoneMap` surface (forEverywhere / forRegion /
 getOverlappingTimeZone(s) / getDistanceFromBoundary / mapVersion /
 timeZones / initializedRegion, TimeZoneMap.kt + TimeZone.kt) re-expressed
 as DataFrame transforms: the compiled covering index is a Spark broadcast
-variable and every query op is a vectorized Arrow UDF (``arrow_udf``, or
-``mapInArrow`` for the opt-in assign impl) — no per-row Python
-(input_hint), no shuffle on the probe side (the whole lookup is a
+variable and every query op is a vectorized ``arrow_udf`` — no per-row
+Python (input_hint), no shuffle on the probe side (the whole lookup is a
 broadcast spatial join). Only numbers cross the Python boundary: lat/lon
 in, int16/int32 piece ranks or float64 distances out; zone names are
 mapped to and from ranks JVM-side through one rank->name literal array.
@@ -26,13 +25,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
 from . import index as indexmod
 from . import probe as probemod
-from .zones import ZonePiece, pieces_to_df, rows_to_pieces
+from .zones import ZonePiece, rows_to_pieces
 
 DEFAULT_PROBE_RES = 7  # output cell resolution for tiling/shard analytics
 DEFAULT_N_SHARDS = 64
+
+
+def _sql_name(name: str) -> str:
+    """A column name as a SQL identifier: the whole name in backticks,
+    embedded backticks doubled (so ``la`t`` and ``lo.n`` name top-level
+    columns, never a parse error or a struct-field access)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(x: float) -> str:
+    """A float as a SQL DOUBLE literal. The ``D`` suffix matters: a bare
+    SQL float literal parses as DECIMAL, which would change the
+    arithmetic; ``repr`` round-trips the IEEE double exactly. SQL has no
+    infinity literal, so ±inf becomes a cast string."""
+    if np.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{float(x)!r}D"
 
 
 def cell_of_expr(lat_col, lon_col, res: int):
@@ -52,16 +67,15 @@ def cell_of_expr(lat_col, lon_col, res: int):
     # ONE parsed SQL expression (round 6): the Column-API tree cost ~50
     # py4j round trips per assign_timezones invocation — driver plan-
     # building time the frozen bench times on every re-invoked query.
-    # The `D` suffix matters: a bare SQL float literal parses as DECIMAL,
-    # which would change the arithmetic; `180.0D` is the same IEEE double
-    # F.lit(180.0) produced (parity pinned in test_engine_spark).
+    # `180.0D` is the same IEEE double F.lit(180.0) produced (parity
+    # pinned in test_engine_spark).
     ix = (
-        f"least(greatest(CAST(((`{lon_col}` + 180.0D) / 360.0D * "
-        f"{float(n)!r}D) AS BIGINT), 0), {n - 1})"
+        f"least(greatest(CAST((({_sql_name(lon_col)} + 180.0D) / 360.0D * "
+        f"{_sql_double(n)}) AS BIGINT), 0), {n - 1})"
     )
     iy = (
-        f"least(greatest(CAST(((`{lat_col}` + 90.0D) / 180.0D * "
-        f"{float(n)!r}D) AS BIGINT), 0), {n - 1})"
+        f"least(greatest(CAST((({_sql_name(lat_col)} + 90.0D) / 180.0D * "
+        f"{_sql_double(n)}) AS BIGINT), 0), {n - 1})"
     )
     if res == 0:
         morton = "CAST(0 AS BIGINT)"
@@ -75,21 +89,11 @@ def cell_of_expr(lat_col, lon_col, res: int):
     return F.expr(f"shiftleft(CAST({res} AS BIGINT), 58) | {morton}")
 
 
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """Deterministic 64-bit mix (public splitmix64 finalizer) — the
-    image→cell→zone-shard assignment must be a pure function of the row
-    (north_star restart determinism), so no RNG, no partition ids."""
-    z = x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
-
-
 def _lat_lon_args(lat_col: str, lon_col: str):
     """The (lat, lon) arguments of every probe UDF, as doubles: the
     UDFs read the Arrow buffers as float64, and identical argument
     expressions let Spark ship each column once to the shared node."""
-    return F.col(lat_col).cast("double"), F.col(lon_col).cast("double")
+    return tuple(F.col(_sql_name(c)).cast("double") for c in (lat_col, lon_col))
 
 
 class TzEngine:
@@ -196,7 +200,7 @@ class TzEngine:
     ) -> "TzEngine":
         """Scale path for large zone sets (SURVEY §3.1): prune → clip/split
         → per-piece covering + flattening all run on executors via
-        applyInPandas (per-piece embarrassingly parallel, identical
+        mapInArrow (per-piece embarrassingly parallel, identical
         kernels to the driver compile — parity by construction). What
         crosses the wire is one compact numpy blob per clipped piece plus
         sort metadata; the driver sorts by (pre-clip area, ordinal,
@@ -393,8 +397,6 @@ class TzEngine:
         per-vertex Python — this is the `save_artifact` write path and
         must stay O(array bytes) at 100x zone worlds, not O(vertices)
         Python-object churn."""
-        import pyarrow as pa
-
         idx = self.idx
         verts = np.asarray(idx.verts, dtype=np.float64)
         # Arrow list<> offsets are int32; .astype would silently WRAP past
@@ -445,14 +447,13 @@ class TzEngine:
         probe_res: int = DEFAULT_PROBE_RES,
         n_shards: int = DEFAULT_N_SHARDS,
         include_all: bool = True,
-        impl: str = "auto",
     ) -> DataFrame:
         """The core operator: point ⋈ zone-set broadcast spatial join.
 
         Adds columns tzid (smallest-area match, Q1), tzids (all matches
         area-ascending, Q2), cell_id (probe-res tile), zone_shard
-        (deterministic output shard). No shuffle: the index is broadcast,
-        the probe is a narrow map over Arrow batches.
+        (deterministic output shard) and in_region. No shuffle: the index
+        is broadcast, the probe is a narrow map over Arrow batches.
 
         ``include_all=False`` is the reference's Q1-only call
         (getOverlappingTimeZone): the all-matches rank list is neither
@@ -460,262 +461,90 @@ class TzEngine:
         JVM transform runs — a narrower plan for pipelines that only
         consume ``tzid``.
 
-        ``impl``: "pandas" (scalar Arrow-native UDF, Spark 4.1
-        ``arrow_udf`` — round 6: only the lat/lon argument columns cross
-        the Python boundary, remaining input columns stay JVM-side, and
-        the kernel's native pyarrow outputs go straight into the result
-        StructArray with no pandas wrapping), "arrow" (mapInArrow: the
-        probe kernel writes RecordBatches directly, but EVERY input
-        column round-trips through Python), or "auto" (default), which
-        now always resolves to the scalar impl: with the pandas
-        wrapping gone it wins at every passthrough width (interleaved
-        pinned 32-core A/B at 6M rows: 0.54-0.74 s vs mapInArrow's
-        1.08-1.17 s even with ZERO extra columns — and it is
-        column-count-independent where mapInArrow degrades). Results
-        are bit-identical (test_assign_arrow_impl_parity)."""
-        if impl == "auto":
-            impl = self._pick_probe_impl(df, lat_col, lon_col)
-        if impl not in ("pandas", "arrow"):
-            raise ValueError(f"unknown impl: {impl!r}")
+        The probe UDFs are referenced inline in ONE select (no temp
+        columns), so any input column name is accepted, including
+        backticks and dots in ``lat_col`` / ``lon_col``."""
         bc = self._bc
-        rank_t = self._rank_t  # shared by both impls: identical results
-
-        if impl == "arrow":
-            res = self._probe_arrow_mapped(
-                df, lat_col, lon_col, mode, include_all, rank_t
+        rank_t = self._rank_t
+        # Arrow-native scalar UDFs (Spark 4.1 arrow_udf): only (lat, lon)
+        # cross into Python, payload columns stay JVM-side, and the
+        # kernel's native pyarrow outputs go straight out. The ``valid``
+        # flag is NOT shipped: it is pure region-bound arithmetic on the
+        # lat/lon columns the JVM already holds (valid_c below).
+        #
+        # tzid and tzids ride SEPARATE UDFs so their lineages are
+        # independent: a consumer that only reads ``tzid`` lets column
+        # pruning drop the rank-LIST kernel and its Arrow list transport
+        # entirely. A consumer selecting BOTH pays one extra kernel pass,
+        # not extra transport: Spark collapses same-level Python UDFs
+        # into ONE ArrowEvalPython node (and evaluates a repeated call
+        # once), so lat/lon cross once (plan-asserted in tests).
+        @F.arrow_udf(rank_t)
+        def _probe_first(lat: pa.Array, lon: pa.Array) -> pa.Array:
+            _valid, first_arr, _ = probemod.probe_arrow(
+                bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon),
+                mode=mode, with_all=False,
             )
-            valid_c = F.col("__tz_valid")
-            if include_all:
-                # first rank is NOT shipped from Python when the rank
-                # list already crosses the boundary (round 6): derive it
-                # JVM-side — one array access vs 2-4 bytes/row transport
-                first_c = F.get(F.col("__tz_ranks"), F.lit(0))
-                first_is_sentinel = False  # NULL when no match
-                ranks_c = F.col("__tz_ranks")
-                drop_cols = ["__tz_valid", "__tz_ranks"]
-            else:
-                first_c = F.col("__tz_first_rank")
-                first_is_sentinel = True  # -1 when no match
-                ranks_c = None
-                drop_cols = ["__tz_valid", "__tz_first_rank"]
-        else:
-            # Arrow-native scalar UDFs (round 6, Spark 4.1 arrow_udf —
-            # VERDICT r5 #4 "arrow speed for wide rows"): only
-            # (lat, lon) cross into Python, payload columns stay
-            # JVM-side, and the kernel's native pyarrow outputs go
-            # straight out with no struct wrapper: the ``valid`` flag is
-            # NOT shipped (guide §2.3/§4, ship only what must cross) —
-            # it is pure region-bound arithmetic on the very lat/lon
-            # columns the JVM already holds, re-derived below as a
-            # parsed expression that reproduces numpy's semantics
-            # exactly (isnan guard: SQL ranks NaN above every value
-            # where numpy comparisons are False; coalesce: a NULL
-            # coordinate reads as invalid, matching the NaN it becomes
-            # across the Arrow boundary).
-            #
-            # tzid and tzids ride SEPARATE UDFs so their lineages are
-            # independent: a consumer that only reads ``tzid`` (the
-            # groupBy-tzid analytics shape) lets column pruning drop
-            # the rank-LIST kernel and its Arrow list transport
-            # entirely — measured +10-16% rows/s on the 8-core
-            # bandwidth-bound ladder leg. A consumer selecting BOTH
-            # pays one extra kernel pass, not extra transport: Spark
-            # collapses same-level Python UDFs into ONE ArrowEvalPython
-            # node, so lat/lon still cross once (plan-asserted in
-            # tests). Values are identical either way — the Q1 kernel
-            # is the oracled pip_assign_first_only path.
-            @F.arrow_udf(rank_t)
-            def _probe_first(lat: pa.Array, lon: pa.Array) -> pa.Array:
-                _valid, first_arr, _ = probemod.probe_arrow(
-                    bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon),
-                    mode=mode, with_all=False,
-                )
-                return first_arr
+            return first_arr
 
-            for reserved in ("__tz",) + (("__tz_all",) if include_all else ()):
-                if reserved in df.columns:
-                    # mirror the arrow impl's reserved-name check
-                    # (ADVICE r5 #1): withColumn would silently
-                    # OVERWRITE an input column of that name
-                    raise ValueError(
-                        f"input column {reserved!r} collides with the "
-                        "probe's reserved temp column name"
-                    )
-            lat_lon = _lat_lon_args(lat_col, lon_col)
-            res = df.withColumn("__tz", _probe_first(*lat_lon))
-            drop_cols = ["__tz"]
-            ranks_c = None
-            if include_all:
-
-                @F.arrow_udf(T.ArrayType(rank_t))
-                def _probe_all(lat: pa.Array, lon: pa.Array) -> pa.Array:
-                    _valid, _first, list_arr = probemod.probe_arrow(
-                        bc.value, probemod.arrow_f64(lat),
-                        probemod.arrow_f64(lon), mode=mode, with_all=True,
-                    )
-                    return list_arr
-
-                res = res.withColumn("__tz_all", _probe_all(*lat_lon))
-                ranks_c = F.col("__tz_all")
-                drop_cols.append("__tz_all")
-            mn_lat, mn_lon, mx_lat, mx_lon = self.idx.init_region
-            valid_c = F.expr(
-                "coalesce("
-                f"NOT isnan(CAST(`{lat_col}` AS DOUBLE)) AND "
-                f"NOT isnan(CAST(`{lon_col}` AS DOUBLE)) AND "
-                f"`{lat_col}` >= {mn_lat!r}D AND `{lat_col}` <= {mx_lat!r}D "
-                f"AND `{lon_col}` >= {mn_lon!r}D AND `{lon_col}` <= "
-                f"{mx_lon!r}D, false)"
-            )
-            first_c = F.col("__tz")
-            first_is_sentinel = True  # Q1 kernel ships -1 for no-match
-
-        # JVM-side rank -> zone-name mapping and deterministic shard
-        # assignment (xxhash64 of the cell id). Invalid rows (out-of-
-        # region / NaN, pipeline mode) carry sentinel values from Python
-        # and are nulled here.
+        lat_lon = _lat_lon_args(lat_col, lon_col)
+        first_c = _probe_first(*lat_lon)  # -1 when no match
+        # numpy's region test as one parsed expression: isnan guards SQL
+        # ranking NaN above every value (numpy comparisons are False);
+        # coalesce reads a NULL coordinate as invalid, like the NaN it
+        # becomes across the Arrow boundary
+        lat_s, lon_s = _sql_name(lat_col), _sql_name(lon_col)
+        mn_lat, mn_lon, mx_lat, mx_lon = map(_sql_double, self.idx.init_region)
+        valid_c = F.expr(
+            f"coalesce(NOT isnan(CAST({lat_s} AS DOUBLE)) AND "
+            f"NOT isnan(CAST({lon_s} AS DOUBLE)) AND "
+            f"{lat_s} >= {mn_lat} AND {lat_s} <= {mx_lat} AND "
+            f"{lon_s} >= {mn_lon} AND {lon_s} <= {mx_lon}, false)"
+        )
+        # JVM-side rank -> zone-name mapping; invalid rows (out-of-region
+        # / NaN, pipeline mode) carry sentinel values from Python and are
+        # nulled here
         zone_lit = self._zone_lit
-        maybe_tzids = (
-            [
+        out = [
+            F.when(
+                valid_c & (first_c >= 0), F.element_at(zone_lit, first_c + 1)
+            ).alias("tzid")
+        ]
+        if include_all:
+
+            @F.arrow_udf(T.ArrayType(rank_t))
+            def _probe_all(lat: pa.Array, lon: pa.Array) -> pa.Array:
+                _valid, _first, list_arr = probemod.probe_arrow(
+                    bc.value, probemod.arrow_f64(lat),
+                    probemod.arrow_f64(lon), mode=mode, with_all=True,
+                )
+                return list_arr
+
+            out.append(
                 F.when(
                     valid_c,
                     F.transform(
-                        ranks_c, lambda r: F.element_at(zone_lit, r + 1)
+                        _probe_all(*lat_lon),
+                        lambda r: F.element_at(zone_lit, r + 1),
                     ),
                 ).alias("tzids")
-            ]
-            if include_all
-            else []
-        )
-        # no-match encoding differs by lineage: a JVM-derived
-        # get(ranks, 0) is NULL, the shipped Q1 first rank is the -1
-        # sentinel — both map to a NULL tzid below
-        tzid_cond = valid_c & (
-            (first_c >= 0) if first_is_sentinel else first_c.isNotNull()
-        )
+            )
+        # deterministic shard assignment: xxhash64 of the cell id
         cell_expr = cell_of_expr(lat_col, lon_col, probe_res)
-        return (
-            res.select(
-                "*",
-                F.when(
-                    tzid_cond,
-                    F.element_at(zone_lit, first_c + 1),
-                ).alias("tzid"),
-                *maybe_tzids,
-                F.when(valid_c, cell_expr).alias("cell_id"),
-                F.when(
-                    valid_c,
-                    F.pmod(F.xxhash64(cell_expr), F.lit(n_shards)).cast(
-                        "int"
-                    ),
-                ).alias("zone_shard"),
-                # in_region distinguishes "outside the initialized region"
-                # (a pipeline-mode violation) from "in region but covered
-                # by no zone" (tzid null, NOT a violation) — the violation
-                # counter must use this, not tzid IS NULL
-                valid_c.alias("in_region"),
-            )
-            .drop(*drop_cols)
+        return df.select(
+            "*",
+            *out,
+            F.when(valid_c, cell_expr).alias("cell_id"),
+            F.when(
+                valid_c,
+                F.pmod(F.xxhash64(cell_expr), F.lit(n_shards)).cast("int"),
+            ).alias("zone_shard"),
+            # in_region distinguishes "outside the initialized region"
+            # (a pipeline-mode violation) from "in region but covered
+            # by no zone" (tzid null, NOT a violation) — the violation
+            # counter must use this, not tzid IS NULL
+            valid_c.alias("in_region"),
         )
-
-    @staticmethod
-    def _pick_probe_impl(df: DataFrame, lat_col: str, lon_col: str) -> str:
-        """impl="auto" resolution. Round 6: the scalar impl now rides
-        Spark 4.1's native ``arrow_udf`` — same ArrowEvalPython plan,
-        only (lat, lon) crossing the boundary, but with the pandas
-        Series/ArrowDtype wrapping (the reason mapInArrow used to win)
-        gone. Interleaved pinned 32-core A/B at 6M rows: scalar 0.54-0.74 s
-        vs mapInArrow 1.08-1.17 s on a ZERO-extra-column input (the
-        mapInArrow best case — it degrades further as passthrough
-        columns widen, the scalar path is column-count-independent), so
-        the former width crossover is gone: auto always resolves to the
-        scalar impl. The one exception is an input that already carries
-        a ``__tz`` column (the scalar impl's reserved temp name), which
-        keeps resolving to mapInArrow so previously-valid inputs never
-        start raising."""
-        if any(c in df.columns for c in ("__tz", "__tz_all")) and not any(
-            f.name in ("__tz_valid", "__tz_ranks", "__tz_first_rank")
-            for f in df.schema.fields
-        ):
-            return "arrow"
-        return "pandas"
-
-    def _probe_arrow_mapped(
-        self,
-        df: DataFrame,
-        lat_col: str,
-        lon_col: str,
-        mode: str,
-        include_all: bool,
-        rank_t,
-    ) -> DataFrame:
-        """mapInArrow probe (VERDICT r4 #4): the kernel's native pyarrow
-        outputs (probe_arrow) are appended to each RecordBatch directly —
-        no pandas Series/ArrowDtype wrapping, no struct assembly. All
-        input columns pass through the Python worker (Arrow columnar
-        passthrough — cheap for narrow probe inputs, the reason this is
-        opt-in rather than the default for wide rows). Round 6: with
-        ``include_all`` only (valid, ranks) cross — first rank is derived
-        JVM-side — and ranks use the narrow ``rank_t`` transport dtype."""
-        import pyarrow as pa
-
-        bc = self._bc
-        in_schema = df.schema
-        reserved_out = ["__tz_valid"] + (
-            ["__tz_ranks"] if include_all else ["__tz_first_rank"]
-        )
-        for reserved in reserved_out:
-            if reserved in df.columns:
-                raise ValueError(
-                    f"input column {reserved!r} collides with the probe's "
-                    "reserved output names"
-                )
-        out_schema = T.StructType(
-            list(in_schema.fields)
-            + [T.StructField("__tz_valid", T.BooleanType())]
-            + (
-                [T.StructField("__tz_ranks", T.ArrayType(rank_t))]
-                if include_all
-                else [T.StructField("__tz_first_rank", rank_t)]
-            )
-        )
-        # duplicate probe columns would silently resolve to the FIRST
-        # occurrence here while the pandas path (F.col) raises an
-        # ambiguity error — fail identically instead (ADVICE r5 #2)
-        for c in (lat_col, lon_col):
-            if df.columns.count(c) != 1:
-                raise ValueError(
-                    f"probe column {c!r} appears {df.columns.count(c)} "
-                    "times in the input — column names must be unique"
-                )
-        lat_i = df.columns.index(lat_col)
-        lon_i = df.columns.index(lon_col)
-
-        def probe_batches(batches):
-            idx = bc.value
-            for batch in batches:
-                lats = np.asarray(
-                    batch.column(lat_i).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                lons = np.asarray(
-                    batch.column(lon_i).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                valid, first_arr, list_arr = probemod.probe_arrow(
-                    idx, lats, lons, mode=mode, with_all=include_all
-                )
-                arrays = list(batch.columns) + [pa.array(valid)]
-                names = list(batch.schema.names) + ["__tz_valid"]
-                if include_all:
-                    arrays.append(list_arr)
-                    names.append("__tz_ranks")
-                else:
-                    arrays.append(first_arr)
-                    names.append("__tz_first_rank")
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-        return df.mapInArrow(probe_batches, out_schema)
 
     def distance_from_boundary(
         self,

@@ -226,80 +226,8 @@ def contains_inclusive(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Envelope clip (Sutherland–Hodgman per ring).
+# Envelope clip (half-plane passes that split disconnected components).
 # ---------------------------------------------------------------------------
-
-
-def clip_ring_to_box(
-    ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
-) -> np.ndarray:
-    """Clip one ring against an axis-aligned box (Sutherland–Hodgman,
-    four half-plane passes). Returns (V,2) possibly empty. Mirrors the
-    effect of the reference's `OperatorIntersection` clip against
-    `envelopeToPolygon` (TimeZoneMap.kt:223-228, 245-252) for a single
-    ring; the clip boundary becomes real zone boundary (TimeZone.kt:26-28)."""
-    pts = np.asarray(ring, dtype=np.float64)
-
-    def clip_half(p, inside, intersect):
-        if len(p) == 0:
-            return p
-        keep = inside(p)
-        prev = np.roll(keep, 1)
-        out = []
-        n = len(p)
-        for i in range(n):
-            cur_in = keep[i]
-            prv = p[i - 1]
-            prv_in = prev[i]
-            if cur_in:
-                if not prv_in:
-                    out.append(intersect(prv, p[i]))
-                out.append(p[i])
-            elif prv_in:
-                out.append(intersect(prv, p[i]))
-        return np.array(out) if out else np.zeros((0, 2))
-
-    def ix_lo_x(a, b):
-        t = (xmin - a[0]) / (b[0] - a[0])
-        return np.array([xmin, a[1] + t * (b[1] - a[1])])
-
-    def ix_hi_x(a, b):
-        t = (xmax - a[0]) / (b[0] - a[0])
-        return np.array([xmax, a[1] + t * (b[1] - a[1])])
-
-    def ix_lo_y(a, b):
-        t = (ymin - a[1]) / (b[1] - a[1])
-        return np.array([a[0] + t * (b[0] - a[0]), ymin])
-
-    def ix_hi_y(a, b):
-        t = (ymax - a[1]) / (b[1] - a[1])
-        return np.array([a[0] + t * (b[0] - a[0]), ymax])
-
-    pts = clip_half(pts, lambda p: p[:, 0] >= xmin, ix_lo_x)
-    pts = clip_half(pts, lambda p: p[:, 0] <= xmax, ix_hi_x)
-    pts = clip_half(pts, lambda p: p[:, 1] >= ymin, ix_lo_y)
-    pts = clip_half(pts, lambda p: p[:, 1] <= ymax, ix_hi_y)
-    if len(pts) >= 2:
-        # drop consecutive EXACT duplicate vertices introduced by corner
-        # clips (exact compare: degenerate 1e-6-deg regions are legal,
-        # TimeZoneMapTest.java:386-403)
-        dup = np.all(pts == np.roll(pts, 1, axis=0), axis=1)
-        pts = pts[~dup]
-    return pts if len(pts) >= 3 else np.zeros((0, 2))
-
-
-def clip_rings_to_box(
-    rings: list[np.ndarray], xmin: float, ymin: float, xmax: float, ymax: float
-) -> list[np.ndarray]:
-    """Clip every ring; drop rings that collapse. Empty outer → zone piece
-    dropped by the caller (reference `pointCount > 0` filter,
-    TimeZoneMap.kt:233)."""
-    out = []
-    for r in rings:
-        c = clip_ring_to_box(r, xmin, ymin, xmax, ymax)
-        if len(c) >= 3:
-            out.append(c)
-    return out
 
 
 def _clip_halfplane_split(
@@ -595,67 +523,12 @@ def geodesic_distance_wgs84(
     return np.where(same, 0.0, dist)
 
 
-def segment_box_mask(
-    seg_a: np.ndarray,
-    seg_b: np.ndarray,
-    xmin: float,
-    ymin: float,
-    xmax: float,
-    ymax: float,
-) -> np.ndarray:
-    """Boolean per segment: touches/crosses the box. Same predicate as
-    segments_intersect_box but element-wise (used by the covering
-    compiler to attach cell-local segment lists to boundary cells)."""
-    n = len(seg_a)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-
-    def outcode(x, y):
-        code = np.zeros(len(x), dtype=np.int32)
-        code |= np.where(x < xmin, 1, 0)
-        code |= np.where(x > xmax, 2, 0)
-        code |= np.where(y < ymin, 4, 0)
-        code |= np.where(y > ymax, 8, 0)
-        return code
-
-    ca = outcode(seg_a[:, 0], seg_a[:, 1])
-    cb = outcode(seg_b[:, 0], seg_b[:, 1])
-    out = np.zeros(n, dtype=bool)
-    out |= (ca == 0) | (cb == 0)  # endpoint inside
-    cand = ~out & ((ca & cb) == 0)
-    if np.any(cand):
-        a = seg_a[cand]
-        b = seg_b[cand]
-        corners = np.array(
-            [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax]],
-            dtype=np.float64,
-        )
-        hit = np.zeros(len(a), dtype=bool)
-        for i in range(4):
-            ea, eb = corners[i], corners[(i + 1) % 4]
-            d1 = (b[:, 0] - a[:, 0]) * (ea[1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (
-                ea[0] - a[:, 0]
-            )
-            d2 = (b[:, 0] - a[:, 0]) * (eb[1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (
-                eb[0] - a[:, 0]
-            )
-            d3 = (eb[0] - ea[0]) * (a[:, 1] - ea[1]) - (eb[1] - ea[1]) * (
-                a[:, 0] - ea[0]
-            )
-            d4 = (eb[0] - ea[0]) * (b[:, 1] - ea[1]) - (eb[1] - ea[1]) * (
-                b[:, 0] - ea[0]
-            )
-            hit |= (d1 * d2 <= 0) & (d3 * d4 <= 0)
-        out[np.nonzero(cand)[0]] = hit
-    return out
-
-
 def segments_box_matrix(
     seg_a: np.ndarray, seg_b: np.ndarray, boxes: np.ndarray
 ) -> np.ndarray:
     """Bool matrix (C, S): segment s touches/crosses box c. Boxes are
-    (C, 4) as (xmin, ymin, xmax, ymax). Fully vectorized form of
-    segment_box_mask over many boxes (covering-compiler hot path)."""
+    (C, 4) as (xmin, ymin, xmax, ymax), fully vectorized over boxes
+    (covering-compiler hot path)."""
     C, S = len(boxes), len(seg_a)
     if C == 0 or S == 0:
         return np.zeros((C, S), dtype=bool)

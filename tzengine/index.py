@@ -14,7 +14,7 @@ Pipeline (reference step → here):
   I10 exact-extent filter               → same predicate on exact bbox
   I11 area sort, stable ordinal ties    → ``rank`` = position after
                                           ``sorted(key=(area, ordinal))``
-  I12 clip + split to init region       → Sutherland–Hodgman ring clip
+  I12 clip + split to init region       → ``geom.clip_rings_to_box_split``
   I13 materialize + broadcast           → ``CompiledIndex`` → ``sc.broadcast``
   I3  version gate                      → ``load_index`` checks
                                           "<fmt>:<world>" marker

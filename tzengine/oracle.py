@@ -7,7 +7,10 @@ boundary-inclusive PIP, smallest-area-first. Used by the e2e tests to
 validate that the engine's broadcast cell index changes NOTHING about
 results — only speed. The per-piece boundary-distance functions below
 are the dense references the engine's flat foot kernel
-(probe._foot_distances) is pinned against bit-for-bit.
+(probe._foot_distances) is pinned against bit-for-bit, and the
+Sutherland–Hodgman ring clip at the end is the reference the engine's
+component-splitting clip (geom.clip_rings_to_box_split) is checked
+against.
 """
 
 from __future__ import annotations
@@ -146,3 +149,75 @@ def planar_distance_from_boundary(
     return np.sqrt(
         (pts[:, 0] - nearest[:, 0]) ** 2 + (pts[:, 1] - nearest[:, 1]) ** 2
     )
+
+
+def clip_ring_to_box(
+    ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
+) -> np.ndarray:
+    """Clip one ring against an axis-aligned box (Sutherland–Hodgman,
+    four half-plane passes). Returns (V,2) possibly empty. Mirrors the
+    effect of the reference's `OperatorIntersection` clip against
+    `envelopeToPolygon` (TimeZoneMap.kt:223-228, 245-252) for a single
+    ring; the clip boundary becomes real zone boundary (TimeZone.kt:26-28)."""
+    pts = np.asarray(ring, dtype=np.float64)
+
+    def clip_half(p, inside, intersect):
+        if len(p) == 0:
+            return p
+        keep = inside(p)
+        prev = np.roll(keep, 1)
+        out = []
+        n = len(p)
+        for i in range(n):
+            cur_in = keep[i]
+            prv = p[i - 1]
+            prv_in = prev[i]
+            if cur_in:
+                if not prv_in:
+                    out.append(intersect(prv, p[i]))
+                out.append(p[i])
+            elif prv_in:
+                out.append(intersect(prv, p[i]))
+        return np.array(out) if out else np.zeros((0, 2))
+
+    def ix_lo_x(a, b):
+        t = (xmin - a[0]) / (b[0] - a[0])
+        return np.array([xmin, a[1] + t * (b[1] - a[1])])
+
+    def ix_hi_x(a, b):
+        t = (xmax - a[0]) / (b[0] - a[0])
+        return np.array([xmax, a[1] + t * (b[1] - a[1])])
+
+    def ix_lo_y(a, b):
+        t = (ymin - a[1]) / (b[1] - a[1])
+        return np.array([a[0] + t * (b[0] - a[0]), ymin])
+
+    def ix_hi_y(a, b):
+        t = (ymax - a[1]) / (b[1] - a[1])
+        return np.array([a[0] + t * (b[0] - a[0]), ymax])
+
+    pts = clip_half(pts, lambda p: p[:, 0] >= xmin, ix_lo_x)
+    pts = clip_half(pts, lambda p: p[:, 0] <= xmax, ix_hi_x)
+    pts = clip_half(pts, lambda p: p[:, 1] >= ymin, ix_lo_y)
+    pts = clip_half(pts, lambda p: p[:, 1] <= ymax, ix_hi_y)
+    if len(pts) >= 2:
+        # drop consecutive EXACT duplicate vertices introduced by corner
+        # clips (exact compare: degenerate 1e-6-deg regions are legal,
+        # TimeZoneMapTest.java:386-403)
+        dup = np.all(pts == np.roll(pts, 1, axis=0), axis=1)
+        pts = pts[~dup]
+    return pts if len(pts) >= 3 else np.zeros((0, 2))
+
+
+def clip_rings_to_box(
+    rings: list[np.ndarray], xmin: float, ymin: float, xmax: float, ymax: float
+) -> list[np.ndarray]:
+    """Clip every ring; drop rings that collapse. Empty outer → zone piece
+    dropped by the caller (reference `pointCount > 0` filter,
+    TimeZoneMap.kt:233)."""
+    out = []
+    for r in rings:
+        c = clip_ring_to_box(r, xmin, ymin, xmax, ymax)
+        if len(c) >= 3:
+            out.append(c)
+    return out

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine import _sql_name
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via content-hash groupBy: one surviving (minimum) id
@@ -61,7 +63,7 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFram
     the parsed string is one. The expression AST (and therefore every
     value) is identical — split/sequence/transform/slice/concat_ws with
     the same argument types."""
-    w = f"split(`{text_col}`, ' ')"
+    w = f"split({_sql_name(text_col)}, ' ')"
     shingles = F.expr(
         f"CASE WHEN size({w}) - {n - 1} >= 1 THEN "
         f"transform(sequence(1, size({w}) - {n - 1}), "
@@ -245,18 +247,20 @@ def minhash_band_pairs(
             b2,
             F.expr(
                 f"a.band = b.band AND a.bucket = b.bucket "
-                f"AND a.`{id_col}` < b.`{id_col}`"
+                f"AND a.{_sql_name(id_col)} < b.{_sql_name(id_col)}"
             ),
         )
-        .selectExpr(f"a.`{id_col}` AS id_a", f"b.`{id_col}` AS id_b")
+        .selectExpr(
+            f"a.{_sql_name(id_col)} AS id_a", f"b.{_sql_name(id_col)} AS id_b"
+        )
         .dropDuplicates(["id_a", "id_b"])
     )
     sa = sig.selectExpr(
-        f"`{id_col}` AS id_a",
+        f"{_sql_name(id_col)} AS id_a",
         *[f"mh_{i} AS a_mh_{i}" for i in range(num_hashes)],
     )
     sb = sig.selectExpr(
-        f"`{id_col}` AS id_b",
+        f"{_sql_name(id_col)} AS id_b",
         *[f"mh_{i} AS b_mh_{i}" for i in range(num_hashes)],
     )
     est = F.expr(

@@ -326,33 +326,10 @@ def probe_ranks(
     return offsets_out, cand_rank.astype(np.int32), valid
 
 
-def ranks_to_tzids(
-    idx: CompiledIndex, offsets: np.ndarray, ranks: np.ndarray, valid: np.ndarray
-) -> tuple[list, list]:
-    """CSR ranks → (tzid first-match list, tzids all-matches list), None /
-    empty list for invalid or uncovered points (Q1 note: with a
-    full-coverage zone set every valid point matches)."""
-    zone_ids = idx.zone_ids
-    tzid = []
-    tzids = []
-    n = len(offsets) - 1
-    for i in range(n):
-        if not valid[i]:
-            tzid.append(None)
-            tzids.append(None)
-            continue
-        rs = ranks[offsets[i] : offsets[i + 1]]
-        names = [zone_ids[r] for r in rs]
-        tzids.append(names)
-        tzid.append(names[0] if names else None)
-    return tzid, tzids
-
-
 def rank_dtype(idx: CompiledIndex):
     """Narrowest signed integer dtype that holds every piece rank (and
-    the -1 sentinel): int16 up to 32767 pieces, int32 beyond. Shared by
-    both probe impls so their outputs stay bit-identical (guide §2.3 —
-    narrower types halve the Arrow-boundary bytes)."""
+    the -1 sentinel): int16 up to 32767 pieces, int32 beyond (guide
+    §2.3 — narrower types halve the Arrow-boundary bytes)."""
     return np.int16 if idx.n_pieces <= np.iinfo(np.int16).max else np.int32
 
 
@@ -370,10 +347,7 @@ def probe_arrow(
 
     Round 6 (guide §2.3, VERDICT r5 #5 — shrink bytes/row across the
     Arrow boundary): ranks travel as int16 whenever the piece count
-    fits (454-2000 in every bench world), and when the rank LIST is
-    already crossing the boundary the first rank is NOT shipped
-    separately — the engine derives it JVM-side as get(ranks, 0), so
-    the first-rank column costs zero transport.
+    fits (454-2000 in every bench world).
 
     No per-row Python anywhere — the Spark assign UDF hands these straight
     back through the Arrow serializer, and the rank→zone-name mapping
