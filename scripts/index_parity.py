@@ -1,0 +1,94 @@
+"""Fingerprint the compiled index and the distance kernels of a checkout.
+
+Prints one SHA-256 per line for:
+- every ``CompiledIndex`` field of the synth (whole world and a clipped
+  region), big454 and 1M-vertex huge worlds;
+- ``knn_zones_batch(k=3)`` rank lists and exact-evaluation counts, and
+  ``containing_distances`` offsets, heads and distances, on 20k seeded
+  big454 points (NaN, +-inf and +-90 rows included) for each metric.
+
+Run it on two checkouts and diff the output: identical lines mean a
+refactor left compile and kernel output bit-identical. Run it from a
+directory outside both checkouts (the working directory shadows the
+``--repo`` path on ``sys.path``):
+
+    cd /tmp && python /path/to/scripts/index_parity.py --repo /path/to/checkout
+"""
+
+from __future__ import annotations
+
+import argparse
+import dataclasses
+import hashlib
+import sys
+import time
+
+import numpy as np
+
+
+def _feed(h, v) -> None:
+    if isinstance(v, np.ndarray):
+        h.update(f"{v.dtype.str}{v.shape}".encode())
+        h.update(np.ascontiguousarray(v).tobytes())
+    elif isinstance(v, dict):
+        for k in sorted(v):
+            h.update(repr(k).encode())
+            _feed(h, v[k])
+    elif isinstance(v, (list, tuple)):
+        h.update(f"{type(v).__name__}{len(v)}".encode())
+        for x in v:
+            _feed(h, x)
+    else:
+        h.update(repr(v).encode())
+
+
+def digest(*values) -> str:
+    h = hashlib.sha256()
+    for v in values:
+        _feed(h, v)
+    return h.hexdigest()[:16]
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--repo", required=True, help="checkout to fingerprint")
+    args = ap.parse_args()
+    sys.path.insert(0, args.repo)
+    from tzengine import bigworld, index, probe, zones
+
+    worlds = {
+        "synth": (zones.synthetic_world(), (-90, -180, 90, 180)),
+        "synth_clip": (zones.synthetic_world(), (1.5, 2.5, 8.5, 7.5)),
+        "big454": (bigworld.big_world(), (-90, -180, 90, 180)),
+        "huge": (bigworld.huge_world(), (-90, -180, 90, 180)),
+    }
+    big = None
+    for name, (pieces, region) in worlds.items():
+        t0 = time.perf_counter()
+        idx = index.compile_index(pieces, *region, world_version=name)
+        dt = time.perf_counter() - t0
+        fields = [getattr(idx, f.name) for f in dataclasses.fields(idx)]
+        print(f"index {name:10s} {digest(*fields)}  "
+              f"({idx.n_pieces} pieces, compile {dt:.2f} s)")
+        if name == "big454":
+            big = idx
+
+    rng = np.random.default_rng(20_000)
+    lats = rng.uniform(-70, 70, 20_000)
+    lons = rng.uniform(-70, 70, 20_000)
+    lats[:6] = [np.nan, 0.0, np.inf, -np.inf, 90.0, -90.0]
+    lons[:6] = [0.0, np.nan, 0.0, 0.0, 10.0, -10.0]
+    for metric in ("geodesic", "planar_deg"):
+        ranks, n_eval = probe.knn_zones_batch(
+            big, lats, lons, 3, return_stats=True, metric=metric
+        )
+        off = np.asarray(ranks.offsets)
+        vals = np.asarray(ranks.values)
+        print(f"knn   {metric:10s} {digest(off, vals, n_eval)}  "
+              f"(n_eval {n_eval})")
+        q5 = probe.containing_distances(big, lats, lons, metric)
+        print(f"q5    {metric:10s} {digest(*q5)}")
+
+
+if __name__ == "__main__":
+    main()

@@ -144,13 +144,20 @@ def test_clip_boundary_becomes_real_boundary():
     assert d == pytest.approx(111.29, abs=0.5)
 
 
-def test_segments_intersect_box():
+def test_segments_box_touch():
     seg_a, seg_b = geom._segments([RINGS[0]])
-    assert geom.segments_intersect_box(seg_a, seg_b, 0.9, 0.9, 1.1, 1.1)
-    assert not geom.segments_intersect_box(seg_a, seg_b, 1.2, 1.2, 1.4, 1.4)
-    assert geom.segments_intersect_box(seg_a, seg_b, 0.0, 0.0, 5.0, 0.99) is False
+
+    def touches(*box):
+        boxes = np.broadcast_to(np.array(box), (len(seg_a), 4))
+        hit = geom.segments_box_touch(seg_a, seg_b, boxes)
+        assert hit.shape == (len(seg_a),)
+        return bool(hit.any())
+
+    assert touches(0.9, 0.9, 1.1, 1.1)
+    assert not touches(1.2, 1.2, 1.4, 1.4)
+    assert not touches(0.0, 0.0, 5.0, 0.99)
     # box crossing the bottom edge
-    assert geom.segments_intersect_box(seg_a, seg_b, 1.2, 0.5, 1.4, 1.5)
+    assert touches(1.2, 0.5, 1.4, 1.5)
 
 
 # --- B4 self-intersection repair (esri OperatorSimplify analogue) ----------
@@ -358,17 +365,23 @@ def test_points_in_rings_evenodd_grouped_matches_dense_fuzz():
         np.testing.assert_array_equal(got, ref, err_msg=f"trial {trial}")
 
 
-def test_segments_box_pairs_matches_dense_matrix_fuzz():
-    """The sparse grid-prescreened covering kernel must produce EXACTLY
-    the pairs of np.nonzero(segments_box_matrix(...)), row-major, on a
-    uniform aligned grid — including degenerate (point) segments and
-    segments lying exactly on cell boundaries."""
-    import numpy as np
-
-    from tzengine import geom
-
+def test_segments_box_touch_matches_dense_matrix_fuzz():
+    """The elementwise segment-box test over every (box, segment) pair
+    must equal the dense oracle matrix — on aligned grids, overlapping
+    unaligned boxes, degenerate (point) segments and segments lying
+    exactly on cell boundaries."""
     rng = np.random.default_rng(123)
-    for trial in range(40):
+
+    def check(a, b, boxes, msg=""):
+        C, S = len(boxes), len(a)
+        rows = np.repeat(np.arange(C), S)
+        cols = np.tile(np.arange(S), C)
+        got = geom.segments_box_touch(a[cols], b[cols], boxes[rows])
+        want = oracle.segments_box_matrix(a, b, boxes)
+        np.testing.assert_array_equal(got.reshape(C, S), want, err_msg=msg)
+        return want
+
+    for trial in range(60):
         S = int(rng.integers(1, 150))
         a = rng.uniform(-12, 12, (S, 2))
         b = a + rng.normal(0, 1.2, (S, 2))
@@ -377,78 +390,52 @@ def test_segments_box_pairs_matches_dense_matrix_fuzz():
         if trial % 5 == 0:
             a[:, 0] = np.round(a[:, 0])  # endpoints exactly on grid lines
         w = float(rng.uniform(0.7, 4.0))
-        ix = rng.integers(0, 9, 50)
-        iy = rng.integers(0, 9, 50)
-        key = ix * 100 + iy
-        _, u = np.unique(key, return_index=True)
-        ix, iy = ix[u], iy[u]
-        boxes = np.stack(
-            [-12 + ix * w, -12 + iy * w, -12 + (ix + 1) * w, -12 + (iy + 1) * w],
-            axis=1,
-        )
-        r0, c0 = np.nonzero(geom.segments_box_matrix(a, b, boxes))
-        r1, c1 = geom.segments_box_pairs(a, b, boxes)
-        np.testing.assert_array_equal(r0, r1, err_msg=f"trial {trial} rows")
-        np.testing.assert_array_equal(c0, c1, err_msg=f"trial {trial} cols")
+        if trial % 6 == 3:
+            # integer segments on a unit grid: exact corner and edge
+            # contacts, where the orientation products are exactly 0
+            a, b, w = np.round(a), np.round(b), 1.0
+        if trial % 3 == 2:
+            # overlapping boxes of mixed sizes, not on any grid
+            lo = rng.uniform(-14, 10, (50, 2))
+            boxes = np.hstack([lo, lo + rng.uniform(0.1, 5.0, (50, 2))])
+        else:
+            ix = rng.integers(0, 9, 50)
+            iy = rng.integers(0, 9, 50)
+            boxes = np.stack(
+                [-12 + ix * w, -12 + iy * w,
+                 -12 + (ix + 1) * w, -12 + (iy + 1) * w],
+                axis=1,
+            )
+        want = check(a, b, boxes, f"trial {trial}")
+        assert want.any() and not want.all()
 
-    # non-uniform boxes take the dense fallback and still match
-    boxes = np.array([[0.0, 0.0, 1.0, 1.0], [2.0, 0.0, 5.0, 4.0]])
-    a = np.array([[0.5, 0.5], [3.0, -1.0]])
-    b = np.array([[0.5, 2.0], [3.0, 5.0]])
-    r0, c0 = np.nonzero(geom.segments_box_matrix(a, b, boxes))
-    r1, c1 = geom.segments_box_pairs(a, b, boxes)
-    np.testing.assert_array_equal(r0, r1)
-    np.testing.assert_array_equal(c0, c1)
-
-    # ADVICE r4 #1 counterexample: UNIFORM-SIZE but NOT grid-aligned
-    # boxes — both round to the same (bix, biy) key, and the pre-fix
-    # sparse path matched only the first (a segment crossing only the
-    # second box returned no pairs). Must take the dense fallback.
+    # uniform-size boxes off the grid, overlapping: a segment crossing
+    # only the second box touches only it
     boxes = np.array([[0.0, 0.0, 1.0, 1.0], [0.3, 0.0, 1.3, 1.0]])
-    a = np.array([[1.2, -0.5]])
-    b = np.array([[1.2, 1.5]])  # crosses only the second box
-    r0, c0 = np.nonzero(geom.segments_box_matrix(a, b, boxes))
-    r1, c1 = geom.segments_box_pairs(a, b, boxes)
-    np.testing.assert_array_equal(r0, r1)
-    np.testing.assert_array_equal(c0, c1)
-    assert len(r1) == 1 and r1[0] == 1  # the incidence is actually found
-
-    # aligned grid but DUPLICATE cells (same key twice) must also fall
-    # back — the searchsorted join can only return one box per key
-    boxes = np.array([[0.0, 0.0, 1.0, 1.0], [0.0, 0.0, 1.0, 1.0]])
-    a = np.array([[0.5, -0.5]])
-    b = np.array([[0.5, 1.5]])
-    r0, c0 = np.nonzero(geom.segments_box_matrix(a, b, boxes))
-    r1, c1 = geom.segments_box_pairs(a, b, boxes)
-    np.testing.assert_array_equal(r0, r1)
-    np.testing.assert_array_equal(c0, c1)
-    assert len(r1) == 2
+    want = check(np.array([[1.2, -0.5]]), np.array([[1.2, 1.5]]), boxes)
+    assert want[:, 0].tolist() == [False, True]
+    # a segment grazing only a box corner, both endpoints outside
+    boxes = np.array([[0.0, 0.0, 1.0, 1.0], [0.5, 0.0, 1.5, 1.0]])
+    want = check(np.array([[-1.0, 0.0]]), np.array([[1.0, 2.0]]), boxes)
+    assert want[:, 0].tolist() == [True, False]
 
 
-def test_vincenty_per_row_freeze_is_batch_independent():
-    """Round 4 determinism fix: the geodesic distance must be a pure
-    function of the row — splitting a batch must not change any value
-    (the old batch-level convergence break made the last ~1e-13 of
-    lambda depend on the slowest row in the batch)."""
-    import numpy as np
-
-    from tzengine import geom
-
+def test_vincenty_is_batch_independent():
+    """The geodesic distance must be a pure function of the row:
+    splitting a batch must not change any value (a batch-level
+    convergence break would make the last ~1e-13 of lambda depend on
+    the slowest row in the batch)."""
     rng = np.random.default_rng(44)
     n = 500
     lat1 = rng.uniform(-80, 80, n)
     lon1 = rng.uniform(-179, 179, n)
     lat2 = lat1 + rng.normal(0, 2.0, n)
     lon2 = lon1 + rng.normal(0, 2.0, n)
-    full = geom.geodesic_distance_wgs84(lat1, lon1, lat2, lon2, freeze=True)
-    # the strongest partitioning: every row evaluated as a SINGLETON
-    # batch (rows that converge in a batch's final iteration are exactly
-    # where the old break leaked body(lambda_penultimate) — 215/500 of
-    # these rows differed under the first freeze attempt)
+    full = geom.geodesic_distance_wgs84(lat1, lon1, lat2, lon2)
+    # the strongest partitioning: every row evaluated as a SINGLETON batch
     singles = np.array([
         geom.geodesic_distance_wgs84(
-            lat1[i:i + 1], lon1[i:i + 1], lat2[i:i + 1], lon2[i:i + 1],
-            freeze=True,
+            lat1[i:i + 1], lon1[i:i + 1], lat2[i:i + 1], lon2[i:i + 1]
         )[0]
         for i in range(n)
     ])
@@ -456,33 +443,20 @@ def test_vincenty_per_row_freeze_is_batch_independent():
     # and an uneven split
     parts = np.concatenate([
         geom.geodesic_distance_wgs84(
-            lat1[:77], lon1[:77], lat2[:77], lon2[:77], freeze=True),
+            lat1[:77], lon1[:77], lat2[:77], lon2[:77]),
         geom.geodesic_distance_wgs84(
-            lat1[77:], lon1[77:], lat2[77:], lon2[77:], freeze=True),
+            lat1[77:], lon1[77:], lat2[77:], lon2[77:]),
     ])
     np.testing.assert_array_equal(full, parts)
-    # fixed-iteration variant (the DEFAULT since round 5): also pure,
-    # trivially batch-independent, and ~identical to the frozen one
-    fixed = geom.geodesic_distance_wgs84(lat1, lon1, lat2, lon2)
-    np.testing.assert_allclose(fixed, full, rtol=0, atol=1e-5)
-    fixed_singles = np.array([
-        geom.geodesic_distance_wgs84(
-            lat1[i:i + 1], lon1[i:i + 1], lat2[i:i + 1], lon2[i:i + 1]
-        )[0]
-        for i in range(0, n, 25)
-    ])
-    np.testing.assert_array_equal(fixed[::25], fixed_singles)
 
 
 def test_geodesic_metric_aliases_and_default():
-    """Round 5 (VERDICT r4 #3): metric="geodesic" IS the fixed-iteration
-    Vincenty ("geodesic_fixed" aliases it); "geodesic_freeze" opts into
-    the adaptive variant; both agree to well under a micrometer."""
-    import numpy as np
-
+    """The default metric is "geodesic", bit for bit; the old variant
+    names and other unknown names raise."""
     from tzengine import index as indexmod, probe
     from tzengine.zones import synthetic_world
 
+    assert probe.METRICS == ("geodesic", "planar_deg")
     idx = indexmod.compile_index(synthetic_world(), -90, -180, 90, 180, "s1")
     rng = np.random.default_rng(7)
     lats = rng.uniform(0.2, 9.7, 64)
@@ -494,23 +468,23 @@ def test_geodesic_metric_aliases_and_default():
     ]
     d_def = probe.distance_from_boundary_batch(
         idx, zids, lats, lons, mode="pipeline")
-    d_fixed = probe.distance_from_boundary_batch(
-        idx, zids, lats, lons, mode="pipeline", metric="geodesic_fixed")
-    d_frz = probe.distance_from_boundary_batch(
-        idx, zids, lats, lons, mode="pipeline", metric="geodesic_freeze")
-    np.testing.assert_array_equal(d_def, d_fixed)  # alias = bit-identical
-    np.testing.assert_allclose(d_frz, d_def, rtol=0, atol=1e-5)
-    import pytest
+    d_geo = probe.distance_from_boundary_batch(
+        idx, zids, lats, lons, mode="pipeline", metric="geodesic")
+    np.testing.assert_array_equal(d_def, d_geo)
+    assert (d_def > 0).any()
+    for name in ("geodesic_fixed", "geodesic_freeze", "vincenty"):
+        with pytest.raises(ValueError, match="unknown metric"):
+            probe.distance_from_boundary_batch(
+                idx, zids, lats, lons, mode="pipeline", metric=name)
+        with pytest.raises(ValueError, match="unknown metric"):
+            probe.knn_zones_batch(idx, lats, lons, 3, metric=name)
+        with pytest.raises(ValueError, match="unknown metric"):
+            probe.containing_distances(idx, lats, lons, name)
 
-    with pytest.raises(ValueError, match="unknown metric"):
-        probe.distance_from_boundary_batch(
-            idx, zids, lats, lons, mode="pipeline", metric="vincenty")
 
-
-def _vincenty_reference(lat1, lon1, lat2, lon2, freeze=False):
-    """The plain Vincenty loop, every row through all 50 iterations (the
-    per-row freeze keeps a converged row's lambda) — what
-    geom.geodesic_distance_wgs84 must reproduce bit for bit."""
+def _vincenty_reference(lat1, lon1, lat2, lon2):
+    """The plain Vincenty loop, every row through all 50 iterations —
+    what geom.geodesic_distance_wgs84 must reproduce bit for bit."""
     a, b, f = geom.WGS84_A, geom.WGS84_B, geom.WGS84_F
     lat1, lon1, lat2, lon2 = (
         np.asarray(x, dtype=np.float64) for x in (lat1, lon1, lat2, lon2)
@@ -520,7 +494,6 @@ def _vincenty_reference(lat1, lon1, lat2, lon2, freeze=False):
     L = np.radians(lon2 - lon1)
     sinU1, cosU1, sinU2, cosU2 = np.sin(U1), np.cos(U1), np.sin(U2), np.cos(U2)
     lam = L.copy()
-    done = np.zeros(L.shape, dtype=bool)
     with np.errstate(divide="ignore", invalid="ignore"):
         for _ in range(50):
             sin_lam, cos_lam = np.sin(lam), np.cos(lam)
@@ -544,10 +517,6 @@ def _vincenty_reference(lat1, lon1, lat2, lon2, freeze=False):
                 sigma + C * sin_sigma
                 * (c2m + C * cos_sigma * (-1.0 + 2.0 * c2m**2))
             )
-            if freeze:
-                newly = np.abs(lam_new - lam) < 1e-13
-                lam_new = np.where(done, lam, lam_new)
-                done |= newly
             lam = lam_new
     u_sq = csa * (a**2 - b**2) / b**2
     A = 1.0 + u_sq / 16384.0 * (
@@ -565,8 +534,7 @@ def _vincenty_reference(lat1, lon1, lat2, lon2, freeze=False):
     return np.where(same, 0.0, b * A * (sigma - delta_sigma))
 
 
-@pytest.mark.parametrize("freeze", [False, True])
-def test_vincenty_fixed_point_exit_bit_identical(freeze):
+def test_vincenty_fixed_point_exit_bit_identical():
     """Rows leave the loop at their float64 fixed point; every value must
     stay bitwise the 50-iteration loop's, in any batch shape."""
     rng = np.random.default_rng(45)
@@ -587,12 +555,12 @@ def test_vincenty_fixed_point_exit_bit_identical(freeze):
     def bits(x):
         return np.asarray(x, dtype=np.float64).view(np.int64)
 
-    want = _vincenty_reference(lat1, lon1, lat2, lon2, freeze)
+    want = _vincenty_reference(lat1, lon1, lat2, lon2)
     assert np.isnan(want).any() and (want == 0).any()
 
     def got(sel):
         return geom.geodesic_distance_wgs84(
-            lat1[sel], lon1[sel], lat2[sel], lon2[sel], freeze=freeze
+            lat1[sel], lon1[sel], lat2[sel], lon2[sel]
         )
 
     assert np.array_equal(bits(got(slice(None))), bits(want))

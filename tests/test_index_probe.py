@@ -226,7 +226,7 @@ def test_every_compiled_piece_has_a_segment():
         )
 
 
-@pytest.mark.parametrize("metric", ["geodesic", "geodesic_freeze", "planar_deg"])
+@pytest.mark.parametrize("metric", ["geodesic", "planar_deg"])
 def test_q5_kernel_matches_per_piece_oracle_with_holes(metric):
     """Every zone against every point of a grid over the synthetic world
     — holes, enclaves, the two-piece Zone/Multi, boundary and corner
@@ -277,31 +277,35 @@ def test_version_gate():
 
 
 def test_cover_piece_propagated_pairs_match_recompute():
-    """The BFS-propagated boundary incidences (round-6 return_pairs)
-    must equal a from-scratch segments_box_pairs over the emitted
-    boundary cells — same pairs, same row-major order."""
+    """The BFS-propagated boundary incidences (cover_piece's third
+    result) must equal the dense oracle matrix over the emitted boundary
+    cells — same pairs, same row-major order."""
     from tzengine import cells as cellmod
+    from tzengine import oracle
 
     for zone in ("Zone/Filler", "Zone/Island"):
         if zone not in EVERYWHERE.zone_ids:
             continue
         rings = EVERYWHERE.piece_rings(EVERYWHERE.zone_ids.index(zone))
-        cids, interior, (brow, bcol) = index.cover_piece(
-            rings, depth=4, return_pairs=True
-        )
+        cids, interior, (brow, bcol) = index.cover_piece(rings, depth=4)
         bsel = np.nonzero(~interior)[0]
         sa, sb = geom._segments(rings)
-        rows, cols = geom.segments_box_pairs(
-            sa, sb, cellmod.cell_bounds(cids[bsel]), aligned_grid=True
+        rows, cols = np.nonzero(
+            oracle.segments_box_matrix(sa, sb, cellmod.cell_bounds(cids[bsel]))
         )
+        assert len(rows)
         np.testing.assert_array_equal(brow, rows)
         np.testing.assert_array_equal(bcol, cols)
 
 
 def test_cover_piece_interior_and_boundary():
     rings = EVERYWHERE.piece_rings(EVERYWHERE.zone_ids.index("Zone/Filler"))
-    cids, interior = index.cover_piece(rings, depth=4)
+    cids, interior, (brow, _bcol) = index.cover_piece(rings, depth=4)
     assert interior.any() and (~interior).any()
+    # every boundary cell carries at least one incidence
+    assert np.array_equal(
+        np.unique(brow), np.arange(np.count_nonzero(~interior))
+    )
     # interior cells resolve without PIP: their centers are inside
     from tzengine import cells as cellmod
 
@@ -477,6 +481,28 @@ def test_merged_levels_entry_lists_rank_ascending():
         for i in range(len(uniq)):
             seg = ranks[offsets[i]:offsets[i + 1]]
             assert np.all(np.diff(seg) > 0), (res, i)
+
+
+def test_merge_levels_rejects_resolution_above_max():
+    """A level finer than cells.MAX_RES would overflow the push-down
+    shift into the resolution bits: merge_levels must refuse it, alone
+    or below a coarser level, and still accept MAX_RES itself."""
+    from tzengine import cells as cellmod
+
+    def level(res):
+        uniq = np.array([(res << 58) | 5], dtype=np.uint64)
+        return uniq, np.array([0, 1], dtype=np.int64), np.array([0], np.int32)
+
+    top = cellmod.MAX_RES
+    for levels in (
+        {top + 1: level(top + 1)},
+        {top - 1: level(top - 1), top + 1: level(top + 1)},
+    ):
+        with pytest.raises(ValueError, match="resolution"):
+            index.merge_levels(levels, 2)
+    merged = index.merge_levels({top - 1: level(top - 1), top: level(top)}, 2)
+    assert list(merged) == [top]
+    assert len(merged[top][0]) == 5  # 4 pushed-down children + the native cell
 
 
 def test_nearest_feet_bucket_prune_parity():

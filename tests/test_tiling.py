@@ -5,7 +5,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tzengine import cells, geom, index, tiling
+from tzengine import cells, geom, index, oracle, tiling
 from tzengine.zones import synthetic_world
 
 RES = 8
@@ -27,9 +27,7 @@ def test_raster_mask_correctness(raster):
         if r.kind == "full":
             assert geom.contains_inclusive(center, rings)[0], r
             seg_a, seg_b = geom._segments(rings)
-            assert not geom.segments_intersect_box(
-                seg_a, seg_b, b[0], b[1], b[2], b[3]
-            ), r
+            assert not oracle.segments_box_matrix(seg_a, seg_b, b[None]).any(), r
 
 
 def test_full_cells_match_pure_numpy(raster):

@@ -559,10 +559,8 @@ class TzEngine:
         """Q5: distance to the nearest boundary coordinate of the named
         zone's containing piece (TimeZone.kt:41-47); clip edges count as
         boundary. ``metric="geodesic"`` = WGS84 meters (reference
-        parity) — the fixed-iteration Vincenty the SQL oracle mirrors
-        ("geodesic_fixed" is an alias; "geodesic_freeze" opts into the
-        adaptive variant, ~5e-10 m away); ``"planar_deg"`` = planar
-        degrees (cheap pre-filter). A point outside its zone → error
+        parity) — the fixed-iteration Vincenty the SQL oracle mirrors;
+        ``"planar_deg"`` = planar degrees (cheap pre-filter). A point outside its zone → error
         (strict) / null (pipeline); a NULL zone → null.
 
         The ``arrow_udf`` takes only lat/lon (so it shares the assign
@@ -623,10 +621,8 @@ class TzEngine:
         contained zones are distance 0 and keep the area-rank order, so the
         head agrees with getOverlappingTimeZones for covered points.
         ``metric``: "geodesic" (WGS84 meters, reference parity — the
-        fixed-iteration Vincenty the SQL oracle mirrors; "geodesic_fixed"
-        is an alias), "geodesic_freeze" (opt-in adaptive variant), or
-        "planar_deg" (planar degrees — bit-exact SQL-oracle-able
-        ordering). A NULL, NaN or infinite coordinate yields []. The
+        fixed-iteration Vincenty the SQL oracle mirrors) or "planar_deg"
+        (planar degrees — bit-exact SQL-oracle-able ordering). A NULL, NaN or infinite coordinate yields []. The
         ``arrow_udf`` takes only lat/lon and returns piece ranks, mapped
         to names JVM-side; assign, Q5 and kNN share one ArrowEvalPython
         node.

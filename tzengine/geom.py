@@ -385,43 +385,26 @@ def clip_rings_to_box_split(
 # ---------------------------------------------------------------------------
 
 
-def geodesic_distance_wgs84(
-    lat1, lon1, lat2, lon2, iterations: int = 50, freeze: bool = False
-) -> np.ndarray:
+#: Vincenty loop bound: the iteration count the SQL mirror runs.
+VINCENTY_ITERATIONS = 50
+
+
+def geodesic_distance_wgs84(lat1, lon1, lat2, lon2) -> np.ndarray:
     """Vectorized Vincenty inverse on the WGS84 ellipsoid, meters.
 
     Public algorithm (Vincenty 1975). Accuracy ~0.5 mm — inside the
     reference goldens' tolerances (TimeZoneTest.java:34-60, tightest
     ±0.001 m on ~111 m). Coincident points return exactly 0.0.
 
-    DEFAULT (round 5, VERDICT r4 #3): ``freeze=False`` — the fixed
-    iteration count with no convergence logic. It is a deterministic
-    pure row function, agrees with the freeze variant to ~5e-10 m, and
-    is the variant the recursive-CTE SQL oracle mirrors exactly — so
-    the path real callers hit by default is the value-oracled one.
-
-    Fixed-point exit (both variants): a row leaves the loop once its
-    next λ is bitwise equal to its current one (the loop keeps running
-    on the remaining rows only). From there every further iteration
-    would recompute the same values, so each output is bitwise what the
-    full ``iterations`` loop gives; λ typically reaches an exact float64
-    fixed point by iteration 6-7, which makes the call 4-7x faster.
-
-    ``freeze=True`` (opt-in adaptive): each row's λ freezes at ITS OWN convergence
-    (|Δλ| < 1e-13), so the result is a pure function of the row. The
-    previous batch-level break made the last ~1e-13 of λ depend on when
-    the slowest row in the batch converged — i.e. output varied with
-    batch composition/partitioning at the ~nanometer level. Per-row
-    freezing keeps the adaptive cost (the loop still exits once every
-    row is frozen) and lets a SQL oracle mirror the iteration exactly
-    (each row's final value is body(λ_final) no matter when the batch
-    loop stops).
-
-    The freeze threshold comparison is why ``freeze=True`` is no longer
-    the default: |Δλ| landing within trig-ulp distance of 1e-13 can
-    flip iteration counts across engines, putting the adaptive variant
-    one step away from the SQL mirror; without freezing, both engines
-    run the same ``iterations`` and agree to ~5e-10 m.
+    Each row is the fixed ``VINCENTY_ITERATIONS``-step λ loop with no
+    convergence threshold: a deterministic pure row function, and the
+    loop the recursive-CTE SQL oracle mirrors exactly. A row leaves the
+    loop early once its next λ is bitwise equal to its current one (the
+    loop keeps running on the remaining rows only). From there every
+    further iteration would recompute the same values, so each output
+    is bitwise what the full loop gives, whatever the batch; λ typically
+    reaches an exact float64 fixed point by iteration 6-7, which makes
+    the call 4-7x faster than running every row to the bound.
     """
     lat1 = np.atleast_1d(np.asarray(lat1, dtype=np.float64))
     lon1 = np.atleast_1d(np.asarray(lon1, dtype=np.float64))
@@ -438,7 +421,7 @@ def geodesic_distance_wgs84(
     sinU2, cosU2 = np.sin(U2), np.cos(U2)
 
     # final per-row sin σ, cos σ, σ, cos²α, cos 2σm (the initial values
-    # stand for iterations=0); the loop runs on the ACTIVE rows only,
+    # stand for a zero-step loop); the loop runs on the ACTIVE rows only,
     # ``act`` indexes them and the a*/s*/c* names hold their slices
     fin = np.repeat([[0.0], [1.0], [0.0], [1.0], [0.0]], L.size, axis=1)
     act = np.arange(L.size)
@@ -448,13 +431,12 @@ def geodesic_distance_wgs84(
         np.broadcast_to(x, L.shape).ravel()
         for x in (sinU1, cosU1, sinU2, cosU2)
     )
-    done = np.zeros(L.size, dtype=bool)
 
     # one errstate context for the whole loop (entering/exiting numpy's
     # errstate per iteration was ~25% of the kNN kernel wall at small
     # batch sizes — 2 contexts x 50 iterations x one call per piece)
     with np.errstate(divide="ignore", invalid="ignore"):
-        for it in range(iterations):
+        for it in range(VINCENTY_ITERATIONS):
             if not act.size:
                 break
             sin_lam, cos_lam = np.sin(lam), np.cos(lam)
@@ -474,25 +456,19 @@ def geodesic_distance_wgs84(
             lam_new = aL + (1.0 - C) * f * sin_alpha * (
                 sig + C * s_sig * (c2m + C * c_sig * (-1.0 + 2.0 * c2m**2))
             )
-            if freeze:
-                # per-row freeze: a converged row keeps ITS λ, so its
-                # final values are body(λ_frozen) whatever the batch
-                newly = np.abs(lam_new - lam) < 1e-13
-                lam_new = np.where(done, lam, lam_new)
-                done |= newly
             # a row whose next λ is bitwise its current one is at a
             # fixed point: every later iteration would recompute these
             # same values, so it leaves the loop now (λ reaches an exact
             # float64 fixed point within ~7 iterations)
             out = lam_new.view(np.int64) == lam.view(np.int64)
-            if it == iterations - 1:
+            if it == VINCENTY_ITERATIONS - 1:
                 out[:] = True
             if out.any():
                 fin[:, act[out]] = (s_sig[out], c_sig[out], sig[out],
                                     csa[out], c2m[out])
                 keep = ~out
-                act, aL, s1, c1, s2, c2, done, lam_new = (
-                    x[keep] for x in (act, aL, s1, c1, s2, c2, done, lam_new)
+                act, aL, s1, c1, s2, c2, lam_new = (
+                    x[keep] for x in (act, aL, s1, c1, s2, c2, lam_new)
                 )
             lam = lam_new
     sin_sigma, cos_sigma, sigma, cos_sq_alpha, cos2sigma_m = fin.reshape(
@@ -523,68 +499,17 @@ def geodesic_distance_wgs84(
     return np.where(same, 0.0, dist)
 
 
-def segments_box_matrix(
-    seg_a: np.ndarray, seg_b: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    """Bool matrix (C, S): segment s touches/crosses box c. Boxes are
-    (C, 4) as (xmin, ymin, xmax, ymax), fully vectorized over boxes
-    (covering-compiler hot path)."""
-    C, S = len(boxes), len(seg_a)
-    if C == 0 or S == 0:
-        return np.zeros((C, S), dtype=bool)
-    xmin = boxes[:, 0][:, None]
-    ymin = boxes[:, 1][:, None]
-    xmax = boxes[:, 2][:, None]
-    ymax = boxes[:, 3][:, None]
-    ax, ay = seg_a[:, 0][None, :], seg_a[:, 1][None, :]
-    bx, by = seg_b[:, 0][None, :], seg_b[:, 1][None, :]
-
-    in_a = (ax >= xmin) & (ax <= xmax) & (ay >= ymin) & (ay <= ymax)
-    in_b = (bx >= xmin) & (bx <= xmax) & (by >= ymin) & (by <= ymax)
-    out = in_a | in_b
-
-    # outcode trivial-reject
-    ca = (
-        np.where(ax < xmin, 1, 0)
-        | np.where(ax > xmax, 2, 0)
-        | np.where(ay < ymin, 4, 0)
-        | np.where(ay > ymax, 8, 0)
-    )
-    cb = (
-        np.where(bx < xmin, 1, 0)
-        | np.where(bx > xmax, 2, 0)
-        | np.where(by < ymin, 4, 0)
-        | np.where(by > ymax, 8, 0)
-    )
-    cand = ~out & ((ca & cb) == 0)
-    if np.any(cand):
-        hit = np.zeros_like(cand)
-        corners = [
-            (xmin, ymin, xmax, ymin),
-            (xmax, ymin, xmax, ymax),
-            (xmax, ymax, xmin, ymax),
-            (xmin, ymax, xmin, ymin),
-        ]
-        dxs = bx - ax
-        dys = by - ay
-        for ex0, ey0, ex1, ey1 in corners:
-            d1 = dxs * (ey0 - ay) - dys * (ex0 - ax)
-            d2 = dxs * (ey1 - ay) - dys * (ex1 - ax)
-            dex = ex1 - ex0
-            dey = ey1 - ey0
-            d3 = dex * (ay - ey0) - dey * (ax - ex0)
-            d4 = dex * (by - ey0) - dey * (bx - ex0)
-            hit |= (d1 * d2 <= 0) & (d3 * d4 <= 0)
-        out |= cand & hit
-    return out
-
-
-def _segment_box_touch_flat(
+def segments_box_touch(
     a: np.ndarray, b: np.ndarray, boxes: np.ndarray
 ) -> np.ndarray:
-    """Elementwise (pair i: segment i vs box i) form of the exact
-    touch/cross test in segments_box_matrix — same arithmetic, flat
-    shapes. Used on grid-prescreened candidate pairs."""
+    """Elementwise: does segment (a[i], b[i]) touch or cross the closed
+    box ``boxes[i]`` = (xmin, ymin, xmax, ymax)? The one segment-box
+    predicate: the covering compiler classifies boundary vs uniform
+    cells with it, the rasterizer partial vs full cells.
+
+    An endpoint inside the box is a hit; a segment whose endpoints share
+    an outside half-plane is not (Cohen–Sutherland outcodes); the rest
+    get the exact test against the four box edges."""
     xmin, ymin, xmax, ymax = boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
     ax, ay = a[:, 0], a[:, 1]
     bx, by = b[:, 0], b[:, 1]
@@ -626,210 +551,6 @@ def _segment_box_touch_flat(
     return out
 
 
-def segments_box_pairs(
-    seg_a: np.ndarray, seg_b: np.ndarray, boxes: np.ndarray,
-    aligned_grid: bool = False,
-    seg_bbox: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Sparse exact segment-box incidences: (box_idx, seg_idx) pairs,
-    row-major (box ascending, segment ascending within a box) — the same
-    pairs np.nonzero(segments_box_matrix(...)) yields, WITHOUT the dense
-    (C, S) temporaries that dominate covering-compile time at
-    coastline vertex counts (a 1M-vertex world spends ~80% of compile in
-    the dense matrices; VERDICT r3 #3 scale axis).
-
-    Prescreen: covering-compiler frontiers are UNIFORM ALIGNED grids
-    (one resolution per call), so each segment's bbox maps to a small
-    (ix, iy) index range (expanded ±1 against edge-rounding, so no
-    false negatives); candidates are joined to the live cells by grid
-    key and only those pairs get the exact touch/cross test. Falls back
-    to the dense matrix for non-uniform boxes or when candidates would
-    exceed the dense size."""
-    C, S = len(boxes), len(seg_a)
-    empty = (np.zeros(0, np.int64), np.zeros(0, np.int64))
-    if C == 0 or S == 0:
-        return empty
-
-    def _dense():
-        m = segments_box_matrix(seg_a, seg_b, boxes)
-        r, c = np.nonzero(m)
-        return r.astype(np.int64), c.astype(np.int64)
-
-    w = boxes[:, 2] - boxes[:, 0]
-    h = boxes[:, 3] - boxes[:, 1]
-    w0, h0 = float(w.max()), float(h.max())
-    if (
-        w0 <= 0 or h0 <= 0
-        or float(w.min()) < w0 * (1 - 1e-6)
-        or float(h.min()) < h0 * (1 - 1e-6)
-    ):
-        return _dense()
-
-    ox = float(boxes[:, 0].min())
-    oy = float(boxes[:, 1].min())
-    bix = np.rint((boxes[:, 0] - ox) / w0).astype(np.int64)
-    biy = np.rint((boxes[:, 1] - oy) / h0).astype(np.int64)
-    # grid-ALIGNMENT guard (ADVICE r4 #1): uniform-SIZE boxes that are
-    # not grid-aligned can round to the same (bix, biy) key, and the
-    # searchsorted join below matches only the first box per key —
-    # silent false negatives. The sparse path requires every box to sit
-    # exactly on the (ox + i*w0, oy + j*h0) lattice with a unique cell;
-    # anything else takes the dense fallback (correct for arbitrary
-    # boxes). Covering-compiler frontiers always satisfy this —
-    # ``aligned_grid=True`` is their promise of it, skipping the two
-    # allclose passes and the unique() sort that cost ~8% of
-    # coastline-scale compile time (round 6); untrusted callers keep
-    # the guard.
-    if not aligned_grid:
-        if (
-            not np.allclose(
-                ox + bix * w0, boxes[:, 0], rtol=0, atol=w0 * 1e-9
-            )
-            or not np.allclose(
-                oy + biy * h0, boxes[:, 1], rtol=0, atol=h0 * 1e-9
-            )
-        ):
-            return _dense()
-        _bk = bix * (int(biy.max()) + 2) + biy
-        if len(np.unique(_bk)) != C:
-            return _dense()
-
-    if seg_bbox is not None:
-        # caller-cached per-segment bboxes (the covering compiler calls
-        # this once per BFS level with the SAME segments — round 6)
-        sx0, sx1, sy0, sy1 = seg_bbox
-    else:
-        sx0 = np.minimum(seg_a[:, 0], seg_b[:, 0])
-        sx1 = np.maximum(seg_a[:, 0], seg_b[:, 0])
-        sy0 = np.minimum(seg_a[:, 1], seg_b[:, 1])
-        sy1 = np.maximum(seg_a[:, 1], seg_b[:, 1])
-    gx0 = np.clip(
-        np.floor((sx0 - ox) / w0).astype(np.int64) - 1, bix.min(), bix.max()
-    )
-    gx1 = np.clip(
-        np.floor((sx1 - ox) / w0).astype(np.int64) + 1, bix.min(), bix.max()
-    )
-    gy0 = np.clip(
-        np.floor((sy0 - oy) / h0).astype(np.int64) - 1, biy.min(), biy.max()
-    )
-    gy1 = np.clip(
-        np.floor((sy1 - oy) / h0).astype(np.int64) + 1, biy.min(), biy.max()
-    )
-    cnt = (gx1 - gx0 + 1) * (gy1 - gy0 + 1)
-    tot = int(cnt.sum())
-    if tot >= C * S:
-        return _dense()
-
-    rep_seg = np.repeat(np.arange(S, dtype=np.int64), cnt)
-    off = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    ky = np.repeat(gy1 - gy0 + 1, cnt)
-    cand_ix = np.repeat(gx0, cnt) + off // ky
-    cand_iy = np.repeat(gy0, cnt) + off % ky
-
-    m_key = int(biy.max()) + 2
-    bkey = bix * m_key + biy
-    ckey = cand_ix * m_key + cand_iy
-    order = np.argsort(bkey, kind="stable")
-    pos = np.searchsorted(bkey[order], ckey)
-    pos_c = np.minimum(pos, C - 1)
-    found = bkey[order][pos_c] == ckey
-    box_idx = order[pos_c][found]
-    seg_idx = rep_seg[found]
-    if not len(box_idx):
-        return empty
-
-    exact = _segment_box_touch_flat(
-        seg_a[seg_idx], seg_b[seg_idx], boxes[box_idx]
-    )
-    rows, cols = box_idx[exact], seg_idx[exact]
-    o = np.lexsort((cols, rows))
-    return rows[o], cols[o]
-
-
-def segments_cross_query(
-    cx: np.ndarray,
-    cy: np.ndarray,
-    px: np.ndarray,
-    py: np.ndarray,
-    ax: np.ndarray,
-    ay: np.ndarray,
-    bx: np.ndarray,
-    by: np.ndarray,
-) -> np.ndarray:
-    """Element-wise: does segment (c→p) cross segment (a→b)?
-
-    Half-open orientation convention (sign>0 vs sign<=0 on BOTH tests) so
-    a query segment passing exactly through a shared polygon vertex is
-    counted once, not twice — the segment-segment analogue of the ray
-    caster's `(ay>py) != (by>py)` rule. Exactly-on-boundary query points
-    are handled by the separate on-segment test before parity is used."""
-
-    def orient(ox, oy, qx, qy, rx, ry):
-        return (qx - ox) * (ry - oy) - (qy - oy) * (rx - ox)
-
-    d1 = orient(ax, ay, bx, by, cx, cy) > 0
-    d2 = orient(ax, ay, bx, by, px, py) > 0
-    d3 = orient(cx, cy, px, py, ax, ay) > 0
-    d4 = orient(cx, cy, px, py, bx, by) > 0
-    return (d1 != d2) & (d3 != d4)
-
-
-def segments_intersect_box(
-    seg_a: np.ndarray,
-    seg_b: np.ndarray,
-    xmin: float,
-    ymin: float,
-    xmax: float,
-    ymax: float,
-) -> bool:
-    """True if any segment touches/crosses the box (used by the covering
-    compiler to classify cells as boundary vs uniform). Cohen–Sutherland
-    style outcode test, vectorized."""
-    if len(seg_a) == 0:
-        return False
-
-    def outcode(x, y):
-        code = np.zeros(len(x), dtype=np.int32)
-        code |= np.where(x < xmin, 1, 0)
-        code |= np.where(x > xmax, 2, 0)
-        code |= np.where(y < ymin, 4, 0)
-        code |= np.where(y > ymax, 8, 0)
-        return code
-
-    ca = outcode(seg_a[:, 0], seg_a[:, 1])
-    cb = outcode(seg_b[:, 0], seg_b[:, 1])
-    # trivially inside (either endpoint in box)
-    if np.any((ca == 0) | (cb == 0)):
-        return True
-    # trivially rejected pairs share an outside half-plane
-    cand = (ca & cb) == 0
-    if not np.any(cand):
-        return False
-    # exact check for the remaining candidates: segment vs 4 box edges
-    a = seg_a[cand]
-    b = seg_b[cand]
-    corners = np.array(
-        [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax]], dtype=np.float64
-    )
-    edges_a = corners
-    edges_b = np.roll(corners, -1, axis=0)
-
-    def ccw(p, q, r):
-        return (q[..., 0] - p[..., 0]) * (r[..., 1] - p[..., 1]) - (
-            q[..., 1] - p[..., 1]
-        ) * (r[..., 0] - p[..., 0])
-
-    for i in range(4):
-        ea, eb = edges_a[i], edges_b[i]
-        d1 = ccw(a, b, ea[None, :])
-        d2 = ccw(a, b, eb[None, :])
-        d3 = ccw(ea[None, :], eb[None, :], a)
-        d4 = ccw(ea[None, :], eb[None, :], b)
-        if np.any((d1 * d2 <= 0) & (d3 * d4 <= 0)):
-            return True
-    return False
-
-
 # ---------------------------------------------------------------------------
 # kNN pruning: geodesic lower bound to a bbox (north_star scale path).
 # ---------------------------------------------------------------------------
@@ -853,72 +574,22 @@ def _haversine_angle(lat1, lon1, lat2, lon2) -> np.ndarray:
 def bbox_geodesic_lower_bound(
     lats: np.ndarray, lons: np.ndarray, boxes: np.ndarray
 ) -> np.ndarray:
-    """(n, P) guaranteed lower bound in METERS on the geodesic distance
-    from each point to anywhere inside/on each bbox.
+    """Guaranteed lower bound in METERS on the geodesic distance from a
+    point to anywhere inside/on a bbox; points inside a box get 0.
 
-    ``boxes`` rows are (lo_lon, lo_lat, hi_lon, hi_lat). The minimizing
-    longitude over the box is the clamped longitude (haversine is
-    monotone in |Δλ| ≤ 180°); along that clamped meridian strip the
-    angle as a function of box latitude has at most one interior
-    critical point (tan φ* = tan φ_p / (1 - 2 sin²(Δλ/2))), so the exact
-    minimum is attained at one of {lo_lat, hi_lat, clamped φ*}.
-    Points inside a box get 0."""
-    lats = np.asarray(lats, dtype=np.float64)[:, None]  # (n,1)
-    lons = np.asarray(lons, dtype=np.float64)[:, None]
-    return _bbox_geo_lb_core(
-        lats, lons,
-        boxes[None, :, 0], boxes[None, :, 1],
-        boxes[None, :, 2], boxes[None, :, 3],
-    )
-
-
-def bbox_geodesic_lower_bound_pairwise(
-    lats: np.ndarray, lons: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    """Elementwise variant of :func:`bbox_geodesic_lower_bound`: point i
-    vs box i → (n,) bounds. Same math, no outer product — the shape the
-    vectorized kNN frontier needs (each point expands DIFFERENT pieces,
-    so an outer matrix would be quadratic waste)."""
+    ``boxes[..., :]`` is (lo_lon, lo_lat, hi_lon, hi_lat) and broadcasts
+    against ``lats``/``lons``: (n, 1) points against (G, 4) boxes give
+    the (n, G) matrix, (n,) points against (n, 4) boxes the n pairwise
+    bounds. The minimizing longitude over the box is the clamped
+    longitude (haversine is monotone in |Δλ| ≤ 180°); along that clamped
+    meridian strip the angle as a function of box latitude has at most
+    one interior critical point (tan φ* = tan φ_p / (1 - 2 sin²(Δλ/2))),
+    so the exact minimum is attained at one of {lo_lat, hi_lat, clamped
+    φ*}."""
     lats = np.asarray(lats, dtype=np.float64)
     lons = np.asarray(lons, dtype=np.float64)
-    return _bbox_geo_lb_core(
-        lats, lons, boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
-    )
+    lo_lon, lo_lat, hi_lon, hi_lat = (boxes[..., i] for i in range(4))
 
-
-def bbox_planar_lower_bound(
-    lats: np.ndarray, lons: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    """(n, P) lower bound in planar DEGREES on the distance from each
-    point to anywhere inside/on each bbox — the planar-metric analogue
-    of :func:`bbox_geodesic_lower_bound` (point-to-rect distance; no
-    wrap, consistent with the pure-planar metric)."""
-    lats = np.asarray(lats, dtype=np.float64)[:, None]
-    lons = np.asarray(lons, dtype=np.float64)[:, None]
-    return _bbox_planar_lb_core(
-        lats, lons,
-        boxes[None, :, 0], boxes[None, :, 1],
-        boxes[None, :, 2], boxes[None, :, 3],
-    )
-
-
-def bbox_planar_lower_bound_pairwise(
-    lats: np.ndarray, lons: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    lats = np.asarray(lats, dtype=np.float64)
-    lons = np.asarray(lons, dtype=np.float64)
-    return _bbox_planar_lb_core(
-        lats, lons, boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
-    )
-
-
-def _bbox_planar_lb_core(lats, lons, lo_lon, lo_lat, hi_lon, hi_lat):
-    dx = np.maximum(np.maximum(lo_lon - lons, lons - hi_lon), 0.0)
-    dy = np.maximum(np.maximum(lo_lat - lats, lats - hi_lat), 0.0)
-    return np.sqrt(dx * dx + dy * dy)
-
-
-def _bbox_geo_lb_core(lats, lons, lo_lon, lo_lat, hi_lon, hi_lat):
     # minimizing |Δλ| over the box, WITH antimeridian wrap: 0 inside the
     # lon interval, else the smaller of the wrapped distances to the two
     # lon edges (linear clamping alone picks the wrong side when the
@@ -948,12 +619,9 @@ def _bbox_geo_lb_core(lats, lons, lo_lon, lo_lat, hi_lon, hi_lat):
         np.clip(phi_star, lo_lat, hi_lat),
         np.clip(lats, lo_lat, hi_lat),
     )
-    # inlined haversine with the candidate-invariant terms hoisted
-    # (round 6): cos(phi_p) and sin²(Δλ/2) are identical across the four
-    # candidate latitudes, so computing them once saves ~40% of this
-    # bound's trig — the per-candidate values are BIT-IDENTICAL to the
-    # former _haversine_angle calls (same ops on the same doubles, just
-    # not recomputed).
+    # inlined haversine with the candidate-invariant terms hoisted:
+    # cos(phi_p) and sin²(Δλ/2) are identical across the four candidate
+    # latitudes (same ops on the same doubles as _haversine_angle)
     cos_p = np.cos(phi_p)
     ang = None
     for cl in cand_lats:
@@ -962,6 +630,21 @@ def _bbox_geo_lb_core(lats, lons, lo_lon, lo_lat, hi_lon, hi_lat):
         a = 2.0 * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
         ang = a if ang is None else np.minimum(ang, a)
     return R_GEO_LB * ang
+
+
+def bbox_planar_lower_bound(
+    lats: np.ndarray, lons: np.ndarray, boxes: np.ndarray
+) -> np.ndarray:
+    """Lower bound in planar DEGREES on the distance from a point to
+    anywhere inside/on a bbox — the planar-metric analogue of
+    :func:`bbox_geodesic_lower_bound`, broadcasting the same way
+    (point-to-rect distance; no wrap, consistent with the pure-planar
+    metric)."""
+    lats = np.asarray(lats, dtype=np.float64)
+    lons = np.asarray(lons, dtype=np.float64)
+    dx = np.maximum(np.maximum(boxes[..., 0] - lons, lons - boxes[..., 2]), 0.0)
+    dy = np.maximum(np.maximum(boxes[..., 1] - lats, lats - boxes[..., 3]), 0.0)
+    return np.sqrt(dx * dx + dy * dy)
 
 
 # ---------------------------------------------------------------------------

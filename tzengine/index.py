@@ -141,59 +141,59 @@ class CompiledIndex:
 
 
 def _base_res_for_bbox(w_lon: float, h_lat: float) -> int:
-    """Coarsest resolution whose cells are no bigger than the piece bbox
-    (so a handful of cells cover it)."""
+    """Finest resolution whose cells are at least as large as the piece
+    bbox, so at most 2x2 cells cover it."""
     span = max(w_lon, 2.0 * h_lat, 1e-9)
     r = int(np.floor(np.log2(360.0 / span)))
     return int(np.clip(r, 0, cells.MAX_RES))
 
 
-def cover_piece(
-    rings: list[np.ndarray], depth: int = 5, max_cells: int = 4096,
-    return_pairs: bool = False,
-) -> tuple:
+# cover_piece stops subdividing once another level could push the
+# emitted cell count past this cap
+MAX_COVER_CELLS = 4096
+
+
+def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
     """Compute the cell covering of one (clipped) piece.
 
-    Returns (cell_ids uint64, interior bool). Interior cells may sit at any
-    resolution in [base, base+depth]; boundary cells are at base+depth.
-    Classification: a cell with no boundary segment through it is uniformly
-    inside or outside (decided by a center-point PIP); a cell the boundary
-    crosses is subdivided until the depth budget, then kept as a boundary
-    cell. This is the engine replacement for the reference's O3
-    (smallest-area-first + lazy scan) — interior hits resolve O(1) at probe
-    time, exact ray-casting only on boundary cells (north_star).
+    Returns (cell_ids uint64, interior bool, (cell_pos, seg_idx)).
+    Interior cells may sit at any resolution in [base, base+depth];
+    boundary cells are at base+depth. Classification: a cell with no
+    boundary segment through it is uniformly inside or outside (decided
+    by a center-point PIP); a cell the boundary crosses is subdivided
+    until the depth budget, then kept as a boundary cell. This is the
+    engine replacement for the reference's O3 (smallest-area-first +
+    lazy scan) — interior hits resolve O(1) at probe time, exact
+    ray-casting only on boundary cells (north_star).
 
-    Segment-cell incidences PROPAGATE down the BFS (round 6): a segment
-    touching a child cell's closed rectangle must touch its parent's (the
-    child rect is a subset), so the candidates for a level are the 4-way
-    expansion of the previous level's exact pairs — no per-level grid
-    join over all segments. The exact inclusive touch test is unchanged,
-    so the pair set (and every downstream artifact) is bit-identical to
-    the former per-level ``segments_box_pairs`` calls; only level 0 still
-    runs the full join (a handful of base-resolution cells).
-
-    ``return_pairs=True`` appends the final boundary incidences
-    ``(cell_pos, seg_idx)`` — row-major over the emitted boundary cells,
-    exactly what ``segments_box_pairs`` over those cells would return —
-    so ``compile_piece`` does not have to recompute them.
+    Segment-cell incidences PROPAGATE down the BFS: a segment touching a
+    child cell's closed rectangle must touch its parent's (the child
+    rect is a subset), so the candidates for a level are the 4-way
+    expansion of the previous level's incidences. Level 0 starts from
+    every (base cell, segment) pair — at most 2x2 base cells — and every
+    level runs the same bbox prescreen and exact
+    ``geom.segments_box_touch`` test. The last element holds the final
+    boundary incidences: row-major over the emitted boundary cells
+    (``cell_pos`` indexes them in emission order), so ``compile_piece``
+    does not have to recompute them.
     """
     lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
     base = _base_res_for_bbox(hi_lon - lo_lon, hi_lat - lo_lat)
     max_res = min(base + depth, cells.MAX_RES)
     seg_a, seg_b = geom._segments(rings)
-    seg_bbox = (
-        np.minimum(seg_a[:, 0], seg_b[:, 0]),
-        np.maximum(seg_a[:, 0], seg_b[:, 0]),
-        np.minimum(seg_a[:, 1], seg_b[:, 1]),
-        np.maximum(seg_a[:, 1], seg_b[:, 1]),
-    ) if len(seg_a) else None
+    sx0 = np.minimum(seg_a[:, 0], seg_b[:, 0])
+    sx1 = np.maximum(seg_a[:, 0], seg_b[:, 0])
+    sy0 = np.minimum(seg_a[:, 1], seg_b[:, 1])
+    sy1 = np.maximum(seg_a[:, 1], seg_b[:, 1])
 
     out_cells_parts: list[np.ndarray] = []
     out_interior_parts: list[np.ndarray] = []
     b_pairs = (np.zeros(0, np.int64), np.zeros(0, np.int64))
     frontier = cells.cells_covering_bbox(lo_lon, lo_lat, hi_lon, hi_lat, base)
     n_emitted = 0
-    rows = cols = None  # level-0 sentinel: full grid join below
+    # candidate (frontier cell, segment) pairs: all of them at level 0
+    rows = np.repeat(np.arange(len(frontier), dtype=np.int64), len(seg_a))
+    cols = np.tile(np.arange(len(seg_a), dtype=np.int64), len(frontier))
 
     while len(frontier):
         b = cells.cell_bounds(frontier)
@@ -204,52 +204,35 @@ def cover_piece(
             | (b[:, 3] < lo_lat)
             | (b[:, 1] > hi_lat)
         )
-        if rows is None:
-            frontier, b = frontier[keep], b[keep]
-            if not len(frontier):
-                break
-            rows, cols = geom.segments_box_pairs(
-                seg_a, seg_b, b, aligned_grid=True, seg_bbox=seg_bbox
-            )
-        else:
-            # rows/cols are candidate pairs indexed into the UNPRUNED
-            # frontier; remap through the bbox prune, then run the same
-            # exact inclusive touch test segments_box_pairs applies
-            new_pos = np.cumsum(keep) - 1
-            frontier, b = frontier[keep], b[keep]
-            if not len(frontier):
-                break
-            sel = keep[rows]
-            rows, cols = new_pos[rows[sel]], cols[sel]
-            if len(rows) and seg_bbox is not None:
-                # bbox prescreen: an inclusive touch needs the segment's
-                # bbox to overlap the cell rect — drops ~half the 4-way
-                # candidates before the exact (costlier) test
-                sx0, sx1, sy0, sy1 = seg_bbox
-                near = (
-                    (sx1[cols] >= b[rows, 0])
-                    & (sx0[cols] <= b[rows, 2])
-                    & (sy1[cols] >= b[rows, 1])
-                    & (sy0[cols] <= b[rows, 3])
-                )
-                rows, cols = rows[near], cols[near]
-            if len(rows):
-                ok = geom._segment_box_touch_flat(
-                    seg_a[cols], seg_b[cols], b[rows]
-                )
-                rows, cols = rows[ok], cols[ok]
+        # rows/cols index the UNPRUNED frontier; remap through the prune
+        new_pos = np.cumsum(keep) - 1
+        frontier, b = frontier[keep], b[keep]
+        if not len(frontier):
+            break
+        sel = keep[rows]
+        rows, cols = new_pos[rows[sel]], cols[sel]
+        # bbox prescreen: an inclusive touch needs the segment's bbox to
+        # overlap the cell rect (segments_box_touch's outcode reject says
+        # the same) — drops most candidates before the exact test
+        near = (
+            (sx1[cols] >= b[rows, 0])
+            & (sx0[cols] <= b[rows, 2])
+            & (sy1[cols] >= b[rows, 1])
+            & (sy0[cols] <= b[rows, 3])
+        )
+        rows, cols = rows[near], cols[near]
+        ok = geom.segments_box_touch(seg_a[cols], seg_b[cols], b[rows])
+        rows, cols = rows[ok], cols[ok]
         crossed = np.zeros(len(b), dtype=bool)
         crossed[rows] = True
 
         # uniform cells: decide by center point, keep the interior ones.
-        # Strict even-odd ONLY (round 6): no segment touches a uniform
-        # cell's closed rectangle (the exact inclusive segment-box test
-        # above said so), and the center sits strictly inside that
-        # rectangle, so it cannot lie within ON_EDGE_EPS of any segment
-        # — the points_on_boundary half of containsInclusive is
-        # provably False here and the former contains_inclusive call
-        # (which also re-derived the segment arrays per BFS level) was
-        # ~35% of coastline-scale compile time.
+        # Strict even-odd ONLY: no segment touches a uniform cell's
+        # closed rectangle (the exact inclusive segment-box test above
+        # said so), and the center sits strictly inside that rectangle,
+        # so it cannot lie within ON_EDGE_EPS of any segment — the
+        # points_on_boundary half of containsInclusive is provably False
+        # here.
         uni = ~crossed
         if np.any(uni):
             centers = np.stack(
@@ -270,14 +253,12 @@ def cover_piece(
         n_cross = len(cross_cells)
         cross_pos = np.full(len(b), -1, dtype=np.int64)
         cross_pos[np.nonzero(crossed)[0]] = np.arange(n_cross)
-        if res >= max_res or n_emitted + 4 * n_cross >= max_cells:
+        ppos = cross_pos[rows]
+        if res >= max_res or n_emitted + 4 * n_cross >= MAX_COVER_CELLS:
             out_cells_parts.append(cross_cells)
             out_interior_parts.append(np.zeros(n_cross, dtype=bool))
-            n_emitted += n_cross
-            if return_pairs and len(rows):
-                ppos = cross_pos[rows]
-                o = np.lexsort((cols, ppos))
-                b_pairs = (ppos[o], cols[o])
+            o = np.lexsort((cols, ppos))
+            b_pairs = (ppos[o], cols[o])
             break
         # subdivide every crossed cell (vectorized children); candidate
         # pairs for the children are the 4-way expansion of this level's
@@ -286,22 +267,18 @@ def cover_piece(
         morton = cross_cells & np.uint64((1 << 58) - 1)
         bases = (np.uint64(res + 1) << np.uint64(58)) | (morton << np.uint64(2))
         frontier = (bases[:, None] + np.arange(4, dtype=np.uint64)[None, :]).ravel()
-        ppos = cross_pos[rows]
         rows = (
             (ppos * 4)[:, None] + np.arange(4, dtype=np.int64)[None, :]
         ).ravel()
         cols = np.repeat(cols, 4)
 
     if out_cells_parts:
-        out = (
+        return (
             np.concatenate(out_cells_parts),
             np.concatenate(out_interior_parts),
+            b_pairs,
         )
-    else:
-        out = (np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=bool))
-    if return_pairs:
-        return out + (b_pairs,)
-    return out
+    return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=bool), b_pairs
 
 
 def compile_index(
@@ -399,25 +376,23 @@ def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
     interior/center (E,) bool; loc_off (E+1,) i64 + loc_idx (L,) i32 —
     per-cell CSR of piece-local segment ids for boundary cells."""
     sa, sb = geom._segments(rings)
-    cids, interior, (brow, bcol) = cover_piece(
-        rings, depth=depth, return_pairs=True
-    )
+    cids, interior, (brow, bcol) = cover_piece(rings, depth=depth)
     bounds = cells.cell_bounds(cids)
     centers = np.stack(
         [(bounds[:, 0] + bounds[:, 2]) / 2, (bounds[:, 1] + bounds[:, 3]) / 2],
         axis=1,
     )
     center_in = geom.points_in_rings_evenodd(centers, sa, sb)
-    # boundary cells: attach the segments touching each cell — one
-    # vectorized (cells x segments) matrix per piece
+    # boundary cells: attach the segments touching each cell as a
+    # cell-local CSR
     n_cells = len(cids)
     loc_counts = np.zeros(n_cells, dtype=np.int64)
     idx_parts: list[np.ndarray] = []
     bsel = np.nonzero(~interior)[0]
     if len(bsel):
-        # boundary incidences come straight from the covering BFS (round
-        # 6, cover_piece return_pairs): identical pairs to the former
-        # segments_box_pairs(sa, sb, bounds[bsel]) recompute, for free
+        # boundary incidences come straight from the covering BFS
+        # (cover_piece's third result): exactly the touching pairs of
+        # the emitted boundary cells, row-major
         loc_counts[bsel] = np.bincount(brow, minlength=len(bsel))
         idx_parts.append(bcol.astype(np.int32))  # row-major order
     loc_off = np.zeros(n_cells + 1, dtype=np.int64)
@@ -618,6 +593,14 @@ def merge_levels(
     levels: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]],
     total_entries: int,
 ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Collapse adjacent lookup levels (see the note above). Raises
+    ValueError for a level outside [0, cells.MAX_RES]: the push-down
+    shift would carry its Morton bits into the resolution field."""
+    bad = [r for r in levels if not 0 <= r <= cells.MAX_RES]
+    if bad:
+        raise ValueError(
+            f"cell level resolution {max(bad)} outside [0, {cells.MAX_RES}]"
+        )
     if len(levels) <= 1:
         return levels
     budget = max(

@@ -7,10 +7,11 @@ boundary-inclusive PIP, smallest-area-first. Used by the e2e tests to
 validate that the engine's broadcast cell index changes NOTHING about
 results — only speed. The per-piece boundary-distance functions below
 are the dense references the engine's flat foot kernel
-(probe._foot_distances) is pinned against bit-for-bit, and the
-Sutherland–Hodgman ring clip at the end is the reference the engine's
-component-splitting clip (geom.clip_rings_to_box_split) is checked
-against.
+(probe._foot_distances) is pinned against bit-for-bit, the dense
+segment-box matrix is the reference for the covering compiler's
+incidences (geom.segments_box_touch), and the Sutherland–Hodgman ring
+clip at the end is the reference the engine's component-splitting clip
+(geom.clip_rings_to_box_split) is checked against.
 """
 
 from __future__ import annotations
@@ -93,11 +94,7 @@ class OracleMap:
                 continue
             if metric == "planar_deg":
                 return float(planar_distance_from_boundary(pt, rings)[0])
-            return float(
-                distance_from_boundary(
-                    pt, rings, freeze=metric == "geodesic_freeze"
-                )[0]
-            )
+            return float(distance_from_boundary(pt, rings)[0])
         return float("nan")
 
 
@@ -126,16 +123,16 @@ def nearest_boundary_point(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarr
 
 
 def distance_from_boundary(
-    pts: np.ndarray, rings: list[np.ndarray], freeze: bool = False
+    pts: np.ndarray, rings: list[np.ndarray]
 ) -> np.ndarray:
     """Distance (meters) from each point to the planar-nearest boundary
     coordinate, geodesic on WGS84 — TimeZone.kt:41-47 semantics. Does NOT
     enforce the inside-guard; callers check `contains_inclusive` first
-    (TimeZone.kt:43). ``freeze`` → geom.geodesic_distance_wgs84."""
+    (TimeZone.kt:43)."""
     pts = np.atleast_2d(np.asarray(pts, dtype=np.float64))
     nearest = nearest_boundary_point(pts, rings)
     return geom.geodesic_distance_wgs84(
-        pts[:, 1], pts[:, 0], nearest[:, 1], nearest[:, 0], freeze=freeze
+        pts[:, 1], pts[:, 0], nearest[:, 1], nearest[:, 0]
     )
 
 
@@ -149,6 +146,63 @@ def planar_distance_from_boundary(
     return np.sqrt(
         (pts[:, 0] - nearest[:, 0]) ** 2 + (pts[:, 1] - nearest[:, 1]) ** 2
     )
+
+
+def segments_box_matrix(
+    seg_a: np.ndarray, seg_b: np.ndarray, boxes: np.ndarray
+) -> np.ndarray:
+    """Bool matrix (C, S): segment s touches/crosses box c. Boxes are
+    (C, 4) as (xmin, ymin, xmax, ymax). The dense all-pairs form of
+    geom.segments_box_touch, written out independently as an outer
+    product over boxes x segments."""
+    C, S = len(boxes), len(seg_a)
+    if C == 0 or S == 0:
+        return np.zeros((C, S), dtype=bool)
+    xmin = boxes[:, 0][:, None]
+    ymin = boxes[:, 1][:, None]
+    xmax = boxes[:, 2][:, None]
+    ymax = boxes[:, 3][:, None]
+    ax, ay = seg_a[:, 0][None, :], seg_a[:, 1][None, :]
+    bx, by = seg_b[:, 0][None, :], seg_b[:, 1][None, :]
+
+    in_a = (ax >= xmin) & (ax <= xmax) & (ay >= ymin) & (ay <= ymax)
+    in_b = (bx >= xmin) & (bx <= xmax) & (by >= ymin) & (by <= ymax)
+    out = in_a | in_b
+
+    # outcode trivial-reject
+    ca = (
+        np.where(ax < xmin, 1, 0)
+        | np.where(ax > xmax, 2, 0)
+        | np.where(ay < ymin, 4, 0)
+        | np.where(ay > ymax, 8, 0)
+    )
+    cb = (
+        np.where(bx < xmin, 1, 0)
+        | np.where(bx > xmax, 2, 0)
+        | np.where(by < ymin, 4, 0)
+        | np.where(by > ymax, 8, 0)
+    )
+    cand = ~out & ((ca & cb) == 0)
+    if np.any(cand):
+        hit = np.zeros_like(cand)
+        corners = [
+            (xmin, ymin, xmax, ymin),
+            (xmax, ymin, xmax, ymax),
+            (xmax, ymax, xmin, ymax),
+            (xmin, ymax, xmin, ymin),
+        ]
+        dxs = bx - ax
+        dys = by - ay
+        for ex0, ey0, ex1, ey1 in corners:
+            d1 = dxs * (ey0 - ay) - dys * (ex0 - ax)
+            d2 = dxs * (ey1 - ay) - dys * (ex1 - ax)
+            dex = ex1 - ex0
+            dey = ey1 - ey0
+            d3 = dex * (ay - ey0) - dey * (ax - ex0)
+            d4 = dex * (by - ey0) - dey * (bx - ex0)
+            hit |= (d1 * d2 <= 0) & (d3 * d4 <= 0)
+        out |= cand & hit
+    return out
 
 
 def clip_ring_to_box(

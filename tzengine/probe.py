@@ -275,10 +275,12 @@ def probe_ranks(
             colinear = np.abs(cross_prod) <= thr
             inbox = (px >= mnx) & (px <= mxx) & (py >= mny) & (py <= mxy)
             on_seg = colinear & inbox
-            # segments_cross_query inlined with the per-segment d1/d2
-            # bases hoisted: d2's orient(a, b, p) IS cross_prod (same
-            # expression over the same doubles), d1 reuses dx/dy; the
-            # half-open convention (>0 vs <=0 on both tests) unchanged
+            # does the center→point segment cross the boundary segment?
+            # Orientation tests with the per-segment d1/d2 bases hoisted:
+            # d2's orient(a, b, p) IS cross_prod (same expression over
+            # the same doubles), d1 reuses dx/dy. Half-open convention
+            # (>0 vs <=0 on both tests), so a query segment through a
+            # shared polygon vertex counts once, not twice
             d1 = dx * (cy - ay) - dy * (cx - ax) > 0
             d2 = cross_prod > 0
             d3 = (px - cx) * (ay - cy) - (py - cy) * (ax - cx) > 0
@@ -417,8 +419,9 @@ def arrow_list(offsets: np.ndarray, values: np.ndarray):
     )
 
 
-GEODESIC_METRICS = ("geodesic", "geodesic_fixed", "geodesic_freeze")
-METRICS = GEODESIC_METRICS + ("planar_deg",)
+#: "geodesic": WGS84 meters (reference parity, the Vincenty loop the SQL
+#: oracle mirrors); "planar_deg": planar degrees
+METRICS = ("geodesic", "planar_deg")
 
 # Q5 zone codes below 0; a code >= 0 is a piece rank of the zone
 UNKNOWN_ZONE = -1  # a name the index lacks: strict mode raises
@@ -480,7 +483,8 @@ def containing_distances(
     ascending); dist float64. Containment comes from ``probe_ranks`` (a
     point outside the initialized region, NaN or infinite, is in no
     zone), distances from ONE ``_foot_distances`` call (shared with
-    kNN); both bit-identical to the per-piece ``oracle`` path."""
+    kNN); both bit-identical to the per-piece ``oracle`` path.
+    ``metric``: "geodesic" (WGS84 meters) or "planar_deg" (degrees)."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric: {metric!r}")
     lats = np.asarray(lats, dtype=np.float64)
@@ -513,9 +517,8 @@ def distance_from_boundary_batch(
     zone).
 
     ``metric="geodesic"`` is the reference semantics (WGS84 meters, the
-    fixed-iteration Vincenty the SQL oracle mirrors; "geodesic_fixed" is
-    an alias, "geodesic_freeze" the adaptive per-row-freeze variant,
-    ~5e-10 m away); ``"planar_deg"`` is the planar degree distance.
+    fixed-iteration Vincenty the SQL oracle mirrors); ``"planar_deg"``
+    is the planar degree distance.
     Rows whose zone does not contain the point: ValueError in strict
     mode (reference message), NaN in pipeline mode."""
     if metric not in METRICS:
@@ -571,6 +574,8 @@ def _seg_flat_cache(idx: CompiledIndex):
 FOOT_BUCKET = 16
 FOOT_PRUNE_MARGIN = 1.0 + 1e-9
 FOOT_PRUNE_MIN_SEGS = 3 * FOOT_BUCKET  # below this a piece scan is cheap
+# (pair, segment) rows evaluated per chunk of the foot search
+FOOT_PAIR_CHUNK = 1 << 19
 
 
 def _seg_bucket_cache(idx: CompiledIndex):
@@ -635,7 +640,6 @@ def _nearest_feet_flat(
     pair_lon: np.ndarray,
     pair_lat: np.ndarray,
     pair_rank: np.ndarray,
-    pair_chunk: int = 1 << 19,
 ):
     """Planar-nearest boundary coordinate of piece ``pair_rank[i]`` for
     point ``(pair_lon[i], pair_lat[i])``, vectorized over ALL pairs via
@@ -727,7 +731,8 @@ def _nearest_feet_flat(
     with np.errstate(divide="ignore", invalid="ignore"):
         while start < n_pairs:
             base = int(cum[start - 1]) if start else 0
-            end = int(np.searchsorted(cum, base + pair_chunk, side="left")) + 1
+            end = int(np.searchsorted(
+                cum, base + FOOT_PAIR_CHUNK, side="left")) + 1
             end = min(max(end, start + 1), n_pairs)
             k = k_eval[start:end]
             total = int(cum[end - 1] - base)
@@ -779,13 +784,9 @@ def _foot_distances(
     dist = np.full(len(d2), np.inf)
     if need.any():
         dist[need] = geom.geodesic_distance_wgs84(
-            lats[need], lons[need], fy[need], fx[need],
-            freeze=metric == "geodesic_freeze",
+            lats[need], lons[need], fy[need], fx[need]
         )
     return dist, int(need.sum())
-
-
-KNN_GROUP_SIZE = 64  # legacy fixed size; None in knn_zones_batch = adaptive
 
 
 def _knn_adaptive_group_size(n_pieces: int) -> int:
@@ -802,16 +803,17 @@ def _knn_adaptive_group_size(n_pieces: int) -> int:
     return int(np.clip(round(math.sqrt(1.5 * max(n_pieces, 1))), 8, 512))
 
 
-def _knn_piece_groups(idx: CompiledIndex, group_size: int = KNN_GROUP_SIZE):
+def _knn_piece_groups(idx: CompiledIndex):
     """Spatially-coherent piece groups for the kNN candidate stream:
     pieces ordered by the Morton code of their bbox center, blocked into
-    groups of ``group_size``, each with the union bbox of its members.
-    The union contains every member, so the geodesic lower bound to the
-    union bbox lower-bounds every member piece — a valid two-level BVH.
-    Cached on the index (pure function of piece_bbox)."""
+    groups of ``_knn_adaptive_group_size`` pieces, each with the union
+    bbox of its members. The union contains every member, so the lower
+    bound to the union bbox lower-bounds every member piece — a valid
+    two-level BVH. Cached on the index (pure function of piece_bbox)."""
     cached = getattr(idx, "_knn_groups", None)
-    if cached is not None and cached[0] == group_size:
-        return cached[1], cached[2]
+    if cached is not None:
+        return cached
+    group_size = _knn_adaptive_group_size(idx.n_pieces)
     bb = idx.piece_bbox
     c_lon = (bb[:, 0] + bb[:, 2]) / 2.0
     c_lat = (bb[:, 1] + bb[:, 3]) / 2.0
@@ -833,7 +835,7 @@ def _knn_piece_groups(idx: CompiledIndex, group_size: int = KNN_GROUP_SIZE):
             for m in members
         ]
     ) if members else np.zeros((0, 4))
-    object.__setattr__(idx, "_knn_groups", (group_size, gb, members))
+    object.__setattr__(idx, "_knn_groups", (gb, members))
     return gb, members
 
 
@@ -843,8 +845,6 @@ def knn_zones_batch(
     lons: np.ndarray,
     k: int,
     return_stats: bool = False,
-    group_size: int | None = None,
-    eval_chunk: int | None = None,
     metric: str = "geodesic",
 ):
     """kNN fallback ordering (north_star): zones ordered by boundary
@@ -875,22 +875,16 @@ def knn_zones_batch(
     distance evaluations (prescreened pairs are not counted).
 
     ``metric``: "geodesic" (WGS84 meters, reference parity — DEFAULT,
-    the fixed-iteration Vincenty the recursive-CTE SQL oracle mirrors;
-    "geodesic_fixed" is an accepted alias), "geodesic_freeze" (opt-in
-    adaptive per-row-freeze Vincenty, ~5e-10 m from the default), or
-    "planar_deg" (planar degrees; the same kernel the bit-exact
+    the fixed-iteration Vincenty the recursive-CTE SQL oracle mirrors)
+    or "planar_deg" (planar degrees; the same kernel the bit-exact
     distance_boundary_planar oracle mirrors, which makes the kNN ORDER
     value-verifiable by a SQL oracle)."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric: {metric!r}")
-    geodesic = metric in GEODESIC_METRICS
-    bound_outer = (
+    geodesic = metric == "geodesic"
+    bbox_bound = (
         geom.bbox_geodesic_lower_bound if geodesic
         else geom.bbox_planar_lower_bound
-    )
-    bound_pair = (
-        geom.bbox_geodesic_lower_bound_pairwise if geodesic
-        else geom.bbox_planar_lower_bound_pairwise
     )
     lats = np.asarray(lats, dtype=np.float64)
     lons = np.asarray(lons, dtype=np.float64)
@@ -903,15 +897,13 @@ def knn_zones_batch(
         lats = np.where(done, 0.0, lats)
         lons = np.where(done, 0.0, lons)
 
-    if group_size is None:
-        group_size = _knn_adaptive_group_size(idx.n_pieces)
-    gb, members = _knn_piece_groups(idx, group_size)
+    gb, members = _knn_piece_groups(idx)
     n_groups = len(members)
     if n_groups == 0 or done.all():
         out = _knn_rank_lists(idx, n, k, None)
         return (out, 0) if return_stats else out
 
-    lb_g = bound_outer(lats, lons, gb)  # (n, P/64)
+    lb_g = bbox_bound(lats[:, None], lons[:, None], gb)  # (n, groups)
     order_g = np.argsort(lb_g, axis=1, kind="stable")
     sorted_gb = np.take_along_axis(lb_g, order_g, axis=1)
 
@@ -926,15 +918,12 @@ def knn_zones_batch(
     # reductions are pure array ops
     zone_of_rank = _zone_head(idx)
 
-    if eval_chunk is None:
-        # candidates evaluated per point per round: large enough to find
-        # k zones quickly (so kth activates pruning), small enough not
-        # to over-evaluate once kth is set. Re-tuned in round 5 after
-        # the batched-Vincenty/pre-prune work made evals cheap relative
-        # to rounds: chunk = k beats k+1 on the 20k/454 bench (1.80 s /
-        # 135k evals vs 1.94 s / 167k at chunk 4, k=3) — the floor of 3
-        # keeps k=1 from starving round-1 zone discovery
-        eval_chunk = max(int(k), 3)
+    # candidates evaluated per point per round: large enough to find k
+    # zones quickly (so kth activates pruning), small enough not to
+    # over-evaluate once kth is set: chunk = k beat k+1 on 20k points of
+    # the 454-piece world (1.80 s / 135k evals vs 1.94 s / 167k at chunk
+    # 4, k=3); the floor of 3 keeps k=1 from starving round-1 discovery
+    eval_chunk = max(int(k), 3)
 
     pool_pt = np.empty(0, dtype=np.int64)
     pool_rank = np.empty(0, dtype=np.int64)
@@ -1046,7 +1035,7 @@ def knn_zones_batch(
                     rep_pt[alive], ranks_e[alive], bb_e[alive]
                 )
             if len(rep_pt):
-                pb = bound_pair(lats[rep_pt], lons[rep_pt], bb_e)
+                pb = bbox_bound(lats[rep_pt], lons[rep_pt], bb_e)
                 pool_pt = np.concatenate([pool_pt, rep_pt])
                 pool_rank = np.concatenate([pool_rank, ranks_e])
                 pool_bound = np.concatenate([pool_bound, pb])

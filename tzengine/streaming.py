@@ -50,7 +50,7 @@ def streaming_dedup(
     id_col: str = "image_id",
     ttl: int | None = None,
 ) -> DataFrame:
-    """Custom STATEFUL streaming operator (transformWithStateInPandas):
+    """Custom STATEFUL streaming operator (applyInPandasWithState):
     emit each key's row only the FIRST time it is seen across the whole
     stream — exact streaming dedup with per-key state (the standard
     ingest-side duplicate filter for a training-data firehose).

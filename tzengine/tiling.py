@@ -42,10 +42,8 @@ def raster_mask_for_rings(rings: list[np.ndarray], res: int) -> tuple[np.ndarray
     centers = np.stack([(b[:, 0] + b[:, 2]) / 2, (b[:, 1] + b[:, 3]) / 2], axis=1)
     center_in = geom.contains_inclusive(centers, rings)
     for i, c in enumerate(cand):
-        crossed = geom.segments_intersect_box(
-            seg_a, seg_b, b[i, 0], b[i, 1], b[i, 2], b[i, 3]
-        )
-        if crossed:
+        box = np.broadcast_to(b[i], (len(seg_a), 4))
+        if geom.segments_box_touch(seg_a, seg_b, box).any():
             keep_ids.append(int(c))
             kinds.append(0)
         elif center_in[i]:
