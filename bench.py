@@ -457,7 +457,7 @@ def _queries_only_child(cores: int, sf_dir: str) -> None:
 
 
 def _hugeworld_only_child(cores: int, sf_dir: str) -> None:
-    """Vertex-scale evidence: compile wall (driver AND distributed),
+    """Vertex-scale evidence: compile wall (driver AND executors),
     broadcast size, boundary-cell stats, kernel rows/s/core, and the
     full Spark assign wall over the 1.04M-vertex coastline world."""
     _pin(cores)
@@ -488,20 +488,19 @@ def _hugeworld_only_child(cores: int, sf_dir: str) -> None:
     spark = build_session(cores)
     from tzengine.zones import pieces_to_df
 
-    # distributed compile wall (executor compile_piece blobs; the
-    # DataFrame build is fixture prep, reported separately)
+    # executor compile wall (a zones DataFrame compiles on executors and
+    # ships compile_source blobs; the DataFrame build is fixture prep,
+    # reported separately)
     t0 = time.time()
     zdf = pieces_to_df(spark, pieces)
     df_build = time.time() - t0
     t0 = time.time()
-    eng_dist = TzEngine.for_everywhere(
-        spark, zdf, world_version="huge1", distributed=True
-    )
+    eng_dist = TzEngine.for_everywhere(spark, zdf, world_version="huge1")
     compile_dist = time.time() - t0
     del eng_dist
 
     # builder-ETL ingest wall (VERDICT r4 #7): the full geojsonl ->
-    # parse+cleanse (executor-side mapInPandas) -> distributed compile
+    # parse+cleanse (executor-side mapInPandas) -> executor compile
     # pipeline at the 1M-vertex scale — the same pipeline the reference
     # builder runs single-threaded (Main.kt:99-140). File write is
     # fixture prep (untimed).
@@ -516,7 +515,7 @@ def _hugeworld_only_child(cores: int, sf_dir: str) -> None:
         t0 = time.time()
         zdf_ingest = zones_from_geojsonl(spark, gj_path)
         eng_ing = TzEngine.for_everywhere(
-            spark, zdf_ingest, world_version="huge1", distributed=True
+            spark, zdf_ingest, world_version="huge1"
         )
         ingest_sec = time.time() - t0
         del eng_ing

@@ -3,6 +3,10 @@
 Prints one SHA-256 per line for:
 - every ``CompiledIndex`` field of the synth (whole world and a clipped
   region), big454 and 1M-vertex huge worlds;
+- the same fields for the synth, synth_clip and big454 indexes built from
+  a zones DataFrame (``zones.pieces_to_df`` into ``TzEngine.for_region``,
+  lines ``df``) and for a big454 ``save_artifact``/``from_artifact``
+  round trip (line ``art``) — each must equal its ``index`` line;
 - ``knn_zones_batch(k=3)`` rank lists and exact-evaluation counts, and
   ``containing_distances`` offsets, heads and distances, on 20k seeded
   big454 points (NaN, +-inf and +-90 rows included) for each metric.
@@ -10,7 +14,9 @@ Prints one SHA-256 per line for:
 Run it on two checkouts and diff the output: identical lines mean a
 refactor left compile and kernel output bit-identical. Run it from a
 directory outside both checkouts (the working directory shadows the
-``--repo`` path on ``sys.path``):
+``--repo`` path on ``sys.path``; Spark executors import the same
+checkout). The ``df`` and ``art`` lines start a ``local[2]`` Spark
+session:
 
     cd /tmp && python /path/to/scripts/index_parity.py --repo /path/to/checkout
 """
@@ -21,6 +27,7 @@ import argparse
 import dataclasses
 import hashlib
 import sys
+import tempfile
 import time
 
 import numpy as np
@@ -54,7 +61,7 @@ def main() -> None:
     ap.add_argument("--repo", required=True, help="checkout to fingerprint")
     args = ap.parse_args()
     sys.path.insert(0, args.repo)
-    from tzengine import bigworld, index, probe, zones
+    from tzengine import bigworld, engine, index, probe, session, zones
 
     worlds = {
         "synth": (zones.synthetic_world(), (-90, -180, 90, 180)),
@@ -62,16 +69,35 @@ def main() -> None:
         "big454": (bigworld.big_world(), (-90, -180, 90, 180)),
         "huge": (bigworld.huge_world(), (-90, -180, 90, 180)),
     }
+
+    def index_digest(idx) -> str:
+        return digest(*(getattr(idx, f.name) for f in dataclasses.fields(idx)))
+
     big = None
     for name, (pieces, region) in worlds.items():
         t0 = time.perf_counter()
         idx = index.compile_index(pieces, *region, world_version=name)
         dt = time.perf_counter() - t0
-        fields = [getattr(idx, f.name) for f in dataclasses.fields(idx)]
-        print(f"index {name:10s} {digest(*fields)}  "
+        print(f"index {name:10s} {index_digest(idx)}  "
               f"({idx.n_pieces} pieces, compile {dt:.2f} s)")
         if name == "big454":
             big = idx
+
+    spark = session.get_spark("index_parity", master="local[2]")
+    for name in ("synth", "synth_clip", "big454"):
+        pieces, region = worlds[name]
+        zdf = zones.pieces_to_df(spark, pieces)
+        t0 = time.perf_counter()
+        eng = engine.TzEngine.for_region(spark, zdf, *region, world_version=name)
+        dt = time.perf_counter() - t0
+        print(f"df    {name:10s} {index_digest(eng.idx)}  (compile {dt:.2f} s)")
+    with tempfile.TemporaryDirectory() as tmp:
+        eng.save_artifact(tmp)
+        t0 = time.perf_counter()
+        art = engine.TzEngine.from_artifact(spark, tmp)
+        dt = time.perf_counter() - t0
+        print(f"art   big454     {index_digest(art.idx)}  (reload {dt:.2f} s)")
+    spark.stop()
 
     rng = np.random.default_rng(20_000)
     lats = rng.uniform(-70, 70, 20_000)

@@ -77,7 +77,7 @@ def test_distributed_compile_parity_at_scale(spark, world):
 
     local = TzEngine.for_everywhere(spark, world, world_version="big1")
     dist = TzEngine.for_everywhere(
-        spark, pieces_to_df(spark, world), world_version="big1", distributed=True
+        spark, pieces_to_df(spark, world), world_version="big1"
     )
     rng = np.random.default_rng(9)
     pts = spark.createDataFrame(
@@ -178,8 +178,9 @@ def test_knn_bound_matrix_is_group_sized_not_piece_sized(idx, monkeypatch):
 
 
 def test_distributed_compile_index_arrays_identical(spark, world):
-    # stronger than assignment parity: the distributed blob path must
-    # produce bit-identical index arrays (same kernels, same assembly)
+    # stronger than assignment parity: the executor compile of a zones
+    # DataFrame must produce bit-identical index arrays (same kernels,
+    # same assembly)
     from tzengine.engine import TzEngine
     from tzengine.zones import pieces_to_df
 
@@ -187,7 +188,7 @@ def test_distributed_compile_index_arrays_identical(spark, world):
                                 world_version="big1")
     dist = TzEngine.for_region(spark, pieces_to_df(spark, world),
                                -50, -50, 50, 50,
-                               world_version="big1", distributed=True)
+                               world_version="big1")
     a, b = local.idx, dist.idx
     assert a.zone_ids == b.zone_ids
     for field in ["polygon_ids", "areas", "piece_bbox", "ring_offsets",
@@ -201,11 +202,13 @@ def test_distributed_compile_index_arrays_identical(spark, world):
         for x, y in zip(a.levels[lvl], b.levels[lvl]):
             np.testing.assert_array_equal(x, y)
 
-    # compile fan-out is a parameter now (VERDICT r2 #7): a different
-    # partition count must not change a single output byte
-    dist2 = TzEngine.for_region(spark, pieces_to_df(spark, world),
-                                -50, -50, 50, 50, world_version="big1",
-                                distributed=True, compile_partitions=7)
+    # the compile fans out over defaultParallelism partitions: a
+    # different partition count must not change a single output byte
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(type(spark.sparkContext), "defaultParallelism",
+                   property(lambda self: 7))
+        dist2 = TzEngine.for_region(spark, pieces_to_df(spark, world),
+                                    -50, -50, 50, 50, world_version="big1")
     c = dist2.idx
     assert a.zone_ids == c.zone_ids
     np.testing.assert_array_equal(a.verts, c.verts)
@@ -213,25 +216,38 @@ def test_distributed_compile_index_arrays_identical(spark, world):
     np.testing.assert_array_equal(a.ent_seg_idx, c.ent_seg_idx)
 
 
+def _assert_same(x, y, where):
+    assert type(x) is type(y), where
+    if isinstance(x, np.ndarray):
+        assert x.dtype == y.dtype, where
+        np.testing.assert_array_equal(x, y, err_msg=where)
+    elif isinstance(x, dict):
+        assert sorted(x) == sorted(y), where
+        for k in x:
+            _assert_same(x[k], y[k], f"{where}[{k}]")
+    elif isinstance(x, (list, tuple)):
+        assert len(x) == len(y), where
+        for i, (u, v) in enumerate(zip(x, y)):
+            _assert_same(u, v, f"{where}[{i}]")
+    else:
+        assert x == y, where
+
+
 def test_artifact_distributed_reload_parity(spark, world, tmp_path):
-    # the production reload path: recompile from the artifact's zones
-    # table on executors, collecting only compiled blobs; must produce
-    # bit-identical index arrays vs the driver-side reload
+    # the reload recompiles from the artifact's zones table on
+    # executors, collecting only compiled blobs; it must rebuild the
+    # saving engine's index exactly, every field and level
+    import dataclasses
+
     from tzengine.engine import TzEngine
 
     eng = TzEngine.for_region(spark, world, -50, -50, 50, 50,
                               world_version="big1")
     path = str(tmp_path / "art")
     eng.save_artifact(path)
-    a = TzEngine.from_artifact(spark, path).idx
-    b = TzEngine.from_artifact(spark, path, distributed=True).idx
-    assert a.zone_ids == b.zone_ids
-    for field in ["areas", "verts", "seg_a", "ent_rank", "ent_seg_idx"]:
-        np.testing.assert_array_equal(getattr(a, field), getattr(b, field),
-                                      err_msg=field)
-    for lvl in a.levels:
-        for x, y in zip(a.levels[lvl], b.levels[lvl]):
-            np.testing.assert_array_equal(x, y)
+    a, b = eng.idx, TzEngine.from_artifact(spark, path).idx
+    for f in dataclasses.fields(a):
+        _assert_same(getattr(a, f.name), getattr(b, f.name), f.name)
 
 
 def test_distributed_parity_keeps_zero_area_passthrough_piece(spark):
@@ -249,8 +265,7 @@ def test_distributed_parity_keeps_zero_area_passthrough_piece(spark):
     a = TzEngine.for_region(spark, pieces, -10, -10, 10, 10,
                             world_version="z")
     b = TzEngine.for_region(spark, pieces_to_df(spark, pieces),
-                            -10, -10, 10, 10, world_version="z",
-                            distributed=True)
+                            -10, -10, 10, 10, world_version="z")
     assert a.idx.zone_ids == b.idx.zone_ids
     assert a.idx.n_pieces == b.idx.n_pieces
 
@@ -298,6 +313,26 @@ def huge():
 def big454():
     pieces = big_world()
     return pieces, index.compile_index(pieces, -90, -180, 90, 180, "big454")
+
+
+def test_boundary_entries_carry_segments(big454, huge):
+    """probe_ranks reduces each boundary entry's local-segment run with
+    ``reduceat``, which is wrong for an empty run: every boundary entry
+    must carry at least one local segment (cover_piece emits a boundary
+    cell only for an exact cell-segment touch)."""
+    from tzengine.zones import synthetic_world
+
+    synth = synthetic_world()
+    indexes = {
+        "synth": index.compile_index(synth, -90, -180, 90, 180, "s"),
+        "synth_clip": index.compile_index(synth, 4, 4, 5, 5, "s"),
+        "big454": big454[1],
+        "big454_clip": index.compile_index(big454[0], -50, -50, 50, 50, "b"),
+        "huge": huge[1],
+    }
+    for name, idx in indexes.items():
+        runs = np.diff(idx.ent_seg_off)[~idx.ent_interior]
+        assert len(runs) and runs.min() >= 1, name
 
 
 @pytest.mark.parametrize("metric", ["geodesic", "planar_deg"])
@@ -404,7 +439,7 @@ def test_hugeworld_oracle_map_spot_check(huge):
 
 
 def test_hugeworld_distributed_compile_parity(spark):
-    """Distributed compile (executor compile_piece blobs) must produce
+    """The executor compile (compile_source blobs) must produce
     bit-identical index arrays on a coastline-shaped world (reduced grid
     for CI speed; the kernel/covering path is the same)."""
     from tzengine.bigworld import huge_world
@@ -415,7 +450,6 @@ def test_hugeworld_distributed_compile_parity(spark):
     local = TzEngine.for_everywhere(spark, world, world_version="hugeS")
     dist = TzEngine.for_everywhere(
         spark, pieces_to_df(spark, world), world_version="hugeS",
-        distributed=True,
     )
     a, b = local.idx, dist.idx
     assert a.zone_ids == b.zone_ids

@@ -1,5 +1,5 @@
-"""End-to-end Spark tests: broadcast-index join vs the oracle, distributed
-compile parity, artifact round-trip + version gate, determinism."""
+"""End-to-end Spark tests: broadcast-index join vs the oracle, DataFrame
+(executor) compile parity, artifact round-trip + version gate, determinism."""
 
 import numpy as np
 import pytest
@@ -109,10 +109,18 @@ def test_deterministic_across_runs(engine, points_df):
 
 
 def test_distributed_compile_parity(spark, world, points_df, engine):
+    # a zones DataFrame compiles on executors in ONE action (the collect
+    # of the mapInArrow; AQE runs its shuffle map stage as a job of its
+    # own), persists nothing, and assigns exactly like the driver compile
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
     zones_df = pieces_to_df(spark, world)
+    jobs0, cached0 = dag.numTotalJobs(), len(sc._jsc.getPersistentRDDs())
     dist_engine = TzEngine.for_everywhere(
-        spark, zones_df, world_version="synth1", distributed=True
+        spark, zones_df, world_version="synth1"
     )
+    assert dag.numTotalJobs() - jobs0 <= 2
+    assert len(sc._jsc.getPersistentRDDs()) == cached0
     a = engine.assign_timezones(points_df).orderBy("image_id").collect()
     b = dist_engine.assign_timezones(points_df).orderBy("image_id").collect()
     assert a == b

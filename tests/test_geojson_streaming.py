@@ -80,7 +80,7 @@ def test_geojson_orientation_normalization(spark, tmp_path):
     p = str(tmp_path / "x.geojson")
     open(p, "w").write(jsonlib.dumps(fc))
     df = geojson.zones_from_geojson(spark, p)
-    from tzengine.zones import rows_to_pieces
+    from probe_helpers import rows_to_pieces
     from tzengine import geom
 
     piece = rows_to_pieces(df.collect())[0]
@@ -252,12 +252,13 @@ def test_geojsonl_fallback_ordinal_is_content_hash(spark, tmp_path):
     assert len(set(ords)) == 2
 
 
-def test_compile_rejects_duplicate_ordinals():
+def test_compile_rejects_duplicate_ordinals(spark):
     # residual content-hash collisions must fail fast, not silently
     # corrupt the (area, ordinal) tie-break (ADVICE r2 #4)
     import pytest
     from tzengine import index
-    from tzengine.zones import make_piece, _rect
+    from tzengine.engine import TzEngine
+    from tzengine.zones import make_piece, _rect, pieces_to_df
 
     pieces = [
         make_piece("Zone/A", 0, 7, [_rect(0, 0, 1, 1)]),
@@ -265,6 +266,18 @@ def test_compile_rejects_duplicate_ordinals():
     ]
     with pytest.raises(ValueError, match="duplicate zone-piece ordinal"):
         index.compile_index(pieces, -90, -180, 90, 180, world_version="x")
+
+    # the DataFrame (executor) compile: B's bbox touches the region edge,
+    # so the pushdown keeps it, and its clip leaves no component — the
+    # duplicate must still be caught
+    pieces = [
+        make_piece("Zone/A", 0, 7, [_rect(1, 1, 2, 2)]),
+        make_piece("Zone/B", 0, 7, [_rect(10, 1, 11, 2)]),
+    ]
+    assert index.compile_source(pieces[1].rings, 0, 0, 10, 10) == []
+    with pytest.raises(ValueError, match="duplicate zone-piece ordinal"):
+        TzEngine.for_region(spark, pieces_to_df(spark, pieces), 0, 0, 10, 10,
+                            world_version="x")
 
 
 def test_geojson_self_intersecting_ring_repaired(spark, tmp_path):

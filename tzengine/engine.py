@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from . import index as indexmod
 from . import probe as probemod
-from .zones import ZonePiece, rows_to_pieces
+from .zones import ZonePiece
 
 DEFAULT_PROBE_RES = 7  # output cell resolution for tiling/shard analytics
 DEFAULT_N_SHARDS = 64
@@ -138,49 +138,31 @@ class TzEngine:
         world_version: str = "unknown",
         depth: int = 5,
         distributed: bool = False,
-        compile_partitions: int | None = None,
     ) -> "TzEngine":
-        """``zones``: list[ZonePiece] or a zones DataFrame (schema
-        zones.ZONES_SCHEMA_DDL). With a DataFrame the bbox prune runs as a
-        pushed-down Parquet predicate BEFORE collect — the engine analogue
-        of the reference's deserialize-free envelope prune (O1,
-        TimeZoneMap.kt:184-196)."""
-        indexmod.validate_region(min_lat, min_lon, max_lat, max_lon)
-
-        if isinstance(zones, DataFrame):
-            pruned = zones.filter(
-                ~(
-                    (F.col("max_lat") < F.lit(min_lat))
-                    | (F.col("min_lat") > F.lit(max_lat))
-                    | (F.col("max_lon") < F.lit(min_lon))
-                    | (F.col("min_lon") > F.lit(max_lon))
-                )
+        """``zones``: list[ZonePiece] (compiled on the driver) or a zones
+        DataFrame (schema zones.ZONES_SCHEMA_DDL), which always compiles
+        on executors. Its bbox prune runs as a pushed-down Parquet
+        predicate before any geometry is read — the engine analogue of
+        the reference's deserialize-free envelope prune (O1,
+        TimeZoneMap.kt:184-196). ``distributed`` is ignored; it is
+        accepted only for callers that still pass it."""
+        if not isinstance(zones, DataFrame):
+            return cls(spark, indexmod.compile_index(
+                list(zones), min_lat, min_lon, max_lat, max_lon,
+                world_version=world_version, depth=depth,
+            ))
+        pruned = zones.filter(
+            ~(
+                (F.col("max_lat") < F.lit(min_lat))
+                | (F.col("min_lat") > F.lit(max_lat))
+                | (F.col("max_lon") < F.lit(min_lon))
+                | (F.col("min_lon") > F.lit(max_lon))
             )
-            if distributed:
-                # scale path: clip + covering + flattening all run on
-                # executors; ONLY compact compiled-piece blobs cross to
-                # the driver (no nested-Row ring geometry collect)
-                return cls._from_distributed_compile(
-                    spark, pruned, min_lat, min_lon, max_lat, max_lon,
-                    world_version, depth,
-                    compile_partitions=compile_partitions,
-                )
-            pieces = rows_to_pieces(
-                pruned.select("zone_id", "polygon_id", "ordinal", "rings").collect()
-            )
-        else:
-            pieces = list(zones)
-
-        idx = indexmod.compile_index(
-            pieces,
-            min_lat,
-            min_lon,
-            max_lat,
-            max_lon,
-            world_version=world_version,
-            depth=depth,
         )
-        return cls(spark, idx)
+        return cls._compile_on_executors(
+            spark, pruned, (min_lat, min_lon, max_lat, max_lon),
+            world_version, depth,
+        )
 
     @classmethod
     def for_everywhere(
@@ -193,190 +175,101 @@ class TzEngine:
         )
 
     @classmethod
-    def _from_distributed_compile(
-        cls, spark, zones_df: DataFrame, min_lat, min_lon, max_lat, max_lon,
-        world_version: str, depth: int, area_col: str | None = None,
-        compile_partitions: int | None = None,
+    def _compile_on_executors(
+        cls, spark, zones_df: DataFrame, region, world_version: str,
+        depth: int, area_col: str | None = None,
     ) -> "TzEngine":
-        """Scale path for large zone sets (SURVEY §3.1): prune → clip/split
-        → per-piece covering + flattening all run on executors via
-        mapInArrow (per-piece embarrassingly parallel, identical
-        kernels to the driver compile — parity by construction). What
-        crosses the wire is one compact numpy blob per clipped piece plus
-        sort metadata; the driver sorts by (pre-clip area, ordinal,
-        component) — the reference's I11 order — and concatenates arrays
-        (assemble_index, linear in index bytes). At a 100x zone world the
-        driver never materializes nested-Row geometry."""
+        """Compile a zones DataFrame (SURVEY §3.1): one mapInArrow runs
+        ``index.compile_source`` on every source piece and emits ONE row
+        per piece — ordinal, zone_id, polygon_id, pre-clip area and its
+        ``pack_piece`` blobs (none when the piece is pruned or clipped
+        away) — then one collect. The driver checks ordinal uniqueness
+        over every row and runs the driver compile's own
+        ``assemble_sources``, so the ring geometry never crosses to the
+        driver as nested Rows. ``area_col`` names a column holding the
+        PRE-clip area (artifact reloads: their rings are already clipped,
+        so they can no longer reproduce the reference's sort key)."""
         from . import geom
 
+        indexmod.validate_region(*region)
+        min_lat, min_lon, max_lat, max_lon = region
+
         def compile_batches(batches):
-            # mapInArrow (round 6; was groupBy().applyInPandas): each
-            # input row is one independent polygon, so the group-by was
-            # only a fan-out device — and the pandas conversion rebuilt
-            # every ring via a PER-VERTEX Python dict loop. Arrow's
-            # list<list<struct>> layout is already CSR: two offset
-            # arrays plus flat float32 lat/lon children, so the ring
-            # arrays are numpy slices (guide §4.2). Same doubles (the
-            # float32→float64 upcast is exact either way), same per-row
-            # logic, same output rows.
+            # Arrow's list<list<struct>> layout is already CSR: two
+            # offset arrays plus flat lat/lon children, so each ring is
+            # a numpy slice (the float32->float64 upcast is exact)
             import pyarrow as pa
 
             for batch in batches:
-                names = batch.schema.names
-                cols = {nm: batch.column(i) for i, nm in enumerate(names)}
+                cols = dict(zip(batch.schema.names, batch.columns))
                 rings_col = cols["rings"]
                 r_off = rings_col.offsets.to_numpy()
                 ring_list = rings_col.values
                 v_off = ring_list.offsets.to_numpy()
                 vstruct = ring_list.values
-                vlat = vstruct.field("lat").to_numpy(
-                    zero_copy_only=False
-                ).astype(np.float64)
-                vlon = vstruct.field("lon").to_numpy(
-                    zero_copy_only=False
-                ).astype(np.float64)
-                ordinals = cols["ordinal"].to_numpy(zero_copy_only=False)
-                polygon_ids = cols["polygon_id"].to_numpy(
-                    zero_copy_only=False
+                vlat, vlon = (
+                    vstruct.field(c).to_numpy(zero_copy_only=False)
+                    .astype(np.float64)
+                    for c in ("lat", "lon")
                 )
-                zone_ids = cols["zone_id"].to_pylist()
                 areas = (
                     cols[area_col].to_numpy(zero_copy_only=False)
                     if area_col is not None else None
                 )
-                out_rows = []
+                pre_areas, blobs = [], []
                 for i in range(batch.num_rows):
                     rings = [
                         np.column_stack(
-                            (
-                                vlon[v_off[j]:v_off[j + 1]],
-                                vlat[v_off[j]:v_off[j + 1]],
-                            )
+                            (vlon[v_off[j]:v_off[j + 1]],
+                             vlat[v_off[j]:v_off[j + 1]])
                         )
                         for j in range(r_off[i], r_off[i + 1])
                     ]
-                    # artifact reloads carry the original PRE-clip area
-                    # (the reference's documented sort key, which
-                    # already-clipped rings can no longer reproduce)
-                    pre_area = (
+                    pre_areas.append(
                         float(areas[i]) if areas is not None
                         else geom.polygon_area2d(rings)
                     )
-                    lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
-                    # exact-extent prune (I10) — same inclusive intersect
-                    # as the driver compile
-                    if (
-                        hi_lat < min_lat or lo_lat > max_lat
-                        or hi_lon < min_lon or lo_lon > max_lon
-                    ):
-                        continue
-                    if (
-                        lo_lat >= min_lat and hi_lat <= max_lat
-                        and lo_lon >= min_lon and hi_lon <= max_lon
-                    ):
-                        comps = [rings]
-                        was_clipped = False  # pass-through keeps the
-                        # piece regardless of area — exactly like the
-                        # driver compile (the reference drops empties
-                        # only among CLIP results, pointCount>0)
-                    else:
-                        comps = geom.clip_rings_to_box_split(
-                            rings, min_lon, min_lat, max_lon, max_lat
+                    blobs.append([
+                        indexmod.pack_piece(d)
+                        for d in indexmod.compile_source(
+                            rings, min_lat, min_lon, max_lat, max_lon, depth
                         )
-                        was_clipped = True
-                    for ci, comp in enumerate(comps):
-                        if was_clipped and (
-                            not comp or geom.polygon_area2d(comp) <= 0
-                        ):
-                            continue
-                        blob = indexmod.pack_piece(
-                            indexmod.compile_piece(comp, depth=depth)
-                        )
-                        out_rows.append(
-                            (
-                                int(ordinals[i]), ci, zone_ids[i],
-                                int(polygon_ids[i]), float(pre_area),
-                                blob,
-                            )
-                        )
-                if out_rows:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([r[0] for r in out_rows], pa.int32()),
-                            pa.array([r[1] for r in out_rows], pa.int32()),
-                            pa.array([r[2] for r in out_rows], pa.string()),
-                            pa.array([r[3] for r in out_rows], pa.int32()),
-                            pa.array(
-                                [r[4] for r in out_rows], pa.float64()
-                            ),
-                            pa.array([r[5] for r in out_rows], pa.binary()),
-                        ],
-                        [
-                            "ordinal", "comp", "zone_id", "polygon_id",
-                            "pre_area", "blob",
-                        ],
-                    )
-
-        # the zones table is consumed TWICE below (duplicate-ordinal
-        # check, then the compile itself) and its lineage usually holds
-        # an expensive opaque parse (geojsonl mapInPandas — column
-        # pruning cannot reach inside it), so without a persist the
-        # whole parse+cleanse ran twice per ingest (round 6: measured
-        # ~40% of the 1M-vertex ingest wall). Persist for the two
-        # actions, release before returning.
-        zones_df = zones_df.persist()
-        try:
-            # input-side duplicate-ordinal check, same contract as
-            # compile_index: checking the OUTPUT (ordinal, comp) keys
-            # alone would miss a duplicate whose twin was dropped by the
-            # clip (one cheap aggregate over the compile-input-sized
-            # zones table)
-            dup = (
-                zones_df.groupBy("ordinal")
-                .agg(F.count("*").alias("n"))
-                .filter(F.col("n") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"duplicate zone-piece ordinal {dup[0]['ordinal']}: "
-                    "ordinals must be globally unique for a deterministic "
-                    "area-sort tie-break"
+                    ])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        cols["ordinal"].cast(pa.int32()),
+                        cols["zone_id"].cast(pa.string()),
+                        cols["polygon_id"].cast(pa.int32()),
+                        pa.array(pre_areas, pa.float64()),
+                        pa.array(blobs, pa.list_(pa.binary())),
+                    ],
+                    ["ordinal", "zone_id", "polygon_id", "pre_area", "blobs"],
                 )
 
-            # compile fan-out sized to the cluster (was a hardcoded 32):
-            # defaultParallelism == total executor cores, so every core
-            # gets compile work; callers override for very large zone
-            # worlds
-            n_parts = (
-                compile_partitions or spark.sparkContext.defaultParallelism
+        src_cols = ["ordinal", "zone_id", "polygon_id", "rings"]
+        if area_col is not None:
+            src_cols.append(area_col)
+        rows = (
+            zones_df.select(*src_cols)
+            .repartition(spark.sparkContext.defaultParallelism)
+            .mapInArrow(
+                compile_batches,
+                "ordinal int, zone_id string, polygon_id int, "
+                "pre_area double, blobs array<binary>",
             )
-            rows = (
-                zones_df.repartition(n_parts, "zone_id", "polygon_id")
-                .mapInArrow(
-                    compile_batches,
-                    "ordinal int, comp int, zone_id string, polygon_id int, "
-                    "pre_area double, blob binary",
-                )
-                .collect()
-            )
-        finally:
-            zones_df.unpersist()
-        keys = {(r.ordinal, r.comp) for r in rows}
-        if len(keys) != len(rows):
-            raise ValueError(
-                "duplicate zone-piece ordinal in distributed compile: "
-                "ordinals must be globally unique for a deterministic "
-                "area-sort tie-break"
-            )
-        rows.sort(key=lambda r: (r.pre_area, r.ordinal, r.comp))  # I11
-        metas = [(r.zone_id, r.polygon_id, r.pre_area) for r in rows]
-        datas = [indexmod.unpack_piece(bytes(r.blob)) for r in rows]
-        idx = indexmod.assemble_index(
-            metas, datas, min_lat, min_lon, max_lat, max_lon, world_version
+            .collect()
         )
-        return cls(spark, idx)
+        indexmod.check_unique_ordinals(rows)
+        sources = [
+            (
+                r.zone_id, r.polygon_id, r.ordinal, r.pre_area,
+                [indexmod.unpack_piece(bytes(b)) for b in r.blobs],
+            )
+            for r in rows
+        ]
+        return cls(spark, indexmod.assemble_sources(
+            sources, *region, world_version
+        ))
 
     # -- accessors (reference I14) -------------------------------------------
 
@@ -724,15 +617,14 @@ class TzEngine:
 
     @classmethod
     def from_artifact(
-        cls, spark: SparkSession, path: str, distributed: bool = False, **kw
+        cls, spark: SparkSession, path: str, depth: int = 5
     ) -> "TzEngine":
         """Load + version-gate (reference I3 — fails fast before any Spark
-        job when the artifact format is incompatible).
-
-        ``distributed=True`` recompiles the index on executors from the
-        artifact's zones table, collecting only compact compiled-piece
-        blobs — the production reload path when the zone world is too
-        large to materialize as driver-side Row geometry."""
+        job when the artifact format is incompatible), then recompile the
+        index on executors from the artifact's zones table. The artifact
+        stores PRE-clip areas (the reference's sort key) beside
+        already-clipped rings; they are fed back as the sort key so the
+        rank order survives the round-trip exactly."""
         meta = indexmod.load_index_meta(path)
         try:
             zones_df = spark.read.parquet(f"{path}/zones")
@@ -740,35 +632,10 @@ class TzEngine:
             raise RuntimeError(
                 "Unable to read time zone data resource file"
             ) from ex
-        min_lat, min_lon, max_lat, max_lon = meta["init_region"]
         world_version = meta["version"].split(":", 1)[1]
-        if distributed:
-            df = zones_df.select(
-                "zone_id", "polygon_id",
-                F.col("area_rank").alias("ordinal"),
-                "rings", "area_deg2",
-            )
-            return cls._from_distributed_compile(
-                spark, df, min_lat, min_lon, max_lat, max_lon,
-                world_version, kw.get("depth", 5), area_col="area_deg2",
-                compile_partitions=kw.get("compile_partitions"),
-            )
-        rows = zones_df.select(
-            "zone_id",
-            "polygon_id",
-            F.col("area_rank").alias("ordinal"),
-            "rings",
-            "area_deg2",
-        ).collect()
-        pieces = rows_to_pieces(rows)
-        pieces.sort(key=lambda p: p.ordinal)
-        # The artifact stores PRE-clip areas (the reference's documented
-        # sort key) alongside already-clipped rings; feed them back so the
-        # rank order survives the round-trip exactly.
-        areas = {r.ordinal: r.area_deg2 for r in rows}
-        kw.pop("compile_partitions", None)  # distributed-path tuning only
-        idx = indexmod.compile_index(
-            pieces, min_lat, min_lon, max_lat, max_lon,
-            world_version=world_version, precomputed_areas=areas, **kw,
+        return cls._compile_on_executors(
+            spark,
+            zones_df.withColumnRenamed("area_rank", "ordinal"),
+            tuple(meta["init_region"]), world_version, depth,
+            area_col="area_deg2",
         )
-        return cls(spark, idx)

@@ -3,7 +3,7 @@
 Reproduces the semantics of the reference builder pipeline
 (builder/.../Main.kt):
   B1  source scan          — FeatureCollection (driver parse) or
-                             line-delimited features (distributed parse
+                             line-delimited features (executor-side parse
                              via mapInPandas over spark.read.text)
   B2  feature → pieces     — Polygon → 1 piece; MultiPolygon → one piece
                              per polygon (Main.kt:78-94); other geometry
@@ -129,7 +129,7 @@ def zones_from_geojson(spark: SparkSession, path: str) -> DataFrame:
 def zones_from_geojsonl(
     spark: SparkSession, path: str, return_dup_counter: bool = False
 ):
-    """B1 distributed path: one GeoJSON Feature per line (jsonl). The
+    """B1 executor path: one GeoJSON Feature per line (jsonl). The
     parse + cleanse runs on executors (mapInPandas over a text scan);
     ordinals are derived from a stable per-feature key so the result is
     partitioning-independent.
@@ -150,8 +150,8 @@ def zones_from_geojsonl(
     ensure_shipped(spark)
     # Dedup byte-identical duplicate feature lines (file-concatenation
     # artifacts): they describe the same piece, and the content-hash
-    # ordinal would make them collide in compile_index's duplicate-
-    # ordinal fail-fast — dropping them here is lossless. Distinct
+    # ordinal would make them collide in the compile's duplicate-
+    # ordinal fail-fast (index.check_unique_ordinals) — dropping them here is lossless. Distinct
     # features that collide (~2^-30 per pair) still fail fast there.
     # Order-independence is free: ordinals are content-derived.
     # groupBy+count instead of bare distinct() (same shuffle shape) so
@@ -195,8 +195,8 @@ def zones_from_geojsonl(
                 # (Python's str hash is salt-randomized and only looks
                 # stable because Spark pins worker PYTHONHASHSEED).
                 # Residual 2^-30 cross-feature collisions fail fast at
-                # compile time (index.compile_index duplicate-ordinal
-                # check) instead of silently corrupting the tie-break.
+                # compile time (index.check_unique_ordinals) instead of
+                # silently corrupting the tie-break.
                 props = feature.get("properties") or {}
                 base = props.get("feature_ordinal")
                 if base is None:

@@ -8,16 +8,22 @@ interior/boundary flags, compiled once and broadcast to executors.
 
 Pipeline (reference step → here):
   I1  validate min<max                  → ``validate_region``
-  I5  bbox prune before deserialize     → bbox filter (driver) /
-                                          pushed-down Parquet predicate
-                                          (distributed path)
-  I10 exact-extent filter               → same predicate on exact bbox
-  I11 area sort, stable ordinal ties    → ``rank`` = position after
+  I5  bbox prune before deserialize     → pushed-down Parquet predicate
+                                          (zones DataFrame input)
+  I10 exact-extent filter               → ``compile_source``
+  I11 area sort, stable ordinal ties    → ``assemble_sources``: ``rank`` =
+                                          position after
                                           ``sorted(key=(area, ordinal))``
-  I12 clip + split to init region       → ``geom.clip_rings_to_box_split``
+  I12 clip + split to init region       → ``compile_source``
+                                          (``geom.clip_rings_to_box_split``)
   I13 materialize + broadcast           → ``CompiledIndex`` → ``sc.broadcast``
-  I3  version gate                      → ``load_index`` checks
+  I3  version gate                      → ``load_index_meta`` checks
                                           "<fmt>:<world>" marker
+
+A piece list compiles on the driver (``compile_index``); a zones
+DataFrame runs the same ``compile_source`` on executors and ships
+``pack_piece`` blobs (``engine.TzEngine._compile_on_executors``). Both
+end in ``assemble_sources``.
 
 The compiled artifact is flat numpy (CSR) — no Python dicts-of-lists — so
 the probe kernel stays fully vectorized and the broadcast pickles small.
@@ -281,6 +287,85 @@ def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
     return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=bool), b_pairs
 
 
+def check_unique_ordinals(pieces) -> None:
+    """Ordinals are the (area, ordinal) tie-break of the I11 sort: a
+    duplicate would make rank order input-dependent, so fail fast
+    (ADVICE r2 #4: the geojsonl content-hash ordinal fallback can
+    collide at ~2^-30 per pair). ``pieces``: anything with ``ordinal``,
+    ``zone_id`` and ``polygon_id`` attributes (ZonePiece, Spark Row)."""
+    seen: set[int] = set()
+    for p in pieces:
+        if p.ordinal in seen:
+            raise ValueError(
+                f"duplicate zone-piece ordinal {p.ordinal} "
+                f"(zone {p.zone_id}/{p.polygon_id}): ordinals must be "
+                "globally unique for a deterministic area-sort tie-break"
+            )
+        seen.add(p.ordinal)
+
+
+def compile_source(
+    rings: list[np.ndarray],
+    min_lat: float,
+    min_lon: float,
+    max_lat: float,
+    max_lon: float,
+    depth: int = 5,
+) -> list[dict]:
+    """Compile ONE source piece into its ``compile_piece`` components —
+    the unit both compiles share (inline on the driver in
+    ``compile_index``, in a mapInArrow on executors in
+    ``engine.TzEngine._compile_on_executors``).
+
+    I10: exact-extent prune (inclusive intersect, like
+    Envelope2D.isIntersecting) — a piece outside the region yields [].
+    I12: a piece inside the region passes through whatever its area;
+    otherwise it is clipped and SPLIT into one entry per connected
+    component — the reference's flatMap over the intersection cursor
+    (TimeZoneMap.kt:220-235) — and empty clip results are dropped
+    (pointCount>0)."""
+    lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
+    if hi_lat < min_lat or lo_lat > max_lat or hi_lon < min_lon or lo_lon > max_lon:
+        return []
+    if lo_lat >= min_lat and hi_lat <= max_lat and lo_lon >= min_lon and hi_lon <= max_lon:
+        comps = [rings]
+    else:
+        comps = [
+            c
+            for c in geom.clip_rings_to_box_split(
+                rings, min_lon, min_lat, max_lon, max_lat
+            )
+            if c and geom.polygon_area2d(c) > 0
+        ]
+    return [compile_piece(c, depth=depth) for c in comps]
+
+
+def assemble_sources(
+    sources: list[tuple[str, int, int, float, list[dict]]],
+    min_lat: float,
+    min_lon: float,
+    max_lat: float,
+    max_lon: float,
+    world_version: str,
+) -> CompiledIndex:
+    """I11 + assembly. ``sources``: one (zone_id, polygon_id, ordinal,
+    pre-clip area, components) tuple per source piece, ordinals unique.
+    Sorts by (pre-clip area, ordinal) — the reference's stable area
+    sort — and flattens the components in that order, so the components
+    of one source piece stay consecutive."""
+    metas: list[tuple[str, int, float]] = []
+    datas: list[dict] = []
+    for zone_id, polygon_id, _ordinal, area, comps in sorted(
+        sources, key=lambda s: (s[3], s[2])
+    ):
+        metas += [(zone_id, polygon_id, area)] * len(comps)
+        datas += comps
+    # a module-global call: perfbench's tracer wraps index.assemble_index
+    return assemble_index(
+        metas, datas, min_lat, min_lon, max_lat, max_lon, world_version
+    )
+
+
 def compile_index(
     pieces: list[ZonePiece],
     min_lat: float,
@@ -289,86 +374,28 @@ def compile_index(
     max_lon: float,
     world_version: str,
     depth: int = 5,
-    precomputed_areas: dict[int, float] | None = None,
 ) -> CompiledIndex:
-    """Driver-side compile, mirroring TimeZoneMap.kt:156-243 step order.
-    (The distributed variant — engine._from_distributed_compile — runs
-    the same compile_piece kernel on executors and the same
-    assemble_index on the driver.)
-
-    ``precomputed_areas`` (ordinal -> deg^2) overrides the area sort key —
-    needed when reloading an artifact whose geometry is already clipped:
-    the reference sorts by the PRE-clip area (TimeZoneMap.kt:25-28), which
-    post-clip rings can no longer reproduce.
-    """
+    """Driver-side compile, mirroring TimeZoneMap.kt:156-243 step order:
+    ``compile_source`` per piece, then ``assemble_sources`` — the same
+    two steps a zones DataFrame runs with ``compile_source`` on
+    executors."""
     validate_region(min_lat, min_lon, max_lat, max_lon)
-
-    # ordinals are the (area, ordinal) tie-break AND the key of
-    # precomputed_areas: a duplicate would make rank order input-
-    # dependent and silently overwrite one piece's area on artifact
-    # reload — fail fast instead (ADVICE r2 #4: the geojsonl content-
-    # hash ordinal fallback can collide at ~2^-30 per pair)
-    seen_ordinals: set[int] = set()
-    for p in pieces:
-        if p.ordinal in seen_ordinals:
-            raise ValueError(
-                f"duplicate zone-piece ordinal {p.ordinal} "
-                f"(zone {p.zone_id}/{p.polygon_id}): ordinals must be "
-                "globally unique for a deterministic area-sort tie-break"
-            )
-        seen_ordinals.add(p.ordinal)
-
-    def sort_area(p: ZonePiece) -> float:
-        if precomputed_areas is not None and p.ordinal in precomputed_areas:
-            return precomputed_areas[p.ordinal]
-        return p.area2d
-
-    # I5/I10: bbox prune (inclusive intersect, like Envelope2D.isIntersecting)
-    kept = []
-    for p in pieces:
-        lo_lon, lo_lat, hi_lon, hi_lat = p.bbox
-        if hi_lat < min_lat or lo_lat > max_lat or hi_lon < min_lon or lo_lon > max_lon:
-            continue
-        kept.append(p)
-
-    # I11: sort by PRE-CLIP planar area, stable ordinal tie-break
-    kept.sort(key=lambda p: (sort_area(p), p.ordinal))
-
-    # I12: clip to region (pass through when fully contained), then SPLIT
-    # multi-piece clip results into one entry per connected component —
-    # the reference's flatMap over the intersection cursor
-    # (TimeZoneMap.kt:220-235). Components of one source piece stay
-    # consecutive, preserving the (pre-clip area, ordinal) sort position.
-    clipped: list[tuple[ZonePiece, int, list[np.ndarray]]] = []
-    for p in kept:
-        lo_lon, lo_lat, hi_lon, hi_lat = p.bbox
-        if lo_lat >= min_lat and hi_lat <= max_lat and lo_lon >= min_lon and hi_lon <= max_lon:
-            clipped.append((p, 0, p.rings))
-        else:
-            comps = geom.clip_rings_to_box_split(
-                p.rings, min_lon, min_lat, max_lon, max_lat
-            )
-            for ci, rings in enumerate(comps):
-                if not rings or geom.polygon_area2d(rings) <= 0:
-                    continue  # reference drops empties (pointCount>0)
-                clipped.append((p, ci, rings))
-
-    # compile each component, then assemble (same per-piece kernel and
-    # assembly the distributed path uses — parity by construction)
-    metas = []
-    datas = []
-    for p, ci, rings in clipped:
-        metas.append((p.zone_id, p.polygon_id, sort_area(p)))
-        datas.append(compile_piece(rings, depth=depth))
-    return assemble_index(
-        metas, datas, min_lat, min_lon, max_lat, max_lon, world_version
+    check_unique_ordinals(pieces)
+    sources = [
+        (
+            p.zone_id, p.polygon_id, p.ordinal, p.area2d,
+            compile_source(p.rings, min_lat, min_lon, max_lat, max_lon, depth),
+        )
+        for p in pieces
+    ]
+    return assemble_sources(
+        sources, min_lat, min_lon, max_lat, max_lon, world_version
     )
 
 
 def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
-    """Compile ONE clipped piece into flat arrays — the embarrassingly
-    parallel unit of index construction (runs on executors in the
-    distributed path, inline on the driver otherwise). All ids are
+    """Compile ONE clipped component into flat arrays (called by
+    ``compile_source``, on the driver or on executors). All ids are
     RELATIVE to the piece; ``assemble_index`` applies global offsets.
 
     Keys: verts (V,2) f64; ring_lens (R,) i64; seg_a/seg_b (S,2) f64;
@@ -415,7 +442,7 @@ def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
 
 def pack_piece(d: dict) -> bytes:
     """Compact wire form of a compiled piece (numpy-pickled blob) — what
-    crosses executor→driver in the distributed compile, instead of
+    crosses executor→driver when a zones DataFrame compiles, instead of
     nested-Row ring geometry."""
     import pickle
 

@@ -287,23 +287,14 @@ def probe_ranks(
             d4 = (px - cx) * (by - cy) - (py - cy) * (bx - cx) > 0
             crossing = (d1 != d2) & (d3 != d4)
 
-            if np.all(k > 0):
-                # candidates are contiguous runs -> reduceat (boolean ops,
-                # no float-weighted bincount pass)
-                starts_r = (np.cumsum(k) - k).astype(np.int64)
-                on_any = np.logical_or.reduceat(on_seg, starts_r)
-                parity = np.logical_xor.reduceat(crossing, starts_r)
-            else:  # defensive: reduceat is wrong for empty runs
-                rc = end - start
-                on_any = (
-                    np.bincount(rep_pair, weights=on_seg, minlength=rc) > 0
-                )
-                parity = (
-                    np.bincount(
-                        rep_pair, weights=crossing, minlength=rc
-                    ).astype(np.int64)
-                    & 1
-                ).astype(bool)
+            # candidates are contiguous runs -> reduceat (boolean ops,
+            # no float-weighted bincount pass). Every run is non-empty:
+            # cover_piece emits a boundary cell only for an exact
+            # (cell, segment) touch, so each boundary entry carries at
+            # least one local segment (test_boundary_entries_carry_segments)
+            starts_r = (np.cumsum(k) - k).astype(np.int64)
+            on_any = np.logical_or.reduceat(on_seg, starts_r)
+            parity = np.logical_xor.reduceat(crossing, starts_r)
             confirmed[bsel[start:end]] = on_any | (
                 idx.ent_center[ents] ^ parity
             )

@@ -187,15 +187,3 @@ def pieces_to_df(spark, pieces: list[ZonePiece]):
     )
     return spark.createDataFrame(table)
 
-
-def rows_to_pieces(rows) -> list[ZonePiece]:
-    """Inverse of pieces_to_rows for driver-side compile. Accepts Row
-    objects with fields (zone_id, polygon_id, ordinal, rings)."""
-    pieces = []
-    for r in rows:
-        rings = [
-            np.array([(v.lon, v.lat) for v in ring], dtype=np.float64)
-            for ring in r.rings
-        ]
-        pieces.append(ZonePiece(r.zone_id, r.polygon_id, r.ordinal, rings))
-    return pieces
