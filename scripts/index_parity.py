@@ -1,15 +1,20 @@
 """Fingerprint the compiled index and the distance kernels of a checkout.
 
 Prints one SHA-256 per line for:
-- every ``CompiledIndex`` field of the synth (whole world and a clipped
-  region), big454 and 1M-vertex huge worlds;
-- the same fields for the synth, synth_clip and big454 indexes built from
-  a zones DataFrame (``zones.pieces_to_df`` into ``TzEngine.for_region``,
+- every ``CompiledIndex`` field but the kNN candidate lists of the synth
+  (whole world and a clipped region), big454 and 1M-vertex huge worlds
+  (lines ``index``), and the list fields ``knn_*`` on their own (lines
+  ``lists``);
+- the same for the synth, synth_clip and big454 indexes built from a
+  zones DataFrame (``zones.pieces_to_df`` into ``TzEngine.for_region``,
   lines ``df``) and for a big454 ``save_artifact``/``from_artifact``
-  round trip (line ``art``) — each must equal its ``index`` line;
-- ``knn_zones_batch(k=3)`` rank lists and exact-evaluation counts, and
-  ``containing_distances`` offsets, heads and distances, on 20k seeded
-  big454 points (NaN, +-inf and +-90 rows included) for each metric.
+  round trip (line ``art``) — each must equal its ``index`` and
+  ``lists`` lines;
+- ``knn_zones_batch`` rank lists for k = 1..4 (the exact-evaluation count
+  is printed beside the digest, not hashed), and ``containing_distances``
+  offsets, heads and distances, on 20k seeded big454 points (NaN, +-inf
+  and +-90 rows included; 2k points for k = 4) for each metric, and kNN
+  (k = 3) on 4k huge-world points.
 
 Run it on two checkouts and diff the output: identical lines mean a
 refactor left compile and kernel output bit-identical. Run it from a
@@ -71,17 +76,25 @@ def main() -> None:
     }
 
     def index_digest(idx) -> str:
-        return digest(*(getattr(idx, f.name) for f in dataclasses.fields(idx)))
+        return digest(*(getattr(idx, f.name) for f in dataclasses.fields(idx)
+                        if not f.name.startswith("knn_")))
 
-    big = None
+    def lists_line(kind: str, name: str, idx) -> None:
+        lists = [getattr(idx, f.name) for f in dataclasses.fields(idx)
+                 if f.name.startswith("knn_")]
+        if lists:
+            print(f"lists {name:10s} {digest(*lists)}  ({kind})")
+
+    built = {}
     for name, (pieces, region) in worlds.items():
         t0 = time.perf_counter()
         idx = index.compile_index(pieces, *region, world_version=name)
         dt = time.perf_counter() - t0
         print(f"index {name:10s} {index_digest(idx)}  "
-              f"({idx.n_pieces} pieces, compile {dt:.2f} s)")
-        if name == "big454":
-            big = idx
+              f"({idx.n_pieces} pieces, compile {dt:.2f} s, "
+              f"{idx.nbytes()} bytes)")
+        lists_line("index", name, idx)
+        built[name] = idx
 
     spark = session.get_spark("index_parity", master="local[2]")
     for name in ("synth", "synth_clip", "big454"):
@@ -91,12 +104,14 @@ def main() -> None:
         eng = engine.TzEngine.for_region(spark, zdf, *region, world_version=name)
         dt = time.perf_counter() - t0
         print(f"df    {name:10s} {index_digest(eng.idx)}  (compile {dt:.2f} s)")
+        lists_line("df", name, eng.idx)
     with tempfile.TemporaryDirectory() as tmp:
         eng.save_artifact(tmp)
         t0 = time.perf_counter()
         art = engine.TzEngine.from_artifact(spark, tmp)
         dt = time.perf_counter() - t0
         print(f"art   big454     {index_digest(art.idx)}  (reload {dt:.2f} s)")
+        lists_line("art", "big454", art.idx)
     spark.stop()
 
     rng = np.random.default_rng(20_000)
@@ -104,16 +119,28 @@ def main() -> None:
     lons = rng.uniform(-70, 70, 20_000)
     lats[:6] = [np.nan, 0.0, np.inf, -np.inf, 90.0, -90.0]
     lons[:6] = [0.0, np.nan, 0.0, 0.0, 10.0, -10.0]
+    big = built["big454"]
     for metric in ("geodesic", "planar_deg"):
-        ranks, n_eval = probe.knn_zones_batch(
-            big, lats, lons, 3, return_stats=True, metric=metric
-        )
-        off = np.asarray(ranks.offsets)
-        vals = np.asarray(ranks.values)
-        print(f"knn   {metric:10s} {digest(off, vals, n_eval)}  "
-              f"(n_eval {n_eval})")
+        for k in (1, 2, 3, 4):
+            n = 20_000 if k <= 3 else 2_000
+            t0 = time.perf_counter()
+            ranks, n_eval = probe.knn_zones_batch(
+                big, lats[:n], lons[:n], k, return_stats=True, metric=metric
+            )
+            dt = time.perf_counter() - t0
+            print(f"knn{k}  {metric:10s} "
+                  f"{digest(np.asarray(ranks.offsets), np.asarray(ranks.values))}"
+                  f"  (n_eval {n_eval}, {dt:.2f} s)")
         q5 = probe.containing_distances(big, lats, lons, metric)
         print(f"q5    {metric:10s} {digest(*q5)}")
+    for metric in ("geodesic", "planar_deg"):
+        ranks, n_eval = probe.knn_zones_batch(
+            built["huge"], lats[:4000], lons[:4000], 3, return_stats=True,
+            metric=metric,
+        )
+        print(f"hknn3 {metric:10s} "
+              f"{digest(np.asarray(ranks.offsets), np.asarray(ranks.values))}"
+              f"  (n_eval {n_eval})")
 
 
 if __name__ == "__main__":

@@ -34,3 +34,42 @@ def rows_to_pieces(rows) -> list[ZonePiece]:
         )
         for r in rows
     ]
+
+
+def dense_knn_names(idx, lats, lons, k, metric="geodesic"):
+    """The dense (points x pieces) kNN sweep ``probe.knn_zones_batch``
+    must equal: a piece's distance is 0 when it contains the point (in
+    the initialized region), else the oracle's boundary distance; zones
+    in (distance, rank) order, each at its nearest piece. A NaN or
+    infinite point gets []."""
+    from tzengine import geom
+    from tzengine.oracle import (
+        distance_from_boundary, planar_distance_from_boundary,
+    )
+
+    dist_fn = (planar_distance_from_boundary if metric == "planar_deg"
+               else distance_from_boundary)
+    lats = np.asarray(lats, dtype=np.float64)
+    lons = np.asarray(lons, dtype=np.float64)
+    ok = np.isfinite(lats) & np.isfinite(lons)
+    min_lat, min_lon, max_lat, max_lon = idx.init_region
+    in_region = ((lats >= min_lat) & (lats <= max_lat)
+                 & (lons >= min_lon) & (lons <= max_lon))
+    pts = np.stack([np.where(ok, lons, 0.0), np.where(ok, lats, 0.0)], axis=1)
+    dists = np.zeros((len(lats), idx.n_pieces))
+    for rank in range(idx.n_pieces):
+        rings = idx.piece_rings(rank)
+        inside = geom.contains_inclusive(pts, rings) & in_region
+        dists[:, rank] = np.where(inside, 0.0, dist_fn(pts, rings))
+    ranks = np.arange(idx.n_pieces)
+    out = []
+    for i in range(len(lats)):
+        names = []
+        if ok[i]:
+            for r in np.lexsort((ranks, dists[i])):
+                if len(names) >= k:
+                    break
+                if idx.zone_ids[r] not in names:
+                    names.append(idx.zone_ids[r])
+        out.append(names)
+    return out

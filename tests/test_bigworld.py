@@ -10,10 +10,8 @@ import pytest
 from tzengine import index, probe
 from tzengine.bigworld import big_world
 from tzengine.oracle import OracleMap
-from tzengine.oracle import distance_from_boundary as oracle_distance
-from tzengine.oracle import planar_distance_from_boundary as oracle_planar_distance
 
-from probe_helpers import ranks_to_tzids
+from probe_helpers import dense_knn_names, ranks_to_tzids
 
 
 def zone_names(idx, rank_lists):
@@ -97,84 +95,57 @@ def test_knn_pruned_matches_dense_and_is_sublinear(idx):
     lats = rng.uniform(-60, 60, 64)
     lons = rng.uniform(-60, 60, 64)
     got, n_eval = probe.knn_zones_batch(idx, lats, lons, k=3, return_stats=True)
-    got = zone_names(idx, got)
-
-    # dense reference (the round-1 semantics), computed inline
-    from tzengine import geom
-    pts = np.stack([lons, lats], axis=1)
-    dists = np.zeros((len(lats), idx.n_pieces))
-    for rank in range(idx.n_pieces):
-        rings = idx.piece_rings(rank)
-        inside = geom.contains_inclusive(pts, rings)
-        d = oracle_distance(pts, rings)
-        dists[:, rank] = np.where(inside, 0.0, d)
-    ranks = np.arange(idx.n_pieces)
-    expect = []
-    for i in range(len(lats)):
-        order = np.lexsort((ranks, dists[i]))
-        seen, names = set(), []
-        for r in order:
-            zid = idx.zone_ids[r]
-            if zid not in seen:
-                seen.add(zid)
-                names.append(zid)
-            if len(names) >= 3:
-                break
-        expect.append(names)
-    assert got == expect
+    assert zone_names(idx, got) == dense_knn_names(idx, lats, lons, 3)
     dense_evals = len(lats) * idx.n_pieces
     assert n_eval < dense_evals / 10, (n_eval, dense_evals)
 
 
-def test_knn_bound_matrix_is_group_sized_not_piece_sized(idx, monkeypatch):
-    """VERDICT r2 #6: the kNN candidate stream must never materialize an
-    O(n_points x n_pieces) bound matrix. Every bbox-bound call is either
-    the (n x n_groups) group matrix (a 2-D result) or an elementwise
-    group expansion (a 1-D result) — asserted by recording the shape of
-    every bound evaluation."""
-    from tzengine import geom
+def test_knn_pairs_come_in_bounded_chunks(idx, monkeypatch):
+    """The kNN kernel never builds a (points x pieces) matrix. An in-grid
+    point reads only its cell's compile-time list: no per-point list is
+    cut, and its exact pass stays far below points x pieces. A point
+    with its own list (k above KNN_MAX_K, or outside the grid) gets it
+    from every piece in chunks of KNN_PAIR_CHUNK (point, piece) pairs,
+    and every exact pass is chunked the same way. Both equal the dense
+    sweep."""
+    chunk = 3 * idx.n_pieces  # a small budget, so chunking happens
+    monkeypatch.setattr(probe, "KNN_PAIR_CHUNK", chunk)
+    cut_pairs, foot_pairs = [], []
+    real_refine, real_foot = probe._refine_lists, probe._foot_distances
 
-    matrix_shapes = []
-    pair_rows = []
-    real_bound = geom.bbox_geodesic_lower_bound
+    def spy_refine(idx_, k, cx, cy, r, parent, off, *rest, **kw):
+        cut_pairs.append(int(np.diff(off)[parent].sum()))
+        return real_refine(idx_, k, cx, cy, r, parent, off, *rest, **kw)
 
-    def spy(lats, lons, boxes):
-        out = real_bound(lats, lons, boxes)
-        if out.ndim == 2:
-            matrix_shapes.append(out.shape)
-        else:
-            pair_rows.append(len(out))
-        return out
+    def spy_foot(idx_, lats_, lons_, ranks, *rest, **kw):
+        foot_pairs.append(len(ranks))
+        return real_foot(idx_, lats_, lons_, ranks, *rest, **kw)
 
-    gsize = 8  # fine groups so expansion pruning is observable
-    monkeypatch.setattr(geom, "bbox_geodesic_lower_bound", spy)
-    monkeypatch.setattr(probe, "_knn_adaptive_group_size", lambda n: gsize)
-    # fresh group cache so the patched group size takes effect, and none
-    # left behind: later tests of this module share the index
-    if hasattr(idx, "_knn_groups"):
-        object.__delattr__(idx, "_knn_groups")
+    monkeypatch.setattr(probe, "_refine_lists", spy_refine)
+    monkeypatch.setattr(probe, "_foot_distances", spy_foot)
     rng = np.random.default_rng(11)
     lats = rng.uniform(-60, 60, 48)
     lons = rng.uniform(-60, 60, 48)
-    try:
-        got = probe.knn_zones_batch(idx, lats, lons, k=3)
-    finally:
-        if hasattr(idx, "_knn_groups"):
-            object.__delattr__(idx, "_knn_groups")
-    assert all(len(g) == 3 for g in got.to_pylist())
+    got = probe.knn_zones_batch(idx, lats, lons, k=3)
+    assert zone_names(idx, got) == dense_knn_names(idx, lats, lons, 3)
+    assert not cut_pairs  # in-grid points read the compile-time lists
+    assert all(n <= chunk for n in foot_pairs), foot_pairs
+    assert sum(foot_pairs) < len(lats) * idx.n_pieces / 10, foot_pairs
 
-    n_groups = -(-idx.n_pieces // gsize)
-    assert idx.n_pieces > gsize  # the test is non-vacuous
-    # matrix calls are points x GROUPS only — never points x pieces
-    assert matrix_shapes == [(len(lats), n_groups)], matrix_shapes
-    # expansions are elementwise rows, and lazy expansion actually
-    # prunes: total expanded (point, piece) pairs stay well under the
-    # dense n_points x n_pieces product
-    assert pair_rows, "expansions must go through the elementwise bound"
-    total_pairs = sum(pair_rows)
-    assert total_pairs < len(lats) * idx.n_pieces / 2, (
-        total_pairs, len(lats) * idx.n_pieces
-    )
+    # k = 5 gives every point its own list; at k = 3, so does a point
+    # outside the grid (the world's pieces span about [-63, 63]^2)
+    lats = np.r_[lats[:12], 75.0, -89.0, 90.0, 10.0]
+    lons = np.r_[lons[:12], 100.0, -179.0, 180.0, 170.0]
+    for k, pts in ((5, slice(None)), (3, slice(12, None))):
+        cut_pairs.clear()
+        foot_pairs.clear()
+        got = probe.knn_zones_batch(idx, lats[pts], lons[pts], k=k)
+        assert zone_names(idx, got) == dense_knn_names(
+            idx, lats[pts], lons[pts], k)
+        n = len(lats[pts])
+        assert sum(cut_pairs) == n * idx.n_pieces, cut_pairs
+        assert len(cut_pairs) > 1 and all(p <= chunk for p in cut_pairs)
+        assert all(p <= chunk for p in foot_pairs), foot_pairs
 
 
 def test_distributed_compile_index_arrays_identical(spark, world):
@@ -194,7 +165,8 @@ def test_distributed_compile_index_arrays_identical(spark, world):
     for field in ["polygon_ids", "areas", "piece_bbox", "ring_offsets",
                   "vert_offsets", "verts", "seg_offsets", "seg_a", "seg_b",
                   "ent_rank", "ent_interior", "ent_center", "ent_seg_off",
-                  "ent_seg_idx"]:
+                  "ent_seg_idx", "knn_grid", "knn_off", "knn_rank",
+                  "knn_bound"]:
         np.testing.assert_array_equal(getattr(a, field), getattr(b, field),
                                       err_msg=field)
     assert sorted(a.levels) == sorted(b.levels)
@@ -455,7 +427,8 @@ def test_hugeworld_distributed_compile_parity(spark):
     assert a.zone_ids == b.zone_ids
     for field in ["areas", "piece_bbox", "vert_offsets", "verts",
                   "seg_a", "seg_b", "ent_rank", "ent_interior",
-                  "ent_center", "ent_seg_off", "ent_seg_idx"]:
+                  "ent_center", "ent_seg_off", "ent_seg_idx", "knn_grid",
+                  "knn_off", "knn_rank", "knn_bound"]:
         np.testing.assert_array_equal(getattr(a, field), getattr(b, field),
                                       err_msg=field)
 
@@ -464,33 +437,10 @@ def test_knn_planar_metric_matches_dense_planar_sweep(idx):
     """metric='planar_deg' must equal the dense planar sweep exactly
     (the SQL-oracle-able ordering; the driver value-verifies the same
     ordering end-to-end via knn_zones_planar)."""
-    from tzengine import geom
-
     rng = np.random.default_rng(17)
     lats = rng.uniform(-60, 60, 48)
     lons = rng.uniform(-60, 60, 48)
     got = zone_names(
         idx, probe.knn_zones_batch(idx, lats, lons, k=3, metric="planar_deg")
     )
-
-    pts = np.stack([lons, lats], axis=1)
-    dists = np.zeros((len(lats), idx.n_pieces))
-    for rank in range(idx.n_pieces):
-        rings = idx.piece_rings(rank)
-        inside = geom.contains_inclusive(pts, rings)
-        d = oracle_planar_distance(pts, rings)
-        dists[:, rank] = np.where(inside, 0.0, d)
-    ranks = np.arange(idx.n_pieces)
-    expect = []
-    for i in range(len(lats)):
-        order = np.lexsort((ranks, dists[i]))
-        seen, names = set(), []
-        for r in order:
-            zid = idx.zone_ids[r]
-            if zid not in seen:
-                seen.add(zid)
-                names.append(zid)
-            if len(names) >= 3:
-                break
-        expect.append(names)
-    assert got == expect
+    assert got == dense_knn_names(idx, lats, lons, 3, metric="planar_deg")

@@ -2,14 +2,17 @@
 covering index + probe must agree with direct inclusive containment, and
 clipping must preserve results inside the region."""
 
+import contextlib
+import signal
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from tzengine import geom, index, oracle, probe
-from tzengine.zones import ZonePiece
+from tzengine.zones import ZonePiece, _rect, make_piece
 
-from probe_helpers import ranks_to_tzids
+from probe_helpers import dense_knn_names, ranks_to_tzids
 
 
 def star_piece(seed: int, zone_id: str, ordinal: int, cx: float, cy: float,
@@ -157,3 +160,75 @@ def test_split_loops_are_simple_random_rings(seed):
         assert len(loop) >= 3
         assert not geom._any_ring_crossing(loop)
         assert len({tuple(v) for v in loop}) == len(loop)
+
+
+@contextlib.contextmanager
+def time_limit(seconds: float):
+    """Fail (instead of hanging) when the body runs over ``seconds``."""
+    def fail(_signum, _frame):
+        raise TimeoutError(f"over {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, fail)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    seed=st.integers(min_value=0, max_value=100_000),
+    n_pieces=st.integers(min_value=1, max_value=7),
+    clip=st.booleans(),
+    k=st.sampled_from([1, 2, 3, 4]),
+    metric=st.sampled_from(probe.METRICS),
+)
+def test_knn_equals_dense_sweep(seed, n_pieces, clip, k, metric):
+    """kNN from the compile-time cell lists equals the dense (points x
+    pieces) sweep on random worlds (some zones with two pieces, some
+    regions clipping them), for points on cell edges and corners, at
+    +-90 and +-180, outside the grid or the region, and NaN."""
+    rng = np.random.default_rng(seed)
+    pieces = []
+    for i in range(n_pieces):
+        scale = float(rng.uniform(0.5, 12.0))
+        cy = float(rng.uniform(-90.0 + scale, 90.0 - scale))
+        cx = float(rng.uniform(-180.0 + scale, 180.0 - scale))
+        pieces.append(star_piece(seed + i, f"Zone/{i % 5}", i, cx, cy, scale,
+                                 int(rng.integers(4, 24))))
+    if seed % 3 == 0:  # a polar cap: list cells reach past the pole
+        lat0 = float(rng.uniform(60.0, 89.0))
+        pieces.append(make_piece("Zone/Cap", 0, n_pieces,
+                                 [_rect(lat0, -180.0, 90.0, 180.0)]))
+    region = (-90.0, -180.0, 90.0, 180.0)
+    if clip:
+        lat0, lon0 = rng.uniform(-80, 20), rng.uniform(-170, 60)
+        region = (lat0, lon0, lat0 + rng.uniform(10, 70),
+                  lon0 + rng.uniform(10, 110))
+    try:
+        idx = index.compile_index(pieces, *region, world_version="knn")
+    except ValueError:  # every piece clipped away
+        return
+    if not idx.n_pieces:
+        return
+    glon, glat, step, nx, ny = idx.knn_grid
+    i, j = rng.integers(0, nx + 1, 12), rng.integers(0, ny + 1, 12)
+    edge_lon, edge_lat = glon + i * step, glat + j * step
+    lats = np.r_[
+        edge_lat, edge_lat, np.nextafter(edge_lat, -np.inf),
+        rng.uniform(glat - 5, glat + ny * step + 5, 12),
+        90.0, -90.0, 90.0, -90.0, 0.0, np.nan, 1.0,
+    ]
+    lons = np.r_[
+        edge_lon, rng.uniform(glon, glon + nx * step, 12),
+        np.nextafter(edge_lon, np.inf),
+        rng.uniform(glon - 5, glon + nx * step + 5, 12),
+        180.0, -180.0, -180.0, 180.0, 180.0, 1.0, np.nan,
+    ]
+    lats, lons = np.clip(lats, -90, 90), np.clip(lons, -180, 180)
+    with time_limit(60):
+        got = probe.knn_zones_batch(idx, lats, lons, k, metric=metric)
+    names = [[idx.zone_ids[r] for r in row] for row in got.to_pylist()]
+    assert names == dense_knn_names(idx, lats, lons, k, metric=metric)

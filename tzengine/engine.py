@@ -518,7 +518,9 @@ class TzEngine:
         (planar degrees — bit-exact SQL-oracle-able ordering). A NULL, NaN or infinite coordinate yields []. The
         ``arrow_udf`` takes only lat/lon and returns piece ranks, mapped
         to names JVM-side; assign, Q5 and kNN share one ArrowEvalPython
-        node.
+        node. Each point runs one exact pass over its grid cell's
+        candidate list, built at compile time for k up to
+        ``probe.KNN_MAX_K`` (``probe.knn_zones_batch``).
         """
         if metric not in probemod.METRICS:
             # fail fast driver-side: a typo would otherwise surface as a

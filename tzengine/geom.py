@@ -561,6 +561,12 @@ def segments_box_touch(
 #: error of computing the angle from geodetic (not reduced) latitudes.
 R_GEO_LB = 6_300_000.0
 
+#: Meters per planar degree that no geodesic can exceed: the straight
+#: (lon, lat) path between two points is no longer than this times
+#: their planar degree distance, because both radii of curvature peak
+#: at a²/b (the poles). So Vincenty <= M_PER_DEG_MAX * planar degrees.
+M_PER_DEG_MAX = np.radians(1.0) * WGS84_A * WGS84_A / WGS84_B
+
 
 def _haversine_angle(lat1, lon1, lat2, lon2) -> np.ndarray:
     """Central angle (radians) between degree coordinates, broadcast."""

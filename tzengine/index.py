@@ -115,6 +115,15 @@ class CompiledIndex:
     # the wrong parity anchor).
     ent_cx: np.ndarray = None  # float64 (E,)
     ent_cy: np.ndarray = None  # float64 (E,)
+    # kNN candidate lists (``probe.knn_cell_lists``): a grid of square
+    # cells (lon0, lat0, step, nx, ny) over the pieces, and per cell the
+    # ranks of every piece one of its points can need among its
+    # probe.KNN_MAX_K nearest zones (CSR), plus a planar-degree upper
+    # bound on that k-th zone distance
+    knn_grid: np.ndarray = None  # float64 (5,)
+    knn_off: np.ndarray = None  # int32 (nx*ny+1,)
+    knn_rank: np.ndarray = None  # int16|int32 (L,)
+    knn_bound: np.ndarray = None  # float64 (nx*ny,)
 
     @property
     def n_pieces(self) -> int:
@@ -138,7 +147,9 @@ class CompiledIndex:
              + self.vert_offsets.nbytes + self.seg_a.nbytes + self.seg_b.nbytes
              + self.ent_rank.nbytes + self.ent_interior.nbytes
              + self.ent_center.nbytes + self.ent_seg_off.nbytes
-             + self.ent_seg_idx.nbytes)
+             + self.ent_seg_idx.nbytes + self.knn_grid.nbytes
+             + self.knn_off.nbytes + self.knn_rank.nbytes
+             + self.knn_bound.nbytes)
         for lvl in self.levels.values():
             n += sum(a.nbytes for a in lvl)
         for d in self.level_dense.values():
@@ -574,7 +585,7 @@ def assemble_index(
         ent_cx = np.zeros(0, dtype=np.float64)
         ent_cy = np.zeros(0, dtype=np.float64)
 
-    return CompiledIndex(
+    idx = CompiledIndex(
         ent_cx=ent_cx,
         ent_cy=ent_cy,
         level_dense=build_level_dense(levels),
@@ -597,6 +608,12 @@ def assemble_index(
         ent_seg_idx=ent_seg_idx,
         levels=levels,
     )
+    from . import probe  # probe imports this module
+
+    idx.knn_grid, idx.knn_off, idx.knn_rank, idx.knn_bound = (
+        probe.knn_cell_lists(idx)
+    )
+    return idx
 
 
 # The probe pays ~9 full-batch array passes PER LOOKUP LEVEL (shift,

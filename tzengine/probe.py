@@ -10,6 +10,9 @@ the kNN fallback ordering (north_star).
 
 from __future__ import annotations
 
+import dataclasses
+import math
+
 import numpy as np
 
 from . import cells, geom
@@ -780,54 +783,236 @@ def _foot_distances(
     return dist, int(need.sum())
 
 
-def _knn_adaptive_group_size(n_pieces: int) -> int:
-    """Group size balancing the two bound-computation costs: the dense
-    (points x n_groups) group matrix costs ~P/gs bounds per point, lazy
-    expansion costs ~g_exp x gs (g_exp ≈ 2-4 groups expand per point),
-    so the optimum sits near sqrt(P·g_exp) — measured best 24 for P=454
-    (2x faster than the old fixed 64). Clamped to [8, 512]: the lower
-    clamp keeps tiny worlds in one or two groups, the upper keeps the
-    group matrix narrow for 100x-piece worlds (gs grows with sqrt(P), so
-    n_groups = P/gs ≈ sqrt(P/1.5) stays batch-memory-safe)."""
-    import math
-
-    return int(np.clip(round(math.sqrt(1.5 * max(n_pieces, 1))), 8, 512))
 
 
-def _knn_piece_groups(idx: CompiledIndex):
-    """Spatially-coherent piece groups for the kNN candidate stream:
-    pieces ordered by the Morton code of their bbox center, blocked into
-    groups of ``_knn_adaptive_group_size`` pieces, each with the union
-    bbox of its members. The union contains every member, so the lower
-    bound to the union bbox lower-bounds every member piece — a valid
-    two-level BVH. Cached on the index (pure function of piece_bbox)."""
-    cached = getattr(idx, "_knn_groups", None)
-    if cached is not None:
-        return cached
-    group_size = _knn_adaptive_group_size(idx.n_pieces)
+# --- kNN: compile-time candidate lists, one exact pass ------------------------
+
+#: The k the compile-time candidate lists serve (a smaller k reads the
+#: same lists): the largest k any caller asks for. A larger k, or a point
+#: outside the list grid, cuts its own list from every piece.
+KNN_MAX_K = 3
+# list grid size: cells per piece, capped (a tiny world gets a tiny grid)
+KNN_CELLS_PER_PIECE = 36
+KNN_MAX_CELLS = 1 << 14
+# relative slack on every bound the lists rest on: dwarfs float rounding
+# and Vincenty's ~0.5 mm error at any distance a list can reach
+KNN_BOUND_MARGIN = 1.0 + 1e-6
+# absolute slack (degrees) on every list radius, even a point's own: the
+# containment test admits points up to ON_EDGE_EPS * segment length
+# (< 4e-10 degrees) outside a piece, and floor() may put a point a
+# rounding outside its cell
+KNN_PAD_DEG = 1e-9
+# (point, piece) pairs per exact pass, so the kernel's memory is bounded
+# whatever the batch, k or world
+KNN_PAIR_CHUNK = 1 << 16
+
+
+def _in_sorted(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Membership of each of ``keys`` in the sorted ``sorted_keys``."""
+    pos = np.searchsorted(sorted_keys, keys)
+    ok = pos < len(sorted_keys)
+    res = np.zeros(len(keys), dtype=bool)
+    res[ok] = sorted_keys[pos[ok]] == keys[ok]
+    return res
+
+
+def _contained_keys(idx: CompiledIndex, lats, lons) -> np.ndarray:
+    """Sorted ``point * n_pieces + rank`` of every (point, containing
+    piece) pair, from one ``probe_ranks`` call."""
+    off, ranks, _valid = probe_ranks(idx, lats, lons, mode="pipeline")
+    keys = np.repeat(np.arange(len(lats), dtype=np.int64), np.diff(off))
+    keys = keys * idx.n_pieces + ranks
+    keys.sort()
+    return keys
+
+
+def _corner_bound(cx, cy, bb: np.ndarray) -> np.ndarray:
+    """Upper bound on the planar distance from (cx, cy) to a piece: every
+    edge of the piece's exact bbox holds one of its vertices, so the
+    piece is within the nearer of the edges' farther corners."""
+    dxl, dxh = (cx - bb[:, 0]) ** 2, (cx - bb[:, 2]) ** 2
+    dyl, dyh = (cy - bb[:, 1]) ** 2, (cy - bb[:, 3]) ** 2
+    ll, lh, hl, hh = dxl + dyl, dxl + dyh, dxh + dyl, dxh + dyh
+    return np.sqrt(np.minimum(
+        np.minimum(np.maximum(ll, lh), np.maximum(hl, hh)),
+        np.minimum(np.maximum(ll, hl), np.maximum(lh, hh)),
+    ))
+
+
+def _zone_kth(starts, run_of, val, zone, k: int) -> np.ndarray:
+    """Per run of pairs (non-empty runs at ``starts``; ``run_of`` is each
+    pair's run): the k-th smallest over distinct zones of each zone's
+    smallest ``val``, +inf for a run with fewer than k zones. Each pass
+    takes the run minimum and masks that minimum's zone."""
+    v = val.copy()
+    n = len(v)
+    pos = np.arange(n)
+    for _ in range(k - 1):
+        m = np.minimum.reduceat(v, starts)
+        first = np.minimum.reduceat(np.where(v == m[run_of], pos, n), starts)
+        v[zone == zone[np.minimum(first, n - 1)][run_of]] = np.inf
+    return np.minimum.reduceat(v, starts)
+
+
+def _root_list(n_pieces: int):
+    """The list descent's root: one cell holding every piece, no feet."""
+    nan = np.full(n_pieces, np.nan)
+    return np.array([0, n_pieces]), np.arange(n_pieces), (nan, nan)
+
+
+def knn_cell_lists(idx: CompiledIndex):
+    """The kNN candidate lists ``index.assemble_index`` stores on the
+    index: (grid, offsets, ranks, bound). ``grid`` float64 (lon0, lat0,
+    step, nx, ny) lays square cells over the pieces' bbox union, row-major
+    (cell = iy * nx + ix, ix = floor((lon - lon0) / step)); ``offsets``
+    int32 (nx*ny + 1,) and ``ranks`` (``rank_dtype``) are the CSR of each
+    cell's piece ranks, ascending; ``bound`` float64 (nx*ny,) bounds, in
+    planar degrees, the KNN_MAX_K-th nearest zone distance of any point of
+    the cell.
+
+    Why a list holds every piece a point of its cell can need. Let D_Z(p)
+    be the planar distance from p to zone Z's filled pieces (0 inside).
+    D_Z is 1-Lipschitz. Z's kNN distance at p is at most D_Z(p) planar,
+    and at most M * D_Z(p) geodesic (M = geom.M_PER_DEG_MAX): it is
+    measured to a point of Z's boundary, even though the planar-nearest
+    foot (TimeZone.kt:46) makes it no metric distance-to-set. With U an
+    upper bound on D_(k)(c), the k-th smallest D_Z at the cell centre c,
+    and r the centre-to-corner distance (padded by KNN_PAD_DEG), every
+    point of the cell has k zones within
+    U + r degrees and M * (U + r) meters: ``bound`` = U + r. By the
+    geodesic triangle inequality a piece is at least lb(c, bbox) - M * r
+    away from any such point (lb = geom.bbox_geodesic_lower_bound), so the
+    list keeps each piece with lb(c, bbox) <= M * (U + 2r). lb is at most
+    M times the planar bbox distance, so the list also holds every piece
+    the planar metric can need: one list serves both metrics.
+
+    U comes from a quadtree descent from one root cell holding every
+    piece; each level refines its parent cell's list (``_refine_lists``).
+    Per (cell, piece) pair an upper bound on the piece's planar distance
+    is 0 when the engine's containment puts the centre in the piece, else
+    the least of ``_corner_bound``, the distance to the nearest boundary
+    point found for the parent cell, and, on every level but the finest,
+    the exact foot distance of each pair that could still set the k-th
+    zone. U is the k-th zone of those bounds, or the parent's U plus the
+    centre offset if smaller. Cells and pairs stay few: about 0.2 s on
+    one core for the 454-piece world's 16k cells, 5.2 pieces a list."""
+    n_pieces = idx.n_pieces
+    if not n_pieces:
+        return (np.zeros(5), np.zeros(1, dtype=np.int32),
+                np.zeros(0, dtype=rank_dtype(idx)), np.zeros(0))
+    # the kernels below cache derived arrays on the index they are given:
+    # a throwaway copy keeps those out of the broadcast pickle
+    work = dataclasses.replace(idx)
     bb = idx.piece_bbox
-    c_lon = (bb[:, 0] + bb[:, 2]) / 2.0
-    c_lat = (bb[:, 1] + bb[:, 3]) / 2.0
-    order = np.argsort(
-        cells.cell_of(np.clip(c_lon, -180, 180), np.clip(c_lat, -90, 90), 14),
-        kind="stable",
-    )
-    members = [
-        order[s : s + group_size] for s in range(0, len(order), group_size)
-    ]
-    gb = np.stack(
-        [
-            np.array(
-                [
-                    bb[m, 0].min(), bb[m, 1].min(),
-                    bb[m, 2].max(), bb[m, 3].max(),
-                ]
+    lon0, lat0 = float(bb[:, 0].min()), float(bb[:, 1].min())
+    w = float(bb[:, 2].max()) - lon0
+    h = float(bb[:, 3].max()) - lat0
+    n_cells = min(KNN_MAX_CELLS, KNN_CELLS_PER_PIECE * n_pieces)
+    step = max(math.sqrt(w * h / n_cells), max(w, h) / n_cells, 1e-9)
+    nx, ny = max(1, math.ceil(w / step)), max(1, math.ceil(h / step))
+
+    off, ranks, feet = _root_list(n_pieces)
+    U = np.array([np.inf])
+    parent_w = 1
+    for lvl in reversed(range(max(1, math.ceil(math.log2(max(nx, ny)))))):
+        s = step * 2**lvl
+        gw, gh = -(-nx >> lvl), -(-ny >> lvl)
+        iy, ix = np.divmod(np.arange(gw * gh), gw)
+        r = s * math.sqrt(0.5) * KNN_BOUND_MARGIN + KNN_PAD_DEG
+        parent = (iy >> 1) * parent_w + (ix >> 1)
+        # a child centre is r (unpadded) from its parent's, and D_(k) is
+        # 1-Lipschitz
+        # a centre past a pole is no point of the ellipsoid: clamping it
+        # keeps every point of the cell (lat <= 90) within r of it, and
+        # child centres within r of their parent's
+        cy = np.clip(lat0 + (iy + 0.5) * s, -90.0, 90.0)
+        off, ranks, feet, U = _refine_lists(
+            work, KNN_MAX_K, lon0 + (ix + 0.5) * s, cy, r,
+            parent, off, ranks, feet, U[parent] + r, exact=lvl > 0,
+        )
+        parent_w = gw
+    grid = np.array([lon0, lat0, step, nx, ny], dtype=np.float64)
+    return grid, off.astype(np.int32), ranks.astype(rank_dtype(idx)), U + r
+
+
+def _refine_lists(idx, k, cx, cy, r, parent, off, ranks, feet, U, exact):
+    """One step of the list descent: each cell (centre ``cx``, ``cy``,
+    padded centre-to-corner distance ``r``; for a point just the pad)
+    keeps the pieces of its ``parent`` list (``ranks[off[p]:off[p+1]]``)
+    that its points can need among their k nearest zones (see
+    ``knn_cell_lists``). ``feet``: the parent list's nearest boundary
+    points (NaN where not computed), which bound the pairs' distances at
+    no cost. ``U``: an upper bound per cell on D_(k) at its centre, which
+    the pairs' bounds then tighten. ``exact``: also bound by its exact
+    foot distance each pair that could set the k-th zone. Returns the
+    cells' CSR (offsets, ranks, feet) and U."""
+    n = len(cx)
+    cnt = np.diff(off)[parent]
+    run0 = np.cumsum(cnt) - cnt
+    pc = np.repeat(np.arange(n), cnt)
+    src = np.repeat(off[parent] - run0, cnt) + np.arange(len(pc))
+    pr, fx, fy = ranks[src], feet[0][src], feet[1][src]
+    pb = idx.piece_bbox[pr]
+    pcx, pcy = cx[pc], cy[pc]
+    plb = geom.bbox_planar_lower_bound(pcy, pcx, pb)
+    inside = _in_sorted(_contained_keys(idx, cy, cx), pc * idx.n_pieces + pr)
+    ub = np.where(inside, 0.0, np.fmin(
+        _corner_bound(pcx, pcy, pb), np.hypot(pcx - fx, pcy - fy)
+    ))
+    heads = _zone_head(idx)
+    zone = heads[pr]
+    nonempty = np.nonzero(cnt)[0]
+    run_of = np.repeat(np.arange(len(nonempty)), cnt[nonempty])
+
+    def kth(v):
+        out = np.full(n, np.inf)
+        if k <= len(np.unique(heads)):  # else no cell has k zones
+            out[nonempty] = _zone_kth(run0[nonempty], run_of, v, zone, k)
+        return out
+
+    U = np.minimum(U, kth(ub))
+    if exact:
+        ev = np.nonzero(~inside & (plb <= U[pc]))[0]
+        if len(ev):
+            fx[ev], fy[ev], d2 = _nearest_feet_flat(
+                idx, pcx[ev], pcy[ev], pr[ev]
             )
-            for m in members
-        ]
-    ) if members else np.zeros((0, 4))
-    object.__setattr__(idx, "_knn_groups", (gb, members))
-    return gb, members
+            ub[ev] = np.minimum(ub[ev], np.sqrt(d2))
+            U = np.minimum(U, kth(ub))
+    # keep = lb(c, bbox) <= T, with lb computed only where the two cheap
+    # bounds around it (M * planar above, latitude-only below) leave the
+    # answer open
+    T = (geom.M_PER_DEG_MAX * KNN_BOUND_MARGIN * (U + 2 * r))[pc]
+    keep = geom.M_PER_DEG_MAX * plb <= T
+    dlat = np.maximum(np.maximum(pb[:, 1] - pcy, pcy - pb[:, 3]), 0.0)
+    open_ = np.nonzero(~keep & (geom.R_GEO_LB * np.radians(dlat) <= T))[0]
+    keep[open_] = geom.bbox_geodesic_lower_bound(
+        pcy[open_], pcx[open_], pb[open_]
+    ) <= T[open_]
+    off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(pc[keep], minlength=n), out=off[1:])
+    return off, pr[keep], (fx[keep], fy[keep]), U
+
+
+def _knn_top(pt, dist, rank, zone, n_pieces: int, k: int):
+    """Per point, its k nearest zones as (point, rank) rows, point-major
+    and nearest first: each zone at its (distance, rank)-smallest piece,
+    zones in (distance, rank) order."""
+    key = pt * n_pieces + zone[rank]
+    o = np.argsort(key)
+    key, pt, dist, rank = key[o], pt[o], dist[o], rank[o]
+    new = np.r_[True, key[1:] != key[:-1]]
+    starts = np.nonzero(new)[0]
+    best_d = np.minimum.reduceat(dist, starts)
+    is_min = dist == best_d[np.cumsum(new) - 1]
+    best_r = np.minimum.reduceat(
+        np.where(is_min, rank, np.iinfo(np.int64).max), starts
+    )
+    best_p = pt[starts]
+    o = np.lexsort((best_r, best_d, best_p))
+    best_p, best_r = best_p[o], best_r[o]
+    in_k = _pos_in_run(best_p) < k
+    return best_p[in_k], best_r[in_k]
 
 
 def knn_zones_batch(
@@ -849,21 +1034,23 @@ def knn_zones_batch(
     JVM-side, so no string crosses the Arrow boundary). A point with a
     NaN or infinite coordinate gets an empty list.
 
-    Two-level candidate stream: pieces are blocked into Morton-ordered
-    groups with union bboxes, so the only dense matrix is (n_points x
-    n_groups). State is flat numpy arrays — a candidate pool (point,
-    rank, bound), per-point group pointers, and per-(point, zone) best
-    distances from which each point's k-th zone distance (kth) is
-    recomputed every round. Groups expand lazily, pruning drops any pool
-    entry whose bound exceeds kth (kth only shrinks, so the drop is
-    permanent-safe), and a point finishes when its pool minimum and its
-    next group bound both exceed kth — no remaining piece can enter or
-    reorder its top-k. Peak memory is O(n x n_groups + expanded
-    candidates) and exact evaluations stay sub-linear in P (both
-    asserted in tests). Containment comes from one ``probe_ranks`` call,
-    distances from one ``_foot_distances`` call per round — the kernel
-    Q5 uses. ``return_stats=True`` also returns the number of EXACT
-    distance evaluations (prescreened pairs are not counted).
+    One exact pass over a short candidate list that holds every piece
+    that can be among the point's k nearest zones: its grid cell's list
+    (``knn_cell_lists``, built at compile time for k up to KNN_MAX_K).
+    A point outside the grid, or any point when k is above KNN_MAX_K,
+    gets its own list instead: the same refinement step the compile
+    runs, from every piece's bbox bounds at the point itself, in chunks
+    of KNN_PAIR_CHUNK (point, piece) pairs. Containment comes from one
+    ``probe_ranks`` call, the distance of every other candidate from
+    ``_foot_distances`` — the kernel Q5 uses. The list's k-th zone bound
+    caps both: a candidate whose bbox lower bound is past it is never
+    evaluated, and (geodesic) one whose foot is past it skips Vincenty;
+    either keeps +inf, which cannot reach the top k. The exact pass runs
+    in chunks of at most KNN_PAIR_CHUNK pairs (or one point's list), so
+    memory is bounded and no (points x pieces) matrix is built.
+    ``return_stats=True`` also returns the number of EXACT distance
+    evaluations (containment hits plus distances run; prescreened pairs
+    are not counted).
 
     ``metric``: "geodesic" (WGS84 meters, reference parity — DEFAULT,
     the fixed-iteration Vincenty the recursive-CTE SQL oracle mirrors)
@@ -872,297 +1059,103 @@ def knn_zones_batch(
     value-verifiable by a SQL oracle)."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric: {metric!r}")
-    geodesic = metric == "geodesic"
-    bbox_bound = (
-        geom.bbox_geodesic_lower_bound if geodesic
-        else geom.bbox_planar_lower_bound
-    )
     lats = np.asarray(lats, dtype=np.float64)
     lons = np.asarray(lons, dtype=np.float64)
     n = len(lats)
-    # a non-finite point is done before it starts: its bounds would be
-    # NaN, and every comparison with kth false, so it would never finish.
-    # It gets an empty list; zeros keep the bound arithmetic quiet.
-    done = ~(np.isfinite(lats) & np.isfinite(lons))
-    if done.any():
-        lats = np.where(done, 0.0, lats)
-        lons = np.where(done, 0.0, lons)
+    n_pieces = idx.n_pieces
+    finite = np.isfinite(lats) & np.isfinite(lons)
+    # zeros keep the arithmetic of a non-finite point (no candidates) quiet
+    lats = np.where(finite, lats, 0.0)
+    lons = np.where(finite, lons, 0.0)
 
-    gb, members = _knn_piece_groups(idx)
-    n_groups = len(members)
-    if n_groups == 0 or done.all():
-        out = _knn_rank_lists(idx, n, k, None)
+    if not n_pieces:
+        out = arrow_list(np.zeros(n + 1, np.int32), np.zeros(0, rank_dtype(idx)))
         return (out, 0) if return_stats else out
 
-    lb_g = bbox_bound(lats[:, None], lons[:, None], gb)  # (n, groups)
-    order_g = np.argsort(lb_g, axis=1, kind="stable")
-    sorted_gb = np.take_along_axis(lb_g, order_g, axis=1)
-
-    # flat group-membership gather tables (members[g] are slices of one
-    # Morton order array)
-    flat_order = np.concatenate(members)
-    member_lens = np.array([len(m) for m in members], dtype=np.int64)
-    member_offs = np.zeros(n_groups + 1, dtype=np.int64)
-    np.cumsum(member_lens, out=member_offs[1:])
-
-    # zone ids as ints (each zone's first rank) so per-(point, zone)
-    # reductions are pure array ops
-    zone_of_rank = _zone_head(idx)
-
-    # candidates evaluated per point per round: large enough to find k
-    # zones quickly (so kth activates pruning), small enough not to
-    # over-evaluate once kth is set: chunk = k beat k+1 on 20k points of
-    # the 454-piece world (1.80 s / 135k evals vs 1.94 s / 167k at chunk
-    # 4, k=3); the floor of 3 keeps k=1 from starving round-1 discovery
-    eval_chunk = max(int(k), 3)
-
-    pool_pt = np.empty(0, dtype=np.int64)
-    pool_rank = np.empty(0, dtype=np.int64)
-    pool_bound = np.empty(0, dtype=np.float64)
-    gptr = np.zeros(n, dtype=np.int64)
-    kth = np.full(n, np.inf)
-    n_eval = 0
-
-    # containment for ALL (point, piece) pairs up front via the compiled
-    # probe index (round 5): the dense-grid PIP kernel answers "which
-    # pieces contain each point" at millions of rows/s — bit-identical
-    # to per-piece contains_inclusive (pytest parity) — so the eval loop
-    # below never calls contains_inclusive per piece. Membership test =
-    # one searchsorted over the flattened (pt * P + rank) key set.
-    c_offsets, c_ranks, _valid = probe_ranks(idx, lats, lons, mode="pipeline")
-    contain_keys = (
-        np.repeat(np.arange(n, dtype=np.int64), np.diff(c_offsets))
-        * idx.n_pieces
-        + c_ranks.astype(np.int64)
+    # candidate list per point: its grid cell's, else (outside the grid,
+    # or k above KNN_MAX_K) its own, cut from every piece. Outside the
+    # grid, D_(k) at a point is at most the nearest cell's bound plus the
+    # distance to that cell's centre (D_(k) is 1-Lipschitz)
+    lon0, lat0, step, nx, ny = idx.knn_grid  # see knn_cell_lists
+    ix = np.clip(np.floor((lons - lon0) / step), 0, nx - 1)
+    iy = np.clip(np.floor((lats - lat0) / step), 0, ny - 1)
+    off_x = lons - (lon0 + (ix + 0.5) * step)
+    off_y = lats - (lat0 + (iy + 0.5) * step)
+    cell = (iy * nx + ix).astype(np.int64)
+    u_own = np.where(k <= KNN_MAX_K,
+                     idx.knn_bound[cell] + np.hypot(off_x, off_y), np.inf)
+    own = finite & (
+        (k > KNN_MAX_K)
+        | (np.abs(off_x) > 0.5 * step) | (np.abs(off_y) > 0.5 * step)
     )
-    contain_keys.sort()
-
-    def contained(pair_pt: np.ndarray, pair_rank: np.ndarray) -> np.ndarray:
-        keys = pair_pt * idx.n_pieces + pair_rank
-        pos = np.searchsorted(contain_keys, keys)
-        ok = pos < len(contain_keys)
-        res = np.zeros(len(keys), dtype=bool)
-        res[ok] = contain_keys[pos[ok]] == keys[ok]
-        return res
-
-    A = None  # deduped per-(pt, zone) bests as (pt, dist, rank)
-
-    while True:
-        # live pool entries = bound <= kth (dead ones can never enter or
-        # reorder the top-k: kth only shrinks)
-        pool_min = np.full(n, np.inf)
-        if len(pool_pt):
-            live = pool_bound <= kth[pool_pt]
-            cnt = np.bincount(pool_pt[live], minlength=n)
-            np.minimum.at(pool_min, pool_pt[live], pool_bound[live])
-        else:
-            cnt = np.zeros(n, dtype=np.int64)
-        next_gb = np.where(
-            gptr < n_groups,
-            sorted_gb[np.arange(n), np.minimum(gptr, n_groups - 1)],
-            np.inf,
+    own = np.nonzero(own)[0]
+    starts = [idx.knn_off[:-1].astype(np.int64)]
+    counts = [np.diff(idx.knn_off).astype(np.int64)]
+    lists = [idx.knn_rank.astype(np.int64)]
+    bounds = [idx.knn_bound]
+    per_chunk = max(1, KNN_PAIR_CHUNK // n_pieces)
+    for s0 in range(0, len(own), per_chunk):
+        pts = own[s0:s0 + per_chunk]
+        o, rk, _, U = _refine_lists(
+            idx, k, lons[pts], lats[pts], KNN_PAD_DEG,
+            np.zeros(len(pts), np.int64),
+            *_root_list(n_pieces), u_own[pts], exact=False,
         )
-        # a point finishes when no live candidate remains AND the group
-        # stream can't produce one (exhausted, or its frontier bound
-        # already exceeds kth)
-        done |= (cnt == 0) & ((gptr >= n_groups) | (next_gb > kth))
-        active = ~done
-        if not active.any():
-            break
+        starts.append(sum(len(x) for x in lists) + o[:-1])
+        counts.append(np.diff(o))
+        lists.append(rk)
+        bounds.append(U + KNN_PAD_DEG)
+    cell[own] = len(idx.knn_bound) + np.arange(len(own))
+    starts, counts, lists, bounds = (
+        np.concatenate(x) for x in (starts, counts, lists, bounds)
+    )
+    if metric == "geodesic":
+        cap = geom.M_PER_DEG_MAX * KNN_BOUND_MARGIN * bounds
+        bbox_bound = geom.bbox_geodesic_lower_bound
+    else:
+        cap = KNN_BOUND_MARGIN * bounds
+        bbox_bound = geom.bbox_planar_lower_bound
+    count = np.where(finite, counts[cell], 0)
 
-        # expansion: one group per needy active point per round — needy =
-        # fewer than eval_chunk live candidates, or the next group's union
-        # bound undercuts the current live-pool minimum
-        expand = (
-            active
-            & (gptr < n_groups)
-            & (next_gb <= kth)
-            & ((cnt < eval_chunk) | (next_gb < pool_min))
-        )
-        if expand.any():
-            pe = np.nonzero(expand)[0]
-            gs = order_g[pe, gptr[pe]]
-            gptr[pe] += 1
-            lens = member_lens[gs]
-            # gather each group's member ranks without a per-point loop;
-            # uniform-length groups (every group but possibly the last)
-            # take a single 2D broadcast gather instead of the
-            # three-repeat CSR construction (round 6)
-            if lens.min() == lens.max():
-                L = int(lens[0])
-                ranks_e = flat_order[
-                    member_offs[gs][:, None] + np.arange(L)
-                ].ravel()
-                rep_pt = np.repeat(pe, L)
-            else:
-                seg = np.repeat(member_offs[gs], lens) + (
-                    np.arange(int(lens.sum()))
-                    - np.repeat(np.cumsum(lens) - lens, lens)
-                )
-                ranks_e = flat_order[seg]
-                rep_pt = np.repeat(pe, lens)
-            bb_e = idx.piece_bbox[ranks_e]
-            # trig-free lat-delta pre-prune (round 5): the central angle
-            # is >= |delta-phi|, so R_GEO_LB * rad(lat-clamp distance)
-            # lower-bounds the geodesic bound itself. A member already
-            # past the point's kth on latitude alone can never become
-            # live (kth only shrinks) — drop it before the full trig
-            # bound and before it ever costs pool bookkeeping. (Planar
-            # metric: dy alone lower-bounds sqrt(dx^2+dy^2) the same
-            # way, in degrees.)
-            dlat = np.maximum(
-                np.maximum(
-                    bb_e[:, 1] - lats[rep_pt], lats[rep_pt] - bb_e[:, 3]
-                ),
-                0.0,
-            )
-            if geodesic:
-                lat_lb = geom.R_GEO_LB * np.radians(dlat)
-            else:
-                lat_lb = dlat
-            alive = lat_lb <= kth[rep_pt]
-            if not alive.all():
-                rep_pt, ranks_e, bb_e = (
-                    rep_pt[alive], ranks_e[alive], bb_e[alive]
-                )
-            if len(rep_pt):
-                pb = bbox_bound(lats[rep_pt], lons[rep_pt], bb_e)
-                pool_pt = np.concatenate([pool_pt, rep_pt])
-                pool_rank = np.concatenate([pool_rank, ranks_e])
-                pool_bound = np.concatenate([pool_bound, pb])
-
-        if not len(pool_pt):
-            continue
-
-        # selection: up to eval_chunk smallest-bound live candidates per
-        # active point (segment-position trick over one lexsort).
-        # NOTE (round 5): lazy group-bound placeholders with front
-        # refinement were tried and reverted — deferred refinement
-        # doubles the round count (5.9 s vs 2.3 s) and immediate take in
-        # loose tie order blows n_eval up 2.5x (14 s); eager per-piece
-        # bounds at expansion give the cheapest total work here.
-        live_idx = np.nonzero((pool_bound <= kth[pool_pt]) & active[pool_pt])[0]
-        take = live_idx[:0]
-        if len(live_idx):
-            # single composite-key introsort (round 6; was a 2-key
-            # lexsort = two stable passes, the largest sort in the
-            # loop). Selection only decides WHICH candidates are
-            # evaluated this round — evaluation is exact and pruning
-            # compares exact bounds against kth — so ordering within
-            # float32-quantized bound ties is free (the quantization is
-            # ~1e-7 relative; nothing like the round-5 loose-group-tie
-            # experiment that blew n_eval up). Non-negative float32
-            # bit patterns sort like the values, so (pt << 32 | bits)
-            # is one int64 key.
-            qb = (
-                pool_bound[live_idx]
-                .astype(np.float32)
-                .view(np.uint32)
-                .astype(np.int64)
-            )
-            o = np.argsort(
-                (pool_pt[live_idx].astype(np.int64) << np.int64(32)) | qb
-            )
-            srt = live_idx[o]
-            take = srt[_pos_in_run(pool_pt[srt]) < eval_chunk]
-
-        # pool upkeep below drops taken entries and permanently-dead
-        # bounds (keep computed AFTER the exact-kth update)
-
-        if len(take):
-            t_pt = pool_pt[take]
-            t_rank = pool_rank[take]
-            ro = np.argsort(t_rank, kind="stable")
-            t_pt, t_rank = t_pt[ro], t_rank[ro]
-            # containment came from the probe index in one shot; the
-            # distance for every NOT-contained pair runs as ONE flat
-            # CSR-vectorized foot call per round, prescreened against
-            # the point's current k-th zone distance: a pair whose
-            # guaranteed lower bound already exceeds it keeps +inf — its
-            # true distance is strictly larger than any final kth (kth
-            # only shrinks), so it can neither enter the top-k nor
-            # wrongly evict a zone. n_eval counts EXACT evaluations only.
-            inside_all = contained(t_pt, t_rank)
-            outside = np.nonzero(~inside_all)[0]
-            dists = np.zeros(len(t_pt))
-            n_eval += len(t_pt) - len(outside)
-            if len(outside):
-                o_pt = t_pt[outside]
-                dists[outside], n_exact = _foot_distances(
-                    idx, lats[o_pt], lons[o_pt], t_rank[outside], metric,
-                    cap=kth[o_pt],
+    contain = _contained_keys(idx, lats, lons)
+    zone = _zone_head(idx)
+    cum = np.cumsum(count)
+    top_pt, top_rank = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    n_eval = 0
+    start = 0
+    while start < n:
+        base = int(cum[start - 1]) if start else 0
+        end = int(np.searchsorted(cum, base + KNN_PAIR_CHUNK, side="right"))
+        end = min(max(end, start + 1), n)
+        c = count[start:end]
+        total = int(c.sum())
+        if total:
+            pt = np.repeat(np.arange(start, end), c)
+            rank = lists[
+                np.repeat(starts[cell[start:end]] - (np.cumsum(c) - c), c)
+                + np.arange(total)
+            ]
+            inside = _in_sorted(contain, pt * n_pieces + rank)
+            dist = np.where(inside, 0.0, np.inf)
+            n_eval += int(inside.sum())
+            # a pair whose bbox is already past its list's bound cannot
+            # be among the k nearest: it keeps +inf, like a capped pair
+            out = np.nonzero(~inside)[0]
+            o_pt = pt[out]
+            out = out[bbox_bound(lats[o_pt], lons[o_pt],
+                                 idx.piece_bbox[rank[out]]) <= cap[cell[o_pt]]]
+            if len(out):
+                o_pt = pt[out]
+                dist[out], n_exact = _foot_distances(
+                    idx, lats[o_pt], lons[o_pt], rank[out], metric,
+                    cap=cap[cell[o_pt]],
                 )
                 n_eval += n_exact
-
-            # per-(point, zone) bests + k-th zone distance, INCREMENTAL
-            # (round 5): only the rows of points TOUCHED this round are
-            # re-deduped/re-sorted — merging the previous bests of
-            # touched points with the new evals preserves the per-(pt,
-            # zone) min, untouched points' bests (and kth) are already
-            # final for this round, and late rounds touch few points
-            if A is None:
-                m_pt, m_dist, m_rank = t_pt, dists, t_rank
-                u_hold = None
-            else:
-                touched = np.zeros(n, dtype=bool)
-                touched[t_pt] = True
-                tm = touched[A[0]]
-                u_hold = (A[0][~tm], A[1][~tm], A[2][~tm])
-                m_pt = np.concatenate([A[0][tm], t_pt])
-                m_dist = np.concatenate([A[1][tm], dists])
-                m_rank = np.concatenate([A[2][tm], t_rank])
-            m_zone = zone_of_rank[m_rank]
-            # composite (pt, zone) primary key; zone ids are ranks < P,
-            # so the packing is collision-free. Per-key best =
-            # (min dist, then min rank): one int64 introsort on the key
-            # plus two segment reductions (round 6) — exactly the first
-            # row the former (rank, dist, key) lexsort would surface,
-            # without its three stable passes.
-            m_key = m_pt * idx.n_pieces + m_zone
-            o1 = np.argsort(m_key)
-            k1 = m_key[o1]
-            p1, d1, r1 = m_pt[o1], m_dist[o1], m_rank[o1]
-            new_seg1 = np.r_[True, k1[1:] != k1[:-1]]
-            starts1 = np.nonzero(new_seg1)[0]
-            seg_id1 = np.cumsum(new_seg1) - 1
-            bd = np.minimum.reduceat(d1, starts1)
-            is_min = d1 == bd[seg_id1]
-            r_masked = np.where(
-                is_min, r1.astype(np.int64), np.iinfo(np.int64).max
-            )
-            br = np.minimum.reduceat(r_masked, starts1).astype(r1.dtype)
-            bp = p1[starts1]
-            # kth update — only touched points can have a new k-th
-            o2 = np.lexsort((bd, bp))
-            p2, d2 = bp[o2], bd[o2]
-            at_k = _pos_in_run(p2) == (k - 1)
-            kth[p2[at_k]] = d2[at_k]
-            if u_hold is None:
-                A = (bp, bd, br)
-            else:
-                A = (
-                    np.concatenate([u_hold[0], bp]),
-                    np.concatenate([u_hold[1], bd]),
-                    np.concatenate([u_hold[2], br]),
-                )
-        keep = pool_bound <= kth[pool_pt]
-        if len(take):
-            keep[take] = False
-        pool_pt, pool_rank, pool_bound = (
-            pool_pt[keep], pool_rank[keep], pool_bound[keep]
-        )
-
-    out = _knn_rank_lists(idx, n, k, A)
-    return (out, n_eval) if return_stats else out
-
-
-def _knn_rank_lists(idx: CompiledIndex, n: int, k: int, bests):
-    """The first k of each point's (dist, rank)-ordered per-zone bests
-    ``(pt, dist, rank)`` as one pa.ListArray of ranks."""
-    bp, bd, br = bests if bests is not None else (np.zeros(0, np.int64),) * 3
-    o = np.lexsort((br, bd, bp))  # ranks unique per point
-    p, r = bp[o], br[o]
-    in_k = _pos_in_run(p) < k
+            p, r = _knn_top(pt, dist, rank, zone, n_pieces, k)
+            top_pt.append(p)
+            top_rank.append(r)
+        start = end
     offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(np.bincount(p[in_k], minlength=n), out=offsets[1:])
-    return arrow_list(offsets, r[in_k].astype(rank_dtype(idx)))
+    np.cumsum(np.bincount(np.concatenate(top_pt), minlength=n), out=offsets[1:])
+    out = arrow_list(offsets, np.concatenate(top_rank).astype(rank_dtype(idx)))
+    return (out, n_eval) if return_stats else out
