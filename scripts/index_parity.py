@@ -14,7 +14,13 @@ Prints one SHA-256 per line for:
   is printed beside the digest, not hashed), and ``containing_distances``
   offsets, heads and distances, on 20k seeded big454 points (NaN, +-inf
   and +-90 rows included; 2k points for k = 4) for each metric, and kNN
-  (k = 3) on 4k huge-world points.
+  (k = 3) on 4k huge-world points;
+- the boundary pass on each world (lines ``assign``): ``probe_ranks``
+  (pipeline mode) offsets, ranks and ``valid``, and the
+  ``probe_arrow(with_all=False)`` first ranks, on 20k seeded points over
+  the pieces' bbox union padded by a tenth (out-of-region rows for the
+  clipped region), 2k exact piece vertices, and NaN, +-inf, +-90/+-180
+  rows and rows one ulp past them.
 
 Run it on two checkouts and diff the output: identical lines mean a
 refactor left compile and kernel output bit-identical. Run it from a
@@ -61,6 +67,25 @@ def digest(*values) -> str:
     return h.hexdigest()[:16]
 
 
+def assign_points(idx, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """Seeded (lats, lons) for the ``assign`` lines of one index."""
+    rng = np.random.default_rng(seed)
+    bb = idx.piece_bbox
+    lo = bb[:, :2].min(axis=0).astype(np.float64)
+    hi = bb[:, 2:].max(axis=0).astype(np.float64)
+    pad = (hi - lo) / 10
+    lons = rng.uniform(lo[0] - pad[0], hi[0] + pad[0], 20_000)
+    lats = rng.uniform(lo[1] - pad[1], hi[1] + pad[1], 20_000)
+    vv = idx.verts[rng.integers(0, len(idx.verts), 2_000)].astype(np.float64)
+    past90, past180 = np.nextafter(90.0, 91.0), np.nextafter(180.0, 181.0)
+    special_lats = [np.nan, 0.0, np.inf, -np.inf, 0.0, 0.0, 90.0, -90.0,
+                    90.0, -90.0, past90, -past90, 0.0, 0.0]
+    special_lons = [0.0, np.nan, 0.0, 0.0, np.inf, -np.inf, 180.0, -180.0,
+                    -180.0, 180.0, 0.0, 0.0, past180, -past180]
+    return (np.r_[special_lats, vv[:, 1], lats],
+            np.r_[special_lons, vv[:, 0], lons])
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", required=True, help="checkout to fingerprint")
@@ -95,6 +120,16 @@ def main() -> None:
               f"{idx.nbytes()} bytes)")
         lists_line("index", name, idx)
         built[name] = idx
+
+    for seed, (name, idx) in enumerate(built.items()):
+        lats, lons = assign_points(idx, seed)
+        t0 = time.perf_counter()
+        off, ranks, valid = probe.probe_ranks(idx, lats, lons, mode="pipeline")
+        _, first, _ = probe.probe_arrow(idx, lats, lons, mode="pipeline",
+                                        with_all=False)
+        dt = time.perf_counter() - t0
+        print(f"assign {name:10s} {digest(off, ranks, valid, np.asarray(first))}"
+              f"  ({int(valid.sum())} valid, {len(ranks)} pairs, {dt:.2f} s)")
 
     spark = session.get_spark("index_parity", master="local[2]")
     for name in ("synth", "synth_clip", "big454"):

@@ -506,35 +506,39 @@ def test_merge_levels_rejects_resolution_above_max():
 
 
 def test_nearest_feet_bucket_prune_parity():
-    """Round-6 foot-search bucket prune: the evaluated segment subset
-    must always contain every minimum-achieving segment, so (fx, fy,
-    d2min) are bitwise identical to the full scan — including d2=0
-    ties from points sitting exactly on piece vertices (first-minimum
-    tie-break)."""
+    """The foot search skips segment buckets that are provably farther
+    than the minimum, so (fx, fy, d2min) must be bitwise those of the
+    full per-piece scan, oracle.nearest_boundary_point, with the
+    first-minimum tie-break: on big454 (about 90 segments a piece),
+    including d2 = 0 ties from 2000 points sitting exactly on piece
+    vertices, and on the synth world, whose pieces have 4 to 12 segments
+    (one bucket each)."""
+    from tzengine import oracle
     from tzengine.bigworld import big_world
 
-    idx = index.compile_index(big_world(), -90, -180, 90, 180, "big1")
     rng = np.random.default_rng(9)
-    n = 20000
-    plon = rng.uniform(-60, 60, n)
-    plat = rng.uniform(-60, 60, n)
-    prank = rng.integers(0, idx.n_pieces, n).astype(np.int64)
-    vsel = rng.integers(0, idx.n_pieces, 2000)
-    vv = np.array([idx.piece_rings(int(r))[0][0] for r in vsel])
-    plon = np.concatenate([plon, vv[:, 0]])
-    plat = np.concatenate([plat, vv[:, 1]])
-    prank = np.concatenate([prank, vsel]).astype(np.int64)
+    for pieces, lo, hi in ((big_world(), -60, 60), (synthetic_world(), -1, 11)):
+        idx = index.compile_index(pieces, -90, -180, 90, 180, "big1")
+        n = 20000
+        plon = rng.uniform(lo, hi, n)
+        plat = rng.uniform(lo, hi, n)
+        prank = rng.integers(0, idx.n_pieces, n).astype(np.int64)
+        vsel = rng.integers(0, idx.n_pieces, 2000)
+        vv = np.array([idx.piece_rings(int(r))[0][0] for r in vsel])
+        plon = np.concatenate([plon, vv[:, 0]])
+        plat = np.concatenate([plat, vv[:, 1]])
+        prank = np.concatenate([prank, vsel]).astype(np.int64)
 
-    pruned = probe._nearest_feet_flat(idx, plon, plat, prank)
-    assert getattr(idx, "_seg_buckets", None) is not None  # non-vacuous
-    old = probe.FOOT_PRUNE_MIN_SEGS
-    probe.FOOT_PRUNE_MIN_SEGS = 1 << 60
-    try:
-        full = probe._nearest_feet_flat(idx, plon, plat, prank)
-    finally:
-        probe.FOOT_PRUNE_MIN_SEGS = old
-    for a, b in zip(pruned, full):
-        assert np.array_equal(a, b)
+        fx, fy, d2 = probe._nearest_feet_flat(idx, plon, plat, prank)
+        for r in np.unique(prank):
+            sel = prank == r
+            foot = oracle.nearest_boundary_point(
+                np.c_[plon[sel], plat[sel]], idx.piece_rings(int(r))
+            )
+            assert np.array_equal(fx[sel], foot[:, 0])
+            assert np.array_equal(fy[sel], foot[:, 1])
+            ref_d2 = (plon[sel] - foot[:, 0]) ** 2 + (plat[sel] - foot[:, 1]) ** 2
+            assert np.array_equal(d2[sel], ref_d2)
 
 
 def test_arrow_f64_offset_nulls_and_empty():

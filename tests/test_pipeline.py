@@ -382,9 +382,13 @@ def test_dedup_clusters_long_chain_pointer_jumping(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "id_a long, id_b long"
     )
-    got = {r.doc_id: r.canonical_id
-           for r in dedup.dedup_clusters(nodes, pairs).collect()}
+    out = dedup.dedup_clusters(nodes, pairs)
+    got = {r.doc_id: r.canonical_id for r in out.collect()}
     assert got == {i: 0 for i in range(30)}
+    # every round cuts the lineage: the result's plan holds no round's
+    # joins (a plan that kept them would double in size every round)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "Join" not in analyzed, analyzed
     # and non-convergence raises instead of silently splitting clusters
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.dedup_clusters(nodes, pairs, max_iter=1)

@@ -135,13 +135,6 @@ class CompiledIndex:
             rings.append(self.verts[self.vert_offsets[ri] : self.vert_offsets[ri + 1]])
         return rings
 
-    def piece_segments(self, rank: int) -> tuple[np.ndarray, np.ndarray]:
-        s, e = self.seg_offsets[rank], self.seg_offsets[rank + 1]
-        return (
-            np.asarray(self.seg_a[s:e], dtype=np.float64),
-            np.asarray(self.seg_b[s:e], dtype=np.float64),
-        )
-
     def nbytes(self) -> int:
         n = (self.verts.nbytes + self.ring_offsets.nbytes
              + self.vert_offsets.nbytes + self.seg_a.nbytes + self.seg_b.nbytes
@@ -700,11 +693,10 @@ def merge_levels(
 # binary-search path at ~40% of its lookup cost). A ~1 MiB table is
 # still L2-resident; the waste-ratio gate keeps sparse levels out at
 # ANY world size, so this is not a local[32] tune. With merge_levels
-# leaving 1-2 lookup levels per world, the per-level ceiling equals the
-# total budget (the per-level split existed to stop one level starving
-# the others); the waste-ratio and total caps still bound memory.
+# leaving 1-2 lookup levels per world, a level may take the whole total
+# budget (there is no per-level ceiling below it); the waste-ratio and
+# total caps bound memory.
 DENSE_LEVEL_CAP = 1 << 17  # always-admit size (512 KiB int32)
-DENSE_LEVEL_HARD_CAP = 1 << 21  # absolute per-level ceiling (8 MiB)
 DENSE_WASTE_RATIO = 16  # admit larger tables only if size <= 16x cells
 DENSE_TOTAL_CAP = 1 << 21  # max table entries across all levels (8 MiB)
 
@@ -740,10 +732,7 @@ def build_level_dense(
         w = int(ix.max()) - ix0 + 1
         h = int(iy.max()) - iy0 + 1
         size = (w + 2) * (h + 2)
-        admit = size <= DENSE_LEVEL_CAP or (
-            size <= DENSE_LEVEL_HARD_CAP
-            and size <= DENSE_WASTE_RATIO * len(uniq)
-        )
+        admit = size <= DENSE_LEVEL_CAP or size <= DENSE_WASTE_RATIO * len(uniq)
         if not admit or size > budget:
             continue
         tbl = np.zeros(size, dtype=np.int32)

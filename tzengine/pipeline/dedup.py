@@ -494,9 +494,13 @@ def dedup_clusters(
         .distinct()
         .persist()
     )
+    # labels are an eager local checkpoint every round: each round's plan
+    # reads the previous labels twice (step and pointer jump), so a plan
+    # that kept its lineage would double every round; a dropped
+    # checkpoint's blocks go with its RDD (Spark's ContextCleaner)
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).persist()
+    ).localCheckpoint()
     converged = False
     for _ in range(max_iter):
         neighbor_min = (
@@ -524,7 +528,7 @@ def dedup_clusters(
                     F.col("label"), F.coalesce(F.col("l_label"), F.col("label"))
                 ).alias("label"),
             )
-            .persist()
+            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -533,7 +537,6 @@ def dedup_clusters(
             .limit(1)
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             converged = True

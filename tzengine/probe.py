@@ -20,11 +20,27 @@ from .index import CompiledIndex
 
 OUTSIDE_MSG = "Requested point is outside the initialized area"
 
-# boundary-pass per-segment invariant cache: 11 float64 arrays, so the
-# footprint is 88 B/segment — cap where it stops being LLC-resident
-# (128k segs = 11 MB). Bigger worlds keep inline per-pair compute (the
-# gathers would be DRAM-random and cost more than the arithmetic).
-BSEG_CACHE_MAX_SEGS = 1 << 17
+
+def _expand(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """CSR expansion: ``starts[i] + j`` for every j < ``counts[i]``,
+    run after run (int64)."""
+    counts = counts.astype(np.int64, copy=False)
+    heads = np.cumsum(counts) - counts
+    return np.repeat(starts - heads, counts) + np.arange(int(counts.sum()))
+
+
+def _chunks(counts: np.ndarray, budget: int):
+    """Consecutive slices [start, end) of the runs, each holding at most
+    ``budget`` items (``counts[i]`` in run i), or one run over the budget
+    on its own."""
+    cum = np.cumsum(counts)
+    start = 0
+    while start < len(cum):
+        base = int(cum[start - 1]) if start else 0
+        end = int(np.searchsorted(cum, base + budget, side="right"))
+        end = max(end, start + 1)
+        yield start, end
+        start = end
 
 
 def region_guard(idx: CompiledIndex, lats: np.ndarray, lons: np.ndarray) -> np.ndarray:
@@ -129,18 +145,10 @@ def probe_ranks(
                 if not len(hit_pts):
                     continue
                 hp = pos_c[hit]
-            starts, ends = offsets[hp], offsets[hp + 1]
-            counts = ends - starts
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            # CSR expand, fully vectorized: for every (point, entry) pair,
-            # entry_idx = start_of_run + position_within_run
-            rep_pts = np.repeat(hit_pts, counts)
-            run_heads = np.repeat(np.cumsum(counts) - counts, counts)
-            entry_idx = np.repeat(starts, counts) + (np.arange(total) - run_heads)
-            pt_idx_parts.append(rep_pts)
-            ent_parts.append(ent_ids[entry_idx])
+            starts = offsets[hp]
+            counts = offsets[hp + 1] - starts
+            pt_idx_parts.append(np.repeat(hit_pts, counts))
+            ent_parts.append(ent_ids[_expand(starts, counts)])
 
     if pt_idx_parts:
         pt_idx = np.concatenate(pt_idx_parts)
@@ -179,95 +187,30 @@ def probe_ranks(
         py_all = lats[pt_idx[bsel]]
         cx_all = idx.ent_cx[ents_all]
         cy_all = idx.ent_cy[ents_all]
-        cum = np.cumsum(k_all)
-
-        # per-SEGMENT invariants, computed once per index instead of
-        # once per (candidate, segment) pair (round 6): dx/dy, the
-        # eps-padded bbox, and the colinearity threshold are functions
-        # of the segment endpoints alone — gathered per pair below,
-        # they replace two subtractions, four min/max passes, four eps
-        # adds, a hypot and a max+multiply with six reads of the SAME
-        # doubles (float32 storage upcasts exactly, and every
-        # precomputed expression is the AST the inline code evaluated,
-        # so all predicates stay bit-identical). ADAPTIVE: above
-        # BSEG_CACHE_MAX_SEGS the eleven float64 arrays stop being
-        # cache-resident and the extra gathers cost more DRAM misses
-        # than the arithmetic they save (measured: 1M-segment world
-        # regresses, 48k-segment world gains ~15%), so large worlds
-        # keep the inline compute (they still get the hoisted
-        # cross-query below, which is free either way).
-        bcache = getattr(idx, "_bseg_cache", None)
-        if bcache is None and len(idx.seg_a) <= BSEG_CACHE_MAX_SEGS:
-            c_ax = np.ascontiguousarray(idx.seg_a[:, 0], dtype=np.float64)
-            c_ay = np.ascontiguousarray(idx.seg_a[:, 1], dtype=np.float64)
-            c_bx = np.ascontiguousarray(idx.seg_b[:, 0], dtype=np.float64)
-            c_by = np.ascontiguousarray(idx.seg_b[:, 1], dtype=np.float64)
-            c_dx = c_bx - c_ax
-            c_dy = c_by - c_ay
-            c_thr = geom.ON_EDGE_EPS * np.maximum(
-                np.hypot(c_dx, c_dy), 1.0
-            )
-            c_mnx = np.minimum(c_ax, c_bx) - geom.ON_EDGE_EPS
-            c_mxx = np.maximum(c_ax, c_bx) + geom.ON_EDGE_EPS
-            c_mny = np.minimum(c_ay, c_by) - geom.ON_EDGE_EPS
-            c_mxy = np.maximum(c_ay, c_by) + geom.ON_EDGE_EPS
-            bcache = (
-                c_ax, c_ay, c_bx, c_by, c_dx, c_dy,
-                c_thr, c_mnx, c_mxx, c_mny, c_mxy,
-            )
-            object.__setattr__(idx, "_bseg_cache", bcache)
-
         # chunk the (candidate x local-segment) pair expansion so the
         # temporaries stay cache-resident instead of streaming multi-MB
         # arrays through DRAM (the 8-core ladder step is bandwidth-bound
         # before it is compute-bound)
         PAIR_CHUNK = 1 << 16
-        start = 0
-        n_b = len(bsel)
-        while start < n_b:
-            base = int(cum[start - 1]) if start else 0
-            end = int(np.searchsorted(cum, base + PAIR_CHUNK, side="left")) + 1
-            end = min(max(end, start + 1), n_b)
+        for start, end in _chunks(k_all, PAIR_CHUNK):
             ents = ents_all[start:end]
             k = k_all[start:end]
-            total = int(cum[end - 1] - base)
             rep_pair = np.repeat(np.arange(end - start), k)
-            run_heads = np.repeat(np.cumsum(k) - k, k)
-            seg_pos = np.repeat(idx.ent_seg_off[ents], k) + (
-                np.arange(total) - run_heads
-            )
-            seg_ids = idx.ent_seg_idx[seg_pos]
+            seg_ids = idx.ent_seg_idx[_expand(idx.ent_seg_off[ents], k)]
             # gathered slices upcast to float64 BEFORE any arithmetic:
             # float32 storage is lossless (index.py), so every predicate
             # below is bit-identical to the float64-storage result
-            if bcache is not None:
-                (
-                    c_ax, c_ay, c_bx, c_by, c_dx, c_dy,
-                    c_thr, c_mnx, c_mxx, c_mny, c_mxy,
-                ) = bcache
-                ax = c_ax[seg_ids]
-                ay = c_ay[seg_ids]
-                bx = c_bx[seg_ids]
-                by = c_by[seg_ids]
-                dx = c_dx[seg_ids]
-                dy = c_dy[seg_ids]
-                thr = c_thr[seg_ids]
-                mnx = c_mnx[seg_ids]
-                mxx = c_mxx[seg_ids]
-                mny = c_mny[seg_ids]
-                mxy = c_mxy[seg_ids]
-            else:
-                ax = idx.seg_a[seg_ids, 0].astype(np.float64, copy=False)
-                ay = idx.seg_a[seg_ids, 1].astype(np.float64, copy=False)
-                bx = idx.seg_b[seg_ids, 0].astype(np.float64, copy=False)
-                by = idx.seg_b[seg_ids, 1].astype(np.float64, copy=False)
-                dx = bx - ax
-                dy = by - ay
-                thr = geom.ON_EDGE_EPS * np.maximum(np.hypot(dx, dy), 1.0)
-                mnx = np.minimum(ax, bx) - geom.ON_EDGE_EPS
-                mxx = np.maximum(ax, bx) + geom.ON_EDGE_EPS
-                mny = np.minimum(ay, by) - geom.ON_EDGE_EPS
-                mxy = np.maximum(ay, by) + geom.ON_EDGE_EPS
+            ax = idx.seg_a[seg_ids, 0].astype(np.float64, copy=False)
+            ay = idx.seg_a[seg_ids, 1].astype(np.float64, copy=False)
+            bx = idx.seg_b[seg_ids, 0].astype(np.float64, copy=False)
+            by = idx.seg_b[seg_ids, 1].astype(np.float64, copy=False)
+            dx = bx - ax
+            dy = by - ay
+            thr = geom.ON_EDGE_EPS * np.maximum(np.hypot(dx, dy), 1.0)
+            mnx = np.minimum(ax, bx) - geom.ON_EDGE_EPS
+            mxx = np.maximum(ax, bx) + geom.ON_EDGE_EPS
+            mny = np.minimum(ay, by) - geom.ON_EDGE_EPS
+            mxy = np.maximum(ay, by) + geom.ON_EDGE_EPS
             px = px_all[start:end][rep_pair]
             py = py_all[start:end][rep_pair]
             cx = cx_all[start:end][rep_pair]
@@ -301,7 +244,6 @@ def probe_ranks(
             confirmed[bsel[start:end]] = on_any | (
                 idx.ent_center[ents] ^ parity
             )
-            start = end
 
     pt_idx = pt_idx[confirmed]
     cand_rank = cand_rank[confirmed]
@@ -537,24 +479,6 @@ def distance_from_boundary_batch(
     return out
 
 
-def _seg_flat_cache(idx: CompiledIndex):
-    """Per-index cache of float64 segment components + the pair-invariant
-    dx/dy/len2 (len2 stays a gathered-then-computed EXACT product of
-    the same doubles, so the foot's division is bit-identical)."""
-    flat = getattr(idx, "_seg_flat", None)
-    if flat is None:
-        s_ax = np.ascontiguousarray(idx.seg_a[:, 0], dtype=np.float64)
-        s_ay = np.ascontiguousarray(idx.seg_a[:, 1], dtype=np.float64)
-        s_bx = np.ascontiguousarray(idx.seg_b[:, 0], dtype=np.float64)
-        s_by = np.ascontiguousarray(idx.seg_b[:, 1], dtype=np.float64)
-        s_dx = s_bx - s_ax
-        s_dy = s_by - s_ay
-        s_len2 = s_dx * s_dx + s_dy * s_dy
-        flat = (s_ax, s_ay, s_dx, s_dy, s_len2)
-        object.__setattr__(idx, "_seg_flat", flat)
-    return flat
-
-
 # Foot-search bucket pruning (round 6): segments of each piece are tiled
 # into buckets of FOOT_BUCKET consecutive segments with an exact bbox;
 # per (point, piece) pair a cheap upper bound U (exact foot distance to
@@ -567,48 +491,46 @@ def _seg_flat_cache(idx: CompiledIndex):
 # so float rounding cannot flip an exclusion.
 FOOT_BUCKET = 16
 FOOT_PRUNE_MARGIN = 1.0 + 1e-9
-FOOT_PRUNE_MIN_SEGS = 3 * FOOT_BUCKET  # below this a piece scan is cheap
 # (pair, segment) rows evaluated per chunk of the foot search
 FOOT_PAIR_CHUNK = 1 << 19
 
 
-def _seg_bucket_cache(idx: CompiledIndex):
-    cached = getattr(idx, "_seg_buckets", None)
+def _seg_cache(idx: CompiledIndex):
+    """Per-index cache of the foot search's segment arrays: ``flat`` =
+    float64 segment start + the pair-invariant dx/dy/len2 (len2 stays a
+    gathered-then-computed EXACT product of the same doubles, so the
+    foot's division is bit-identical), and ``buckets`` = the bucket CSR
+    per piece with each bucket's segment span and exact bbox."""
+    cached = getattr(idx, "_foot_segs", None)
     if cached is not None:
         return cached
+    ax = np.ascontiguousarray(idx.seg_a[:, 0], dtype=np.float64)
+    ay = np.ascontiguousarray(idx.seg_a[:, 1], dtype=np.float64)
+    bx = np.ascontiguousarray(idx.seg_b[:, 0], dtype=np.float64)
+    by = np.ascontiguousarray(idx.seg_b[:, 1], dtype=np.float64)
+    dx = bx - ax
+    dy = by - ay
+    flat = (ax, ay, dx, dy, dx * dx + dy * dy)
+
     so = idx.seg_offsets.astype(np.int64)
     counts = np.diff(so)
     nb = (counts + FOOT_BUCKET - 1) // FOOT_BUCKET
     pb_off = np.zeros(len(nb) + 1, dtype=np.int64)
     np.cumsum(nb, out=pb_off[1:])
-    total = int(pb_off[-1])
-    piece_of = np.repeat(np.arange(len(nb)), nb)
-    k_in = np.arange(total) - np.repeat(pb_off[:-1], nb)
-    b_lo = so[piece_of] + k_in * FOOT_BUCKET
-    b_hi = np.minimum(b_lo + FOOT_BUCKET, so[piece_of + 1])
+    b_lo = np.repeat(so[:-1], nb) + FOOT_BUCKET * _expand(np.zeros_like(nb), nb)
+    b_hi = np.minimum(b_lo + FOOT_BUCKET, np.repeat(so[1:], nb))
     # exact bbox over BOTH endpoints (bucket spans tile the segment
     # array in order, so b_lo is a valid reduceat starts array)
-    a0 = np.ascontiguousarray(idx.seg_a[:, 0], dtype=np.float64)
-    a1 = np.ascontiguousarray(idx.seg_a[:, 1], dtype=np.float64)
-    b0 = np.ascontiguousarray(idx.seg_b[:, 0], dtype=np.float64)
-    b1 = np.ascontiguousarray(idx.seg_b[:, 1], dtype=np.float64)
-    if total:
-        mnx = np.minimum(
-            np.minimum.reduceat(a0, b_lo), np.minimum.reduceat(b0, b_lo)
-        )
-        mxx = np.maximum(
-            np.maximum.reduceat(a0, b_lo), np.maximum.reduceat(b0, b_lo)
-        )
-        mny = np.minimum(
-            np.minimum.reduceat(a1, b_lo), np.minimum.reduceat(b1, b_lo)
-        )
-        mxy = np.maximum(
-            np.maximum.reduceat(a1, b_lo), np.maximum.reduceat(b1, b_lo)
+    if len(b_lo):
+        bbox = tuple(
+            red(red.reduceat(a, b_lo), red.reduceat(b, b_lo))
+            for red, a, b in ((np.minimum, ax, bx), (np.maximum, ax, bx),
+                              (np.minimum, ay, by), (np.maximum, ay, by))
         )
     else:
-        mnx = mxx = mny = mxy = np.zeros(0)
-    cached = (pb_off, b_lo, b_hi, mnx, mxx, mny, mxy)
-    object.__setattr__(idx, "_seg_buckets", cached)
+        bbox = (np.zeros(0),) * 4
+    cached = (flat, (pb_off, b_lo, b_hi) + bbox)
+    object.__setattr__(idx, "_foot_segs", cached)
     return cached
 
 
@@ -621,7 +543,8 @@ def _eval_feet(flat, seg_pos, px, py):
     dx = s_dx[seg_pos]
     dy = s_dy[seg_pos]
     len2 = s_len2[seg_pos]
-    t = ((px - ax) * dx + (py - ay) * dy) / len2
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = ((px - ax) * dx + (py - ay) * dy) / len2
     t = np.where(len2 > 0, np.clip(t, 0.0, 1.0), 0.0)
     cx = ax + t * dx
     cy = ay + t * dy
@@ -648,12 +571,13 @@ def _nearest_feet_flat(
     arithmetic), the same foot AST, and the same FIRST-minimum tie-break
     (position of the first d² equal to the exact segment-run minimum —
     np.minimum.reduceat performs only comparisons, so the run minimum is
-    one of the original floats and the equality test is exact). When the
-    average piece is large enough, the bucket prune (see FOOT_BUCKET)
-    skips segments that are PROVABLY strictly farther than the minimum —
-    the evaluated subset always contains every minimum-achieving
-    segment, so outputs (incl. the tie-break) are unchanged; parity is
-    pinned by test_nearest_feet_bucket_prune_parity.
+    one of the original floats and the equality test is exact). The
+    bucket prune (see FOOT_BUCKET; a piece of one bucket has nothing to
+    prune) skips segments that are PROVABLY strictly farther than the
+    minimum — the evaluated subset always contains every
+    minimum-achieving segment, so outputs (incl. the tie-break) are those
+    of the full scan; parity with the oracle is pinned by
+    test_nearest_feet_bucket_prune_parity.
 
     Returns (fx, fy, d2min) each (n_pairs,) float64 — d2min is the
     squared planar degree distance (sqrt of it == the planar metric).
@@ -666,91 +590,49 @@ def _nearest_feet_flat(
     fx = np.empty(n_pairs)
     fy = np.empty(n_pairs)
     d2m = np.empty(n_pairs)
-    flat = _seg_flat_cache(idx)
-    k_all = (
-        idx.seg_offsets[pair_rank + 1] - idx.seg_offsets[pair_rank]
-    ).astype(np.int64)
+    flat, (pb_off, b_lo, b_hi, mnx, mxx, mny, mxy) = _seg_cache(idx)
+    nb = pb_off[pair_rank + 1] - pb_off[pair_rank]
+    heads = np.cumsum(nb) - nb
+    bk_id = _expand(pb_off[pair_rank], nb)
+    # a pair with one bucket keeps it; the others prune theirs
+    keep = np.ones(len(bk_id), dtype=bool)
+    cut = np.flatnonzero(nb > 1)
+    nbc = nb[cut]
+    rows = _expand(heads[cut], nbc)
+    bid = bk_id[rows]
+    bpx = np.repeat(pair_lon[cut], nbc)
+    bpy = np.repeat(pair_lat[cut], nbc)
+    # upper bound: exact foot d² to one representative segment per
+    # bucket (its first) — attainable, so U >= the pair's true min
+    _cx, _cy, rep_d2 = _eval_feet(flat, b_lo[bid], bpx, bpy)
+    U = np.minimum.reduceat(rep_d2, np.cumsum(nbc) - nbc)
+    # lower bound: squared distance to the bucket bbox (every segment
+    # lies inside its bucket's bbox)
+    ddx = np.maximum(np.maximum(mnx[bid] - bpx, bpx - mxx[bid]), 0.0)
+    ddy = np.maximum(np.maximum(mny[bid] - bpy, bpy - mxy[bid]), 0.0)
+    keep[rows] = ddx * ddx + ddy * ddy <= np.repeat(U * FOOT_PRUNE_MARGIN, nbc)
+    # expand kept buckets to their segments (pair-major, original
+    # segment order preserved within each pair)
+    seg_counts = np.where(keep, b_hi[bk_id] - b_lo[bk_id], 0)
+    seg_pos_all = _expand(b_lo[bk_id], seg_counts)
+    k_eval = np.add.reduceat(seg_counts, heads)
+    seg_off = np.cumsum(k_eval) - k_eval
 
-    use_prune = n_pairs > 0 and (
-        k_all.sum() >= n_pairs * FOOT_PRUNE_MIN_SEGS
-    )
-    if use_prune:
-        pb_off, b_lo, b_hi, mnx, mxx, mny, mxy = _seg_bucket_cache(idx)
-        nb = (pb_off[pair_rank + 1] - pb_off[pair_rank]).astype(np.int64)
-        tot_b = int(nb.sum())
-        bk_pair = np.repeat(np.arange(n_pairs), nb)
-        bk_id = np.repeat(pb_off[pair_rank], nb) + (
-            np.arange(tot_b) - np.repeat(np.cumsum(nb) - nb, nb)
-        )
-        bpx = pair_lon[bk_pair]
-        bpy = pair_lat[bk_pair]
-        # upper bound: exact foot d² to one representative segment per
-        # bucket (its first) — attainable, so U >= the pair's true min
-        with np.errstate(divide="ignore", invalid="ignore"):
-            _cx, _cy, rep_d2 = _eval_feet(flat, b_lo[bk_id], bpx, bpy)
-        b_starts = (np.cumsum(nb) - nb).astype(np.int64)
-        U = np.minimum.reduceat(rep_d2, b_starts)
-        # lower bound: squared distance to the bucket bbox (every
-        # segment lies inside its bucket's bbox)
-        ddx = np.maximum(
-            np.maximum(mnx[bk_id] - bpx, bpx - mxx[bk_id]), 0.0
-        )
-        ddy = np.maximum(
-            np.maximum(mny[bk_id] - bpy, bpy - mxy[bk_id]), 0.0
-        )
-        lb = ddx * ddx + ddy * ddy
-        keep = lb <= U[bk_pair] * FOOT_PRUNE_MARGIN
-        kb_pair = bk_pair[keep]
-        kb_id = bk_id[keep]
-        seg_counts = b_hi[kb_id] - b_lo[kb_id]
-        # per-pair kept-segment totals drive the chunking below
-        k_eval = np.bincount(kb_pair, weights=seg_counts, minlength=n_pairs
-                             ).astype(np.int64)
-        # expand kept buckets to their segments (pair-major, original
-        # segment order preserved within each pair)
-        tot_s = int(seg_counts.sum())
-        srep = np.repeat(np.arange(len(kb_id)), seg_counts)
-        seg_pos_all = np.repeat(b_lo[kb_id], seg_counts) + (
-            np.arange(tot_s)
-            - np.repeat(np.cumsum(seg_counts) - seg_counts, seg_counts)
-        )
-        rep_all = kb_pair[srep]
-    else:
-        k_eval = k_all
-        seg_pos_all = None
-        rep_all = None
-
-    cum = np.cumsum(k_eval)
-    start = 0
-    with np.errstate(divide="ignore", invalid="ignore"):
-        while start < n_pairs:
-            base = int(cum[start - 1]) if start else 0
-            end = int(np.searchsorted(
-                cum, base + FOOT_PAIR_CHUNK, side="left")) + 1
-            end = min(max(end, start + 1), n_pairs)
-            k = k_eval[start:end]
-            total = int(cum[end - 1] - base)
-            run_starts = (np.cumsum(k) - k).astype(np.int64)
-            if use_prune:
-                seg_pos = seg_pos_all[base:base + total]
-                rep = rep_all[base:base + total] - start
-            else:
-                rep = np.repeat(np.arange(end - start), k)
-                seg_pos = np.repeat(
-                    idx.seg_offsets[pair_rank[start:end]], k
-                ) + (np.arange(total) - np.repeat(run_starts, k))
-            px = pair_lon[start:end][rep]
-            py = pair_lat[start:end][rep]
-            cx, cy, d2 = _eval_feet(flat, seg_pos, px, py)
-            dmin = np.minimum.reduceat(d2, run_starts)
-            pos = np.arange(total)
-            first = np.minimum.reduceat(
-                np.where(d2 == np.repeat(dmin, k), pos, total), run_starts
-            )
-            fx[start:end] = cx[first]
-            fy[start:end] = cy[first]
-            d2m[start:end] = dmin
-            start = end
+    for start, end in _chunks(k_eval, FOOT_PAIR_CHUNK):
+        k = k_eval[start:end]
+        lo = seg_off[start]
+        seg_pos = seg_pos_all[lo:lo + int(k.sum())]
+        cx, cy, d2 = _eval_feet(flat, seg_pos,
+                                np.repeat(pair_lon[start:end], k),
+                                np.repeat(pair_lat[start:end], k))
+        run_starts = np.cumsum(k) - k
+        dmin = np.minimum.reduceat(d2, run_starts)
+        # first position of each run's minimum (every run holds one)
+        at_min = np.flatnonzero(d2 == np.repeat(dmin, k))
+        first = at_min[np.searchsorted(at_min, run_starts)]
+        fx[start:end] = cx[first]
+        fy[start:end] = cy[first]
+        d2m[start:end] = dmin
     return fx, fy, d2m
 
 
@@ -950,7 +832,7 @@ def _refine_lists(idx, k, cx, cy, r, parent, off, ranks, feet, U, exact):
     cnt = np.diff(off)[parent]
     run0 = np.cumsum(cnt) - cnt
     pc = np.repeat(np.arange(n), cnt)
-    src = np.repeat(off[parent] - run0, cnt) + np.arange(len(pc))
+    src = _expand(off[parent], cnt)
     pr, fx, fy = ranks[src], feet[0][src], feet[1][src]
     pb = idx.piece_bbox[pr]
     pcx, pcy = cx[pc], cy[pc]
@@ -1093,9 +975,8 @@ def knn_zones_batch(
     counts = [np.diff(idx.knn_off).astype(np.int64)]
     lists = [idx.knn_rank.astype(np.int64)]
     bounds = [idx.knn_bound]
-    per_chunk = max(1, KNN_PAIR_CHUNK // n_pieces)
-    for s0 in range(0, len(own), per_chunk):
-        pts = own[s0:s0 + per_chunk]
+    for s0, s1 in _chunks(np.full(len(own), n_pieces), KNN_PAIR_CHUNK):
+        pts = own[s0:s1]
         o, rk, _, U = _refine_lists(
             idx, k, lons[pts], lats[pts], KNN_PAD_DEG,
             np.zeros(len(pts), np.int64),
@@ -1119,22 +1000,13 @@ def knn_zones_batch(
 
     contain = _contained_keys(idx, lats, lons)
     zone = _zone_head(idx)
-    cum = np.cumsum(count)
     top_pt, top_rank = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
     n_eval = 0
-    start = 0
-    while start < n:
-        base = int(cum[start - 1]) if start else 0
-        end = int(np.searchsorted(cum, base + KNN_PAIR_CHUNK, side="right"))
-        end = min(max(end, start + 1), n)
+    for start, end in _chunks(count, KNN_PAIR_CHUNK):
         c = count[start:end]
-        total = int(c.sum())
-        if total:
+        if c.any():
             pt = np.repeat(np.arange(start, end), c)
-            rank = lists[
-                np.repeat(starts[cell[start:end]] - (np.cumsum(c) - c), c)
-                + np.arange(total)
-            ]
+            rank = lists[_expand(starts[cell[start:end]], c)]
             inside = _in_sorted(contain, pt * n_pieces + rank)
             dist = np.where(inside, 0.0, np.inf)
             n_eval += int(inside.sum())
@@ -1154,7 +1026,6 @@ def knn_zones_batch(
             p, r = _knn_top(pt, dist, rank, zone, n_pieces, k)
             top_pt.append(p)
             top_rank.append(r)
-        start = end
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(np.bincount(np.concatenate(top_pt), minlength=n), out=offsets[1:])
     out = arrow_list(offsets, np.concatenate(top_rank).astype(rank_dtype(idx)))
