@@ -20,7 +20,11 @@ Prints one SHA-256 per line for:
   ``probe_arrow(with_all=False)`` first ranks, on 20k seeded points over
   the pieces' bbox union padded by a tenth (out-of-region rows for the
   clipped region), 2k exact piece vertices, and NaN, +-inf, +-90/+-180
-  rows and rows one ulp past them.
+  rows and rows one ulp past them;
+- ``tiling.raster_mask_for_rings`` per piece, sorted by cell id (lines
+  ``raster``): synth at res 7 and 9, big454 at res 8, and three
+  rectangles whose low lon and/or lat edge lies on a res-9 grid line
+  that is not a grid line at their base resolution, at res 9.
 
 Run it on two checkouts and diff the output: identical lines mean a
 refactor left compile and kernel output bit-identical. Run it from a
@@ -91,7 +95,7 @@ def main() -> None:
     ap.add_argument("--repo", required=True, help="checkout to fingerprint")
     args = ap.parse_args()
     sys.path.insert(0, args.repo)
-    from tzengine import bigworld, engine, index, probe, session, zones
+    from tzengine import bigworld, engine, index, probe, session, tiling, zones
 
     worlds = {
         "synth": (zones.synthetic_world(), (-90, -180, 90, 180)),
@@ -130,6 +134,27 @@ def main() -> None:
         dt = time.perf_counter() - t0
         print(f"assign {name:10s} {digest(off, ranks, valid, np.asarray(first))}"
               f"  ({int(valid.sum())} valid, {len(ranks)} pairs, {dt:.2f} s)")
+
+    edge = 5 * 180 / 512  # a res-9 grid line, not one at res 5
+    rects = [
+        [np.array([[x0, y0], [x0, 4.4], [3.3, 4.4], [3.3, y0]])]
+        for x0, y0 in ((0.703125, 1.1), (1.1, edge), (0.703125, edge))
+    ]
+    synth = [p.rings for p in worlds["synth"][0]]
+    big454 = [p.rings for p in worlds["big454"][0]]
+    for name, rings_list, res in (
+        ("synth", synth, 7), ("synth", synth, 9), ("big454", big454, 8),
+        ("rects", rects, 9),
+    ):
+        t0 = time.perf_counter()
+        out = []
+        for rings in rings_list:
+            ids, kinds = tiling.raster_mask_for_rings(rings, res)
+            o = np.argsort(ids, kind="stable")
+            out += [ids[o], kinds[o]]
+        dt = time.perf_counter() - t0
+        print(f"raster {name + '@' + str(res):10s} {digest(*out)}"
+              f"  ({sum(map(len, out[::2]))} cells, {dt:.2f} s)")
 
     spark = session.get_spark("index_parity", master="local[2]")
     for name in ("synth", "synth_clip", "big454"):

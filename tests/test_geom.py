@@ -326,43 +326,61 @@ def test_b4_ring_overlaps_ring_even_odd_semantics():
     assert geom.points_in_rings_evenodd(np.array([[5.0, 2.0]]), *segs)[0]
 
 
-def test_points_in_rings_evenodd_grouped_matches_dense_fuzz():
-    """The unique-y row-grouped even-odd path (round 6) must agree
-    bit-for-bit with the dense per-point kernel, including y values that
-    exactly equal segment endpoints (straddle tie-breaks) and duplicate
-    x crossings."""
-    import numpy as np
+def _evenodd_dense(pts, sa, sb):
+    """Dense N x S even-odd reference: straddle matrix, crossing x of
+    every straddling pair, parity of the crossings right of the point."""
+    py = pts[:, 1][:, None]
+    strad = (sa[:, 1][None, :] > py) != (sb[:, 1][None, :] > py)
+    rows, cols = np.nonzero(strad)
+    x_at = sa[cols, 0] + (pts[rows, 1] - sa[cols, 1]) * (
+        sb[cols, 0] - sa[cols, 0]
+    ) / (sb[cols, 1] - sa[cols, 1])
+    return (
+        np.bincount(rows[pts[rows, 0] < x_at], minlength=len(pts)) & 1
+    ).astype(bool)
 
-    from tzengine import geom
 
+@pytest.mark.parametrize(
+    "budget", [None, 1, 5], ids=["default_budget", "budget_1", "budget_5"]
+)
+def test_points_in_rings_evenodd_matches_dense_fuzz(budget, monkeypatch):
+    """The sparse even-odd kernel must agree bit-for-bit with the dense
+    straddle matrix on grids and arbitrary point sets, ys equal to
+    vertex ys, horizontal edges, duplicate ys, NaN and +-inf
+    coordinates, and with a pair budget small enough to chunk."""
+    if budget is not None:
+        monkeypatch.setattr(geom, "EVENODD_PAIR_CHUNK", budget)
     rng = np.random.default_rng(7)
-    for trial in range(60):
-        m = int(rng.integers(4, 60))
+    special = np.array([np.nan, np.inf, -np.inf, 0.0, -0.0])
+    for trial in range(120):
+        m = int(rng.integers(3, 60))
         ang = np.sort(rng.uniform(0, 2 * np.pi, m))
         r = rng.uniform(0.5, 3.0, m)
         ring = np.stack([np.cos(ang) * r, np.sin(ang) * r], axis=1)
-        ring = np.vstack([ring, ring[:1]])
-        sa, sb = geom._segments([ring])
-        gx = rng.uniform(-4, 4, 16)
-        gy = np.concatenate(
-            [rng.uniform(-4, 4, 6), rng.choice(sa[:, 1], 4)]
-        )
-        pts = np.stack(np.meshgrid(gx, gy), axis=-1).reshape(-1, 2)
+        if trial % 3 == 0:
+            ring = np.round(ring * 2) / 2  # horizontal edges, shared ys
+        rings = [ring, ring * 0.4] if trial % 4 == 0 else [ring]
+        sa, sb = geom._segments(rings)
+        kind = trial % 5
+        if kind == 0:  # grid, a few rows on vertex ys
+            gx = rng.uniform(-4, 4, 16)
+            gy = np.concatenate([rng.uniform(-4, 4, 6), rng.choice(sa[:, 1], 4)])
+            pts = np.stack(np.meshgrid(gx, gy), axis=-1).reshape(-1, 2)
+        elif kind == 1:  # arbitrary
+            pts = rng.uniform(-4, 4, (int(rng.choice([1, 40, 400])), 2))
+        elif kind == 2:  # exact vertices
+            pts = np.vstack([sa, rng.uniform(-4, 4, (30, 2))])
+        elif kind == 3:  # duplicate ys, all on vertex ys
+            pts = rng.uniform(-4, 4, (60, 2))
+            pts[:, 1] = rng.choice(sa[:, 1], 60)
+        else:  # NaN, +-inf and signed zeros in either coordinate
+            pts = rng.uniform(-4, 4, (80, 2))
+            pts[:20, 0] = rng.choice(special, 20)
+            pts[20:40, 1] = rng.choice(special, 20)
         got = geom.points_in_rings_evenodd(pts, sa, sb)
-        # dense reference, computed inline (the production dense branch
-        # is gated away for grid inputs)
-        py = pts[:, 1][:, None]
-        strad = (sa[:, 1][None, :] > py) != (sb[:, 1][None, :] > py)
-        rows, cols = np.nonzero(strad)
-        x_at = sa[cols, 0] + (pts[rows, 1] - sa[cols, 1]) * (
-            sb[cols, 0] - sa[cols, 0]
-        ) / (sb[cols, 1] - sa[cols, 1])
-        ref = (
-            np.bincount(
-                rows[pts[rows, 0] < x_at], minlength=len(pts)
-            ) & 1
-        ).astype(bool)
-        np.testing.assert_array_equal(got, ref, err_msg=f"trial {trial}")
+        np.testing.assert_array_equal(
+            got, _evenodd_dense(pts, sa, sb), err_msg=f"trial {trial}"
+        )
 
 
 def test_segments_box_touch_matches_dense_matrix_fuzz():

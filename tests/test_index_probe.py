@@ -601,3 +601,61 @@ assert "pandas" not in sys.modules, "pandas was imported"
         text=True, timeout=120,
     )
     assert run.returncode == 0, run.stderr[-2000:]
+
+
+def test_raster_worker_does_not_import_pandas():
+    """``tiling.raster_batch`` (the rasterize_zones mapInArrow body) reads
+    a sliced zones batch through its Arrow buffers and emits the same
+    cells as ``raster_mask_for_rings``, without importing pandas."""
+    import os
+    import subprocess
+    import sys
+
+    code = """
+import sys
+import numpy as np
+import pyarrow as pa
+from tzengine import probe, tiling
+from tzengine.zones import synthetic_world
+
+pieces = synthetic_world()[:5]
+rings = [r for p in pieces for r in p.rings]
+verts = np.concatenate(rings)
+vstruct = pa.StructArray.from_arrays(
+    [probe.arrow_array(verts[:, 1].astype(np.float32)),
+     probe.arrow_array(verts[:, 0].astype(np.float32))],
+    ["lat", "lon"],
+)
+v_off = np.cumsum([0] + [len(r) for r in rings]).astype(np.int32)
+r_off = np.cumsum([0] + [len(p.rings) for p in pieces]).astype(np.int32)
+rings_col = pa.ListArray.from_arrays(
+    probe.arrow_array(r_off),
+    pa.ListArray.from_arrays(probe.arrow_array(v_off), vstruct),
+)
+names = [p.zone_id.encode() for p in pieces]
+n_off = np.cumsum([0] + [len(b) for b in names]).astype(np.int32)
+zone_id = pa.Array.from_buffers(
+    pa.string(), len(pieces),
+    [None, pa.py_buffer(n_off), pa.py_buffer(b"".join(names))],
+)
+poly = probe.arrow_array(np.array([p.polygon_id for p in pieces], np.int32))
+batch = pa.RecordBatch.from_arrays(
+    [zone_id, poly, rings_col], ["zone_id", "polygon_id", "rings"]
+).slice(1, 3)
+out = tiling.raster_batch(batch, 7)
+assert "pandas" not in sys.modules, "pandas was imported"
+
+want = []
+for p in pieces[1:4]:
+    ids, kinds = tiling.raster_mask_for_rings(p.rings, 7)
+    want += [(p.zone_id, p.polygon_id, int(c), int(k)) for c, k in zip(ids, kinds)]
+got = list(zip(*(out.column(c).to_pylist()
+                 for c in ("zone_id", "polygon_id", "cell_id", "full"))))
+assert got == want, (len(got), len(want))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]

@@ -195,36 +195,16 @@ class TzEngine:
         min_lat, min_lon, max_lat, max_lon = region
 
         def compile_batches(batches):
-            # Arrow's list<list<struct>> layout is already CSR: two
-            # offset arrays plus flat lat/lon children, so each ring is
-            # a numpy slice (the float32->float64 upcast is exact)
             import pyarrow as pa
 
             for batch in batches:
                 cols = dict(zip(batch.schema.names, batch.columns))
-                rings_col = cols["rings"]
-                r_off = rings_col.offsets.to_numpy()
-                ring_list = rings_col.values
-                v_off = ring_list.offsets.to_numpy()
-                vstruct = ring_list.values
-                vlat, vlon = (
-                    vstruct.field(c).to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                    for c in ("lat", "lon")
-                )
                 areas = (
                     cols[area_col].to_numpy(zero_copy_only=False)
                     if area_col is not None else None
                 )
                 pre_areas, blobs = [], []
-                for i in range(batch.num_rows):
-                    rings = [
-                        np.column_stack(
-                            (vlon[v_off[j]:v_off[j + 1]],
-                             vlat[v_off[j]:v_off[j + 1]])
-                        )
-                        for j in range(r_off[i], r_off[i + 1])
-                    ]
+                for i, rings in enumerate(probemod.arrow_rings(cols["rings"])):
                     pre_areas.append(
                         float(areas[i]) if areas is not None
                         else geom.polygon_area2d(rings)

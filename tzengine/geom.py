@@ -116,6 +116,32 @@ def points_on_boundary(
     return np.any(colinear & inbox, axis=1)
 
 
+def _expand(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """CSR expansion: ``starts[i] + j`` for every j < ``counts[i]``,
+    run after run (int64)."""
+    counts = counts.astype(np.int64, copy=False)
+    heads = np.cumsum(counts) - counts
+    return np.repeat(starts - heads, counts) + np.arange(int(counts.sum()))
+
+
+def _chunks(counts: np.ndarray, budget: int):
+    """Consecutive slices [start, end) of the runs, each holding at most
+    ``budget`` items (``counts[i]`` in run i), or one run over the budget
+    on its own."""
+    cum = np.cumsum(counts)
+    start = 0
+    while start < len(cum):
+        base = int(cum[start - 1]) if start else 0
+        end = int(np.searchsorted(cum, base + budget, side="right"))
+        end = max(end, start + 1)
+        yield start, end
+        start = end
+
+
+# (segment, point) pairs points_in_rings_evenodd expands at once
+EVENODD_PAIR_CHUNK = 1 << 20
+
+
 def points_in_rings_evenodd(
     pts: np.ndarray, seg_a: np.ndarray, seg_b: np.ndarray
 ) -> np.ndarray:
@@ -123,96 +149,30 @@ def points_in_rings_evenodd(
     ring segments. Holes flip parity out, islands flip back in — matching
     the esri interior semantics used by `GeometryEngine.contains`
     (point in hole = outside, point in island-in-hole = inside,
-    UtilTest.java:74-80)."""
-    if len(seg_a) == 0 or len(pts) == 0:
-        return np.zeros(len(pts), dtype=bool)
+    UtilTest.java:74-80).
+
+    A segment straddles a point's y when ``(ay > y) != (by > y)``, i.e.
+    ``min(ay, by) <= y < max(ay, by)``: over the points sorted by y,
+    one contiguous run found by two ``searchsorted`` (a NaN or +-inf y
+    straddles nothing). Only those (segment, point) pairs are expanded,
+    and each point counts the crossings strictly right of it."""
     n = len(pts)
-    S = len(seg_a)
-
-    # Row-grouped path (round 6): the compile path's query points are
-    # grid-cell CENTERS, so distinct y values number ~sqrt(n). The
-    # straddle test and the crossing-x depend on the point only through
-    # py, so both can be computed once per UNIQUE y (U x S instead of
-    # n x S work); each point then only counts how many of its row's
-    # crossing-x values lie strictly to its right — one searchsorted
-    # over the row's sorted x_at array. Sorting never changes the
-    # doubles and searchsorted(side='right') counts exactly the
-    # px < x_at comparisons the dense path sums, so parity is
-    # bit-identical. Arbitrary point sets (U ~ n) keep the dense path.
-    if n >= 64 and S >= 8:
-        uy, inv = np.unique(pts[:, 1], return_inverse=True)
-        if len(uy) * 2 <= n:
-            return _points_in_rings_evenodd_rows(
-                pts, seg_a, seg_b, uy, inv
-            )
-
-    px = pts[:, 0][:, None]
-    py = pts[:, 1][:, None]
-    ax, ay = seg_a[:, 0][None, :], seg_a[:, 1][None, :]
-    bx, by = seg_b[:, 0][None, :], seg_b[:, 1][None, :]
-    # Half-open rule: segment straddles the horizontal ray at py.
-    # The crossing-x division runs only on the straddling pairs (round
-    # 6): a horizontal line crosses a closed ring a handful of times, so
-    # the straddle matrix is ~99% empty at coastline vertex counts and
-    # the dense divide dominated compile time. Same expression on the
-    # same doubles — the sparse result is bit-identical (and the former
-    # masked-out div-by-zero lanes no longer execute at all).
-    straddle = (ay > py) != (by > py)
-    rows, cols = np.nonzero(straddle)
-    if not len(rows):
+    if len(seg_a) == 0 or n == 0:
         return np.zeros(n, dtype=bool)
-    a_x, a_y = seg_a[cols, 0], seg_a[cols, 1]
-    x_at = a_x + (pts[rows, 1] - a_y) * (seg_b[cols, 0] - a_x) / (
-        seg_b[cols, 1] - a_y
-    )
-    crossing = pts[rows, 0] < x_at
-    return (
-        np.bincount(rows[crossing], minlength=n) & 1
-    ).astype(bool)
-
-
-def _points_in_rings_evenodd_rows(
-    pts: np.ndarray,
-    seg_a: np.ndarray,
-    seg_b: np.ndarray,
-    uy: np.ndarray,
-    inv: np.ndarray,
-) -> np.ndarray:
-    """Unique-y grouped even-odd kernel (see points_in_rings_evenodd).
-    ``uy`` sorted unique y values, ``inv`` each point's index into it."""
-    n = len(pts)
-    U = len(uy)
-    ay = seg_a[:, 1][None, :]
-    by = seg_b[:, 1][None, :]
-    straddle = (ay > uy[:, None]) != (by > uy[:, None])  # (U, S)
-    rows_u, cols_u = np.nonzero(straddle)
-    if not len(rows_u):
-        return np.zeros(n, dtype=bool)
-    a_x, a_y = seg_a[cols_u, 0], seg_a[cols_u, 1]
-    x_at = a_x + (uy[rows_u] - a_y) * (seg_b[cols_u, 0] - a_x) / (
-        seg_b[cols_u, 1] - a_y
-    )
-    # sort x_at within each row (rows_u is already row-grouped)
-    o = np.lexsort((x_at, rows_u))
-    x_sorted = x_at[o]
-    cnt_u = np.bincount(rows_u, minlength=U)
-    off_u = np.zeros(U + 1, dtype=np.int64)
-    np.cumsum(cnt_u, out=off_u[1:])
-    # group the points by row and count crossings to the right per point
-    po = np.argsort(inv, kind="stable")
-    inv_s = inv[po]
-    px_s = pts[po, 0]
-    grp_start = np.r_[0, np.nonzero(inv_s[1:] != inv_s[:-1])[0] + 1]
-    out = np.zeros(n, dtype=bool)
-    for s0, s1 in zip(grp_start, np.r_[grp_start[1:], len(po)]):
-        g = inv_s[s0]
-        lo, hi = off_u[g], off_u[g + 1]
-        if lo == hi:
-            continue
-        row_x = x_sorted[lo:hi]
-        cnt = (hi - lo) - np.searchsorted(row_x, px_s[s0:s1], side="right")
-        out[po[s0:s1]] = (cnt & 1).astype(bool)
-    return out
+    order = np.argsort(pts[:, 1])
+    xs, ys = pts[order, 0], pts[order, 1]
+    ay, by = seg_a[:, 1], seg_b[:, 1]
+    lo = np.searchsorted(ys, np.minimum(ay, by))
+    hi = np.searchsorted(ys, np.maximum(ay, by))
+    parity = np.zeros(n, dtype=np.int64)
+    for s0, s1 in _chunks(hi - lo, EVENODD_PAIR_CHUNK):
+        cnt = hi[s0:s1] - lo[s0:s1]
+        pos = _expand(lo[s0:s1], cnt)
+        seg = np.repeat(np.arange(s0, s1), cnt)
+        a_x, a_y = seg_a[seg, 0], ay[seg]
+        x_at = a_x + (ys[pos] - a_y) * (seg_b[seg, 0] - a_x) / (by[seg] - a_y)
+        parity[order] ^= np.bincount(pos[xs[pos] < x_at], minlength=n)
+    return (parity & 1).astype(bool)
 
 
 def contains_inclusive(pts: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:

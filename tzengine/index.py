@@ -164,23 +164,38 @@ MAX_COVER_CELLS = 4096
 
 
 def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
-    """Compute the cell covering of one (clipped) piece.
+    """The cell covering of one (clipped) piece: ``cover_cells`` from the
+    piece's base resolution down to ``depth`` levels finer, capped at
+    MAX_COVER_CELLS. This is the engine replacement for the reference's
+    O3 (smallest-area-first + lazy scan) — interior hits resolve O(1) at
+    probe time, exact ray-casting only on boundary cells (north_star)."""
+    lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
+    base = _base_res_for_bbox(hi_lon - lo_lon, hi_lat - lo_lat)
+    return cover_cells(
+        rings, base, min(base + depth, cells.MAX_RES), MAX_COVER_CELLS
+    )
 
-    Returns (cell_ids uint64, interior bool, (cell_pos, seg_idx)).
-    Interior cells may sit at any resolution in [base, base+depth];
-    boundary cells are at base+depth. Classification: a cell with no
-    boundary segment through it is uniformly inside or outside (decided
-    by a center-point PIP); a cell the boundary crosses is subdivided
-    until the depth budget, then kept as a boundary cell. This is the
-    engine replacement for the reference's O3 (smallest-area-first +
-    lazy scan) — interior hits resolve O(1) at probe time, exact
-    ray-casting only on boundary cells (north_star).
+
+def cover_cells(
+    rings: list[np.ndarray], start_res: int, end_res: int, max_cells: float
+) -> tuple:
+    """Classify the cells of a piece by a BFS from the cells covering its
+    bbox at ``start_res``.
+
+    Returns (cell_ids uint64, interior bool, (cell_pos, seg_idx)). A
+    cell no boundary segment touches is uniformly inside or outside
+    (decided by a center-point PIP; the inside ones are kept as
+    interior cells); a cell the boundary touches is subdivided until
+    ``end_res``, or until another level could push the emitted cell
+    count to ``max_cells`` (``math.inf``: no cap), then kept as a
+    boundary cell.
 
     Segment-cell incidences PROPAGATE down the BFS: a segment touching a
     child cell's closed rectangle must touch its parent's (the child
     rect is a subset), so the candidates for a level are the 4-way
     expansion of the previous level's incidences. Level 0 starts from
-    every (base cell, segment) pair — at most 2x2 base cells — and every
+    every (start cell, segment) pair — at most 2x2 cells when
+    ``start_res`` is at most the piece's base resolution — and every
     level runs the same bbox prescreen and exact
     ``geom.segments_box_touch`` test. The last element holds the final
     boundary incidences: row-major over the emitted boundary cells
@@ -188,8 +203,6 @@ def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
     does not have to recompute them.
     """
     lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
-    base = _base_res_for_bbox(hi_lon - lo_lon, hi_lat - lo_lat)
-    max_res = min(base + depth, cells.MAX_RES)
     seg_a, seg_b = geom._segments(rings)
     sx0 = np.minimum(seg_a[:, 0], seg_b[:, 0])
     sx1 = np.maximum(seg_a[:, 0], seg_b[:, 0])
@@ -199,7 +212,9 @@ def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
     out_cells_parts: list[np.ndarray] = []
     out_interior_parts: list[np.ndarray] = []
     b_pairs = (np.zeros(0, np.int64), np.zeros(0, np.int64))
-    frontier = cells.cells_covering_bbox(lo_lon, lo_lat, hi_lon, hi_lat, base)
+    frontier = cells.cells_covering_bbox(
+        lo_lon, lo_lat, hi_lon, hi_lat, start_res
+    )
     n_emitted = 0
     # candidate (frontier cell, segment) pairs: all of them at level 0
     rows = np.repeat(np.arange(len(frontier), dtype=np.int64), len(seg_a))
@@ -264,7 +279,7 @@ def cover_piece(rings: list[np.ndarray], depth: int = 5) -> tuple:
         cross_pos = np.full(len(b), -1, dtype=np.int64)
         cross_pos[np.nonzero(crossed)[0]] = np.arange(n_cross)
         ppos = cross_pos[rows]
-        if res >= max_res or n_emitted + 4 * n_cross >= MAX_COVER_CELLS:
+        if res >= end_res or n_emitted + 4 * n_cross >= max_cells:
             out_cells_parts.append(cross_cells)
             out_interior_parts.append(np.zeros(n_cross, dtype=bool))
             o = np.lexsort((cols, ppos))

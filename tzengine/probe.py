@@ -16,31 +16,10 @@ import math
 import numpy as np
 
 from . import cells, geom
+from .geom import _chunks, _expand
 from .index import CompiledIndex
 
 OUTSIDE_MSG = "Requested point is outside the initialized area"
-
-
-def _expand(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """CSR expansion: ``starts[i] + j`` for every j < ``counts[i]``,
-    run after run (int64)."""
-    counts = counts.astype(np.int64, copy=False)
-    heads = np.cumsum(counts) - counts
-    return np.repeat(starts - heads, counts) + np.arange(int(counts.sum()))
-
-
-def _chunks(counts: np.ndarray, budget: int):
-    """Consecutive slices [start, end) of the runs, each holding at most
-    ``budget`` items (``counts[i]`` in run i), or one run over the budget
-    on its own."""
-    cum = np.cumsum(counts)
-    start = 0
-    while start < len(cum):
-        base = int(cum[start - 1]) if start else 0
-        end = int(np.searchsorted(cum, base + budget, side="right"))
-        end = max(end, start + 1)
-        yield start, end
-        start = end
 
 
 def region_guard(idx: CompiledIndex, lats: np.ndarray, lons: np.ndarray) -> np.ndarray:
@@ -334,6 +313,24 @@ def arrow_f64(arr) -> np.ndarray:
         )[arr.offset:]
         vals = np.where(bits.view(bool), vals, np.nan)
     return vals
+
+
+def arrow_rings(col) -> list[list[np.ndarray]]:
+    """A zones ``rings`` column (list<list<struct<lat, lon>>>, sliced or
+    not) as each row's rings: (V, 2) float64 (lon, lat) slices of one
+    vertex array, read from the Arrow buffers without pandas."""
+    r_off, v_off = (
+        np.frombuffer(o.buffers()[1], np.int32, len(o), o.offset * 4)
+        for o in (col.offsets, col.values.offsets)
+    )
+    vstruct = col.values.values
+    verts = np.column_stack(
+        [arrow_f64(vstruct.field(c)) for c in ("lon", "lat")]
+    )
+    return [
+        [verts[v_off[j]:v_off[j + 1]] for j in range(r_off[i], r_off[i + 1])]
+        for i in range(len(col))
+    ]
 
 
 def arrow_array(values: np.ndarray):

@@ -5,8 +5,6 @@ the engine's probe is a stateless narrow map, so it composes with
 Structured Streaming for free — these wrappers make that path explicit
 and tested:
 
-- ``assign_stream``: the same broadcast-index assign over a streaming
-  DataFrame (stateless → append-mode safe).
 - ``streaming_cell_counts``: watermarked tumbling-window per-zone counts
   (late data handled by the watermark) — the standard hot-cell monitor
   over an event stream. NOTE: in ``update`` output mode a sink receives
@@ -14,18 +12,15 @@ and tested:
   full count — aggregate with max(n), not sum(n), when reading a memory
   sink across triggers.
 - ``stream_to_resumable``: foreachBatch sink writing each micro-batch
-  through the engine, appending partitioned Parquet with the streaming
-  checkpoint providing exactly-once batch tracking.
+  through the engine, appending partitioned Parquet. Delivery is
+  at-least-once: a crash between a batch's write and its checkpoint
+  commit replays the batch, appending its rows again.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def assign_stream(engine, stream_df: DataFrame, **kw) -> DataFrame:
-    return engine.assign_timezones(stream_df, **kw)
 
 
 def streaming_cell_counts(
@@ -156,10 +151,11 @@ def stream_to_resumable(
     partition_col: str = "zone_shard",
     **assign_kw,
 ):
-    """foreachBatch sink: assign + append partitioned Parquet. The
-    streaming checkpoint makes micro-batch delivery exactly-once; the
-    deterministic row→shard function makes output placement
-    restart-stable (same rows land in the same partitions on replay)."""
+    """foreachBatch sink: assign + append partitioned Parquet,
+    at-least-once: the append is not idempotent, so a crash between a
+    batch's write and its checkpoint commit replays the batch and
+    appends its rows again — into the same partitions, since the
+    row→shard function is deterministic."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         out = engine.assign_timezones(batch_df, mode="pipeline", **assign_kw)

@@ -15,9 +15,10 @@ keeping an Iceberg-compatible layout (partition dirs + JSON metadata):
       <col>=<v>/part-*.parquet  the data
 
 Work units are the values of a DETERMINISTIC partition column (e.g.
-``zone_shard``, itself a pure function of the row — engine._splitmix64),
-so the same input always produces the same unit set and the same rows in
-each unit regardless of cluster size, restarts, or input partitioning.
+``zone_shard``, itself a pure function of the row:
+``pmod(xxhash64(cell_id), n_shards)``), so the same input always
+produces the same unit set and the same rows in each unit regardless of
+cluster size, restarts, or input partitioning.
 NULL partition values are a first-class unit named
 ``__HIVE_DEFAULT_PARTITION__`` (Parquet's own convention for null
 partitions) — pipeline-mode out-of-region rows land there instead of

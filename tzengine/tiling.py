@@ -1,9 +1,10 @@
 """Raster ↔ vector tiling over the cell grid (north_star requirement).
 
 - ``rasterize_zones``: zone polygons → fixed-resolution per-cell masks
-  (cell classified full / partial / out), computed DISTRIBUTED via
-  applyInPandas over zone pieces — each piece's raster is an independent
-  numpy job, so the stage scales with the zone count, not the driver.
+  (cell classified full / partial / out), computed DISTRIBUTED by one
+  mapInArrow over the zone pieces — each piece's raster is an
+  independent numpy job, so the stage scales with the zone count, not
+  the driver.
 - ``vectorize_coverage``: per-cell masks → compact vector cell sets:
   full cells whose 3 siblings are also full merge into their parent
   (repeatedly), giving the mixed-resolution covering back — the inverse
@@ -11,78 +12,98 @@
 - ``expand_to_res``: mixed-resolution cell set → flat raster set, for
   round-trip comparison.
 
-Everything is DataFrame ops + applyInPandas; no per-row Python at plan
-level (north_star: "raster↔vector tiling expressed entirely in DataFrame
-ops and applyInPandas").
+Everything is DataFrame ops plus one Arrow-native, pandas-free
+mapInArrow; no per-row Python at plan level.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cells, geom
-from .zones import ZonePiece, pieces_to_df
+from . import cells, geom, index, probe
+from .zones import pieces_to_df
 
 RASTER_SCHEMA = "zone_id string, polygon_id int, cell_id long, kind string"
 
 
 def raster_mask_for_rings(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
     """(cell_ids, kind) at fixed ``res`` for one piece: kind 1=full,
-    0=partial (boundary crosses the cell). Cells fully outside are
-    omitted (sparse raster)."""
+    0=partial (the boundary touches the cell's closed rectangle). Cells
+    fully outside are omitted (sparse raster).
+
+    ``index.cover_cells`` runs down to ``res`` with no cap: its boundary
+    cells are the partial cells, and its interior cells expand to their
+    ``res`` descendants (an untouched cell has only untouched children).
+    The BFS also keeps a cell that touches the bbox only from the left
+    or below, which ``cells.cells_covering_bbox`` (the floor of each
+    bbox edge) never proposes, so cells outside that grid range drop."""
     lo_lon, lo_lat, hi_lon, hi_lat = geom.rings_bbox(rings)
-    cand = cells.cells_covering_bbox(lo_lon, lo_lat, hi_lon, hi_lat, res)
-    seg_a, seg_b = geom._segments(rings)
-    b = cells.cell_bounds(cand)
-    keep_ids, kinds = [], []
-    centers = np.stack([(b[:, 0] + b[:, 2]) / 2, (b[:, 1] + b[:, 3]) / 2], axis=1)
-    center_in = geom.contains_inclusive(centers, rings)
-    for i, c in enumerate(cand):
-        box = np.broadcast_to(b[i], (len(seg_a), 4))
-        if geom.segments_box_touch(seg_a, seg_b, box).any():
-            keep_ids.append(int(c))
-            kinds.append(0)
-        elif center_in[i]:
-            keep_ids.append(int(c))
-            kinds.append(1)
-    return np.array(keep_ids, dtype=np.int64), np.array(kinds, dtype=np.int8)
+    base = index._base_res_for_bbox(hi_lon - lo_lon, hi_lat - lo_lat)
+    ids, interior, _ = index.cover_cells(rings, min(base, res), res, math.inf)
+    ids = ids.astype(np.int64)
+    level = cells.cell_res(ids)
+    gap = 2 * (res - level)
+    n_desc = np.int64(1) << gap
+    morton = geom._expand((ids - (level << 58)) << gap, n_desc)
+    kind = np.repeat(interior.astype(np.int8), n_desc)
+    ix, iy = cells.morton_decode(morton)
+    (ix0, ix1), (iy0, iy1) = cells.grid_of([lo_lon, hi_lon], [lo_lat, hi_lat], res)
+    keep = (ix >= ix0) & (ix <= ix1) & (iy >= iy0) & (iy <= iy1)
+    return morton[keep] | (np.int64(res) << 58), kind[keep]
+
+
+def raster_batch(batch, res: int):
+    """One zones Arrow batch (``zone_id``, ``polygon_id``, ``rings``) →
+    its raster rows (``zone_id``, ``polygon_id``, ``cell_id``,
+    ``full``: 1 full, 0 partial) as a pa.RecordBatch, pandas-free."""
+    import pyarrow as pa
+
+    cell_ids, fulls = [np.zeros(0, np.int64)], [np.zeros(0, np.int8)]
+    for rings in probe.arrow_rings(batch.column("rings")):
+        ids, full = raster_mask_for_rings(rings, res)
+        cell_ids.append(ids)
+        fulls.append(full)
+    counts = [len(ids) for ids in cell_ids[1:]]
+    row = probe.arrow_array(np.repeat(np.arange(len(counts)), counts))
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("zone_id").take(row).cast(pa.string()),
+            batch.column("polygon_id").take(row).cast(pa.int32()),
+            probe.arrow_array(np.concatenate(cell_ids)),
+            probe.arrow_array(np.concatenate(fulls)),
+        ],
+        ["zone_id", "polygon_id", "cell_id", "full"],
+    )
 
 
 def rasterize_zones(
     spark: SparkSession, zones, res: int = 8
 ) -> DataFrame:
-    """zones: list[ZonePiece] or zones DataFrame. One applyInPandas group
-    per piece (embarrassingly parallel across executors)."""
+    """zones: list[ZonePiece] or zones DataFrame. One mapInArrow over
+    the pieces, spread over 32 tasks (embarrassingly parallel across
+    executors); the full/partial names are mapped on the JVM side."""
     from .session import ensure_shipped
 
     ensure_shipped(spark)
     zones_df = zones if isinstance(zones, DataFrame) else pieces_to_df(spark, zones)
-
-    def raster_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            rings = [
-                np.array([(v["lon"], v["lat"]) for v in ring], dtype=np.float64)
-                for ring in row["rings"]
-            ]
-            ids, kinds = raster_mask_for_rings(rings, res)
-            for c, k in zip(ids, kinds):
-                out.append(
-                    (row["zone_id"], int(row["polygon_id"]), int(c),
-                     "full" if k == 1 else "partial")
-                )
-        return pd.DataFrame(
-            out, columns=["zone_id", "polygon_id", "cell_id", "kind"]
-        )
-
     return (
-        zones_df.repartition(32, "zone_id", "polygon_id")
-        .groupBy("zone_id", "polygon_id")
-        .applyInPandas(raster_group, RASTER_SCHEMA)
+        zones_df.select("zone_id", "polygon_id", "rings")
+        .repartition(32)
+        .mapInArrow(
+            lambda batches: (raster_batch(b, res) for b in batches),
+            "zone_id string, polygon_id int, cell_id long, full tinyint",
+        )
+        .select(
+            "zone_id",
+            "polygon_id",
+            "cell_id",
+            F.when(F.col("full") == 1, "full").otherwise("partial").alias("kind"),
+        )
     )
 
 
