@@ -1,4 +1,11 @@
-"""Test-side helpers over the probe kernel's CSR output and zones rows."""
+"""Test-side helpers over the probe kernel's CSR output and zones rows,
+and a runner for checks that need a fresh interpreter."""
+
+import contextlib
+import os
+import signal
+import subprocess
+import sys
 
 import numpy as np
 
@@ -19,6 +26,37 @@ def ranks_to_tzids(idx, offsets, ranks, valid):
         tzids.append(names)
         tzid.append(names[0] if names else None)
     return tzid, tzids
+
+
+@contextlib.contextmanager
+def deadline(seconds: float):
+    """Fail with TimeoutError, instead of hanging the suite, when the
+    body runs longer than ``seconds`` (the alarm lands between Python
+    bytecodes, so a loop over numpy calls or a blocking Spark call is
+    interrupted)."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+def run_isolated(code: str) -> None:
+    """Run ``code`` in a fresh interpreter, with the checkout root as its
+    working directory so that ``tzengine`` imports from this checkout,
+    and fail with the tail of its stderr unless it exits 0."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
 
 
 def rows_to_pieces(rows) -> list[ZonePiece]:

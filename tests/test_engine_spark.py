@@ -1,6 +1,8 @@
 """End-to-end Spark tests: broadcast-index join vs the oracle, DataFrame
 (executor) compile parity, artifact round-trip + version gate, determinism."""
 
+import sys
+
 import numpy as np
 import pytest
 
@@ -9,6 +11,8 @@ from pyspark.sql import functions as F
 from tzengine.engine import TzEngine
 from tzengine.oracle import OracleMap
 from tzengine.zones import pieces_to_df, synthetic_world
+
+from probe_helpers import deadline, run_isolated
 
 
 @pytest.fixture(scope="module")
@@ -518,3 +522,97 @@ def test_assign_distance_knn_plan_one_arrow_node_no_strings(
     assert out.schema["nearest_tzids"].dataType.simpleString() == "array<string>"
     assert out.schema["nearest_tzids"].dataType.containsNull
     assert out.schema["boundary_dist_m"].dataType.simpleString() == "double"
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="CPython 3.13 re-reads zip directories lazily")
+def test_zip_directory_reread_hook_semantics():
+    """Once tzengine is imported inside a Spark task,
+    ``importlib.invalidate_caches()`` re-reads a zip on ``sys.path`` only
+    after it changed; imported outside a task, tzengine leaves
+    ``zipimporter.invalidate_caches`` as it is."""
+    code = """
+import importlib, os, sys, tempfile, zipfile, zipimport
+
+path = os.path.join(tempfile.mkdtemp(), "mods.zip")
+with zipfile.ZipFile(path, "w") as zf:
+    zf.writestr("zmod_a.py", "A = 1\\n")
+sys.path.insert(0, path)
+import zmod_a
+
+stock = zipimport.zipimporter.invalidate_caches
+import pyspark
+import tzengine
+assert zipimport.zipimporter.invalidate_caches is stock, "patched outside a task"
+
+from pyspark import TaskContext
+TaskContext._getOrCreate()
+tzengine._reread_changed_zips_only()
+assert zipimport.zipimporter.invalidate_caches is not stock
+
+reads = []
+read_directory = zipimport._read_directory
+def counting(archive):
+    reads.append(archive)
+    return read_directory(archive)
+zipimport._read_directory = counting
+
+for _ in range(3):
+    importlib.invalidate_caches()
+assert reads == [], reads
+
+mtime_ns = os.stat(path).st_mtime_ns
+with zipfile.ZipFile(path, "w") as zf:
+    zf.writestr("zmod_a.py", "A = 1\\n")
+    zf.writestr("zmod_b.py", "B = 2\\n")
+os.utime(path, ns=(mtime_ns + 10**9, mtime_ns + 10**9))
+importlib.invalidate_caches()
+assert reads == [path], reads
+import zmod_b
+assert zmod_b.B == 2
+importlib.invalidate_caches()
+assert reads == [path], reads
+
+os.remove(path)  # stat fails: the stock method runs
+importlib.invalidate_caches()
+assert reads == [path, path], reads
+os.rmdir(os.path.dirname(path))
+"""
+    run_isolated(code)
+
+
+def test_spark_worker_rereads_no_unchanged_zip(spark):
+    """In a real Python worker, after ``import tzengine`` the per-task
+    ``importlib.invalidate_caches()`` reads no zip directory."""
+    from tzengine.session import ensure_shipped
+
+    ensure_shipped(spark)
+
+    @F.arrow_udf("long")
+    def zip_reads(col):
+        import importlib
+        import zipimport
+
+        from tzengine import probe
+
+        importlib.invalidate_caches()
+        n_zips = sum(isinstance(i, zipimport.zipimporter)
+                     for i in sys.path_importer_cache.values())
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        return probe.arrow_array(np.full(len(col), len(reads) if n_zips else -1))
+
+    df = spark.range(8, numPartitions=4)
+    with deadline(120):
+        got = {r.n for r in df.select(zip_reads("id").alias("n")).collect()}
+    assert got == {0}, got

@@ -5,9 +5,6 @@ Structural ports of TimeZoneMapTest.java over the synthetic world
 clip invariant, out-of-region guard, degenerate stripe region.
 """
 
-import contextlib
-import signal
-
 import numpy as np
 import pytest
 
@@ -15,7 +12,7 @@ from tzengine import geom, index, probe
 from tzengine.oracle import OracleMap
 from tzengine.zones import ZonePiece, synthetic_world
 
-from probe_helpers import ranks_to_tzids
+from probe_helpers import deadline, ranks_to_tzids, run_isolated
 
 WORLD = synthetic_world()
 EVERYWHERE = index.compile_index(WORLD, -90, -180, 90, 180, world_version="synth1")
@@ -173,24 +170,6 @@ def test_knn_ordering():
     res = knn_names(EVERYWHERE, [4.5], [6.5], k=3)[0]
     assert res[0] == "Zone/Filler"  # contains the point (distance 0)
     assert res[1] == "Zone/Big"  # 0.5 deg away beats Small at 1.5 deg
-
-
-@contextlib.contextmanager
-def deadline(seconds):
-    """Fail with TimeoutError, instead of hanging the suite, when the
-    body runs longer than ``seconds`` (the kernels loop in Python, so
-    the alarm lands between numpy calls)."""
-
-    def expire(signum, frame):
-        raise TimeoutError(f"still running after {seconds} s")
-
-    previous = signal.signal(signal.SIGALRM, expire)
-    signal.setitimer(signal.ITIMER_REAL, seconds)
-    try:
-        yield
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, previous)
 
 
 @pytest.mark.parametrize("metric", ["geodesic", "planar_deg"])
@@ -564,9 +543,6 @@ def test_arrow_f64_offset_nulls_and_empty():
 def test_udf_kernels_do_not_import_pandas():
     """The engine's UDF bodies (Arrow in, kernels, Arrow out) run in
     every Python worker; importing pandas there costs ~40 MB each."""
-    import subprocess
-    import sys
-
     code = """
 import sys
 import numpy as np
@@ -593,29 +569,17 @@ pa.StructArray.from_arrays(
 probe.knn_zones_batch(idx, lats, lons, 3)
 assert "pandas" not in sys.modules, "pandas was imported"
 """
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    run = subprocess.run(
-        [sys.executable, "-c", code], cwd=root, capture_output=True,
-        text=True, timeout=120,
-    )
-    assert run.returncode == 0, run.stderr[-2000:]
+    run_isolated(code)
 
 
-def test_raster_worker_does_not_import_pandas():
-    """``tiling.raster_batch`` (the rasterize_zones mapInArrow body) reads
-    a sliced zones batch through its Arrow buffers and emits the same
-    cells as ``raster_mask_for_rings``, without importing pandas."""
-    import os
-    import subprocess
-    import sys
-
-    code = """
+# A fresh interpreter's prelude: synth pieces 1-3 as a sliced zones
+# Arrow batch (zone_id, polygon_id, rings), built from buffers, plus
+# their ``ordinal`` column.
+ZONES_BATCH = """
 import sys
 import numpy as np
 import pyarrow as pa
-from tzengine import probe, tiling
+from tzengine import probe
 from tzengine.zones import synthetic_world
 
 pieces = synthetic_world()[:5]
@@ -642,6 +606,17 @@ poly = probe.arrow_array(np.array([p.polygon_id for p in pieces], np.int32))
 batch = pa.RecordBatch.from_arrays(
     [zone_id, poly, rings_col], ["zone_id", "polygon_id", "rings"]
 ).slice(1, 3)
+ordinal = probe.arrow_array(np.array([p.ordinal for p in pieces[1:4]], np.int32))
+"""
+
+
+def test_raster_worker_does_not_import_pandas():
+    """``tiling.raster_batch`` (the rasterize_zones mapInArrow body) reads
+    a sliced zones batch through its Arrow buffers and emits the same
+    cells as ``raster_mask_for_rings``, without importing pandas."""
+    code = ZONES_BATCH + """
+from tzengine import tiling
+
 out = tiling.raster_batch(batch, 7)
 assert "pandas" not in sys.modules, "pandas was imported"
 
@@ -653,9 +628,44 @@ got = list(zip(*(out.column(c).to_pylist()
                  for c in ("zone_id", "polygon_id", "cell_id", "full"))))
 assert got == want, (len(got), len(want))
 """
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    run = subprocess.run(
-        [sys.executable, "-c", code], cwd=root, capture_output=True,
-        text=True, timeout=120,
-    )
-    assert run.returncode == 0, run.stderr[-2000:]
+    run_isolated(code)
+
+
+def test_compile_worker_does_not_import_pandas():
+    """``engine.compile_batch`` (the executor compile's mapInArrow body)
+    reads a sliced zones batch through its Arrow buffers and emits each
+    piece's ``compile_source`` components and area, with and without an
+    area column, without importing pandas."""
+    code = ZONES_BATCH + """
+from tzengine import geom, index
+from tzengine.engine import compile_batch
+
+areas = probe.arrow_array(np.array([7.0, 8.0, 9.0, 10.0, 11.0]))
+batch = pa.RecordBatch.from_arrays(
+    [*batch.columns, ordinal, areas[1:4]],
+    [*batch.schema.names, "ordinal", "area"],
+)
+region = (-90.0, -180.0, 5.0, 180.0)  # clips two pieces, drops one
+outs = [compile_batch(batch, region, 5), compile_batch(batch, region, 5, "area")]
+assert "pandas" not in sys.modules, "pandas was imported"
+
+# the batch carries float32 vertices
+rings32 = [[r.astype(np.float32).astype(np.float64) for r in p.rings]
+           for p in pieces[1:4]]
+for out, pre_areas in zip(outs, [[geom.polygon_area2d(r) for r in rings32],
+                                 [8.0, 9.0, 10.0]]):
+    assert out.column("ordinal").to_pylist() == [p.ordinal for p in pieces[1:4]]
+    assert out.column("zone_id").to_pylist() == [p.zone_id for p in pieces[1:4]]
+    assert out.column("polygon_id").to_pylist() == [p.polygon_id for p in pieces[1:4]]
+    assert out.column("pre_area").to_pylist() == pre_areas
+    for rings, blobs in zip(rings32, out.column("blobs").to_pylist()):
+        want = index.compile_source(rings, *region, 5)
+        got = [index.unpack_piece(b) for b in blobs]
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert g.keys() == w.keys()
+            for k in w:
+                assert np.array_equal(g[k], w[k]), k
+assert sum(len(b) for b in outs[0].column("blobs").to_pylist()) > 0
+"""
+    run_isolated(code)

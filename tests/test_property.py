@@ -2,9 +2,6 @@
 covering index + probe must agree with direct inclusive containment, and
 clipping must preserve results inside the region."""
 
-import contextlib
-import signal
-
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -12,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 from tzengine import geom, index, oracle, probe
 from tzengine.zones import ZonePiece, _rect, make_piece
 
-from probe_helpers import dense_knn_names, ranks_to_tzids
+from probe_helpers import deadline, dense_knn_names, ranks_to_tzids
 
 
 def star_piece(seed: int, zone_id: str, ordinal: int, cx: float, cy: float,
@@ -162,21 +159,6 @@ def test_split_loops_are_simple_random_rings(seed):
         assert len({tuple(v) for v in loop}) == len(loop)
 
 
-@contextlib.contextmanager
-def time_limit(seconds: float):
-    """Fail (instead of hanging) when the body runs over ``seconds``."""
-    def fail(_signum, _frame):
-        raise TimeoutError(f"over {seconds} s")
-
-    old = signal.signal(signal.SIGALRM, fail)
-    signal.setitimer(signal.ITIMER_REAL, seconds)
-    try:
-        yield
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, old)
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     seed=st.integers(min_value=0, max_value=100_000),
@@ -228,7 +210,7 @@ def test_knn_equals_dense_sweep(seed, n_pieces, clip, k, metric):
         180.0, -180.0, -180.0, 180.0, 180.0, 1.0, np.nan,
     ]
     lats, lons = np.clip(lats, -90, 90), np.clip(lons, -180, 180)
-    with time_limit(60):
+    with deadline(60):
         got = probe.knn_zones_batch(idx, lats, lons, k, metric=metric)
     names = [[idx.zone_ids[r] for r in row] for row in got.to_pylist()]
     assert names == dense_knn_names(idx, lats, lons, k, metric=metric)

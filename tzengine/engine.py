@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import geom
 from . import index as indexmod
 from . import probe as probemod
 from .zones import ZonePiece
@@ -94,6 +95,45 @@ def _lat_lon_args(lat_col: str, lon_col: str):
     UDFs read the Arrow buffers as float64, and identical argument
     expressions let Spark ship each column once to the shared node."""
     return tuple(F.col(_sql_name(c)).cast("double") for c in (lat_col, lon_col))
+
+
+def compile_batch(batch, region, depth: int, area_col: str | None = None):
+    """One zones Arrow batch (``ordinal``, ``zone_id``, ``polygon_id``,
+    ``rings``, and ``area_col`` when given) → one row per piece:
+    ``ordinal``, ``zone_id``, ``polygon_id``, ``pre_area`` (``area_col``,
+    else the piece's planar area) and ``blobs`` (its ``pack_piece``
+    components, none when it is pruned or clipped away), as a
+    pa.RecordBatch, pandas-free. The body of the executor compile."""
+    cols = dict(zip(batch.schema.names, batch.columns))
+    areas = probemod.arrow_f64(cols[area_col]) if area_col is not None else None
+    pre_areas, blobs, n_blobs = [], [], []
+    for i, rings in enumerate(probemod.arrow_rings(cols["rings"])):
+        pre_areas.append(
+            areas[i] if areas is not None else geom.polygon_area2d(rings)
+        )
+        parts = indexmod.compile_source(rings, *region, depth)
+        blobs += [indexmod.pack_piece(d) for d in parts]
+        n_blobs.append(len(parts))
+    ends = np.cumsum([0] + [len(b) for b in blobs])
+    if ends[-1] > np.iinfo(np.int32).max:
+        raise ValueError("compiled pieces of one batch exceed 2 GiB")
+    blob_arr = pa.Array.from_buffers(
+        pa.binary(), len(blobs),
+        [None, pa.py_buffer(ends.astype(np.int32)), pa.py_buffer(b"".join(blobs))],
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            cols["ordinal"].cast(pa.int32()),
+            cols["zone_id"].cast(pa.string()),
+            cols["polygon_id"].cast(pa.int32()),
+            probemod.arrow_array(np.array(pre_areas, np.float64)),
+            pa.ListArray.from_arrays(
+                probemod.arrow_array(np.cumsum([0] + n_blobs).astype(np.int32)),
+                blob_arr,
+            ),
+        ],
+        ["ordinal", "zone_id", "polygon_id", "pre_area", "blobs"],
+    )
 
 
 class TzEngine:
@@ -189,43 +229,7 @@ class TzEngine:
         driver as nested Rows. ``area_col`` names a column holding the
         PRE-clip area (artifact reloads: their rings are already clipped,
         so they can no longer reproduce the reference's sort key)."""
-        from . import geom
-
         indexmod.validate_region(*region)
-        min_lat, min_lon, max_lat, max_lon = region
-
-        def compile_batches(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                cols = dict(zip(batch.schema.names, batch.columns))
-                areas = (
-                    cols[area_col].to_numpy(zero_copy_only=False)
-                    if area_col is not None else None
-                )
-                pre_areas, blobs = [], []
-                for i, rings in enumerate(probemod.arrow_rings(cols["rings"])):
-                    pre_areas.append(
-                        float(areas[i]) if areas is not None
-                        else geom.polygon_area2d(rings)
-                    )
-                    blobs.append([
-                        indexmod.pack_piece(d)
-                        for d in indexmod.compile_source(
-                            rings, min_lat, min_lon, max_lat, max_lon, depth
-                        )
-                    ])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        cols["ordinal"].cast(pa.int32()),
-                        cols["zone_id"].cast(pa.string()),
-                        cols["polygon_id"].cast(pa.int32()),
-                        pa.array(pre_areas, pa.float64()),
-                        pa.array(blobs, pa.list_(pa.binary())),
-                    ],
-                    ["ordinal", "zone_id", "polygon_id", "pre_area", "blobs"],
-                )
-
         src_cols = ["ordinal", "zone_id", "polygon_id", "rings"]
         if area_col is not None:
             src_cols.append(area_col)
@@ -233,7 +237,9 @@ class TzEngine:
             zones_df.select(*src_cols)
             .repartition(spark.sparkContext.defaultParallelism)
             .mapInArrow(
-                compile_batches,
+                lambda batches: (
+                    compile_batch(b, region, depth, area_col) for b in batches
+                ),
                 "ordinal int, zone_id string, polygon_id int, "
                 "pre_area double, blobs array<binary>",
             )

@@ -2,7 +2,7 @@
 
 ``ensure_shipped`` zips the tzengine package and registers it with
 ``sparkContext.addPyFile`` so executor Python workers can unpickle the
-engine's pandas-UDF closures — the in-process equivalent of running via
+engine's Arrow UDF closures — the in-process equivalent of running via
 ``spark-submit --py-files tzengine.zip`` on a real cluster (north_rule).
 Idempotent per SparkContext.
 """
