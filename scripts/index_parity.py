@@ -1,15 +1,19 @@
 """Fingerprint the compiled index and the distance kernels of a checkout.
 
 Prints one SHA-256 per line for:
-- every ``CompiledIndex`` field but the kNN candidate lists of the synth
-  (whole world and a clipped region), big454 and 1M-vertex huge worlds
-  (lines ``index``), and the list fields ``knn_*`` on their own (lines
-  ``lists``);
-- the same for the synth, synth_clip and big454 indexes built from a
-  zones DataFrame (``zones.pieces_to_df`` into ``TzEngine.for_region``,
-  lines ``df``) and for a big454 ``save_artifact``/``from_artifact``
-  round trip (line ``art``) — each must equal its ``index`` and
-  ``lists`` lines;
+- every ``CompiledIndex`` field but the kNN candidate lists and the ring
+  geometry of the synth (whole world and a clipped region), big454 and
+  1M-vertex huge worlds (lines ``index``), and the list fields ``knn_*``
+  on their own (lines ``lists``);
+- the ring geometry of each world as float64, read through whichever
+  layout the checkout stores (lines ``geom``): every piece's
+  ``piece_rings``, the foot search's ``probe._seg_cache``, each cell
+  entry's local segment endpoints, and the storage dtype;
+- the same three for the synth, synth_clip and big454 indexes built from
+  a zones DataFrame (``zones.pieces_to_df`` into ``TzEngine.for_region``,
+  lines ``df`` and ``geom <world>/df``) and for a big454
+  ``save_artifact``/``from_artifact`` round trip (lines ``art`` and
+  ``geom big454/art``) — each must equal its driver-compiled line;
 - ``knn_zones_batch`` rank lists for k = 1..4 (the exact-evaluation count
   is printed beside the digest, not hashed), and ``containing_distances``
   offsets, heads and distances, on 20k seeded big454 points (NaN, +-inf
@@ -48,6 +52,11 @@ import time
 import numpy as np
 
 
+# ring geometry fields of either index layout, hashed by the geom lines
+GEOM_FIELDS = {"verts", "vert_offsets", "seg_a", "seg_b", "seg_offsets",
+               "coords", "coord_offsets", "ent_seg_idx"}
+
+
 def _feed(h, v) -> None:
     if isinstance(v, np.ndarray):
         h.update(f"{v.dtype.str}{v.shape}".encode())
@@ -80,7 +89,9 @@ def assign_points(idx, seed: int) -> tuple[np.ndarray, np.ndarray]:
     pad = (hi - lo) / 10
     lons = rng.uniform(lo[0] - pad[0], hi[0] + pad[0], 20_000)
     lats = rng.uniform(lo[1] - pad[1], hi[1] + pad[1], 20_000)
-    vv = idx.verts[rng.integers(0, len(idx.verts), 2_000)].astype(np.float64)
+    verts = np.vstack([r for rank in range(idx.n_pieces)
+                       for r in idx.piece_rings(rank)])
+    vv = verts[rng.integers(0, len(verts), 2_000)]
     past90, past180 = np.nextafter(90.0, 91.0), np.nextafter(180.0, 181.0)
     special_lats = [np.nan, 0.0, np.inf, -np.inf, 0.0, 0.0, 90.0, -90.0,
                     90.0, -90.0, past90, -past90, 0.0, 0.0]
@@ -106,7 +117,21 @@ def main() -> None:
 
     def index_digest(idx) -> str:
         return digest(*(getattr(idx, f.name) for f in dataclasses.fields(idx)
-                        if not f.name.startswith("knn_")))
+                        if not f.name.startswith("knn_")
+                        and f.name not in GEOM_FIELDS))
+
+    def geom_line(name: str, idx) -> None:
+        pos = idx.ent_seg_idx
+        if hasattr(idx, "coords"):  # ring-closed coordinates
+            c = idx.coords
+            a, b, dtype = c[pos], c[pos + 1], c.dtype
+        else:  # verts + seg_a/seg_b
+            a, b, dtype = idx.seg_a[pos], idx.seg_b[pos], idx.seg_a.dtype
+        print(f"geom  {name:10s} " + digest(
+            [idx.piece_rings(rank) for rank in range(idx.n_pieces)],
+            probe._seg_cache(idx), a.astype(np.float64),
+            b.astype(np.float64), dtype.str,
+        ))
 
     def lists_line(kind: str, name: str, idx) -> None:
         lists = [getattr(idx, f.name) for f in dataclasses.fields(idx)
@@ -123,6 +148,7 @@ def main() -> None:
               f"({idx.n_pieces} pieces, compile {dt:.2f} s, "
               f"{idx.nbytes()} bytes)")
         lists_line("index", name, idx)
+        geom_line(name, idx)
         built[name] = idx
 
     for seed, (name, idx) in enumerate(built.items()):
@@ -165,6 +191,7 @@ def main() -> None:
         dt = time.perf_counter() - t0
         print(f"df    {name:10s} {index_digest(eng.idx)}  (compile {dt:.2f} s)")
         lists_line("df", name, eng.idx)
+        geom_line(f"{name}/df", eng.idx)
     with tempfile.TemporaryDirectory() as tmp:
         eng.save_artifact(tmp)
         t0 = time.perf_counter()
@@ -172,6 +199,7 @@ def main() -> None:
         dt = time.perf_counter() - t0
         print(f"art   big454     {index_digest(art.idx)}  (reload {dt:.2f} s)")
         lists_line("art", "big454", art.idx)
+        geom_line("big454/art", art.idx)
     spark.stop()
 
     rng = np.random.default_rng(20_000)

@@ -59,6 +59,14 @@ def run_isolated(code: str) -> None:
     assert run.returncode == 0, run.stderr[-2000:]
 
 
+def ring_vertices(idx) -> np.ndarray:
+    """Every ring vertex of the index as one float64 (V, 2) array, pieces
+    in rank order, each ring's closing copy dropped."""
+    return np.vstack(
+        [r for rank in range(idx.n_pieces) for r in idx.piece_rings(rank)]
+    )
+
+
 def rows_to_pieces(rows) -> list[ZonePiece]:
     """Zones-table Rows (zone_id, polygon_id, ordinal, rings) -> pieces,
     rings as (V, 2) float64 (lon, lat) arrays."""

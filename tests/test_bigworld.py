@@ -11,7 +11,7 @@ from tzengine import index, probe
 from tzengine.bigworld import big_world
 from tzengine.oracle import OracleMap
 
-from probe_helpers import dense_knn_names, ranks_to_tzids
+from probe_helpers import dense_knn_names, ranks_to_tzids, ring_vertices
 
 
 def zone_names(idx, rank_lists):
@@ -163,10 +163,9 @@ def test_distributed_compile_index_arrays_identical(spark, world):
     a, b = local.idx, dist.idx
     assert a.zone_ids == b.zone_ids
     for field in ["polygon_ids", "areas", "piece_bbox", "ring_offsets",
-                  "vert_offsets", "verts", "seg_offsets", "seg_a", "seg_b",
-                  "ent_rank", "ent_interior", "ent_center", "ent_seg_off",
-                  "ent_seg_idx", "knn_grid", "knn_off", "knn_rank",
-                  "knn_bound"]:
+                  "coord_offsets", "coords", "ent_rank", "ent_interior",
+                  "ent_center", "ent_seg_off", "ent_seg_idx", "knn_grid",
+                  "knn_off", "knn_rank", "knn_bound"]:
         np.testing.assert_array_equal(getattr(a, field), getattr(b, field),
                                       err_msg=field)
     assert sorted(a.levels) == sorted(b.levels)
@@ -183,7 +182,7 @@ def test_distributed_compile_index_arrays_identical(spark, world):
                                     -50, -50, 50, 50, world_version="big1")
     c = dist2.idx
     assert a.zone_ids == c.zone_ids
-    np.testing.assert_array_equal(a.verts, c.verts)
+    np.testing.assert_array_equal(a.coords, c.coords)
     np.testing.assert_array_equal(a.ent_rank, c.ent_rank)
     np.testing.assert_array_equal(a.ent_seg_idx, c.ent_seg_idx)
 
@@ -319,9 +318,10 @@ def test_q5_kernel_matches_oracle_map(request, world, metric):
     oracle = OracleMap(pieces, -90, -180, 90, 180)
     rng = np.random.default_rng(31)
     n = 240
-    vsel = rng.integers(0, len(idx.verts), 40)
-    lats = np.concatenate([rng.uniform(-63, 63, n), idx.verts[vsel, 1]])
-    lons = np.concatenate([rng.uniform(-63, 63, n), idx.verts[vsel, 0]])
+    verts = ring_vertices(idx)
+    vsel = rng.integers(0, len(verts), 40)
+    lats = np.concatenate([rng.uniform(-63, 63, n), verts[vsel, 1]])
+    lons = np.concatenate([rng.uniform(-63, 63, n), verts[vsel, 0]])
     offs, ranks, _ = probe.probe_ranks(idx, lats, lons, mode="pipeline")
     zones = []
     for i in range(len(lats)):
@@ -356,12 +356,35 @@ def test_hugeworld_shape_and_broadcast_bound(huge):
     n_verts = sum(len(r) for p in pieces for r in p.rings)
     assert n_verts >= 1_000_000
     # all vertices sit on the float32 grid (B3 ingest contract)
-    v = idx_h.verts
+    v = ring_vertices(idx_h)
     np.testing.assert_array_equal(v, v.astype(np.float32).astype(np.float64))
-    # broadcast stays bounded: ~24B/vertex (f64 verts + f32-capable seg
-    # arrays + cells) — the index must not blow up superlinearly in V
+    # broadcast stays bounded: each vertex stored once (f32 ring-closed
+    # coords) plus cells — the index must not blow up superlinearly in V
     assert idx_h.nbytes() < 80 * 1024 * 1024, idx_h.nbytes()
     assert idx_h.ent_interior.any() and (~idx_h.ent_interior).any()
+
+
+@pytest.mark.parametrize("name", ["synth", "big454"])
+def test_nbytes_counts_every_array(request, name):
+    """nbytes() is the sum over every array the index holds (each ndarray
+    field, the lookup levels, the dense level tables) and stays within
+    the pickled broadcast."""
+    import dataclasses
+    import pickle
+
+    from tzengine.zones import synthetic_world
+
+    if name == "synth":
+        idx = index.compile_index(synthetic_world(), -90, -180, 90, 180,
+                                  world_version="synth1")
+    else:
+        idx = request.getfixturevalue(name)[1]
+    fields = [getattr(idx, f.name) for f in dataclasses.fields(idx)]
+    arrays = [v for v in fields if isinstance(v, np.ndarray)]
+    arrays += [a for lvl in idx.levels.values() for a in lvl]
+    arrays += [d[0] for d in idx.level_dense.values()]
+    assert idx.nbytes() == sum(a.nbytes for a in arrays)
+    assert idx.nbytes() <= len(pickle.dumps(idx, pickle.HIGHEST_PROTOCOL))
 
 
 def test_hugeworld_probe_matches_dense_pip(huge):
@@ -377,9 +400,10 @@ def test_hugeworld_probe_matches_dense_pip(huge):
     lats = rng.uniform(-63, 63, 300)
     lons = rng.uniform(-63, 63, 300)
     # 100 exact polygon vertices as probe points (on-boundary inclusivity)
-    vsel = rng.integers(0, len(idx_h.verts), 100)
-    lats = np.concatenate([lats, idx_h.verts[vsel, 1]])
-    lons = np.concatenate([lons, idx_h.verts[vsel, 0]])
+    verts = ring_vertices(idx_h)
+    vsel = rng.integers(0, len(verts), 100)
+    lats = np.concatenate([lats, verts[vsel, 1]])
+    lons = np.concatenate([lons, verts[vsel, 0]])
 
     offs, ranks, valid = probe.probe_ranks(idx_h, lats, lons, mode="strict")
     got = [ranks[offs[i]:offs[i + 1]].tolist() for i in range(len(lats))]
@@ -400,8 +424,9 @@ def test_hugeworld_oracle_map_spot_check(huge):
     pieces, idx_h = huge
     oracle = OracleMap(pieces, -90, -180, 90, 180)
     rng = np.random.default_rng(5)
-    lats = list(rng.uniform(-63, 63, 8)) + [float(idx_h.verts[12345, 1])]
-    lons = list(rng.uniform(-63, 63, 8)) + [float(idx_h.verts[12345, 0])]
+    vertex = ring_vertices(idx_h)[12345]
+    lats = list(rng.uniform(-63, 63, 8)) + [float(vertex[1])]
+    lons = list(rng.uniform(-63, 63, 8)) + [float(vertex[0])]
     offs, ranks, valid = probe.probe_ranks(
         idx_h, np.array(lats), np.array(lons), mode="strict"
     )
@@ -425,10 +450,10 @@ def test_hugeworld_distributed_compile_parity(spark):
     )
     a, b = local.idx, dist.idx
     assert a.zone_ids == b.zone_ids
-    for field in ["areas", "piece_bbox", "vert_offsets", "verts",
-                  "seg_a", "seg_b", "ent_rank", "ent_interior",
-                  "ent_center", "ent_seg_off", "ent_seg_idx", "knn_grid",
-                  "knn_off", "knn_rank", "knn_bound"]:
+    for field in ["areas", "piece_bbox", "coord_offsets", "coords",
+                  "ent_rank", "ent_interior", "ent_center", "ent_seg_off",
+                  "ent_seg_idx", "knn_grid", "knn_off", "knn_rank",
+                  "knn_bound"]:
         np.testing.assert_array_equal(getattr(a, field), getattr(b, field),
                                       err_msg=field)
 

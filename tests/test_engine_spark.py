@@ -307,6 +307,112 @@ def test_cell_of_expr_matches_numpy_cell_of(spark):
         assert got == exp, res
 
 
+def test_one_vertex_rings_match_oracle(spark, world):
+    """A 1-vertex ring adds no boundary segment: a piece holding two of
+    them beside two real rings gets the OracleMap's assign, Q5 and kNN
+    output, and zones() exports all four rings (every coordinate here
+    sits on the float32 grid, so they read back exactly)."""
+    from tzengine import geom, probe
+    from tzengine.oracle import (
+        distance_from_boundary, planar_distance_from_boundary,
+    )
+    from tzengine.zones import make_piece
+
+    rings = [
+        [(6.25, 1.25)],
+        [(7.0, 1.0), (7.0, 2.0), (6.0, 2.0), (6.0, 1.0)],
+        [(8.75, 8.75)],
+        [(9.5, 0.5), (9.5, 1.0), (9.0, 1.0), (9.0, 0.5)],
+    ]
+    dotted = make_piece("Zone/Dotted", 0, 99, rings)
+    pieces = list(world) + [dotted]
+    eng = TzEngine.for_everywhere(spark, pieces, world_version="dotted1")
+    idx = eng.idx
+    oracle = OracleMap(pieces, -90, -180, 90, 180)
+
+    g = np.array([0.5, 1.0, 1.25, 1.5, 2.0, 4.5, 6.25, 8.75, 9.25, 9.5])
+    lat_g, lon_g = np.meshgrid(g, g)
+    lats, lons = lat_g.ravel(), lon_g.ravel()
+    offs, ranks, _ = probe.probe_ranks(idx, lats, lons, mode="strict")
+    got = [[idx.zone_ids[r] for r in ranks[offs[i]:offs[i + 1]]]
+           for i in range(len(lats))]
+    want = [oracle.get_overlapping_time_zones(la, lo)
+            for la, lo in zip(lats, lons)]
+    assert got == want
+    assert any("Zone/Dotted" in w for w in want)
+
+    pts = np.stack([lons, lats], axis=1)
+    for metric, dist_fn in (("geodesic", distance_from_boundary),
+                            ("planar_deg", planar_distance_from_boundary)):
+        zones = [("Zone/Dotted", w[0] if w else None, None)[i % 3]
+                 for i, w in enumerate(want)]
+        q5 = probe.distance_from_boundary_batch(
+            idx, zones, lats, lons, mode="pipeline", metric=metric
+        )
+        q5_want = [oracle.get_distance_from_boundary(z, la, lo, metric)
+                   for z, la, lo in zip(zones, lats, lons)]
+        assert np.array_equal(q5, q5_want, equal_nan=True)
+
+        # the reference kNN order over the oracle's own (rank-ordered)
+        # entries: distance 0 inside, else the boundary distance
+        dist = np.stack([
+            np.where(geom.contains_inclusive(pts, rs), 0.0,
+                     dist_fn(pts, rs))
+            for _zid, rs in oracle.entries
+        ], axis=1)
+        knn_want = []
+        for row in dist:
+            names = []
+            for e in np.lexsort((np.arange(len(row)), row)):
+                zid = oracle.entries[e][0]
+                if zid not in names and len(names) < 3:
+                    names.append(zid)
+            knn_want.append(names)
+        knn = probe.knn_zones_batch(idx, lats, lons, 3, metric=metric)
+        assert [[idx.zone_ids[r] for r in row]
+                for row in knn.to_pylist()] == knn_want
+
+    row = eng.zones().where(F.col("zone_id") == "Zone/Dotted").collect()[0]
+    assert [[(v.lat, v.lon) for v in ring] for ring in row.rings] == rings
+
+
+def test_ensure_shipped_shares_one_zip_per_source(tmp_path):
+    """Two driver processes of the same code register the same zip, named
+    by the sources' hash, leave nothing else in the temp dir, and the
+    zip carries an importable tzengine."""
+    import os
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stub = (
+        "from tzengine import session\n"
+        "class Context:\n"
+        "    def addPyFile(self, path):\n"
+        "        print(path)\n"
+        "class Spark:\n"
+        "    sparkContext = Context()\n"
+        "session.ensure_shipped(Spark())\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    shipped = [
+        subprocess.run(
+            [sys.executable, "-c", stub], cwd=root, env=env,
+            capture_output=True, text=True, timeout=120, check=True,
+        ).stdout.split()
+        for _ in range(2)
+    ]
+    assert shipped[0] == shipped[1] and len(shipped[0]) == 1
+    zip_path = shipped[0][0]
+    assert os.listdir(tmp_path) == [os.path.basename(zip_path)]
+    assert os.path.dirname(zip_path) == str(tmp_path)
+    imported = subprocess.run(
+        [sys.executable, "-c", "import tzengine; print(tzengine.__file__)"],
+        cwd=tmp_path, env=dict(env, PYTHONPATH=zip_path),
+        capture_output=True, text=True, timeout=120, check=True,
+    ).stdout.strip()
+    assert imported == os.path.join(zip_path, "tzengine", "__init__.py")
+
+
 def test_zones_accessor_int32_offset_overflow_guard(engine):
     """Arrow list<> offsets are int32; past 2^31 vertices .astype would
     silently WRAP (ADVICE r3 #3) — zones() must fail fast instead."""
@@ -317,7 +423,9 @@ def test_zones_accessor_int32_offset_overflow_guard(engine):
 
     big_idx = dataclasses.replace(
         engine.idx,
-        vert_offsets=np.array([0, np.iinfo(np.int32).max + 1], dtype=np.int64),
+        # one ring of 2^31 vertices plus its closing copy
+        coord_offsets=np.array([0, np.iinfo(np.int32).max + 2],
+                               dtype=np.int64),
     )
     big_engine = type(engine)(engine.spark, big_idx)
     with pytest.raises(ValueError, match="int32 list-offset"):

@@ -12,7 +12,9 @@ from tzengine import geom, index, probe
 from tzengine.oracle import OracleMap
 from tzengine.zones import ZonePiece, synthetic_world
 
-from probe_helpers import deadline, ranks_to_tzids, run_isolated
+from probe_helpers import (
+    deadline, ranks_to_tzids, ring_vertices, run_isolated,
+)
 
 WORLD = synthetic_world()
 EVERYWHERE = index.compile_index(WORLD, -90, -180, 90, 180, world_version="synth1")
@@ -197,7 +199,9 @@ def test_nearest_feet_rejects_non_finite_points():
 
 def test_every_compiled_piece_has_a_segment():
     idx = EVERYWHERE
-    assert np.all(np.diff(idx.seg_offsets) > 0)
+    starts = index.segment_starts(idx.coord_offsets)
+    seg_runs = np.searchsorted(starts, idx.coord_offsets[idx.ring_offsets])
+    assert np.all(np.diff(seg_runs) > 0)
     dot = ZonePiece("Zone/Dot", 0, 99, [np.array([[5.0, 5.0]])])
     with pytest.raises(ValueError, match="no boundary segment"):
         index.compile_index(
@@ -434,12 +438,9 @@ def test_merged_levels_probe_parity_with_unmerged():
     assert len(merged.levels) < len(unmerged.levels)  # non-vacuous
 
     rng = np.random.default_rng(17)
-    lats = np.concatenate(
-        [rng.uniform(-63, 63, 20000), merged.verts[:2000, 1]]
-    )
-    lons = np.concatenate(
-        [rng.uniform(-63, 63, 20000), merged.verts[:2000, 0]]
-    )
+    verts = ring_vertices(merged)
+    lats = np.concatenate([rng.uniform(-63, 63, 20000), verts[:2000, 1]])
+    lons = np.concatenate([rng.uniform(-63, 63, 20000), verts[:2000, 0]])
     oa, ra, va = probe.probe_ranks(merged, lats, lons, mode="pipeline")
     ob, rb, vb = probe.probe_ranks(unmerged, lats, lons, mode="pipeline")
     assert np.array_equal(oa, ob)
@@ -637,6 +638,7 @@ def test_compile_worker_does_not_import_pandas():
     piece's ``compile_source`` components and area, with and without an
     area column, without importing pandas."""
     code = ZONES_BATCH + """
+import pickle
 from tzengine import geom, index
 from tzengine.engine import compile_batch
 
@@ -660,7 +662,7 @@ for out, pre_areas in zip(outs, [[geom.polygon_area2d(r) for r in rings32],
     assert out.column("pre_area").to_pylist() == pre_areas
     for rings, blobs in zip(rings32, out.column("blobs").to_pylist()):
         want = index.compile_source(rings, *region, 5)
-        got = [index.unpack_piece(b) for b in blobs]
+        got = [pickle.loads(b) for b in blobs]
         assert len(got) == len(want)
         for g, w in zip(got, want):
             assert g.keys() == w.keys()

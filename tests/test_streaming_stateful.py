@@ -207,7 +207,8 @@ def test_streaming_dedup_quiet_key_state_reclaimed(spark, tmp_path):
         # maintenance ticks built from the sink's own distinct keys —
         # no data rows for either key, yet their state must be removed
         keys = spark.sql("select distinct phash from dedup_quiet")
-        ticks = [(r.phash, None) for r in keys.collect()]
+        ticks = streaming.dedup_maintenance_ticks(keys).collect()
+        assert sorted(map(tuple, ticks)) == [(1, None), (2, None)]
         feed("ticks", ticks)
         q.processAllAvailable()
         assert spark.sql("select * from dedup_quiet").count() == 2  # no emits

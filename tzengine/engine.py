@@ -18,6 +18,8 @@ workers never import pandas.
 
 from __future__ import annotations
 
+import pickle
+
 import numpy as np
 import pyarrow as pa
 
@@ -101,9 +103,10 @@ def compile_batch(batch, region, depth: int, area_col: str | None = None):
     """One zones Arrow batch (``ordinal``, ``zone_id``, ``polygon_id``,
     ``rings``, and ``area_col`` when given) → one row per piece:
     ``ordinal``, ``zone_id``, ``polygon_id``, ``pre_area`` (``area_col``,
-    else the piece's planar area) and ``blobs`` (its ``pack_piece``
-    components, none when it is pruned or clipped away), as a
-    pa.RecordBatch, pandas-free. The body of the executor compile."""
+    else the piece's planar area) and ``blobs`` (its pickled
+    ``compile_piece`` components, none when it is pruned or clipped
+    away), as a pa.RecordBatch, pandas-free. The body of the executor
+    compile."""
     cols = dict(zip(batch.schema.names, batch.columns))
     areas = probemod.arrow_f64(cols[area_col]) if area_col is not None else None
     pre_areas, blobs, n_blobs = [], [], []
@@ -112,7 +115,7 @@ def compile_batch(batch, region, depth: int, area_col: str | None = None):
             areas[i] if areas is not None else geom.polygon_area2d(rings)
         )
         parts = indexmod.compile_source(rings, *region, depth)
-        blobs += [indexmod.pack_piece(d) for d in parts]
+        blobs += [pickle.dumps(d, protocol=5) for d in parts]
         n_blobs.append(len(parts))
     ends = np.cumsum([0] + [len(b) for b in blobs])
     if ends[-1] > np.iinfo(np.int32).max:
@@ -222,9 +225,9 @@ class TzEngine:
         """Compile a zones DataFrame (SURVEY §3.1): one mapInArrow runs
         ``index.compile_source`` on every source piece and emits ONE row
         per piece — ordinal, zone_id, polygon_id, pre-clip area and its
-        ``pack_piece`` blobs (none when the piece is pruned or clipped
-        away) — then one collect. The driver checks ordinal uniqueness
-        over every row and runs the driver compile's own
+        pickled ``compile_piece`` blobs (none when the piece is pruned or
+        clipped away) — then one collect. The driver checks ordinal
+        uniqueness over every row and runs the driver compile's own
         ``assemble_sources``, so the ring geometry never crosses to the
         driver as nested Rows. ``area_col`` names a column holding the
         PRE-clip area (artifact reloads: their rings are already clipped,
@@ -249,7 +252,7 @@ class TzEngine:
         sources = [
             (
                 r.zone_id, r.polygon_id, r.ordinal, r.pre_area,
-                [indexmod.unpack_piece(bytes(b)) for b in r.blobs],
+                [pickle.loads(b) for b in r.blobs],
             )
             for r in rows
         ]
@@ -271,28 +274,31 @@ class TzEngine:
         """The clipped, area-rank-ordered zone pieces as a DataFrame
         (reference `timeZones` accessor, TimeZoneMap.kt:34).
 
-        Arrow-native: the index's CSR arrays (verts + ring/vert offsets)
-        map 1:1 onto Arrow nested lists, so the table is built with zero
-        per-vertex Python — this is the `save_artifact` write path and
-        must stay O(array bytes) at 100x zone worlds, not O(vertices)
-        Python-object churn."""
+        Arrow-native: the index's CSR arrays (coords + ring/coord
+        offsets, each ring's closing copy dropped) map 1:1 onto Arrow
+        nested lists, so the table is built with zero per-vertex Python —
+        this is the `save_artifact` write path and must stay O(array
+        bytes) at 100x zone worlds, not O(vertices) Python-object churn."""
         idx = self.idx
-        verts = np.asarray(idx.verts, dtype=np.float64)
+        rows = np.diff(idx.coord_offsets)  # a ring's vertices + 1, or 0
+        vert_offsets = idx.coord_offsets - np.r_[0, np.cumsum(rows > 0)]
         # Arrow list<> offsets are int32; .astype would silently WRAP past
         # 2^31 vertices (ADVICE r3 #3) — fail fast instead of corrupting.
         # (Spark's ArrowConversion does not accept large_list, so the
         # int64-offset escape hatch isn't available here; a >2^31-vertex
         # world must be exported in zone-range slices.)
-        if int(idx.vert_offsets[-1]) > np.iinfo(np.int32).max:
+        if int(vert_offsets[-1]) > np.iinfo(np.int32).max:
             raise ValueError(
-                f"zones(): {int(idx.vert_offsets[-1])} vertices exceed Arrow "
+                f"zones(): {int(vert_offsets[-1])} vertices exceed Arrow "
                 "int32 list-offset range (2^31-1); export in slices"
             )
+        closing = idx.coord_offsets[1:][rows > 0] - 1
+        verts = np.delete(idx.coords, closing, axis=0).astype(np.float64)
         struct_arr = pa.StructArray.from_arrays(
             [pa.array(verts[:, 1]), pa.array(verts[:, 0])], ["lat", "lon"]
         )
         ring_list = pa.ListArray.from_arrays(
-            pa.array(idx.vert_offsets.astype(np.int32)), struct_arr
+            pa.array(vert_offsets.astype(np.int32)), struct_arr
         )
         rings_col = pa.ListArray.from_arrays(
             pa.array(idx.ring_offsets.astype(np.int32)), ring_list

@@ -22,8 +22,9 @@ Pipeline (reference step → here):
 
 A piece list compiles on the driver (``compile_index``); a zones
 DataFrame runs the same ``compile_source`` on executors and ships
-``pack_piece`` blobs (``engine.TzEngine._compile_on_executors``). Both
-end in ``assemble_sources``.
+pickled ``compile_piece`` blobs
+(``engine.TzEngine._compile_on_executors``). Both end in
+``assemble_sources``.
 
 The compiled artifact is flat numpy (CSR) — no Python dicts-of-lists — so
 the probe kernel stays fully vectorized and the broadcast pickles small.
@@ -33,7 +34,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 import numpy as np
 
@@ -65,31 +66,32 @@ class CompiledIndex:
     # pruning bound (geodesic lower bound to the bbox beats exact
     # boundary-distance evaluation of far pieces)
     piece_bbox: np.ndarray  # float64 (P, 4)
-    # clipped ring geometry, CSR piece -> rings -> vertices
-    ring_offsets: np.ndarray  # int64 (P+1,)
-    vert_offsets: np.ndarray  # int64 (R+1,)
-    verts: np.ndarray  # float64 (V, 2) lon,lat
-    # flat segment arrays (ring-closing edges included), piece -> span.
-    # Stored float32 when the float64->float32 round-trip is LOSSLESS
-    # (always true for unclipped worlds: every ingested coordinate sits on
-    # the f32 grid, zones.make_piece / Serialization.kt:12) — halves the
-    # random-gather bandwidth of the probe boundary kernel; the kernel
-    # upcasts gathered slices to float64 before any arithmetic so the
-    # predicates are bit-identical. Clip-generated vertices that are not
-    # f32-exact keep float64 storage (correctness over bandwidth).
-    seg_offsets: np.ndarray  # int64 (P+1,), every span non-empty
-    seg_a: np.ndarray  # float32|float64 (S, 2)
-    seg_b: np.ndarray  # float32|float64 (S, 2)
+    # clipped ring geometry, CSR piece -> rings -> coordinate rows.
+    # ``coords`` holds each ring's vertices followed by a copy of its
+    # first vertex, so segment j is the row pair (p, p + 1) for every
+    # position p but a ring's closing copy (a ring of fewer than 2
+    # vertices has no segment, ``segment_starts``). Stored float32 when
+    # the float64->float32 round-trip is LOSSLESS (always true for
+    # unclipped worlds: every ingested coordinate sits on the f32 grid,
+    # zones.make_piece / Serialization.kt:12) — halves the broadcast and
+    # the random-gather bandwidth of the probe boundary kernel; the
+    # kernels upcast gathered rows to float64 before any arithmetic, so
+    # the predicates are bit-identical. Clip-generated vertices that are
+    # not f32-exact keep float64 storage (correctness over bandwidth).
+    ring_offsets: np.ndarray  # int64 (P+1,) piece -> rings
+    coord_offsets: np.ndarray  # int64 (R+1,) ring -> rows of coords
+    coords: np.ndarray  # float32|float64 (V+R, 2) lon,lat, rings closed
     # global cell-entry arrays (E entries across all levels):
     #   rank of the piece, interior flag, even-odd state of the CELL
-    #   CENTER, and the CSR of cell-local segment ids (north_star:
-    #   boundary cells carry their own geometry — probe cost is O(local
-    #   segments), independent of total zone vertex count)
+    #   CENTER, and the CSR of the cell-local segments as their start
+    #   positions in ``coords`` (north_star: boundary cells carry their
+    #   own geometry — probe cost is O(local segments), independent of
+    #   total zone vertex count)
     ent_rank: np.ndarray  # int32 (E,)
     ent_interior: np.ndarray  # bool (E,)
     ent_center: np.ndarray  # bool (E,)
     ent_seg_off: np.ndarray  # int64 (E+1,)
-    ent_seg_idx: np.ndarray  # int32 (sum of local segs,)
+    ent_seg_idx: np.ndarray  # int32 (sum of local segs,) coords rows
     # cell lookup per resolution: res -> (sorted cell ids, offsets,
     # entry ids). Round 6: adjacent covering resolutions are MERGED at
     # assembly (quadtree rasterization, ``merge_levels``) — a coarse
@@ -130,24 +132,40 @@ class CompiledIndex:
         return len(self.zone_ids)
 
     def piece_rings(self, rank: int) -> list[np.ndarray]:
-        rings = []
-        for ri in range(self.ring_offsets[rank], self.ring_offsets[rank + 1]):
-            rings.append(self.verts[self.vert_offsets[ri] : self.vert_offsets[ri + 1]])
-        return rings
+        """The piece's rings as float64 (V, 2) arrays, closing copies
+        dropped."""
+        co = self.coord_offsets
+        return [
+            self.coords[co[ri]:co[ri + 1]][:-1].astype(np.float64)
+            for ri in range(*self.ring_offsets[rank:rank + 2])
+        ]
+
+    @property
+    def seg_a(self) -> np.ndarray:
+        """Segment start points (S, 2). Kept only for
+        ``perfbench/worker.py``'s traced layer pass, which reports
+        ``len(idx.seg_a)`` as ``index.segments``; the package reads
+        ``segment_starts`` instead."""
+        return self.coords[segment_starts(self.coord_offsets)]
 
     def nbytes(self) -> int:
-        n = (self.verts.nbytes + self.ring_offsets.nbytes
-             + self.vert_offsets.nbytes + self.seg_a.nbytes + self.seg_b.nbytes
-             + self.ent_rank.nbytes + self.ent_interior.nbytes
-             + self.ent_center.nbytes + self.ent_seg_off.nbytes
-             + self.ent_seg_idx.nbytes + self.knn_grid.nbytes
-             + self.knn_off.nbytes + self.knn_rank.nbytes
-             + self.knn_bound.nbytes)
-        for lvl in self.levels.values():
-            n += sum(a.nbytes for a in lvl)
-        for d in self.level_dense.values():
-            n += d[0].nbytes
-        return n
+        """Bytes of every array the index holds: each ndarray field, the
+        lookup levels and the dense level tables."""
+        n = sum(
+            a.nbytes for f in fields(self)
+            if isinstance(a := getattr(self, f.name), np.ndarray)
+        )
+        n += sum(a.nbytes for lvl in self.levels.values() for a in lvl)
+        return n + sum(d[0].nbytes for d in self.level_dense.values())
+
+
+def segment_starts(coord_offsets: np.ndarray) -> np.ndarray:
+    """Row in ``coords`` of every segment's start point, in
+    ``geom._segments`` order: each vertex of a ring of at least 2
+    vertices (its closing copy ends the ring's last segment)."""
+    n = np.diff(coord_offsets) - 1  # vertices; -1 for an empty ring
+    has = n >= 2
+    return geom._expand(coord_offsets[:-1][has], n[has])
 
 
 def _base_res_for_bbox(w_lon: float, h_lat: float) -> int:
@@ -417,10 +435,12 @@ def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
     ``compile_source``, on the driver or on executors). All ids are
     RELATIVE to the piece; ``assemble_index`` applies global offsets.
 
-    Keys: verts (V,2) f64; ring_lens (R,) i64; seg_a/seg_b (S,2) f64;
-    bbox (4,) f64 (lo_lon, lo_lat, hi_lon, hi_lat); cells (E,) u64;
-    interior/center (E,) bool; loc_off (E+1,) i64 + loc_idx (L,) i32 —
-    per-cell CSR of piece-local segment ids for boundary cells."""
+    Keys: coords (V+R,2) f64, each ring followed by a copy of its first
+    vertex; ring_rows (R,) i64 rows of coords per ring; bbox (4,) f64
+    (lo_lon, lo_lat, hi_lon, hi_lat); cells (E,) u64; interior/center
+    (E,) bool; loc_off (E+1,) i64 + loc_idx (L,) i32 — per-cell CSR of
+    piece-local segment ids (``geom._segments`` order) for boundary
+    cells."""
     sa, sb = geom._segments(rings)
     cids, interior, (brow, bcol) = cover_piece(rings, depth=depth)
     bounds = cells.cell_bounds(cids)
@@ -444,10 +464,13 @@ def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
     loc_off = np.zeros(n_cells + 1, dtype=np.int64)
     np.cumsum(loc_counts, out=loc_off[1:])
     return {
-        "verts": np.vstack(rings) if rings else np.zeros((0, 2)),
-        "ring_lens": np.array([len(r) for r in rings], dtype=np.int64),
-        "seg_a": sa,
-        "seg_b": sb,
+        "coords": (
+            np.vstack([x for r in rings for x in (r, r[:1])])
+            if rings else np.zeros((0, 2))
+        ),
+        "ring_rows": np.array(
+            [len(r) + (len(r) > 0) for r in rings], dtype=np.int64
+        ),
         "bbox": np.array(geom.rings_bbox(rings), dtype=np.float64),
         "cells": cids,
         "interior": interior,
@@ -457,21 +480,6 @@ def compile_piece(rings: list[np.ndarray], depth: int = 5) -> dict:
             np.concatenate(idx_parts) if idx_parts else np.zeros(0, np.int32)
         ),
     }
-
-
-def pack_piece(d: dict) -> bytes:
-    """Compact wire form of a compiled piece (numpy-pickled blob) — what
-    crosses executor→driver when a zones DataFrame compiles, instead of
-    nested-Row ring geometry."""
-    import pickle
-
-    return pickle.dumps(d, protocol=5)
-
-
-def unpack_piece(b: bytes) -> dict:
-    import pickle
-
-    return pickle.loads(b)
 
 
 def assemble_index(
@@ -492,21 +500,26 @@ def assemble_index(
     areas = np.array([m[2] for m in metas], dtype=np.float64)
     P = len(datas)
 
-    ring_counts = np.array([len(d["ring_lens"]) for d in datas], dtype=np.int64)
-    ring_offsets = np.zeros(P + 1, dtype=np.int64)
-    np.cumsum(ring_counts, out=ring_offsets[1:])
-    vert_lens = (
-        np.concatenate([d["ring_lens"] for d in datas])
-        if P
-        else np.zeros(0, dtype=np.int64)
-    )
-    vert_offsets = np.zeros(len(vert_lens) + 1, dtype=np.int64)
-    np.cumsum(vert_lens, out=vert_offsets[1:])
-    verts = (
-        np.vstack([d["verts"] for d in datas]) if P else np.zeros((0, 2))
-    )
+    def cat(key, empty):
+        # the empty tail keeps an index of no pieces well-typed
+        return np.concatenate([d[key] for d in datas] + [empty])
 
-    seg_counts = np.array([len(d["seg_a"]) for d in datas], dtype=np.int64)
+    ring_offsets = np.cumsum([0] + [len(d["ring_rows"]) for d in datas])
+    ring_rows = cat("ring_rows", np.zeros(0, dtype=np.int64))
+    coord_offsets = np.zeros(len(ring_rows) + 1, dtype=np.int64)
+    np.cumsum(ring_rows, out=coord_offsets[1:])
+    coords = cat("coords", np.zeros((0, 2)))
+    # float32 storage when lossless (see CompiledIndex field docs): halves
+    # broadcast size and probe gather bandwidth with bit-identical results
+    c32 = coords.astype(np.float32)
+    if np.array_equal(c32.astype(np.float64), coords):
+        coords = c32
+
+    # each piece's segments are one run of segment_starts: the piece's
+    # rows are contiguous and the starts ascend
+    starts = segment_starts(coord_offsets)
+    seg_offsets = np.searchsorted(starts, coord_offsets[ring_offsets])
+    seg_counts = np.diff(seg_offsets)
     # the distance kernels (probe._nearest_feet_flat) need a segment in
     # every piece; such a piece could contain no point anyway
     if P and not seg_counts.all():
@@ -515,54 +528,25 @@ def assemble_index(
             f"zone piece {zone_ids[bad]!r} (rank {bad}) has no boundary "
             "segment: every piece needs a ring of at least two vertices"
         )
-    seg_offsets = np.zeros(P + 1, dtype=np.int64)
-    np.cumsum(seg_counts, out=seg_offsets[1:])
-    seg_a = np.vstack([d["seg_a"] for d in datas]) if P else np.zeros((0, 2))
-    seg_b = np.vstack([d["seg_b"] for d in datas]) if P else np.zeros((0, 2))
-    # float32 storage when lossless (see CompiledIndex field docs): halves
-    # broadcast size and probe gather bandwidth with bit-identical results
-    sa32, sb32 = seg_a.astype(np.float32), seg_b.astype(np.float32)
-    if np.array_equal(sa32.astype(np.float64), seg_a) and np.array_equal(
-        sb32.astype(np.float64), seg_b
-    ):
-        seg_a, seg_b = sa32, sb32
-    piece_bbox = (
-        np.vstack([d["bbox"] for d in datas]) if P else np.zeros((0, 4))
-    )
+    piece_bbox = np.array([d["bbox"] for d in datas]).reshape(-1, 4)
 
     ent_counts = np.array([len(d["cells"]) for d in datas], dtype=np.int64)
     ent_rank = np.repeat(np.arange(P, dtype=np.int32), ent_counts)
-    ent_interior = (
-        np.concatenate([d["interior"] for d in datas])
-        if P
-        else np.zeros(0, dtype=bool)
-    )
-    ent_center = (
-        np.concatenate([d["center"] for d in datas])
-        if P
-        else np.zeros(0, dtype=bool)
-    )
-    all_cells = (
-        np.concatenate([d["cells"] for d in datas])
-        if P
-        else np.zeros(0, dtype=np.uint64)
-    )
-    # local-segment CSR: per-piece relative offsets/ids -> global
+    ent_interior = cat("interior", np.zeros(0, dtype=bool))
+    ent_center = cat("center", np.zeros(0, dtype=bool))
+    all_cells = cat("cells", np.zeros(0, dtype=np.uint64))
+    # local-segment CSR: per-piece relative offsets/ids -> global segment
+    # start rows of coords
     loc_lens = np.concatenate(
-        [np.diff(d["loc_off"]) for d in datas]
-    ) if P else np.zeros(0, dtype=np.int64)
+        [np.diff(d["loc_off"]) for d in datas] + [np.zeros(0, np.int64)]
+    )
     ent_seg_off = np.zeros(len(loc_lens) + 1, dtype=np.int64)
     np.cumsum(loc_lens, out=ent_seg_off[1:])
-    ent_seg_idx = (
-        np.concatenate(
-            [
-                d["loc_idx"].astype(np.int64) + seg_offsets[i]
-                for i, d in enumerate(datas)
-            ]
-        ).astype(np.int32)
-        if P
-        else np.zeros(0, dtype=np.int32)
+    loc_idx = np.concatenate(
+        [d["loc_idx"].astype(np.int64) + seg_offsets[i]
+         for i, d in enumerate(datas)] + [np.zeros(0, np.int64)]
     )
+    ent_seg_idx = starts[loc_idx].astype(np.int32)
 
     # cell levels: group (cell -> entries) per resolution; entry ids
     # ascend with rank, so the stable lexsort keeps rank-ascending order
@@ -604,11 +588,8 @@ def assemble_index(
         areas=areas,
         piece_bbox=piece_bbox,
         ring_offsets=ring_offsets,
-        vert_offsets=vert_offsets,
-        verts=verts,
-        seg_offsets=seg_offsets,
-        seg_a=seg_a,
-        seg_b=seg_b,
+        coord_offsets=coord_offsets,
+        coords=coords,
         ent_rank=ent_rank,
         ent_interior=ent_interior,
         ent_center=ent_center,
@@ -790,10 +771,7 @@ def check_index_version(meta_version: str) -> None:
 def load_index_meta(path: str) -> dict:
     meta_file = os.path.join(path, "_index_meta.json")
     if not os.path.exists(meta_file):
-        raise ValueError(
-            "Incompatible map archive. Detected version is '<missing>' "
-            f"required version '{INDEX_FORMAT_VERSION}:*'"
-        )
+        check_index_version("<missing>")
     with open(meta_file) as f:
         meta = json.load(f)
     check_index_version(meta.get("version", ""))

@@ -17,7 +17,7 @@ import numpy as np
 
 from . import cells, geom
 from .geom import _chunks, _expand
-from .index import CompiledIndex
+from .index import CompiledIndex, segment_starts
 
 OUTSIDE_MSG = "Requested point is outside the initialized area"
 
@@ -175,14 +175,16 @@ def probe_ranks(
             ents = ents_all[start:end]
             k = k_all[start:end]
             rep_pair = np.repeat(np.arange(end - start), k)
-            seg_ids = idx.ent_seg_idx[_expand(idx.ent_seg_off[ents], k)]
+            # a segment is the coords row pair (pos, pos + 1)
+            pos = idx.ent_seg_idx[_expand(idx.ent_seg_off[ents], k)]
             # gathered slices upcast to float64 BEFORE any arithmetic:
             # float32 storage is lossless (index.py), so every predicate
             # below is bit-identical to the float64-storage result
-            ax = idx.seg_a[seg_ids, 0].astype(np.float64, copy=False)
-            ay = idx.seg_a[seg_ids, 1].astype(np.float64, copy=False)
-            bx = idx.seg_b[seg_ids, 0].astype(np.float64, copy=False)
-            by = idx.seg_b[seg_ids, 1].astype(np.float64, copy=False)
+            c = idx.coords
+            ax = c[pos, 0].astype(np.float64, copy=False)
+            ay = c[pos, 1].astype(np.float64, copy=False)
+            bx = c[pos + 1, 0].astype(np.float64, copy=False)
+            by = c[pos + 1, 1].astype(np.float64, copy=False)
             dx = bx - ax
             dy = by - ay
             thr = geom.ON_EDGE_EPS * np.maximum(np.hypot(dx, dy), 1.0)
@@ -493,23 +495,26 @@ FOOT_PAIR_CHUNK = 1 << 19
 
 
 def _seg_cache(idx: CompiledIndex):
-    """Per-index cache of the foot search's segment arrays: ``flat`` =
-    float64 segment start + the pair-invariant dx/dy/len2 (len2 stays a
+    """Per-index cache of the foot search's segment arrays, one entry
+    per segment in ``geom._segments`` order: ``flat`` = float64 segment
+    start + the pair-invariant dx/dy/len2 (len2 stays a
     gathered-then-computed EXACT product of the same doubles, so the
     foot's division is bit-identical), and ``buckets`` = the bucket CSR
     per piece with each bucket's segment span and exact bbox."""
     cached = getattr(idx, "_foot_segs", None)
     if cached is not None:
         return cached
-    ax = np.ascontiguousarray(idx.seg_a[:, 0], dtype=np.float64)
-    ay = np.ascontiguousarray(idx.seg_a[:, 1], dtype=np.float64)
-    bx = np.ascontiguousarray(idx.seg_b[:, 0], dtype=np.float64)
-    by = np.ascontiguousarray(idx.seg_b[:, 1], dtype=np.float64)
+    pos = segment_starts(idx.coord_offsets)
+    x = idx.coords[:, 0].astype(np.float64)
+    y = idx.coords[:, 1].astype(np.float64)
+    ax, ay = x.take(pos), y.take(pos)
+    bx, by = x.take(pos + 1), y.take(pos + 1)
     dx = bx - ax
     dy = by - ay
     flat = (ax, ay, dx, dy, dx * dx + dy * dy)
 
-    so = idx.seg_offsets.astype(np.int64)
+    # piece -> segment run (a piece's rows are contiguous)
+    so = np.searchsorted(pos, idx.coord_offsets[idx.ring_offsets])
     counts = np.diff(so)
     nb = (counts + FOOT_BUCKET - 1) // FOOT_BUCKET
     pb_off = np.zeros(len(nb) + 1, dtype=np.int64)
@@ -563,12 +568,13 @@ def _nearest_feet_flat(
     kernel wall).
 
     Bit-identical per pair to oracle.nearest_boundary_point: the same
-    segments in the same order (compile stored geom._segments output;
-    float32 storage is lossless by construction and upcast before any
-    arithmetic), the same foot AST, and the same FIRST-minimum tie-break
-    (position of the first d² equal to the exact segment-run minimum —
-    np.minimum.reduceat performs only comparisons, so the run minimum is
-    one of the original floats and the equality test is exact). The
+    segments in the same order (``_seg_cache`` reads them in
+    geom._segments order; float32 storage is lossless by construction
+    and upcast before any arithmetic), the same foot AST, and the same
+    FIRST-minimum tie-break (position of the first d² equal to the exact
+    segment-run minimum — np.minimum.reduceat performs only comparisons,
+    so the run minimum is one of the original floats and the equality
+    test is exact). The
     bucket prune (see FOOT_BUCKET; a piece of one bucket has nothing to
     prune) skips segments that are PROVABLY strictly farther than the
     minimum — the evaluated subset always contains every

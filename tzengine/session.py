@@ -4,11 +4,13 @@
 ``sparkContext.addPyFile`` so executor Python workers can unpickle the
 engine's Arrow UDF closures — the in-process equivalent of running via
 ``spark-submit --py-files tzengine.zip`` on a real cluster (north_rule).
-Idempotent per SparkContext.
+Idempotent per SparkContext; the zip is named by a hash of the shipped
+sources, so drivers of the same code share one file in the temp dir.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -23,19 +25,22 @@ def ensure_shipped(spark: SparkSession) -> None:
     if getattr(sc, _SHIPPED_ATTR, False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"tzengine-{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(root, fn)
-                rel = os.path.join(
-                    "tzengine", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
+    sources = {}
+    for root, _dirs, files in os.walk(pkg_dir):
+        for fn in (fn for fn in files if fn.endswith(".py")):
+            rel = os.path.relpath(os.path.join(root, fn), pkg_dir)
+            with open(os.path.join(pkg_dir, rel), "rb") as f:
+                sources[f"tzengine/{rel}"] = f.read()
+    # named by content, so drivers of the same code share one zip, and
+    # os.replace never leaves a half-written one under that name
+    h = hashlib.sha256(repr(sorted(sources.items())).encode()).hexdigest()
+    zip_path = os.path.join(tempfile.gettempdir(), f"tzengine-{h[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, data in sorted(sources.items()):
+                zf.writestr(rel, data)
+        os.replace(tmp, zip_path)
     sc.addPyFile(zip_path)
     setattr(sc, _SHIPPED_ATTR, True)
 
