@@ -701,7 +701,7 @@ def test_spark_worker_rereads_no_unchanged_zip(spark):
         import importlib
         import zipimport
 
-        from tzengine import probe
+        from tzengine.arrowio import arrow_array
 
         importlib.invalidate_caches()
         n_zips = sum(isinstance(i, zipimport.zipimporter)
@@ -718,7 +718,7 @@ def test_spark_worker_rereads_no_unchanged_zip(spark):
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = read_directory
-        return probe.arrow_array(np.full(len(col), len(reads) if n_zips else -1))
+        return arrow_array(np.full(len(col), len(reads) if n_zips else -1))
 
     df = spark.range(8, numPartitions=4)
     with deadline(120):

@@ -313,9 +313,9 @@ def test_geojson_self_intersecting_ring_repaired(spark, tmp_path):
 
 def test_geojsonl_duplicate_lines_collapsed_and_counted(spark, tmp_path):
     """Byte-identical duplicate feature lines are collapsed (lossless:
-    same content-hash ordinal) but NOT silently: the returned DataFrame
-    carries a `dup_lines_dropped` accumulator observable after an action
-    (ADVICE r3 #4)."""
+    same content-hash ordinal) but NOT silently: ``return_dup_counter``
+    hands back an accumulator observable after an action (ADVICE r3
+    #4)."""
     import json
     feat = {"type": "Feature", "properties": {"tzid": "Dup/Zone"},
             "geometry": {"type": "Polygon",
@@ -332,20 +332,17 @@ def test_geojsonl_duplicate_lines_collapsed_and_counted(spark, tmp_path):
         f.write(json.dumps(feat) + "\n")   # dup 2
         f.write(json.dumps(other) + "\n")  # unique
     # explicit-handle API (ADVICE r4 #3): the counter survives
-    # transformations, unlike the legacy DataFrame attribute
+    # transformations
     df, dups = geojson.zones_from_geojsonl(spark, path, return_dup_counter=True)
-    derived = df.select("zone_id")  # would lose a monkey-patched attribute
-    rows = derived.collect()
+    rows = df.select("zone_id").collect()
     assert sorted(r.zone_id for r in rows) == ["Dup/Zone", "Other/Zone"]
     assert dups.value == 2  # 3 copies -> 1 kept, 2 dropped
-    assert not hasattr(derived, "dup_lines_dropped")  # why the handle exists
 
-    # no duplicates -> counter stays 0 (legacy attribute path still works
-    # when no transformation intervenes)
+    # no duplicates -> counter stays 0
     path2 = str(tmp_path / "nodups.geojsonl")
     with open(path2, "w") as f:
         f.write(json.dumps(feat) + "\n")
         f.write(json.dumps(other) + "\n")
-    df2 = geojson.zones_from_geojsonl(spark, path2)
+    df2, dups2 = geojson.zones_from_geojsonl(spark, path2, return_dup_counter=True)
     df2.collect()
-    assert df2.dup_lines_dropped.value == 0
+    assert dups2.value == 0

@@ -524,20 +524,22 @@ def test_nearest_feet_bucket_prune_parity():
 def test_arrow_f64_offset_nulls_and_empty():
     import pyarrow as pa
 
+    from tzengine.arrowio import arrow_f64
+
     arr = pa.array([1.0, None, 3.0, 4.0, None, 6.0, 7.0, 8.0, 9.0, None])
-    got = probe.arrow_f64(arr.slice(3, 6))  # offset 3 crosses a bitmap byte
+    got = arrow_f64(arr.slice(3, 6))  # offset 3 crosses a bitmap byte
     assert np.array_equal(
         got, [4.0, np.nan, 6.0, 7.0, 8.0, 9.0], equal_nan=True
     )
     assert np.array_equal(
-        probe.arrow_f64(arr), [1, np.nan, 3, 4, np.nan, 6, 7, 8, 9, np.nan],
+        arrow_f64(arr), [1, np.nan, 3, 4, np.nan, 6, 7, 8, 9, np.nan],
         equal_nan=True,
     )
     no_nulls = pa.array([2.5, 3.5, 4.5]).slice(1)
-    assert np.array_equal(probe.arrow_f64(no_nulls), [3.5, 4.5])
-    assert probe.arrow_f64(pa.array([], pa.float64())).shape == (0,)
-    assert probe.arrow_f64(arr.slice(10)).shape == (0,)
-    assert np.array_equal(probe.arrow_f64(pa.array([1, None, 3], pa.int32())),
+    assert np.array_equal(arrow_f64(no_nulls), [3.5, 4.5])
+    assert arrow_f64(pa.array([], pa.float64())).shape == (0,)
+    assert arrow_f64(arr.slice(10)).shape == (0,)
+    assert np.array_equal(arrow_f64(pa.array([1, None, 3], pa.int32())),
                           [1.0, np.nan, 3.0], equal_nan=True)
 
 
@@ -549,6 +551,7 @@ import sys
 import numpy as np
 import pyarrow as pa
 from tzengine import index, probe
+from tzengine.arrowio import arrow_f64, arrow_list
 from tzengine.zones import synthetic_world
 
 idx = index.compile_index(synthetic_world(), -90, -180, 90, 180, "synth1")
@@ -557,117 +560,17 @@ valid = np.packbits(np.array([1, 1, 1, 0, 1, 1, 1, 1], bool), bitorder="little")
 arr = pa.Array.from_buffers(
     pa.float64(), 8, [pa.py_buffer(valid), pa.py_buffer(vals)]
 ).slice(1)
-lats = probe.arrow_f64(arr)
-lons = probe.arrow_f64(arr.slice(0))
+lats = arrow_f64(arr)
+lons = arrow_f64(arr.slice(0))
 assert np.isnan(lats[2]) and lats[0] == 1.8
 for with_all in (False, True):
     probe.probe_arrow(idx, lats, lons, mode="pipeline", with_all=with_all)
 off, heads, dist = probe.containing_distances(idx, lats, lons, "geodesic")
 pa.StructArray.from_arrays(
-    [probe.arrow_list(off, heads.astype(np.int16)), probe.arrow_list(off, dist)],
+    [arrow_list(off, heads.astype(np.int16)), arrow_list(off, dist)],
     names=["h", "d"],
 )
 probe.knn_zones_batch(idx, lats, lons, 3)
 assert "pandas" not in sys.modules, "pandas was imported"
-"""
-    run_isolated(code)
-
-
-# A fresh interpreter's prelude: synth pieces 1-3 as a sliced zones
-# Arrow batch (zone_id, polygon_id, rings), built from buffers, plus
-# their ``ordinal`` column.
-ZONES_BATCH = """
-import sys
-import numpy as np
-import pyarrow as pa
-from tzengine import probe
-from tzengine.zones import synthetic_world
-
-pieces = synthetic_world()[:5]
-rings = [r for p in pieces for r in p.rings]
-verts = np.concatenate(rings)
-vstruct = pa.StructArray.from_arrays(
-    [probe.arrow_array(verts[:, 1].astype(np.float32)),
-     probe.arrow_array(verts[:, 0].astype(np.float32))],
-    ["lat", "lon"],
-)
-v_off = np.cumsum([0] + [len(r) for r in rings]).astype(np.int32)
-r_off = np.cumsum([0] + [len(p.rings) for p in pieces]).astype(np.int32)
-rings_col = pa.ListArray.from_arrays(
-    probe.arrow_array(r_off),
-    pa.ListArray.from_arrays(probe.arrow_array(v_off), vstruct),
-)
-names = [p.zone_id.encode() for p in pieces]
-n_off = np.cumsum([0] + [len(b) for b in names]).astype(np.int32)
-zone_id = pa.Array.from_buffers(
-    pa.string(), len(pieces),
-    [None, pa.py_buffer(n_off), pa.py_buffer(b"".join(names))],
-)
-poly = probe.arrow_array(np.array([p.polygon_id for p in pieces], np.int32))
-batch = pa.RecordBatch.from_arrays(
-    [zone_id, poly, rings_col], ["zone_id", "polygon_id", "rings"]
-).slice(1, 3)
-ordinal = probe.arrow_array(np.array([p.ordinal for p in pieces[1:4]], np.int32))
-"""
-
-
-def test_raster_worker_does_not_import_pandas():
-    """``tiling.raster_batch`` (the rasterize_zones mapInArrow body) reads
-    a sliced zones batch through its Arrow buffers and emits the same
-    cells as ``raster_mask_for_rings``, without importing pandas."""
-    code = ZONES_BATCH + """
-from tzengine import tiling
-
-out = tiling.raster_batch(batch, 7)
-assert "pandas" not in sys.modules, "pandas was imported"
-
-want = []
-for p in pieces[1:4]:
-    ids, kinds = tiling.raster_mask_for_rings(p.rings, 7)
-    want += [(p.zone_id, p.polygon_id, int(c), int(k)) for c, k in zip(ids, kinds)]
-got = list(zip(*(out.column(c).to_pylist()
-                 for c in ("zone_id", "polygon_id", "cell_id", "full"))))
-assert got == want, (len(got), len(want))
-"""
-    run_isolated(code)
-
-
-def test_compile_worker_does_not_import_pandas():
-    """``engine.compile_batch`` (the executor compile's mapInArrow body)
-    reads a sliced zones batch through its Arrow buffers and emits each
-    piece's ``compile_source`` components and area, with and without an
-    area column, without importing pandas."""
-    code = ZONES_BATCH + """
-import pickle
-from tzengine import geom, index
-from tzengine.engine import compile_batch
-
-areas = probe.arrow_array(np.array([7.0, 8.0, 9.0, 10.0, 11.0]))
-batch = pa.RecordBatch.from_arrays(
-    [*batch.columns, ordinal, areas[1:4]],
-    [*batch.schema.names, "ordinal", "area"],
-)
-region = (-90.0, -180.0, 5.0, 180.0)  # clips two pieces, drops one
-outs = [compile_batch(batch, region, 5), compile_batch(batch, region, 5, "area")]
-assert "pandas" not in sys.modules, "pandas was imported"
-
-# the batch carries float32 vertices
-rings32 = [[r.astype(np.float32).astype(np.float64) for r in p.rings]
-           for p in pieces[1:4]]
-for out, pre_areas in zip(outs, [[geom.polygon_area2d(r) for r in rings32],
-                                 [8.0, 9.0, 10.0]]):
-    assert out.column("ordinal").to_pylist() == [p.ordinal for p in pieces[1:4]]
-    assert out.column("zone_id").to_pylist() == [p.zone_id for p in pieces[1:4]]
-    assert out.column("polygon_id").to_pylist() == [p.polygon_id for p in pieces[1:4]]
-    assert out.column("pre_area").to_pylist() == pre_areas
-    for rings, blobs in zip(rings32, out.column("blobs").to_pylist()):
-        want = index.compile_source(rings, *region, 5)
-        got = [pickle.loads(b) for b in blobs]
-        assert len(got) == len(want)
-        for g, w in zip(got, want):
-            assert g.keys() == w.keys()
-            for k in w:
-                assert np.array_equal(g[k], w[k]), k
-assert sum(len(b) for b in outs[0].column("blobs").to_pylist()) > 0
 """
     run_isolated(code)

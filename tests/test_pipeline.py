@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tzengine.functions import hot_cell_histogram, salted_count, zone_shard_sizes
+from tzengine.functions import hot_cell_histogram, salted_count
 from tzengine.pipeline import dedup, multimodal, similarity, text
 
 SF = "/root/testdata/sf0.001"
@@ -211,40 +211,6 @@ def test_hot_cell_histogram(spark):
     hist = hot_cell_histogram(assigned, top=5).collect()
     # 30% of rows sit in 2 hot cells → the top-2 cells dominate
     assert hist[0].n + hist[1].n >= 0.28 * 500
-    shards = zone_shard_sizes(assigned).collect()
-    assert sum(r.n for r in shards) == 500
-
-
-def test_ivf_materialized_partition_pruning(spark, emb, tmp_path):
-    """The materialized IVF table reads only probed centroid partitions
-    (PartitionFilters in the scan — pruning before IO)."""
-    cents = similarity.deterministic_centroids(emb, 8)
-    path = str(tmp_path / "ivf")
-    similarity.write_ivf_index(emb, cents, path)
-    import os
-
-    part_dirs = [d for d in os.listdir(path) if d.startswith("centroid_id=")]
-    assert len(part_dirs) >= 4  # vectors spread over multiple buckets
-
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    res = similarity.ivf_search_table(spark, path, queries, cents, k=3, nprobe=2)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
-    rows = res.collect()
-    # each query finds itself (its own bucket is always probed first)
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.vec_id)
-    assert all(q in by_q[q] for q in by_q)
-    # agrees with the in-memory IVF variant
-    mem = similarity.ivf_topk(emb, queries, cents, k=3, nprobe=2).collect()
-    assert sorted((r.query_id, r.vec_id, r.rank) for r in rows) == sorted(
-        (r.query_id, r.vec_id, r.rank) for r in mem
-    )
 
 
 def test_word_shingles_short_docs_no_crash(spark):
@@ -415,34 +381,6 @@ def test_hamming_block_pairs_generalized_max_dist(spark):
     assert got0 == [(1, 2)]
     with pytest.raises(ValueError):
         dedup.hamming_block_pairs(df0, "doc_id", "h", 32)
-
-
-def test_kmeans_centroids_deterministic_and_improve_balance(spark, emb):
-    c1 = similarity.kmeans_centroids(emb, 8, iters=4)
-    c2 = similarity.kmeans_centroids(emb, 8, iters=4)
-    np.testing.assert_array_equal(c1, c2)  # restart-deterministic
-    init = similarity.deterministic_centroids(emb, 8)
-    assert c1.shape == init.shape
-    # trained centroids improve (or match) the spherical k-means
-    # objective: mean cosine of each vector to its assigned centroid
-    def objective(cents):
-        cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        vecs = np.array(
-            [r.embedding for r in emb.select("embedding").collect()],
-            dtype=np.float64,
-        )
-        vn = vecs / np.maximum(
-            np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12
-        )
-        return float((vn @ cn.T).max(axis=1).mean())
-    assert objective(c1) >= objective(init) - 1e-12
-    # IVF search with trained centroids still finds each query itself
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    res = similarity.ivf_topk(emb, q, c1, k=3, nprobe=3).collect()
-    tops = {r.query_id for r in res if r.query_id == r.vec_id}
-    assert tops == {0, 1, 2, 3, 4}
 
 
 def test_audio_features_real_wav_decode(spark):

@@ -156,15 +156,16 @@ def test_pieces_to_df_arrow_path_row_identical(spark):
     """The Arrow-native pieces_to_df must be row-identical (values AND
     dtypes) to the historical nested-tuple row construction."""
     from tzengine.bigworld import big_world
-    from tzengine.zones import (
-        ZONES_SCHEMA_DDL, pieces_to_df, pieces_to_rows, synthetic_world,
-    )
+    from tzengine.zones import pieces_to_df, pieces_to_rows, synthetic_world
 
+    zones_ddl = (
+        "zone_id string, polygon_id int, ordinal int, "
+        "rings array<array<struct<lat: float, lon: float>>>, "
+        "min_lat float, min_lon float, max_lat float, max_lon float"
+    )
     for world in (synthetic_world(), big_world(grid=4, verts=24)):
         fast = pieces_to_df(spark, world)
-        slow = spark.createDataFrame(
-            pieces_to_rows(world), schema=ZONES_SCHEMA_DDL
-        )
+        slow = spark.createDataFrame(pieces_to_rows(world), schema=zones_ddl)
         assert fast.schema == slow.schema
         a = fast.orderBy("ordinal").collect()
         b = slow.orderBy("ordinal").collect()

@@ -12,8 +12,8 @@ mapped to and from ranks JVM-side through one rank->name literal array.
 Every scalar UDF (assign, distance_from_boundary, knn_zones) takes only
 lat/lon, so a chain of them runs as ONE ArrowEvalPython node — one
 Python worker per task, lat/lon shipped once. The UDF bodies read and
-write Arrow buffers directly (probe.arrow_f64 / arrow_list), so the
-workers never import pandas.
+write Arrow buffers directly (through ``arrowio``), so the workers
+never import pandas.
 """
 
 from __future__ import annotations
@@ -30,6 +30,9 @@ from pyspark.sql import types as T
 from . import geom
 from . import index as indexmod
 from . import probe as probemod
+from .arrowio import (
+    arrow_array, arrow_binary, arrow_f64, arrow_list, arrow_rings, map_batches,
+)
 from .zones import ZonePiece
 
 DEFAULT_PROBE_RES = 7  # output cell resolution for tiling/shard analytics
@@ -99,43 +102,39 @@ def _lat_lon_args(lat_col: str, lon_col: str):
     return tuple(F.col(_sql_name(c)).cast("double") for c in (lat_col, lon_col))
 
 
+#: the executor compile's output, one row per source piece
+COMPILE_SCHEMA = pa.schema([
+    ("ordinal", pa.int32()), ("zone_id", pa.string()), ("polygon_id", pa.int32()),
+    ("pre_area", pa.float64()), ("blobs", pa.list_(pa.binary())),
+])
+
+
 def compile_batch(batch, region, depth: int, area_col: str | None = None):
     """One zones Arrow batch (``ordinal``, ``zone_id``, ``polygon_id``,
-    ``rings``, and ``area_col`` when given) → one row per piece:
-    ``ordinal``, ``zone_id``, ``polygon_id``, ``pre_area`` (``area_col``,
-    else the piece's planar area) and ``blobs`` (its pickled
-    ``compile_piece`` components, none when it is pruned or clipped
-    away), as a pa.RecordBatch, pandas-free. The body of the executor
-    compile."""
+    ``rings``, and ``area_col`` when given) → one COMPILE_SCHEMA row per
+    piece: ``pre_area`` is ``area_col``, else the piece's planar area,
+    and ``blobs`` its pickled ``compile_piece`` components (none when it
+    is pruned or clipped away), as a pa.RecordBatch, pandas-free. The
+    body of the executor compile."""
     cols = dict(zip(batch.schema.names, batch.columns))
-    areas = probemod.arrow_f64(cols[area_col]) if area_col is not None else None
+    areas = arrow_f64(cols[area_col]) if area_col is not None else None
     pre_areas, blobs, n_blobs = [], [], []
-    for i, rings in enumerate(probemod.arrow_rings(cols["rings"])):
+    for i, rings in enumerate(arrow_rings(cols["rings"])):
         pre_areas.append(
             areas[i] if areas is not None else geom.polygon_area2d(rings)
         )
         parts = indexmod.compile_source(rings, *region, depth)
         blobs += [pickle.dumps(d, protocol=5) for d in parts]
         n_blobs.append(len(parts))
-    ends = np.cumsum([0] + [len(b) for b in blobs])
-    if ends[-1] > np.iinfo(np.int32).max:
-        raise ValueError("compiled pieces of one batch exceed 2 GiB")
-    blob_arr = pa.Array.from_buffers(
-        pa.binary(), len(blobs),
-        [None, pa.py_buffer(ends.astype(np.int32)), pa.py_buffer(b"".join(blobs))],
-    )
     return pa.RecordBatch.from_arrays(
         [
             cols["ordinal"].cast(pa.int32()),
             cols["zone_id"].cast(pa.string()),
             cols["polygon_id"].cast(pa.int32()),
-            probemod.arrow_array(np.array(pre_areas, np.float64)),
-            pa.ListArray.from_arrays(
-                probemod.arrow_array(np.cumsum([0] + n_blobs).astype(np.int32)),
-                blob_arr,
-            ),
+            arrow_array(np.array(pre_areas, np.float64)),
+            arrow_list(np.cumsum([0] + n_blobs), arrow_binary(blobs)),
         ],
-        ["ordinal", "zone_id", "polygon_id", "pre_area", "blobs"],
+        schema=COMPILE_SCHEMA,
     )
 
 
@@ -183,7 +182,7 @@ class TzEngine:
         distributed: bool = False,
     ) -> "TzEngine":
         """``zones``: list[ZonePiece] (compiled on the driver) or a zones
-        DataFrame (schema zones.ZONES_SCHEMA_DDL), which always compiles
+        DataFrame (schema zones.ZONES_SCHEMA), which always compiles
         on executors. Its bbox prune runs as a pushed-down Parquet
         predicate before any geometry is read — the engine analogue of
         the reference's deserialize-free envelope prune (O1,
@@ -236,18 +235,11 @@ class TzEngine:
         src_cols = ["ordinal", "zone_id", "polygon_id", "rings"]
         if area_col is not None:
             src_cols.append(area_col)
-        rows = (
+        rows = map_batches(
             zones_df.select(*src_cols)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInArrow(
-                lambda batches: (
-                    compile_batch(b, region, depth, area_col) for b in batches
-                ),
-                "ordinal int, zone_id string, polygon_id int, "
-                "pre_area double, blobs array<binary>",
-            )
-            .collect()
-        )
+            .repartition(spark.sparkContext.defaultParallelism),
+            compile_batch, COMPILE_SCHEMA, region, depth, area_col,
+        ).collect()
         indexmod.check_unique_ordinals(rows)
         sources = [
             (
@@ -367,7 +359,7 @@ class TzEngine:
         @F.arrow_udf(rank_t)
         def _probe_first(lat: pa.Array, lon: pa.Array) -> pa.Array:
             _valid, first_arr, _ = probemod.probe_arrow(
-                bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon),
+                bc.value, arrow_f64(lat), arrow_f64(lon),
                 mode=mode, with_all=False,
             )
             return first_arr
@@ -400,8 +392,8 @@ class TzEngine:
             @F.arrow_udf(T.ArrayType(rank_t))
             def _probe_all(lat: pa.Array, lon: pa.Array) -> pa.Array:
                 _valid, _first, list_arr = probemod.probe_arrow(
-                    bc.value, probemod.arrow_f64(lat),
-                    probemod.arrow_f64(lon), mode=mode, with_all=True,
+                    bc.value, arrow_f64(lat), arrow_f64(lon), mode=mode,
+                    with_all=True,
                 )
                 return list_arr
 
@@ -470,14 +462,12 @@ class TzEngine:
         def _dist(lat: pa.Array, lon: pa.Array) -> pa.Array:
             idx = bc.value
             offsets, heads, dist = probemod.containing_distances(
-                idx, probemod.arrow_f64(lat), probemod.arrow_f64(lon), metric
+                idx, arrow_f64(lat), arrow_f64(lon), metric
             )
             return pa.StructArray.from_arrays(
                 [
-                    probemod.arrow_list(
-                        offsets, heads.astype(probemod.rank_dtype(idx))
-                    ),
-                    probemod.arrow_list(offsets, dist),
+                    arrow_list(offsets, heads.astype(probemod.rank_dtype(idx))),
+                    arrow_list(offsets, dist),
                 ],
                 names=["h", "d"],
             )
@@ -523,7 +513,7 @@ class TzEngine:
         @F.arrow_udf(T.ArrayType(self._rank_t))
         def _knn(lat: pa.Array, lon: pa.Array) -> pa.Array:
             return probemod.knn_zones_batch(
-                bc.value, probemod.arrow_f64(lat), probemod.arrow_f64(lon), k,
+                bc.value, arrow_f64(lat), arrow_f64(lon), k,
                 metric=metric,
             )
 

@@ -3,7 +3,7 @@
 Schema = BASELINE.json input_hint columns + the geotag probe key:
 (image_id, bytes, w, h, fmt, caption, phash, lat, lon).
 
-Generated DISTRIBUTED (spark.range → mapInPandas) and every value is a
+Generated DISTRIBUTED (spark.range → mapInArrow) and every value is a
 pure function of the row index i (seed [42, i]) — independent of
 partitioning, so two runs / two cluster sizes / a resumed run produce
 bit-identical tables (north_star determinism).
@@ -16,19 +16,21 @@ Point-placement mix over the synthetic zone world (lat, lon ∈ [0,10]):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import images
+from .arrowio import map_batches, rows_batch
 
-GEO_IMAGES_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash long, lat double, lon double"
-)
+GEO_IMAGES_SCHEMA = pa.schema([
+    ("image_id", pa.string()), ("bytes", pa.binary()), ("w", pa.int32()),
+    ("h", pa.int32()), ("fmt", pa.string()), ("caption", pa.string()),
+    ("phash", pa.int64()), ("lat", pa.float64()), ("lon", pa.float64()),
+])
+AUDIO_CLIPS_SCHEMA = pa.schema([("clip_id", pa.string()), ("bytes", pa.binary())])
+RAW_VIDEOS_SCHEMA = pa.schema([("video_id", pa.string()), ("bytes", pa.binary())])
 
 _SIZES = (16, 32, 64)
 
@@ -87,6 +89,14 @@ def row_record(i: int, with_bytes: bool = True) -> tuple:
     return (f"img{i:012d}", data, w, h, fmt, caption, ph, lat, lon)
 
 
+def geo_images_batch(batch, with_bytes: bool = True):
+    """A batch of row indexes (``id``) → their GEO_IMAGES_SCHEMA rows."""
+    return rows_batch(
+        [row_record(i, with_bytes) for i in batch.column("id").to_pylist()],
+        GEO_IMAGES_SCHEMA,
+    )
+
+
 def geo_images_df(
     spark: SparkSession, n: int, with_bytes: bool = True, partitions: int | None = None
 ) -> DataFrame:
@@ -95,20 +105,8 @@ def geo_images_df(
     from .session import ensure_shipped
 
     ensure_shipped(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [row_record(int(i), with_bytes) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "bytes", "w", "h", "fmt",
-                    "caption", "phash", "lat", "lon",
-                ],
-            )
-
     rng_df = spark.range(0, n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInPandas(gen, GEO_IMAGES_SCHEMA)
+    return map_batches(rng_df, geo_images_batch, GEO_IMAGES_SCHEMA, with_bytes)
 
 
 def synth_wav(i: int, sr: int = 8000, seconds: float = 0.5) -> bytes:
@@ -133,54 +131,52 @@ def synth_wav(i: int, sr: int = 8000, seconds: float = 0.5) -> bytes:
     return buf.getvalue()
 
 
+def audio_clips_batch(batch):
+    """A batch of row indexes (``id``) → their AUDIO_CLIPS_SCHEMA rows."""
+    return rows_batch(
+        [(f"clip{i:08d}", synth_wav(i)) for i in batch.column("id").to_pylist()],
+        AUDIO_CLIPS_SCHEMA,
+    )
+
+
 def audio_clips_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Deterministic WAV clip table (clip_id, bytes) generated on
     executors."""
     from .session import ensure_shipped
 
     ensure_shipped(spark)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "clip_id": [f"clip{int(i):08d}" for i in pdf["id"]],
-                    "bytes": [synth_wav(int(i)) for i in pdf["id"]],
-                }
-            )
-
     base = spark.range(n)
     if partitions:
         base = base.repartition(partitions)
-    return base.mapInPandas(gen, "clip_id string, bytes binary")
+    return map_batches(base, audio_clips_batch, AUDIO_CLIPS_SCHEMA)
+
+
+def raw_videos_batch(batch, frames: int, w: int, h: int):
+    """A batch of row indexes (``id``) → their RAW_VIDEOS_SCHEMA rows:
+    each video's frames are index-seeded synthetic images."""
+    from .pipeline.multimodal import encode_rawvid
+
+    return rows_batch(
+        [
+            (
+                f"vid{i:08d}",
+                encode_rawvid([images.synth_image(i * 1000 + k, w, h)
+                               for k in range(frames)]),
+            )
+            for i in batch.column("id").to_pylist()
+        ],
+        RAW_VIDEOS_SCHEMA,
+    )
 
 
 def raw_videos_df(spark: SparkSession, n: int, frames: int = 12,
                   w: int = 24, h: int = 16,
                   partitions: int | None = None) -> DataFrame:
-    """Deterministic rawvid table (video_id, bytes): each video's frames
-    are index-seeded synthetic images."""
+    """Deterministic rawvid table (video_id, bytes)."""
     from .session import ensure_shipped
 
     ensure_shipped(spark)
-
-    def gen(batches):
-        import pandas as pd
-
-        from . import images
-        from .pipeline.multimodal import encode_rawvid
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                fs = [images.synth_image(int(i) * 1000 + k, w, h)
-                      for k in range(frames)]
-                rows.append((f"vid{int(i):08d}", encode_rawvid(fs)))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes"])
-
     base = spark.range(n)
     if partitions:
         base = base.repartition(partitions)
-    return base.mapInPandas(gen, "video_id string, bytes binary")
+    return map_batches(base, raw_videos_batch, RAW_VIDEOS_SCHEMA, frames, w, h)

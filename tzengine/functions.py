@@ -66,12 +66,6 @@ def pipeline_violations(assigned: DataFrame) -> DataFrame:
     )
 
 
-def zone_shard_sizes(assigned: DataFrame) -> DataFrame:
-    """Rows per output shard — balance check for the deterministic
-    image→cell→zone-shard assignment."""
-    return assigned.groupBy("zone_shard").agg(F.count("*").alias("n"))
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

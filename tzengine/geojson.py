@@ -4,7 +4,7 @@ Reproduces the semantics of the reference builder pipeline
 (builder/.../Main.kt):
   B1  source scan          — FeatureCollection (driver parse) or
                              line-delimited features (executor-side parse
-                             via mapInPandas over spark.read.text)
+                             via mapInArrow over spark.read.text)
   B2  feature → pieces     — Polygon → 1 piece; MultiPolygon → one piece
                              per polygon (Main.kt:78-94); other geometry
                              types rejected
@@ -19,7 +19,7 @@ Reproduces the semantics of the reference builder pipeline
   B5  drop empties         — pieces with <3 distinct vertices (Main.kt:107-109)
   B6  bbox                 — min/max per piece → prune columns (Main.kt:62-74)
 
-Output schema = zones.ZONES_SCHEMA_DDL; ``ordinal`` is the global feature
+Output schema = zones.ZONES_SCHEMA; ``ordinal`` is the global feature
 order (the stable area-sort tie-break, matching the archive order the
 reference preserves through its stable sort).
 """
@@ -28,15 +28,14 @@ from __future__ import annotations
 
 import json
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import geom
-from .zones import ZONES_SCHEMA_DDL, ZonePiece, pieces_to_rows
+from .zones import ZONES_SCHEMA, ZonePiece, pieces_batch, pieces_to_rows
 
 
 def _normalize_ring(coords: list, want_cw: bool) -> list[np.ndarray]:
@@ -123,26 +122,47 @@ def zones_from_geojson(spark: SparkSession, path: str) -> DataFrame:
     for feature in fc.get("features", []):
         pieces.extend(feature_to_pieces(feature, ordinal_base=base))
         base += feature_polygon_count(feature)
-    return spark.createDataFrame(pieces_to_rows(pieces), schema=ZONES_SCHEMA_DDL)
+    return spark.createDataFrame(
+        pieces_to_rows(pieces), schema=from_arrow_schema(ZONES_SCHEMA)
+    )
+
+
+def geojsonl_batch(batch):
+    """One Arrow batch of GeoJSON Feature lines (``value``) → their
+    cleansed zone pieces as a ZONES_SCHEMA pa.RecordBatch, pandas-free.
+
+    Ordinals are stable: a feature must carry its own index
+    (``feature_ordinal``) for EXACT reference ingest-order parity at
+    world scale; the fallback is a content hash (crc32 of the WHOLE
+    feature line, not just the tzid — two features sharing a tzid must
+    not collide, ADVICE r2 #4), deterministic across processes and
+    sessions (Python's str hash is salt-randomized and only looks stable
+    because Spark pins worker PYTHONHASHSEED). Residual 2^-30
+    cross-feature collisions fail fast at compile time
+    (index.check_unique_ordinals) instead of silently corrupting the
+    tie-break."""
+    pieces: list[ZonePiece] = []
+    for line in batch.column("value").to_pylist():
+        feature = json.loads(line)
+        base = (feature.get("properties") or {}).get("feature_ordinal")
+        if base is None:
+            base = zlib.crc32(line.encode("utf-8")) % (1 << 30)
+        pieces += feature_to_pieces(feature, ordinal_base=int(base))
+    return pieces_batch(pieces)
 
 
 def zones_from_geojsonl(
     spark: SparkSession, path: str, return_dup_counter: bool = False
 ):
     """B1 executor path: one GeoJSON Feature per line (jsonl). The
-    parse + cleanse runs on executors (mapInPandas over a text scan);
-    ordinals are derived from a stable per-feature key so the result is
-    partitioning-independent.
+    parse + cleanse runs on executors (``geojsonl_batch`` in a
+    mapInArrow over a text scan); ordinals are derived from a stable
+    per-feature key so the result is partitioning-independent.
 
     ``return_dup_counter=True`` returns ``(df, dup_counter)`` where
     ``dup_counter`` is the Spark accumulator counting collapsed
     byte-identical duplicate lines (read ``.value`` after the FIRST
-    action). This is the supported way to observe the drop count: the
-    legacy ``df.dup_lines_dropped`` attribute survives for back-compat
-    but — like any Python attribute on a DataFrame — vanishes on the
-    first transformation (``df.select(...)`` returns a NEW DataFrame),
-    so callers chaining transformations must take the explicit handle
-    (ADVICE r4 #3)."""
+    action)."""
     from pyspark.sql import functions as F
 
     from .session import ensure_shipped
@@ -156,9 +176,8 @@ def zones_from_geojsonl(
     # Order-independence is free: ordinals are content-derived.
     # groupBy+count instead of bare distinct() (same shuffle shape) so
     # the drop is OBSERVABLE, not silent (ADVICE r3 #4): dropped-line
-    # totals feed the ``dup_lines_dropped`` accumulator attached to the
-    # returned DataFrame (read ``df.dup_lines_dropped.value`` after an
-    # action), and each duplicated line logs an executor-side warning.
+    # totals feed the accumulator ``return_dup_counter`` hands back,
+    # and each duplicated line logs an executor-side warning.
     # Accumulator caveat (standard Spark transformation semantics):
     # updates are at-least-once — evaluating the DataFrame twice (or a
     # task retry) adds again, so read the counter after the FIRST action
@@ -171,46 +190,20 @@ def zones_from_geojsonl(
     )
     dup_acc = spark.sparkContext.accumulator(0)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches):
         import logging
 
-        for pdf in batches:
-            mults = pdf["__mult"]
-            n_dup = int((mults - 1).clip(lower=0).sum())
+        for batch in batches:
+            n_dup = sum(max(m - 1, 0) for m in batch.column("__mult").to_pylist())
             if n_dup:
                 dup_acc.add(n_dup)
                 logging.getLogger(__name__).warning(
                     "zones_from_geojsonl: collapsed %d byte-identical "
                     "duplicate feature line(s) in this batch", n_dup
                 )
-            out = []
-            for line in pdf["value"]:
-                feature = json.loads(line)
-                # stable ordinal: the feature must carry its own index
-                # (feature_ordinal) for EXACT reference ingest-order
-                # parity at world scale; the fallback is a content hash
-                # (crc32 of the WHOLE feature line, not just the tzid —
-                # two features sharing a tzid must not collide, ADVICE
-                # r2 #4) — deterministic across processes/sessions
-                # (Python's str hash is salt-randomized and only looks
-                # stable because Spark pins worker PYTHONHASHSEED).
-                # Residual 2^-30 cross-feature collisions fail fast at
-                # compile time (index.check_unique_ordinals) instead of
-                # silently corrupting the tie-break.
-                props = feature.get("properties") or {}
-                base = props.get("feature_ordinal")
-                if base is None:
-                    base = zlib.crc32(line.encode("utf-8")) % (1 << 30)
-                for p in feature_to_pieces(feature, ordinal_base=int(base)):
-                    out.extend(pieces_to_rows([p]))
-            cols = [
-                "zone_id", "polygon_id", "ordinal", "rings",
-                "min_lat", "min_lon", "max_lat", "max_lon",
-            ]
-            yield pd.DataFrame(out, columns=cols)
+            yield geojsonl_batch(batch)
 
-    df = lines.mapInPandas(parse, ZONES_SCHEMA_DDL)
-    df.dup_lines_dropped = dup_acc  # legacy attribute (see docstring)
+    df = lines.mapInArrow(parse, from_arrow_schema(ZONES_SCHEMA))
     if return_dup_counter:
         return df, dup_acc
     return df

@@ -13,8 +13,9 @@ so the codecs are implemented from the public specs directly:
   path to test.
 
 All functions are batch/vectorized-friendly and deterministic — they run
-inside pandas UDFs / mapInPandas (no per-row Python at the DataFrame
-level; the per-row loop lives inside the Arrow batch, like the probe).
+inside mapInArrow bodies (no per-row Python at the DataFrame level; the
+per-row loop lives inside the Arrow batch, like the probe). A format
+beyond these three raises ValueError: there is no decoder to call.
 """
 
 from __future__ import annotations
@@ -142,17 +143,6 @@ def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     if fmt == "q6":
         return decode_q6(data, w, h)
     raise ValueError(f"unknown fmt: {fmt}")
-
-
-# Real image decode (JPEG/WebP/...) would go here; the container has no
-# image libraries, so anything beyond the formats above is explicitly
-# unimplemented rather than silently faked:
-def decode_external(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    raise NotImplementedError(
-        f"decoder for {fmt!r} requires an image library not present in this "
-        "environment; plumbing (schema, batching, UDF signature) is "
-        "exercised via the raw/png/q4 codecs"
-    )
 
 
 # --- fidelity metrics --------------------------------------------------------

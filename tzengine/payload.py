@@ -1,184 +1,76 @@
-"""Payload-fidelity verification ops (input_hint per-row invariant).
+"""Payload-fidelity verification (input_hint per-row invariant).
 
-``verify_payload`` decodes each row's image bytes and checks, per row:
+``verify_payload_table`` decodes each row's image bytes and checks, per
+row:
   - decoded-pixel fidelity vs the expected image: exact for lossless
     formats, PSNR >= ``psnr_min`` (default 40 dB) for lossy;
   - caption equality vs the expected caption;
-  - phash stability (hash of decoded pixels within ``phash_maxdist`` bits
-    of the stored phash — 0 for lossless).
+  - phash stability (Hamming distance of the decoded pixels' hash to the
+    stored phash).
 
-Everything runs inside one Arrow-batched pandas UDF (no per-row Python at
-the DataFrame level). The "expected" reference values are recomputed from
-the deterministic row synthesis (fixtures.row_record), which is the
+Everything runs inside one Arrow-batched mapInArrow (no per-row Python
+at the DataFrame level). The "expected" reference values are recomputed
+from the deterministic row synthesis (fixtures.row_record), which is the
 sandbox stand-in for the upstream source of truth.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import images
+from .arrowio import map_batches, rows_batch
 from .fixtures import row_record
 
-VERIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("pixels_ok", T.BooleanType()),
-        T.StructField("psnr_db", T.DoubleType()),
-        T.StructField("caption_ok", T.BooleanType()),
-        T.StructField("phash_dist", T.IntegerType()),
-    ]
-)
+VERIFY_TABLE_SCHEMA = pa.schema([
+    ("image_id", pa.string()), ("fmt", pa.string()),
+    ("px", pa.list_(pa.int32())), ("ex", pa.list_(pa.int32())),
+    ("caption", pa.string()), ("exp_caption", pa.string()),
+    ("phash", pa.int64()), ("phash_decoded", pa.int64()),
+    ("pixels_ok", pa.bool_()), ("psnr_db", pa.float64()),
+    ("caption_ok", pa.bool_()), ("phash_dist", pa.int32()),
+])
 
 
-def _verify_row(
-    image_id: str, data: bytes, w: int, h: int, fmt: str,
-    caption, phash: int, psnr_min: float,
-) -> dict:
-    """The single-row verification — ONE implementation shared by
-    verify_payload and verify_payload_table so the staged-oracle variant
-    can never silently diverge from the operator it verifies."""
-    i = int(image_id[3:])
-    expected = images.synth_image(i, w, h)
-    got = images.decode(data, fmt, w, h)
-    p = images.psnr(expected, got)
-    p = p if np.isfinite(p) else 999.0
-    if fmt in images.LOSSLESS:
-        pixels_ok = bool(np.array_equal(expected, got))
-    else:
-        pixels_ok = bool(p >= psnr_min)
-    exp_caption = row_record(i, with_bytes=False)[5]
-    ph_dec = images.phash64(got)
-    return {
-        "expected": expected,
-        "got": got,
-        "psnr_db": float(p),
-        "pixels_ok": pixels_ok,
-        "exp_caption": exp_caption,
-        "caption_ok": caption == exp_caption,
-        "phash_decoded": ph_dec,
-        "phash_dist": images.hamming64(ph_dec, phash),
-    }
-
-
-def verify_payload(
-    df: DataFrame,
-    psnr_min: float = 40.0,
-    phash_maxdist: int = 2,
-) -> DataFrame:
-    @F.pandas_udf(VERIFY_SCHEMA)
-    def _verify(
-        image_id: pd.Series,
-        data: pd.Series,
-        w: pd.Series,
-        h: pd.Series,
-        fmt: pd.Series,
-        caption: pd.Series,
-        phash: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(image_id)
-        pixels_ok = np.zeros(n, dtype=bool)
-        psnr_db = np.zeros(n, dtype=np.float64)
-        caption_ok = np.zeros(n, dtype=bool)
-        phash_dist = np.zeros(n, dtype=np.int32)
-        for j in range(n):
-            r = _verify_row(
-                image_id.iloc[j], bytes(data.iloc[j]), int(w.iloc[j]),
-                int(h.iloc[j]), fmt.iloc[j], caption.iloc[j],
-                int(phash.iloc[j]), psnr_min,
-            )
-            pixels_ok[j] = r["pixels_ok"]
-            psnr_db[j] = r["psnr_db"]
-            caption_ok[j] = r["caption_ok"]
-            phash_dist[j] = r["phash_dist"]
-        return pd.DataFrame(
-            {
-                "pixels_ok": pixels_ok,
-                "psnr_db": psnr_db,
-                "caption_ok": caption_ok,
-                "phash_dist": phash_dist,
-            }
-        )
-
-    out = df.withColumn(
-        "__v",
-        _verify(
-            F.col("image_id"), F.col("bytes"), F.col("w"), F.col("h"),
-            F.col("fmt"), F.col("caption"), F.col("phash"),
-        ),
-    )
-    return (
-        out.select(
-            "*",
-            "__v.pixels_ok",
-            "__v.psnr_db",
-            "__v.caption_ok",
-            (F.col("__v.phash_dist") <= phash_maxdist).alias("phash_ok"),
-        )
-        .drop("__v")
-    )
-
-
-VERIFY_TABLE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("px", T.ArrayType(T.IntegerType())),
-        T.StructField("ex", T.ArrayType(T.IntegerType())),
-        T.StructField("caption", T.StringType()),
-        T.StructField("exp_caption", T.StringType()),
-        T.StructField("phash", T.LongType()),
-        T.StructField("phash_decoded", T.LongType()),
-        T.StructField("pixels_ok", T.BooleanType()),
-        T.StructField("psnr_db", T.DoubleType()),
-        T.StructField("caption_ok", T.BooleanType()),
-        T.StructField("phash_dist", T.IntegerType()),
-    ]
-)
+def verify_batch(batch, psnr_min: float = 40.0):
+    """A batch of (image_id, bytes, w, h, fmt, caption, phash) rows →
+    their VERIFY_TABLE_SCHEMA rows."""
+    out = []
+    for r in batch.to_pylist():
+        i = int(r["image_id"][3:])
+        expected = images.synth_image(i, r["w"], r["h"])
+        got = images.decode(r["bytes"], r["fmt"], r["w"], r["h"])
+        p = images.psnr(expected, got)
+        p = p if np.isfinite(p) else 999.0
+        if r["fmt"] in images.LOSSLESS:
+            pixels_ok = bool(np.array_equal(expected, got))
+        else:
+            pixels_ok = bool(p >= psnr_min)
+        exp_caption = row_record(i, with_bytes=False)[5]
+        ph_dec = images.phash64(got)
+        out.append((
+            r["image_id"], r["fmt"],
+            got.reshape(-1).astype(np.int32),
+            expected.reshape(-1).astype(np.int32),
+            r["caption"], exp_caption, r["phash"], ph_dec,
+            pixels_ok, float(p), r["caption"] == exp_caption,
+            images.hamming64(ph_dec, r["phash"]),
+        ))
+    return rows_batch(out, VERIFY_TABLE_SCHEMA)
 
 
 def verify_payload_table(df: DataFrame, psnr_min: float = 40.0) -> DataFrame:
-    """Stage-oracle form of :func:`verify_payload` (round 4): the same
-    per-row verification PLUS every raw ingredient — decoded and
+    """The per-row verification PLUS every raw ingredient — decoded and
     expected pixel lists, stored and expected captions, stored and
     recomputed phash — so a SQL oracle can RECOMPUTE pixels_ok (exact
     list equality for lossless / PSNR threshold for lossy, MSE being
     integer-exact in both engines), psnr, caption_ok, and the phash
     hamming distance from the staged values. The binary decode and the
     deterministic row synthesis stay pytest-pinned."""
-
-    def op(batches, _psnr_min=psnr_min):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                v = _verify_row(
-                    r.image_id, bytes(r.bytes), int(r.w), int(r.h),
-                    r.fmt, r.caption, int(r.phash), _psnr_min,
-                )
-                out.append(
-                    (
-                        r.image_id, r.fmt,
-                        v["got"].reshape(-1).astype(np.int32),
-                        v["expected"].reshape(-1).astype(np.int32),
-                        r.caption, v["exp_caption"],
-                        int(r.phash), v["phash_decoded"],
-                        v["pixels_ok"], v["psnr_db"],
-                        v["caption_ok"], v["phash_dist"],
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "image_id", "fmt", "px", "ex", "caption", "exp_caption",
-                    "phash", "phash_decoded", "pixels_ok", "psnr_db",
-                    "caption_ok", "phash_dist",
-                ],
-            )
-
-    return df.select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-    ).mapInPandas(op, VERIFY_TABLE_SCHEMA)
+    return map_batches(
+        df.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash"),
+        verify_batch, VERIFY_TABLE_SCHEMA, psnr_min,
+    )

@@ -8,28 +8,30 @@ container (parse + sample + re-encode actual pixels). Compressed
 audio/video codecs don't exist in this environment, so foreign payloads
 raise explicit NotImplementedError — nothing is silently faked.
 
-Everything is mapInPandas over Arrow batches: binary columns never pass
-through per-row Python at the plan level, and batches stream (iterator in
-/ iterator out) so a 100 TB scan never materializes a partition in
-memory.
+Everything is mapInArrow over Arrow batches, each op's body one
+pandas-free ``*_batch`` function: binary columns never pass through
+per-row Python at the plan level, and batches stream (iterator in /
+iterator out) so a 100 TB scan never materializes a partition in memory.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
 from .. import images
+from ..arrowio import map_batches, rows_batch
 
-FEATURES_SCHEMA = (
-    "image_id string, w int, h int, fmt string, "
-    "mean_r double, mean_g double, mean_b double, std_gray double, "
-    "phash_decoded long"
-)
+_IMAGE_COLUMNS = ("image_id", "bytes", "w", "h", "fmt")
+
+FEATURES_SCHEMA = pa.schema([
+    ("image_id", pa.string()), ("w", pa.int32()), ("h", pa.int32()),
+    ("fmt", pa.string()), ("mean_r", pa.float64()), ("mean_g", pa.float64()),
+    ("mean_b", pa.float64()), ("std_gray", pa.float64()),
+    ("phash_decoded", pa.int64()),
+])
 
 
 def _image_feature_row(img: np.ndarray) -> tuple:
@@ -45,36 +47,47 @@ def _image_feature_row(img: np.ndarray) -> tuple:
     )
 
 
+def _decoded(batch):
+    """Each (image_id, bytes, w, h, fmt) row of ``batch`` with its decoded
+    pixels."""
+    for r in batch.to_pylist():
+        yield r, images.decode(r["bytes"], r["fmt"], r["w"], r["h"])
+
+
+def _image_rows(batch, staged: bool) -> list[tuple]:
+    """Each image row's features, then, when ``staged``, its decoded
+    channel planes and grayscale plane."""
+    rows = []
+    for r, img in _decoded(batch):
+        mr, mg, mb, gray, std, ph = _image_feature_row(img)
+        row = (r["image_id"], r["w"], r["h"], r["fmt"], mr, mg, mb, std, ph)
+        if staged:
+            row += (*img.reshape(-1, 3).T.astype(np.int32), gray.reshape(-1))
+        rows.append(row)
+    return rows
+
+
+def image_features_batch(batch):
+    """The body of :func:`image_features`."""
+    return rows_batch(_image_rows(batch, False), FEATURES_SCHEMA)
+
+
 def image_features(df: DataFrame) -> DataFrame:
     """Decode → per-channel mean, gray std, phash of the decoded pixels."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = images.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                mr, mg, mb, _gray, std, ph = _image_feature_row(img)
-                out.append(
-                    (r.image_id, int(r.w), int(r.h), r.fmt,
-                     mr, mg, mb, std, ph)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "image_id", "w", "h", "fmt",
-                    "mean_r", "mean_g", "mean_b", "std_gray", "phash_decoded",
-                ],
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        op, FEATURES_SCHEMA
+    return map_batches(
+        df.select(*_IMAGE_COLUMNS), image_features_batch, FEATURES_SCHEMA
     )
 
 
-DECODE_TABLE_SCHEMA = (
-    FEATURES_SCHEMA + ", "
-    "r_px array<int>, g_px array<int>, b_px array<int>, gray array<double>"
-)
+DECODE_TABLE_SCHEMA = pa.schema(list(FEATURES_SCHEMA) + [
+    ("r_px", pa.list_(pa.int32())), ("g_px", pa.list_(pa.int32())),
+    ("b_px", pa.list_(pa.int32())), ("gray", pa.list_(pa.float64())),
+])
+
+
+def image_decode_batch(batch):
+    """The body of :func:`image_decode_table`."""
+    return rows_batch(_image_rows(batch, True), DECODE_TABLE_SCHEMA)
 
 
 def image_decode_table(df: DataFrame) -> DataFrame:
@@ -85,74 +98,49 @@ def image_decode_table(df: DataFrame) -> DataFrame:
     RECOMPUTE the features from the same decoded values (channel means
     are integer-exact; gray std agrees to ~1e-13 rel, quantized by the
     caller)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = images.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                mr, mg, mb, gray, std, ph = _image_feature_row(img)
-                flat = img.reshape(-1, 3)
-                out.append(
-                    (
-                        r.image_id, int(r.w), int(r.h), r.fmt,
-                        mr, mg, mb, std, ph,
-                        flat[:, 0].astype(np.int32),
-                        flat[:, 1].astype(np.int32),
-                        flat[:, 2].astype(np.int32),
-                        gray.reshape(-1).astype(np.float64),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "image_id", "w", "h", "fmt",
-                    "mean_r", "mean_g", "mean_b", "std_gray",
-                    "phash_decoded", "r_px", "g_px", "b_px", "gray",
-                ],
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        op, DECODE_TABLE_SCHEMA
+    return map_batches(
+        df.select(*_IMAGE_COLUMNS), image_decode_batch, DECODE_TABLE_SCHEMA
     )
 
 
-RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
+RESIZE_SCHEMA = pa.schema([
+    ("image_id", pa.string()), ("bytes", pa.binary()), ("w", pa.int32()),
+    ("h", pa.int32()), ("fmt", pa.string()),
+])
+
+
+def resize_batch(batch, out_w: int, out_h: int):
+    """The body of :func:`resize_images`."""
+    rows = []
+    for r, img in _decoded(batch):
+        yi = (np.arange(out_h) * img.shape[0] // out_h).clip(0, img.shape[0] - 1)
+        xi = (np.arange(out_w) * img.shape[1] // out_w).clip(0, img.shape[1] - 1)
+        resized = img[yi][:, xi]
+        fmt = r["fmt"] if r["fmt"] != "q6" else "raw"  # q6 re-encode would re-lose
+        rows.append(
+            (r["image_id"], images.encode(resized, fmt), out_w, out_h, fmt)
+        )
+    return rows_batch(rows, RESIZE_SCHEMA)
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize of the decoded pixels, re-encoded in the
     row's own format. Real pixel math (numpy fancy indexing)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = images.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                yi = (np.arange(out_h) * img.shape[0] // out_h).clip(0, img.shape[0] - 1)
-                xi = (np.arange(out_w) * img.shape[1] // out_w).clip(0, img.shape[1] - 1)
-                resized = img[yi][:, xi]
-                fmt = r.fmt if r.fmt != "q6" else "raw"  # q6 re-encode would re-lose
-                out.append(
-                    (r.image_id, images.encode(resized, fmt), out_w, out_h, fmt)
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        op, RESIZE_SCHEMA
+    return map_batches(
+        df.select(*_IMAGE_COLUMNS), resize_batch, RESIZE_SCHEMA, out_w, out_h
     )
 
 
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, sample_rate int, n_samples long, duration_s double, "
-    "rms double, zcr double, spectral_centroid_hz double"
-)
-FRAME_SAMPLE_SCHEMA = (
-    "video_id string, frame_no int, w int, h int, bytes binary"
-)
+AUDIO_FEATURES_SCHEMA = pa.schema([
+    ("clip_id", pa.string()), ("sample_rate", pa.int32()),
+    ("n_samples", pa.int64()), ("duration_s", pa.float64()),
+    ("rms", pa.float64()), ("zcr", pa.float64()),
+    ("spectral_centroid_hz", pa.float64()),
+])
+FRAME_SAMPLE_SCHEMA = pa.schema([
+    ("video_id", pa.string()), ("frame_no", pa.int32()), ("w", pa.int32()),
+    ("h", pa.int32()), ("bytes", pa.binary()),
+])
 
 #: raw-frame video container (documented wire format, real parsing):
 #: magic "RVID" + u16 w + u16 h + u16 n_frames, then n_frames raw RGB
@@ -251,88 +239,81 @@ def _audio_feature_row(x: np.ndarray, sr: int) -> tuple:
     return rms, zcr, centroid, spec, freqs
 
 
-def audio_features(df: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def _audio_rows(batch, staged: bool) -> list[tuple]:
+    """Each (clip_id, bytes) row's audio features, then, when ``staged``,
+    its samples, spectrum and frequency grid."""
+    rows = []
+    for r in batch.to_pylist():
+        sr, x = _decode_wav(r["bytes"])
+        rms, zcr, centroid, spec, freqs = _audio_feature_row(x, sr)
+        rows.append(
+            (r["clip_id"], sr, len(x), len(x) / sr, rms, zcr, centroid)
+            + ((x, spec, freqs) if staged else ())
+        )
+    return rows
+
+
+def audio_features_batch(batch):
+    """The body of :func:`audio_features`."""
+    return rows_batch(_audio_rows(batch, False), AUDIO_FEATURES_SCHEMA)
+
+
+def audio_features(df: DataFrame) -> DataFrame:
     """REAL audio decode for WAV/PCM payloads: sample rate, duration,
-    RMS, zero-crossing rate, spectral centroid (rfft). mapInPandas
+    RMS, zero-crossing rate, spectral centroid (rfft). mapInArrow
     streams batches; a 100 TB scan never materializes a partition."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                sr, x = _decode_wav(bytes(r.bytes))
-                rms, zcr, centroid, _spec, _freqs = _audio_feature_row(x, sr)
-                out.append(
-                    (getattr(r, id_col), sr, len(x), len(x) / sr, rms, zcr,
-                     centroid)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[id_col, "sample_rate", "n_samples", "duration_s",
-                         "rms", "zcr", "spectral_centroid_hz"],
-            )
-
-    return df.mapInPandas(op, AUDIO_FEATURES_SCHEMA)
+    return map_batches(
+        df.select("clip_id", "bytes"), audio_features_batch,
+        AUDIO_FEATURES_SCHEMA,
+    )
 
 
-AUDIO_DECODE_TABLE_SCHEMA = (
-    AUDIO_FEATURES_SCHEMA
-    + ", samples array<double>, spec array<double>, freqs array<double>"
-)
+AUDIO_DECODE_TABLE_SCHEMA = pa.schema(list(AUDIO_FEATURES_SCHEMA) + [
+    (name, pa.list_(pa.float64())) for name in ("samples", "spec", "freqs")
+])
 
 
-def audio_decode_table(df: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def audio_decode_batch(batch):
+    """The body of :func:`audio_decode_table`."""
+    return rows_batch(_audio_rows(batch, True), AUDIO_DECODE_TABLE_SCHEMA)
+
+
+def audio_decode_table(df: DataFrame) -> DataFrame:
     """audio_features PLUS the decoded sample vector and the rfft
     magnitude spectrum/frequency grid — the stage-oracle form (round 4):
     the WAV parse and the FFT stay in this operator (pytest-pinned
     against tone-frequency goldens), while the staged columns let a SQL
     oracle RECOMPUTE duration (exact), RMS and ZCR from the samples, and
     the spectral centroid from the staged spectrum."""
+    return map_batches(
+        df.select("clip_id", "bytes"), audio_decode_batch,
+        AUDIO_DECODE_TABLE_SCHEMA,
+    )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                sr, x = _decode_wav(bytes(r.bytes))
-                rms, zcr, centroid, spec, freqs = _audio_feature_row(x, sr)
-                out.append(
-                    (getattr(r, id_col), sr, len(x), len(x) / sr, rms, zcr,
-                     centroid, x, spec, freqs)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[id_col, "sample_rate", "n_samples", "duration_s",
-                         "rms", "zcr", "spectral_centroid_hz",
-                         "samples", "spec", "freqs"],
-            )
 
-    return df.mapInPandas(op, AUDIO_DECODE_TABLE_SCHEMA)
+def video_frames_batch(batch, every_n: int, out_fmt: str):
+    """The body of :func:`sample_video_frames`."""
+    rows = []
+    for r in batch.to_pylist():
+        w, h, frames = decode_rawvid(r["bytes"])
+        rows += [
+            (r["video_id"], fi, w, h, images.encode(frames[fi], out_fmt))
+            for fi in range(0, len(frames), every_n)
+        ]
+    return rows_batch(rows, FRAME_SAMPLE_SCHEMA)
 
 
 def sample_video_frames(
-    df: DataFrame, every_n: int = 30, id_col: str = "video_id",
-    out_fmt: str = "png",
+    df: DataFrame, every_n: int = 30, out_fmt: str = "png",
 ) -> DataFrame:
     """REAL frame sampling over the rawvid container: every ``every_n``-th
     frame is extracted and re-encoded with the image codec (png/raw/q6 —
     actual pixels, tzengine.images). Foreign containers raise
     NotImplementedError (standard video codecs absent — explicit)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                w, h, frames = decode_rawvid(bytes(r.bytes))
-                for fi in range(0, len(frames), every_n):
-                    out.append(
-                        (getattr(r, id_col), fi, w, h,
-                         images.encode(frames[fi], out_fmt))
-                    )
-            yield pd.DataFrame(
-                out, columns=[id_col, "frame_no", "w", "h", "bytes"]
-            )
-
-    return df.mapInPandas(op, FRAME_SAMPLE_SCHEMA)
+    return map_batches(
+        df.select("video_id", "bytes"), video_frames_batch,
+        FRAME_SAMPLE_SCHEMA, every_n, out_fmt,
+    )
 
 
 def phash_neardup_pairs(

@@ -6,7 +6,7 @@
   over the query id. Scales as one pass over the corpus — the right
   baseline at any corpus size when the query set is small.
 - ``ivf_topk``: IVF-style scale path: corpus vectors are bucketed to
-  their nearest centroid once (vectorized pandas UDF), queries probe only
+  their nearest centroid once (vectorized Arrow UDF), queries probe only
   the ``nprobe`` nearest centroid buckets (partition pruning on the
   centroid id), then exact cosine within the probed buckets.
 """
@@ -14,11 +14,13 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..arrowio import arrow_array, arrow_list, arrow_matrix
 
 
 def _cosine(vec_a, vec_b):
@@ -99,6 +101,32 @@ def brute_force_topk(
     return _topk_per_query(scored, k, id_col, query_id_col)
 
 
+def _centroid_sims(vecs: pa.Array, cnorm: np.ndarray) -> np.ndarray:
+    """(rows, centroids) cosines of a list<number> vector column against
+    the unit-norm centroid rows ``cnorm``."""
+    mat = arrow_matrix(vecs)
+    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return mat @ cnorm.T
+
+
+def nearest_centroid(vecs: pa.Array, cnorm: np.ndarray) -> pa.Array:
+    """Each vector's nearest centroid by cosine, int32 (an exact tie goes
+    to the lower id). The body of :func:`assign_centroids`."""
+    sims = _centroid_sims(vecs, cnorm)
+    return arrow_array(np.argmax(sims, axis=1).astype(np.int32))
+
+
+def probe_centroids(vecs: pa.Array, cnorm: np.ndarray, nprobe: int) -> pa.Array:
+    """Each vector's ``nprobe`` nearest centroids by cosine, nearest
+    first, as list<int32>: the probes of :func:`ivf_topk`. The sort is
+    stable, so exact similarity ties resolve to the LOWER centroid id,
+    matching the (sim DESC, cid ASC) order of the DuckDB oracle."""
+    sims = _centroid_sims(vecs, cnorm)
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+    offsets = np.arange(len(order) + 1) * order.shape[1]
+    return arrow_list(offsets, order.ravel().astype(np.int32))
+
+
 def assign_centroids(
     corpus: DataFrame,
     centroids: np.ndarray,
@@ -109,11 +137,9 @@ def assign_centroids(
     matmul per Arrow batch."""
     cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
-    @F.pandas_udf(T.IntegerType())
-    def _nearest(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mat @ cnorm.T, axis=1).astype(np.int32))
+    @F.arrow_udf(T.IntegerType())
+    def _nearest(vecs: pa.Array) -> pa.Array:
+        return nearest_centroid(vecs, cnorm)
 
     return corpus.withColumn("centroid_id", _nearest(F.col(vec_col)))
 
@@ -133,100 +159,6 @@ def deterministic_centroids(
         .collect()
     )
     return np.vstack([np.asarray(r[1], dtype=np.float64) for r in rows])
-
-
-def kmeans_centroids(
-    corpus: DataFrame,
-    k: int,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Deterministic distributed Lloyd iterations for IVF centroids.
-
-    Init = the k smallest-id vectors (restart-stable, no RNG); each round
-    assigns every vector to its nearest centroid (vectorized matmul per
-    Arrow batch) and recomputes element-wise means JVM-side via
-    posexplode + groupBy(centroid, dim) avg — partial aggregation makes
-    the shuffle k x dim doubles per partition, independent of corpus
-    size. Only the k x dim centroid matrix ever reaches the driver.
-    Empty clusters keep their previous centroid. Stops early when
-    centroids stop moving."""
-    cents = deterministic_centroids(corpus, k, vec_col, id_col)
-    dim = cents.shape[1]
-    for _ in range(iters):
-        assigned = assign_centroids(corpus, cents, id_col, vec_col)
-        rows = (
-            assigned.select(
-                "centroid_id", F.posexplode(vec_col).alias("pos", "val")
-            )
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("val").alias("m"))
-            .collect()
-        )
-        new = cents.copy()
-        by: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by.setdefault(r.centroid_id, {})[r.pos] = r.m
-        for cid, d in by.items():
-            new[cid] = np.array([d[p] for p in range(dim)])
-        if np.allclose(new, cents, rtol=0, atol=1e-12):
-            break
-        cents = new
-    return cents
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index as a Parquet table PARTITIONED BY
-    centroid_id — the real scale path: a query probing nprobe buckets
-    reads only those partition directories (partition pruning at the
-    file-listing level, before any IO)."""
-    bucketed = assign_centroids(corpus, centroids, id_col, vec_col)
-    bucketed.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-
-
-def ivf_search_table(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: np.ndarray,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Search a materialized IVF table: compute the union of probed
-    centroid ids driver-side (queries are broadcast-small by contract),
-    push ``centroid_id IN (...)`` into the scan — Spark prunes unprobed
-    partition directories entirely — then exact cosine + top-k within
-    the probed buckets."""
-    cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    qrows = queries.select(query_id_col, vec_col).collect()
-    qmat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    probes = np.argsort(-(qmat @ cnorm.T), axis=1, kind="stable")[:, :nprobe]
-    probe_set = sorted({int(c) for row in probes for c in row})
-
-    corpus = spark.read.parquet(path).filter(
-        F.col("centroid_id").isin(probe_set)
-    )
-    pairs = [
-        (r[0], [float(x) for x in r[1]], [int(c) for c in probes[i]])
-        for i, r in enumerate(qrows)
-    ]
-    q = spark.createDataFrame(
-        pairs, f"{query_id_col} long, __qvec array<double>, __probes array<int>"
-    ).select(query_id_col, "__qvec", F.explode("__probes").alias("centroid_id"))
-    joined = corpus.join(F.broadcast(q), "centroid_id")
-    scored = joined.withColumn("cosine", _cosine(F.col(vec_col), F.col("__qvec")))
-    return _topk_per_query(scored, k, id_col, query_id_col)
 
 
 def ivf_topk(
@@ -249,19 +181,9 @@ def ivf_topk(
 
     cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
-    probe_schema = T.ArrayType(T.IntegerType())
-
-    @F.pandas_udf(probe_schema)
-    def _probes(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ cnorm.T
-        # stable: exact similarity ties resolve to the LOWER centroid id,
-        # matching the (sim DESC, cid ASC) order of the DuckDB oracle
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(
-            np.int32
-        )
-        return pd.Series(list(order))
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def _probes(vecs: pa.Array) -> pa.Array:
+        return probe_centroids(vecs, cnorm, nprobe)
 
     q = queries.select(
         query_id_col,

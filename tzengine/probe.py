@@ -16,6 +16,7 @@ import math
 import numpy as np
 
 from . import cells, geom
+from .arrowio import arrow_array, arrow_list
 from .geom import _chunks, _expand
 from .index import CompiledIndex, segment_starts
 
@@ -289,69 +290,6 @@ def probe_arrow(
         first = np.zeros(n, dtype=ranks.dtype)
     first = np.where(has_match, first, -1).astype(rdt)
     return valid, arrow_array(first), None
-
-
-# Arrow <-> numpy without pandas: pa.array(ndarray) and Array.to_numpy()
-# both import pandas (~40 MB and ~0.3 s per Python worker), so the UDF
-# bodies read and write the Arrow buffers directly.
-
-
-def arrow_f64(arr) -> np.ndarray:
-    """A pa.Array of doubles as float64 numpy, NULL -> NaN, read from its
-    buffers (a zero-copy read-only view when there are no NULLs)."""
-    import pyarrow as pa
-
-    if arr.type != pa.float64():
-        arr = arr.cast(pa.float64())
-    n = len(arr)
-    if n == 0:
-        return np.empty(0)
-    validity, data = arr.buffers()
-    vals = np.frombuffer(data, np.float64, count=n, offset=arr.offset * 8)
-    if arr.null_count:
-        bits = np.unpackbits(
-            np.frombuffer(validity, np.uint8), count=arr.offset + n,
-            bitorder="little",
-        )[arr.offset:]
-        vals = np.where(bits.view(bool), vals, np.nan)
-    return vals
-
-
-def arrow_rings(col) -> list[list[np.ndarray]]:
-    """A zones ``rings`` column (list<list<struct<lat, lon>>>, sliced or
-    not) as each row's rings: (V, 2) float64 (lon, lat) slices of one
-    vertex array, read from the Arrow buffers without pandas."""
-    r_off, v_off = (
-        np.frombuffer(o.buffers()[1], np.int32, len(o), o.offset * 4)
-        for o in (col.offsets, col.values.offsets)
-    )
-    vstruct = col.values.values
-    verts = np.column_stack(
-        [arrow_f64(vstruct.field(c)) for c in ("lon", "lat")]
-    )
-    return [
-        [verts[v_off[j]:v_off[j + 1]] for j in range(r_off[i], r_off[i + 1])]
-        for i in range(len(col))
-    ]
-
-
-def arrow_array(values: np.ndarray):
-    """A numeric 1-d ndarray as a pa.Array over the same bytes."""
-    import pyarrow as pa
-
-    v = np.ascontiguousarray(values)
-    return pa.Array.from_buffers(
-        pa.from_numpy_dtype(v.dtype), len(v), [None, pa.py_buffer(v)]
-    )
-
-
-def arrow_list(offsets: np.ndarray, values: np.ndarray):
-    """CSR ``offsets`` (n+1) over ``values`` as a pa.ListArray."""
-    import pyarrow as pa
-
-    return pa.ListArray.from_arrays(
-        arrow_array(offsets.astype(np.int32)), arrow_array(values)
-    )
 
 
 #: "geodesic": WGS84 meters (reference parity, the Vincenty loop the SQL

@@ -21,14 +21,20 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cells, geom, index, probe
+from . import cells, geom, index
+from .arrowio import arrow_array, arrow_rings, map_batches
 from .zones import pieces_to_df
 
-RASTER_SCHEMA = "zone_id string, polygon_id int, cell_id long, kind string"
+#: raster_batch's output: ``full`` is 1 for a full cell, 0 for a partial
+RASTER_CELLS_SCHEMA = pa.schema([
+    ("zone_id", pa.string()), ("polygon_id", pa.int32()),
+    ("cell_id", pa.int64()), ("full", pa.int8()),
+])
 
 
 def raster_mask_for_rings(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
@@ -59,25 +65,22 @@ def raster_mask_for_rings(rings: list[np.ndarray], res: int) -> tuple[np.ndarray
 
 def raster_batch(batch, res: int):
     """One zones Arrow batch (``zone_id``, ``polygon_id``, ``rings``) →
-    its raster rows (``zone_id``, ``polygon_id``, ``cell_id``,
-    ``full``: 1 full, 0 partial) as a pa.RecordBatch, pandas-free."""
-    import pyarrow as pa
-
+    its RASTER_CELLS_SCHEMA rows as a pa.RecordBatch, pandas-free."""
     cell_ids, fulls = [np.zeros(0, np.int64)], [np.zeros(0, np.int8)]
-    for rings in probe.arrow_rings(batch.column("rings")):
+    for rings in arrow_rings(batch.column("rings")):
         ids, full = raster_mask_for_rings(rings, res)
         cell_ids.append(ids)
         fulls.append(full)
     counts = [len(ids) for ids in cell_ids[1:]]
-    row = probe.arrow_array(np.repeat(np.arange(len(counts)), counts))
+    row = arrow_array(np.repeat(np.arange(len(counts)), counts))
     return pa.RecordBatch.from_arrays(
         [
             batch.column("zone_id").take(row).cast(pa.string()),
             batch.column("polygon_id").take(row).cast(pa.int32()),
-            probe.arrow_array(np.concatenate(cell_ids)),
-            probe.arrow_array(np.concatenate(fulls)),
+            arrow_array(np.concatenate(cell_ids)),
+            arrow_array(np.concatenate(fulls)),
         ],
-        ["zone_id", "polygon_id", "cell_id", "full"],
+        schema=RASTER_CELLS_SCHEMA,
     )
 
 
@@ -91,19 +94,15 @@ def rasterize_zones(
 
     ensure_shipped(spark)
     zones_df = zones if isinstance(zones, DataFrame) else pieces_to_df(spark, zones)
-    return (
-        zones_df.select("zone_id", "polygon_id", "rings")
-        .repartition(32)
-        .mapInArrow(
-            lambda batches: (raster_batch(b, res) for b in batches),
-            "zone_id string, polygon_id int, cell_id long, full tinyint",
-        )
-        .select(
-            "zone_id",
-            "polygon_id",
-            "cell_id",
-            F.when(F.col("full") == 1, "full").otherwise("partial").alias("kind"),
-        )
+    cells_df = map_batches(
+        zones_df.select("zone_id", "polygon_id", "rings").repartition(32),
+        raster_batch, RASTER_CELLS_SCHEMA, res,
+    )
+    return cells_df.select(
+        "zone_id",
+        "polygon_id",
+        "cell_id",
+        F.when(F.col("full") == 1, "full").otherwise("partial").alias("kind"),
     )
 
 
