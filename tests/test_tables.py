@@ -3,6 +3,7 @@
 import json
 import os
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -152,11 +153,24 @@ def test_complete_table_rejects_different_input(spark, assigned, tmp_path):
         tables.write_resumable(other, out)
 
 
+def _pieces_to_rows(pieces) -> list[tuple]:
+    """The historical nested-tuple zones rows: the reference the Arrow
+    path is compared against."""
+    f32 = lambda x: float(np.float32(x))  # noqa: E731
+    rows = []
+    for p in pieces:
+        rings = [[(f32(v[1]), f32(v[0])) for v in r] for r in p.rings]
+        lo_lon, lo_lat, hi_lon, hi_lat = p.bbox
+        rows.append((p.zone_id, p.polygon_id, p.ordinal, rings,
+                     f32(lo_lat), f32(lo_lon), f32(hi_lat), f32(hi_lon)))
+    return rows
+
+
 def test_pieces_to_df_arrow_path_row_identical(spark):
     """The Arrow-native pieces_to_df must be row-identical (values AND
     dtypes) to the historical nested-tuple row construction."""
     from tzengine.bigworld import big_world
-    from tzengine.zones import pieces_to_df, pieces_to_rows, synthetic_world
+    from tzengine.zones import pieces_to_df, synthetic_world
 
     zones_ddl = (
         "zone_id string, polygon_id int, ordinal int, "
@@ -165,7 +179,7 @@ def test_pieces_to_df_arrow_path_row_identical(spark):
     )
     for world in (synthetic_world(), big_world(grid=4, verts=24)):
         fast = pieces_to_df(spark, world)
-        slow = spark.createDataFrame(pieces_to_rows(world), schema=zones_ddl)
+        slow = spark.createDataFrame(_pieces_to_rows(world), schema=zones_ddl)
         assert fast.schema == slow.schema
         a = fast.orderBy("ordinal").collect()
         b = slow.orderBy("ordinal").collect()

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import geom
-from .zones import ZONES_SCHEMA, ZonePiece, pieces_batch, pieces_to_rows
+from .zones import ZONES_SCHEMA, ZonePiece, pieces_batch, pieces_to_df
 
 
 def _normalize_ring(coords: list, want_cw: bool) -> list[np.ndarray]:
@@ -122,9 +122,7 @@ def zones_from_geojson(spark: SparkSession, path: str) -> DataFrame:
     for feature in fc.get("features", []):
         pieces.extend(feature_to_pieces(feature, ordinal_base=base))
         base += feature_polygon_count(feature)
-    return spark.createDataFrame(
-        pieces_to_rows(pieces), schema=from_arrow_schema(ZONES_SCHEMA)
-    )
+    return pieces_to_df(spark, pieces)
 
 
 def geojsonl_batch(batch):

@@ -107,36 +107,12 @@ ZONES_SCHEMA = pa.schema([
 ])
 
 
-def pieces_to_rows(pieces: list[ZonePiece]) -> list[tuple]:
-    rows = []
-    for p in pieces:
-        rings = [
-            [(float(np.float32(v[1])), float(np.float32(v[0]))) for v in r]
-            for r in p.rings
-        ]
-        lo_lon, lo_lat, hi_lon, hi_lat = p.bbox
-        rows.append(
-            (
-                p.zone_id,
-                p.polygon_id,
-                p.ordinal,
-                rings,
-                float(np.float32(lo_lat)),
-                float(np.float32(lo_lon)),
-                float(np.float32(hi_lat)),
-                float(np.float32(hi_lon)),
-            )
-        )
-    return rows
-
-
 def pieces_batch(pieces: list[ZonePiece]) -> pa.RecordBatch:
     """Zone pieces as one ZONES_SCHEMA Arrow batch, pandas-free: ring
     vertices go into one concatenated float32 buffer with CSR list
     offsets, zero per-vertex Python (the per-value float32 casts are
     exact: make_piece snaps every vertex to the f32 grid). A NaN
-    coordinate or bbox bound is NULL, as in ``pieces_to_rows`` rows
-    that cross a mapInPandas boundary."""
+    coordinate or bbox bound is NULL."""
     all_rings = [r for p in pieces for r in p.rings]
     verts = np.concatenate(all_rings) if all_rings else np.zeros((0, 2))
     bb = np.array([p.bbox for p in pieces], np.float64).reshape(-1, 4)
@@ -167,8 +143,8 @@ def pieces_to_df(spark, pieces: list[ZonePiece]):
     stats give the reference's deserialize-free pruning, SURVEY §2.A B8),
     built from one ``pieces_batch``: a 1M-vertex coastline world builds
     in milliseconds instead of the seconds the nested-tuple row path
-    took. Result is row-identical to the historical pieces_to_rows path
-    (asserted in tests)."""
+    took. Result is row-identical to the historical nested-tuple row
+    path (asserted in tests)."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     if not pieces:
