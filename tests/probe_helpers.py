@@ -47,16 +47,18 @@ def deadline(seconds: float):
         signal.signal(signal.SIGALRM, previous)
 
 
-def run_isolated(code: str) -> None:
+def run_isolated(code: str) -> subprocess.CompletedProcess:
     """Run ``code`` in a fresh interpreter, with the checkout root as its
     working directory so that ``tzengine`` imports from this checkout,
-    and fail with the tail of its stderr unless it exits 0."""
+    and fail with the tail of its stderr unless it exits 0; return the
+    finished process (its stdout and stderr as text)."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     run = subprocess.run(
         [sys.executable, "-c", code], cwd=root, capture_output=True,
         text=True, timeout=120,
     )
     assert run.returncode == 0, run.stderr[-2000:]
+    return run
 
 
 def ring_vertices(idx) -> np.ndarray:

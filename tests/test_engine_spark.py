@@ -724,3 +724,69 @@ def test_spark_worker_rereads_no_unchanged_zip(spark):
     with deadline(120):
         got = {r.n for r in df.select(zip_reads("id").alias("n")).collect()}
     assert got == {0}, got
+
+
+def test_get_spark_warms_workers_on_a_session_of_its_own():
+    """``get_spark`` starts one background warm-up query per SparkContext,
+    on a session of its own: ``spark.stop()`` during it ends it quietly;
+    a listener on the returned session sees no event from it; a second
+    ``get_spark`` starts no second one; and a later Arrow UDF finds
+    ``tzengine.probe`` already imported in its Python workers."""
+    code = """
+import sys, threading, time
+import pyarrow as pa
+from pyspark import SparkContext
+from pyspark.java_gateway import ensure_callback_server_started
+from pyspark.sql import functions as F, types as T
+from tzengine.arrowio import arrow_array
+from tzengine.session import get_spark
+
+def warm_threads():
+    return [t for t in threading.enumerate() if t.name == "tzengine-warm-up"]
+
+spark = get_spark("warm-up", master="local[2]")
+thread = spark.sparkContext._tzengine_warm_up
+spark.stop()
+thread.join(60)
+assert not thread.is_alive(), "the warm-up outlived spark.stop()"
+
+class Listener:
+    def __init__(self):
+        self.plans = []
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plans.append(qe.analyzed().toString())
+    def onFailure(self, func_name, qe, exc):
+        self.plans.append("failed")
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+spark = get_spark("warm-up", master="local[2]")
+listener = Listener()
+ensure_callback_server_started(SparkContext._gateway)
+spark._jsparkSession.listenerManager().register(listener)
+thread = spark.sparkContext._tzengine_warm_up
+assert thread.is_alive(), "get_spark waited for the warm-up"
+assert get_spark("warm-up", master="local[2]") is spark
+assert spark.sparkContext._tzengine_warm_up is thread
+assert warm_threads() == [thread], warm_threads()
+thread.join(60)
+assert not thread.is_alive()
+assert listener.plans == [], listener.plans
+
+def probe_loaded(ids: pa.Array) -> pa.Array:
+    import numpy as np
+    return arrow_array(np.full(len(ids), "tzengine.probe" in sys.modules))
+
+loaded = F.arrow_udf(probe_loaded, T.BooleanType())
+rows = spark.range(2, numPartitions=2).select(loaded("id").alias("own_query")).collect()
+assert [r.own_query for r in rows] == [True, True], rows
+t0 = time.monotonic()
+while not any("own_query" in p for p in listener.plans) and time.monotonic() - t0 < 30:
+    time.sleep(0.05)
+assert len(listener.plans) == 1 and "own_query" in listener.plans[0], listener.plans
+assert warm_threads() == []
+spark.stop()
+"""
+    with deadline(90):
+        run = run_isolated(code)
+    assert "Traceback" not in run.stderr, run.stderr[-2000:]

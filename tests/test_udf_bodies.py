@@ -188,6 +188,16 @@ outs += [(nearest, to_arrow_type(T.IntegerType())),
 assert nearest.to_pylist() == [0, 1, 0]  # the exact tie goes to id 0
 assert probes.to_pylist() == [[0, 1], [1, 0], [0, 1]]
 """,
+    "warm_up": """
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+from tzengine.session import warm_up_batch
+
+out = warm_up_batch(ids.column("id"))
+outs.append((out, to_arrow_type(T.ShortType())))
+assert out.to_pylist() == [0] * 6
+assert "tzengine.probe" in sys.modules
+""",
 }
 
 CHECKS = """
